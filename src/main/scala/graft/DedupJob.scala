@@ -9,7 +9,7 @@ import graft.pipeline.{CheckpointStore, Dedup, DedupConfig, ResumableDedupJob}
   * lineage and metrics ... resumable restarts").
   *
   *   spark-submit --class graft.DedupJob app.jar <pagesPath> <workDir> \
-  *     [buckets=64] [saltBuckets=1]
+  *     [buckets=64] [saltBuckets=16]
   *
   * Reads a pages table (url, warc_ts, html?, text, lang), resumes the
   * bucket-checkpointed signature stage, regenerates pairs + clusters,

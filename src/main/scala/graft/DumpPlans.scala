@@ -53,15 +53,12 @@ object DumpPlans {
     dump("Production candidates: skew-aware hot/cold split (broadcast hot keys, salted hot branch)",
       Dedup.candidatePairsSkewAware(
         Dedup.bandTable(Dedup.validSignatures(Dedup.signatures(shingled, cfg)), cfg),
-        hotCap = 8, saltBuckets = 4, materialize = false))
+        hotCap = 8, saltBuckets = 4))
     dump("Exact-threshold join: prefix-filtered candidates (freq agg -> per-doc window -> prefix self-join; no cartesian)",
       Dedup.prefixCandidates(shingled, cfg))
     dump("Dedup keep-list: quality-ranked canonical doc per cluster (two-phase partial argmax + flag-back join; no cluster-partitioned window)",
-      // materialize=false: the eager scored-frame checkpoint collapses
-      // the argmax + flag-back join shape to Scan ExistingRDD
       Dedup.keepList(docs, Dedup.clusters(Dedup.pairs(docs, cfg)),
-        graft.functions.TextFunctions.qualityScore(col("text")),
-        materialize = false))
+        graft.functions.TextFunctions.qualityScore(col("text"))))
     dump("Multimodal: media -> frame features -> item embedding -> cosine pairs (binary column never shuffles)",
       graft.multimodal.BinaryPipeline.mediaDuplicatePairs(
         SparkEntry.syntheticMedia(spark, sfDir), SparkEntry.mediaDedupThreshold))
@@ -73,14 +70,17 @@ object DumpPlans {
     dump("Curation: chunk-level dup fraction (narrow windowing; occurrence agg keyed on 8-byte chunk hash)",
       graft.queries.Curation.chunkDupStats(
         spark.read.parquet(s"$sfDir/documents.parquet"), chunkTokens = 20))
-    dump("Containment pairs: asymmetric prefix filter + measured hot-shingle salting (broadcast hot keys; cold/salted-hot union) + exact kernel verify",
-      // materialize=false: the checkpointed form collapses to Scan
-      // ExistingRDD and would document nothing
-      Dedup.containmentPairs(docs, cfg, tau = 0.6, materialize = false))
+    dump("Containment pairs: asymmetric prefix filter + measured hot-shingle salting (broadcast hot keys; cold/salted-hot union) + exact kernel verify", {
+      // the lazy plan with the hot split on: the checkpointed result
+      // collapses to Scan ExistingRDD and would document nothing
+      val sh = Dedup.shingleSets(Dedup.kernelParallel(docs), cfg)
+      Dedup.containmentPlan(sh, Dedup.rankedIndex(sh), tau = 0.6,
+        hotCap = 1024, saltBuckets = 16, hot = true)
+    })
     dump("Exact-substring verify: one suffix array per hay doc; measured hot-hay split (bounded collect_list for cold hays, co-group-STREAMED needles for hot hays)",
+      // hotCap = 0: every hay counts as hot, so both branches plan
       graft.pipeline.ExactSubstring.containmentPairs(
-        Dedup.pairs(docs, cfg).select("id_a", "id_b"), docs,
-        materialize = false))
+        Dedup.pairs(docs, cfg).select("id_a", "id_b"), docs, hotCap = 0))
     dump("Curation: C4-style duplicate-span removal (one 8-byte-keyed occurrence+keeper aggregate; ordered per-doc reconstruction)",
       graft.queries.Curation.removeDuplicateSpans(
         spark.read.parquet(s"$sfDir/documents.parquet"), spanTokens = 20))
@@ -88,7 +88,7 @@ object DumpPlans {
       graft.queries.Curation.semanticDedup(
         spark.read.parquet(s"$sfDir/embeddings.parquet")
           .select(col("vec_id").as("id"), col("embedding")),
-        threshold = 0.999, materialize = false))
+        threshold = 0.999))
     Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
     println("[plans] written PLANS.md")
     spark.stop()

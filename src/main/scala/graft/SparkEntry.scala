@@ -148,26 +148,10 @@ object SparkEntry {
 
   /** Planted visual near-dup corpus over the documents ids (group =
     * doc_id/5, per-member noise = doc_id%5+1) — ONE definition shared by
-    * the q_media_dedup query, DumpPlans and Profile: the scheme is
+    * the q_media_dedup query and DumpPlans: the scheme is
     * load-bearing for the committed fixture, so it must not fork.
     */
   private[graft] val mediaDedupThreshold = 0.9995
-
-  /** Parallelism floor for the synthetic-AUDIO generator (the BMP
-    * generator measured as too cheap for the added exchange and does
-    * not use it): the doc-id scan is one sub-openCost parquet split,
-    * which would pin the whole synthesize -> decode -> featurize chain
-    * to a single core. Derived from the input (no-op once the scan has
-    * >= defaultParallelism splits); every downstream value is per-row
-    * or single-frame-exact, so the result bits cannot change.
-    */
-  private def docIdsParallel(s: SparkSession, dir: String): DataFrame = {
-    val ids = documents(s, dir).select(col("doc_id"))
-    val p = s.sparkContext.defaultParallelism
-    // round-robin, not range: repartitionByRange runs a separate
-    // sampling job per invocation, which cost more than it saved here
-    if (ids.rdd.getNumPartitions >= p) ids else ids.repartition(p)
-  }
 
   private[graft] def syntheticMedia(s: SparkSession, dir: String): DataFrame = {
     val spark2 = s
@@ -188,7 +172,11 @@ object SparkEntry {
   private[graft] def syntheticAudio(s: SparkSession, dir: String): DataFrame = {
     val spark2 = s
     import spark2.implicits._
-    docIdsParallel(s, dir).as[Long]
+    // parallelism floor (the cheaper BMP generator above skips it): the
+    // doc-id scan is one sub-openCost split, which would pin synthesize
+    // -> decode -> featurize to one core; every downstream value is
+    // per-row or single-frame-exact, so the result bits cannot change
+    Dedup.kernelParallel(documents(s, dir).select(col("doc_id"))).as[Long]
       .map(d => (d.toString,
         graft.multimodal.BinaryPipeline.syntheticWav(d / 5, (d % 5).toInt + 1)))
       .toDF("id", "bytes")

@@ -192,13 +192,11 @@ object SynthCorpus {
     (pages, labels)
   }
 
-  /** The ONE cached benchmark-corpus builder shared by every timing
-    * main (`ScalingBench`, `KeepListAB`): seed-123, dupRate 0.2 pages
-    * (html dropped — the timed pipelines read text) persisted once per
-    * `nBase` under /tmp and reused across sessions. Centralized so two
-    * tools can never A/B against corpora generated with silently
-    * diverged parameters, and so the commit-marker reuse check lives
-    * in one place. Returns the corpus directory.
+  /** The cached benchmark corpus of the timing main (`ScalingBench`):
+    * seed-123, dupRate 0.2 pages (html dropped — the timed pipelines
+    * read text) persisted once per `nBase` under /tmp and reused across
+    * sessions, so runs never compare corpora generated with silently
+    * diverged parameters. Returns the corpus directory.
     */
   def ensureScalingCorpus(spark: SparkSession, nBase: Int): String = {
     val corpusDir = s"/tmp/graft_scaling_corpus_$nBase"

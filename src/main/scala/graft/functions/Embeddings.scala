@@ -47,17 +47,12 @@ object Embeddings {
     val cIds = corpusRows.map(_.get(0))
     val cVecs = corpusRows.map(_.getSeq[Float](1).toArray)
     val bc = spark.sparkContext.broadcast((cIds, cVecs))
-    // parallelism floor for the O(|queries| * |corpus| * dim) scan loop:
-    // a sub-openCost parquet plans as ONE split, pinning the whole
-    // kernel to a single core. Derived from the input (no-op when the
-    // scan already has >= defaultParallelism splits — the at-scale
-    // case); per-query results are partition-independent, and the final
-    // rank window orders totally, so the output is unchanged.
-    val qdf0 = queries.select(col("id").as("query_id"), col("embedding"))
-    val par = spark.sparkContext.defaultParallelism
-    val qdf =
-      if (qdf0.isStreaming || qdf0.rdd.getNumPartitions >= par) qdf0
-      else qdf0.repartition(par)
+    // parallelism floor for the O(|queries| * |corpus| * dim) scan loop
+    // (a sub-openCost parquet plans as ONE split); per-query results are
+    // partition-independent, and the final rank window orders totally,
+    // so the output is unchanged
+    val qdf = graft.pipeline.Dedup.kernelParallel(
+      queries.select(col("id").as("query_id"), col("embedding")))
     val outSchema = StructType(Seq(
       StructField("query_id", qdf.schema("query_id").dataType),
       StructField("neighbor_id", corpus.schema("id").dataType),

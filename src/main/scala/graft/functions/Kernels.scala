@@ -278,8 +278,7 @@ object Kernels {
 
     /** start a fresh set able to hold `n` keys at load factor <= 0.5 */
     def reset(n: Int): Unit = {
-      var cap = keys.length
-      while (cap < n * 2) cap <<= 1
+      val cap = LongProbe.capacity(keys.length, n)
       if (cap != keys.length) {
         keys = new Array[Long](cap)
         stamps = new Array[Int](cap)
@@ -313,6 +312,22 @@ object Kernels {
         i = (i + 1) & mask
       }
       false
+    }
+  }
+
+  private[graft] object LongProbe {
+    /** Largest table: the biggest power of two a JVM array can hold. */
+    val MaxCapacity: Int = 1 << 30
+
+    /** Power-of-two table size >= 2n grown from `current`, computed in
+      * Long so n >= 2^30 cannot wrap negative and end the growth early.
+      */
+    def capacity(current: Int, n: Int): Int = {
+      require(2L * n <= MaxCapacity,
+        s"probe set of $n keys exceeds the $MaxCapacity-slot table limit")
+      var cap = current.toLong
+      while (cap < 2L * n) cap <<= 1
+      cap.toInt
     }
   }
 

@@ -84,10 +84,12 @@ object Dedup {
     * so no exchange is ever added where it would move real data.
     * Downstream consumers are partition-independent by construction
     * (per-row kernels, set joins, integer-ratio scores, content-derived
-    * CC labels), so the result bits cannot change. Applied by the
-    * materializing pair operators, NOT inside [[shingleSets]] itself:
-    * the bare shingle+signature projection must stay a single narrow
-    * codegen stage (PlanSpec pins that shape).
+    * CC labels), so the result bits cannot change. The one floor rule
+    * of the engine: applied by the materializing pair operators, the
+    * synthetic-audio generator and the brute-force ANN query side, NOT
+    * inside [[shingleSets]] itself: the bare shingle+signature
+    * projection must stay a single narrow codegen stage (PlanSpec pins
+    * that shape).
     */
   private[graft] def kernelParallel(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
@@ -119,44 +121,22 @@ object Dedup {
 
   /** Stage 4 — candidate pairs: within-band self-join, canonicalized
     * (id_a < id_b — reference self-match drop + sorted-pair dedup,
-    * `generate_matches.py:88-94`), distinct across bands.
-    *
-    * Hot-band skew (north rule): bands shared by f docs produce f^2/2
-    * pairs in one task. `maxBandSize` drops pathological bands ONLY when
-    * explicitly configured (default keeps all); `saltBuckets > 1`
-    * activates salted replication so each join task sees at most
-    * ~bandSize/salt rows on the left while preserving the exact pair set.
+    * `generate_matches.py:88-94`), distinct across bands. Hot-band skew
+    * (bands shared by f docs produce f^2/2 pairs in one task) is the
+    * job of [[candidatePairsSkewAware]], the production join.
     */
-  def candidatePairs(
-      bands: DataFrame,
-      saltBuckets: Int = 1): DataFrame = {
-    val pairs =
-      if (saltBuckets <= 1) {
-        // both join legs are the IDENTICAL subtree (no per-side alias
-        // projection): under a shuffle join Catalyst's ReuseExchange
-        // collapses them to one exchange, and under a broadcast join the
-        // per-side canonical plans still match — the round-5 shape
-        // (id->id_a vs id->id_b projections) planned two distinct legs
-        // and re-executed the band lineage per side (guide §2.4)
-        val base = bands.select(col("band_key"), col("id"))
-        base.as("a").join(base.as("b"),
-            col("a.band_key") === col("b.band_key") &&
-              col("a.id") < col("b.id"))
-          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      } else {
-        // Salted self-join: left side gets a deterministic salt in
-        // [0, s); right side is replicated to every salt. Each unordered
-        // pair (x,y) with x<y appears for salt = salt(x) exactly once
-        // per shared band; the final distinct dedups across bands.
-        val s = saltBuckets
-        val l = bands.select(col("band_key"),
-          pmod(xxhash64(col("id")), lit(s)).as("salt"), col("id").as("id_a"))
-        val r = bands
-          .select(col("band_key"), col("id").as("id_b"),
-            explode(sequence(lit(0), lit(s - 1))).as("salt"))
-        l.join(r, Seq("band_key", "salt")).where(col("id_a") < col("id_b"))
-      }
-    pairs.select("id_a", "id_b").distinct()
+  def candidatePairs(bands: DataFrame): DataFrame = {
+    // both join legs are the IDENTICAL subtree (no per-side alias
+    // projection): under a shuffle join Catalyst's ReuseExchange
+    // collapses them to one exchange, and under a broadcast join the
+    // per-side canonical plans still match — the round-5 shape
+    // (id->id_a vs id->id_b projections) planned two distinct legs
+    // and re-executed the band lineage per side (guide §2.4)
+    val base = bands.select(col("band_key"), col("id"))
+    base.as("a").join(base.as("b"),
+        col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
   }
 
   /** Skew-aware candidate pairs (north rule: "explicit salted
@@ -164,20 +144,17 @@ object Dedup {
     * frequency — cold keys take the plain self-join; hot keys (freq >
     * hotCap, e.g. boilerplate-dominated buckets) are salted so no join
     * task materializes a full f^2 bucket. Replication cost is paid ONLY
-    * on hot rows (vs candidatePairs(saltBuckets) which salts everything).
-    * The hot-key set is tiny by construction (skew = few heavy keys) and
-    * is broadcast. Pair-set equality with the plain join is tested on
-    * the skew fixture.
+    * on hot rows. The hot-key set is tiny by construction (skew = few
+    * heavy keys) and is broadcast. Pair-set equality with the plain
+    * join is tested on the skew fixture.
     */
   def candidatePairsSkewAware(bands: DataFrame, hotCap: Int = 1024,
-                              saltBuckets: Int = 16,
-                              materialize: Boolean = true): DataFrame = {
+                              saltBuckets: Int = 16): DataFrame = {
     // the band table feeds THREE consumers (hot-key aggregate, hot
     // semi-join probe, cold anti-join probe) — materialized once, or
     // the upstream lineage (parquet scan + minhash slicing + band
-    // hashing) executes three times per run. materialize=false keeps
-    // the fully lazy single plan (plan dumps).
-    val b = if (materialize) bands.localCheckpoint(true) else bands
+    // hashing) executes three times per run
+    val b = bands.localCheckpoint(true)
     val hotKeys = b.groupBy("band_key").count()
       .where(col("count") > hotCap).select("band_key")
     val hot = b.join(broadcast(hotKeys), Seq("band_key"), "left_semi")
@@ -222,8 +199,7 @@ object Dedup {
   /** Full pipeline: docs(id, text) -> verified canonical pairs
     * (id_a < id_b, jaccard >= threshold).
     */
-  def pairs(docs: DataFrame, cfg: DedupConfig = DedupConfig(),
-            saltBuckets: Int = 1): DataFrame = {
+  def pairs(docs: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
     // The shingle table fans into both the signature path and the verify
     // joins — persist it once rather than recomputing the scan+shingling
     // three times (at cluster scale this is the materialized
@@ -234,35 +210,25 @@ object Dedup {
     val shingled = shingleSets(kernelParallel(docs), cfg)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = signatures(shingled, cfg)
-    val cands = candidatePairs(bandTable(validSignatures(sigs), cfg), saltBuckets)
-    verifiedPairs(cands, shingled, cfg)
+    verifiedPairs(candidatePairs(bandTable(validSignatures(sigs), cfg)), shingled, cfg)
   }
 
   /** Eagerly-materialized pairs: computes the verified pair set once
-    * (localCheckpoint), then unpersists the intermediate shingle cache so
-    * repeated invocations (bench warmup+timed run, per-dir serving
+    * (localCheckpoint) with the intermediate caches scoped to the call,
+    * so repeated invocations (bench warmup+timed run, per-dir serving
     * caches) don't accumulate cached blocks for the life of the session.
     */
-  def pairsMaterialized(docs: DataFrame, cfg: DedupConfig = DedupConfig(),
-                        saltBuckets: Int = 1): DataFrame = {
-    val shingled = shingleSets(kernelParallel(docs), cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val sigs = signatures(shingled, cfg)
+  def pairsMaterialized(docs: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame =
+    withCached(shingleSets(kernelParallel(docs), cfg)) { shingled =>
       // the band table feeds BOTH legs of the candidate self-join; when
       // the planner picks a broadcast join the legs cannot share an
-      // exchange, so without this persist the signature kernel + banding
+      // exchange, so without this cache the signature kernel + banding
       // would execute once per leg (guide §2.4 — the skew-aware variant
-      // already materializes for the same reason). Narrow rows (~40
-      // bands/doc), unpersisted as soon as the pair set is materialized.
-      val bands = bandTable(validSignatures(sigs), cfg)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val cands = candidatePairs(bands, saltBuckets)
-        verifiedPairs(cands, shingled, cfg).localCheckpoint(true)
-      } finally bands.unpersist()
-    } finally shingled.unpersist()
-  }
+      // materializes for the same reason). Narrow rows (~40 bands/doc).
+      withCached(bandTable(validSignatures(signatures(shingled, cfg)), cfg)) { bands =>
+        verifiedPairs(candidatePairs(bands), shingled, cfg).localCheckpoint(true)
+      }
+    }
 
   /** Exact n-gram Jaccard pairs via inverted-index self-join: any pair
     * with jaccard > 0 shares a shingle, so joining the exploded shingle
@@ -310,27 +276,21 @@ object Dedup {
     * aggregation (doc frequency) + a per-doc window; both shuffle on keys
     * that stay bounded at corpus scale (shingle, doc id).
     */
-  def exactJaccardPairsPrefix(docs: DataFrame, cfg: DedupConfig): DataFrame = {
-    val shingled = shingleSets(kernelParallel(docs), cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+  def exactJaccardPairsPrefix(docs: DataFrame, cfg: DedupConfig): DataFrame =
+    withCached(shingleSets(kernelParallel(docs), cfg)) { shingled =>
       // the prefix table feeds BOTH legs of the candidate self-join:
-      // persisted so a broadcast-planned join cannot re-run the
-      // freq-join + window lineage per leg (guide §2.4); narrow rows,
-      // dropped as soon as the pair set is materialized
-      val prefix = prefixTable(rankedIndex(shingled), cfg.threshold)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // lazy persist is enough here (unlike containmentPairs' 4-leg
-      // ranked cache): a broadcast-planned self-join builds its
-      // broadcast side BEFORE the probe stage runs, so the first leg
-      // populates the cache and the second reads it — no concurrent
-      // cold-cache scans, and an eager count would be one extra job
-      try verifiedPairs(pairCandidatesFromPrefix(prefix, cfg.threshold),
-          shingled, cfg)
-        .localCheckpoint(true)
-      finally prefix.unpersist()
-    } finally shingled.unpersist()
-  }
+      // cached so a broadcast-planned join cannot re-run the freq-join
+      // + window lineage per leg (guide §2.4). A lazy cache is enough
+      // here (unlike containmentPairs' eagerly filled ranked index): a
+      // broadcast-planned self-join builds its broadcast side BEFORE the
+      // probe stage runs, so the first leg populates the cache and the
+      // second reads it — no concurrent cold-cache scans, and an eager
+      // count would be one extra job
+      withCached(prefixTable(rankedIndex(shingled), cfg.threshold)) { prefix =>
+        verifiedPairs(pairCandidatesFromPrefix(prefix, cfg.threshold), shingled, cfg)
+          .localCheckpoint(true)
+      }
+    }
 
   /** Ranked inverted index behind every prefix-filter operator: one row
     * per (doc, shingle) with the doc's cardinality `c`, the shingle's
@@ -415,98 +375,87 @@ object Dedup {
     * bucket. Cold keys pay nothing; the pair set is unchanged
     * (equality-tested on the boilerplate skew fixture).
     */
-  def containmentPairs(docs: DataFrame, cfg: DedupConfig,
-                       tau: Double, materialize: Boolean = true,
-                       hotCap: Int = 1024, saltBuckets: Int = 16): DataFrame = {
-    // materialize=false returns the LAZY plan (no persist/checkpoint) —
-    // for plan inspection (DumpPlans): localCheckpoint collapses the
-    // lineage to Scan ExistingRDD, hiding the join shape
-    val shingled0 = shingleSets(kernelParallel(docs), cfg)
-    val shingled =
-      if (materialize)
-        shingled0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else shingled0
-    try {
+  def containmentPairs(docs: DataFrame, cfg: DedupConfig, tau: Double,
+                       hotCap: Int = 1024, saltBuckets: Int = 16): DataFrame =
+    withCached(shingleSets(kernelParallel(docs), cfg)) { shingled =>
       // ONE ranked inverted index (id, c, h, df, rn) feeds every slice
-      // below. The round-5 shape re-derived the exploded table per
-      // consumer and resolved hot/cold membership with four broadcast
-      // semi/anti joins against the hot-key set; df riding each row
-      // makes that membership a plain filter and the prefix bound a
-      // plain filter — no extra joins, no broadcasts (guide §2.4).
-      // Persisted (when eager) because four join legs consume it.
-      val ranked0 = rankedIndex(shingled)
-      val ranked =
-        if (materialize)
-          ranked0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else ranked0
-      // populate the cache EAGERLY: the join legs below run as
-      // concurrent stages of one job, and concurrent scans of a cold
-      // cache each recompute the freq-join + window lineage (block
-      // store is compute-then-publish, not compute-once) — measured
-      // 2x slower than a single eager pass at sf0.1. The same pass
-      // returns max(df), deciding up front whether a hot branch is
-      // needed at all (the ExactSubstring.hotHays pattern); the lazy
-      // plan keeps both branches so plan dumps show the full shape.
-      val maxDf =
-        if (!materialize) Long.MaxValue
-        else {
-          val r = ranked.agg(count(lit(1)).as("n"), max(col("df")).as("m")).head
-          if (r.isNullAt(1)) 0L else r.getLong(1)
-        }
-      try {
-        // +2 not +1: the verify predicate is the DOUBLE quotient i/|A| >=
-        // tau, which can round up across tau while ceil(c*tau) = i+1 in
-        // exact arithmetic — one element of slack keeps the window
-        // complete at such boundaries (exact verify removes the extras)
-        val prefix = ranked
-          .where(col("rn") <= col("c") - ceil(col("c") * tau) + 2)
-        // pairing condition: each unordered pair generated exactly once
-        // with A the min-cardinality (contained) side. The POSITIONAL
-        // clause (PPJoin): a true pair's FIRST shared element bounds the
-        // overlap by 1 + min(remaining per side) and always survives the
-        // filter itself (one element of double slack, like the prefix
-        // bound), so completeness is unchanged while late-position-only
-        // collisions stop becoming candidates.
-        def pairCond = col("a.h") === col("b.h") &&
-          (col("a.c") < col("b.c") ||
-            (col("a.c") === col("b.c") && col("a.id") < col("b.id"))) &&
-          lit(1) + least(col("a.c") - col("a.rn"), col("b.c") - col("b.rn")) >=
-            col("a.c") * tau - 1
-        // measured hot-key split, now a df filter per side: cold keys
-        // take the plain asymmetric join; hot keys (df > hotCap) are
-        // salted so no join task materializes a full f-row bucket. When
-        // the measured max(df) says NO key is hot — the normal case —
-        // the split collapses to one unfiltered join: the df filters
-        // would keep every row and the empty hot branch would still
-        // cost a join, a union leg and wider distinct input.
-        val cands = (if (maxDf <= hotCap) {
-          prefix.as("a").join(ranked.as("b"), pairCond)
-            .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
-        } else {
-          val coldCands = prefix.where(col("df") <= hotCap).as("a")
-            .join(ranked.where(col("df") <= hotCap).as("b"), pairCond)
-            .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
-          val hotCands = prefix.where(col("df") > hotCap)
-            .withColumn("salt", explode(sequence(lit(0), lit(saltBuckets - 1)))).as("a")
-            .join(ranked.where(col("df") > hotCap).withColumn("salt",
-              pmod(xxhash64(col("id")), lit(saltBuckets))).as("b"),
-              pairCond && col("a.salt") === col("b.salt"))
-            .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
-          coldCands.union(hotCands)
-        }).distinct()
-        val sa = shingled.select(col("id").as("small_id"), col("shingles").as("sh_a"))
-        val sb = shingled.select(col("id").as("big_id"), col("shingles").as("sh_b"))
-        val result = cands.join(sa, "small_id").join(sb, "big_id")
-          .withColumn("containment",
-            graft.functions.Expressions.intersectCount(col("sh_a"), col("sh_b"))
-              .cast("double") / size(col("sh_a")))
-          .where(col("containment") >= tau)
-          .select(least(col("small_id"), col("big_id")).as("id_a"),
-            greatest(col("small_id"), col("big_id")).as("id_b"),
-            col("containment"))
-        if (materialize) result.localCheckpoint(true) else result
-      } finally { if (materialize) { ranked.unpersist(); () } }
-    } finally { if (materialize) { shingled.unpersist(); () } }
+      // of the plan; cached because up to four join legs consume it
+      withCached(rankedIndex(shingled)) { ranked =>
+        // populate the cache EAGERLY: the join legs run as concurrent
+        // stages of one job, and concurrent scans of a cold cache each
+        // recompute the freq-join + window lineage (block store is
+        // compute-then-publish, not compute-once) — measured 2x slower
+        // than a single eager pass at sf0.1. The same pass returns
+        // max(df), deciding up front whether a hot branch is needed at
+        // all (the ExactSubstring.hotHays pattern).
+        val maxDf = ranked.agg(max(col("df"))).head
+        val hot = !maxDf.isNullAt(0) && maxDf.getLong(0) > hotCap
+        containmentPlan(shingled, ranked, tau, hotCap, saltBuckets, hot)
+          .localCheckpoint(true)
+      }
+    }
+
+  /** The lazy plan behind [[containmentPairs]] over its shingle table
+    * and [[rankedIndex]]: candidates from the asymmetric prefix join
+    * (split into a cold join and a salted hot join when `hot`), then
+    * the exact containment verify. Exposed for plan dumps, where the
+    * checkpointed result would collapse to Scan ExistingRDD.
+    */
+  private[graft] def containmentPlan(shingled: DataFrame, ranked: DataFrame,
+                                     tau: Double, hotCap: Int, saltBuckets: Int,
+                                     hot: Boolean): DataFrame = {
+    // df and rn ride each row of the ranked index, so hot/cold
+    // membership and the prefix bound are plain filters — no extra
+    // joins, no broadcasts (guide §2.4).
+    // +2 not +1: the verify predicate is the DOUBLE quotient i/|A| >=
+    // tau, which can round up across tau while ceil(c*tau) = i+1 in
+    // exact arithmetic — one element of slack keeps the window
+    // complete at such boundaries (exact verify removes the extras)
+    val prefix = ranked
+      .where(col("rn") <= col("c") - ceil(col("c") * tau) + 2)
+    // pairing condition: each unordered pair generated exactly once
+    // with A the min-cardinality (contained) side. The POSITIONAL
+    // clause (PPJoin): a true pair's FIRST shared element bounds the
+    // overlap by 1 + min(remaining per side) and always survives the
+    // filter itself (one element of double slack, like the prefix
+    // bound), so completeness is unchanged while late-position-only
+    // collisions stop becoming candidates.
+    def pairCond = col("a.h") === col("b.h") &&
+      (col("a.c") < col("b.c") ||
+        (col("a.c") === col("b.c") && col("a.id") < col("b.id"))) &&
+      lit(1) + least(col("a.c") - col("a.rn"), col("b.c") - col("b.rn")) >=
+        col("a.c") * tau - 1
+    // measured hot-key split, a df filter per side: cold keys take the
+    // plain asymmetric join; hot keys (df > hotCap) are salted so no
+    // join task materializes a full f-row bucket. When NO key is hot —
+    // the normal case — the split collapses to one unfiltered join: the
+    // df filters would keep every row and the empty hot branch would
+    // still cost a join, a union leg and wider distinct input.
+    val cands = (if (!hot) {
+      prefix.as("a").join(ranked.as("b"), pairCond)
+        .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
+    } else {
+      val coldCands = prefix.where(col("df") <= hotCap).as("a")
+        .join(ranked.where(col("df") <= hotCap).as("b"), pairCond)
+        .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
+      val hotCands = prefix.where(col("df") > hotCap)
+        .withColumn("salt", explode(sequence(lit(0), lit(saltBuckets - 1)))).as("a")
+        .join(ranked.where(col("df") > hotCap).withColumn("salt",
+          pmod(xxhash64(col("id")), lit(saltBuckets))).as("b"),
+          pairCond && col("a.salt") === col("b.salt"))
+        .select(col("a.id").as("small_id"), col("b.id").as("big_id"))
+      coldCands.union(hotCands)
+    }).distinct()
+    val sa = shingled.select(col("id").as("small_id"), col("shingles").as("sh_a"))
+    val sb = shingled.select(col("id").as("big_id"), col("shingles").as("sh_b"))
+    cands.join(sa, "small_id").join(sb, "big_id")
+      .withColumn("containment",
+        Expressions.intersectCount(col("sh_a"), col("sh_b")).cast("double") /
+          size(col("sh_a")))
+      .where(col("containment") >= tau)
+      .select(least(col("small_id"), col("big_id")).as("id_a"),
+        greatest(col("small_id"), col("big_id")).as("id_b"),
+        col("containment"))
   }
 
   /** Pairs -> cluster assignments via distributed connected components
@@ -547,18 +496,16 @@ object Dedup {
     * @param clusters (id, cluster_id) from [[clusters]]
     * @param quality  scoring column evaluated over `docs` (numeric)
     */
-  def keepList(docs: DataFrame, clusters: DataFrame, quality: Column,
-               materialize: Boolean = true): DataFrame = {
+  def keepList(docs: DataFrame, clusters: DataFrame, quality: Column): DataFrame = {
     // the scored frame feeds TWO consumers (the winner aggregate and the
     // flag-back join): left lazy, the docs scan + quality expression +
     // cluster join execute once per consumer — for an expensive quality
     // (text scoring, media decode via mediaKeepList) that doubles the
-    // dominant cost. Materialized narrow (id, quality, cluster_id) rows
-    // only; materialize=false keeps the lazy plan for plan dumps.
-    val scored0 = docs.select(col("id"), quality.as("quality"))
+    // dominant cost. Materialized narrow (id, quality, cluster_id) rows.
+    val scored = docs.select(col("id"), quality.as("quality"))
       .join(clusters.select(col("id"), col("cluster_id")), Seq("id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
-    val scored = if (materialize) scored0.localCheckpoint(true) else scored0
+      .localCheckpoint(true)
     // min over (-quality, id) == (max quality, ties by min id): the
     // exact ordering the old window used, as one partial-aggregatable
     // struct-min; null quality -> +Inf so it sorts LAST like the

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.pipeline.withCached
+
 /** Bloom-prefiltered membership against a huge "seen" store — the
   * skip-if-done / already-ingested check (reference `exists()`
   * semantics, `winnow/storage/db_result_storage.py:46-58`) at the
@@ -59,9 +61,7 @@ object SeenFilter {
     val spark = fresh.sparkSession
     val bcast = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((s: String) => s != null && bcast.value.mightContainString(s))
-    val flagged = fresh.withColumn("_maybe_seen", mightContain(key.cast("string")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withCached(fresh.withColumn("_maybe_seen", mightContain(key.cast("string")))) { flagged =>
       val definite = flagged.where(!col("_maybe_seen")).drop("_maybe_seen")
       val residue = flagged.where(col("_maybe_seen")).drop("_maybe_seen")
       // NO distinct() on the store side: a left-anti join is
@@ -72,6 +72,6 @@ object SeenFilter {
         store.select(storeKey.cast("string").as("_seen_key")),
         key.cast("string") === col("_seen_key"), "left_anti")
       definite.unionByName(verified).localCheckpoint(true)
-    } finally { flagged.unpersist(); () }
+    }
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.sketch.BloomFilter
 
-import graft.pipeline.{Dedup, DedupConfig}
+import graft.pipeline.{Dedup, DedupConfig, withCached}
 import graft.store.{SeenFilter, TxEntry, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
@@ -129,9 +129,7 @@ object IncrementalIngest {
         org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
           .orderBy(xxhash64(col("text")).asc_nulls_last)))
       .where(col("__ingest_rn") === 1).drop("__ingest_rn")
-    val newSigs = Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    withCached(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)) { newSigs =>
       // (1) seen-filtered idempotent signature flush
       val snap = sl.snapshot()
       val pending =
@@ -204,7 +202,7 @@ object IncrementalIngest {
         state.bloom = null // compaction rewrote the paths → rebuild next batch
         state.bloomPaths = Set.empty
       }
-    } finally newSigs.unpersist()
+    }
   }
 
   /** Match every signature-store id not yet covered by a match run

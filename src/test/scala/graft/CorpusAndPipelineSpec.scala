@@ -65,11 +65,8 @@ class CorpusAndPipelineSpec extends SparkSpecBase {
     val (skewed, _) = SynthCorpus.generate(spark, seed = 7L, nBase = 300,
       dupRate = 0.1, skewBoilerplate = true)
     val docs = Dedup.fromPages(skewed)
-    val plain = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 1)
+    val plain = Dedup.pairsMaterialized(docs, cfg)
       .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val salted = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 8)
-      .select("id_a", "id_b").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(plain == salted)
     // skew-aware selective salting: same pair set, replication only on
     // measured hot bands (cap forced low so the shared boilerplate
     // actually trips it on this fixture)

@@ -45,10 +45,16 @@ class DedupPipelineSpec extends SparkSpecBase {
   }
 
   test("salted candidate join produces the identical pair set") {
-    val plain = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 1).select("id_a", "id_b")
+    val plain = Dedup.pairsMaterialized(docs, cfg).select("id_a", "id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salted = Dedup.pairsMaterialized(docs, cfg, saltBuckets = 5).select("id_a", "id_b")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // hotCap = 1: every band shared by two or more docs takes the salted
+    // hot branch, so every candidate pair comes out of the salted join
+    val shingled = Dedup.shingleSets(docs, cfg)
+    val bands = Dedup.bandTable(Dedup.validSignatures(Dedup.signatures(shingled, cfg)), cfg)
+    val salted = Dedup.verifiedPairs(
+        Dedup.candidatePairsSkewAware(bands, hotCap = 1, saltBuckets = 5), shingled, cfg)
+      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(plain.nonEmpty)
     assert(plain == salted)
   }
 

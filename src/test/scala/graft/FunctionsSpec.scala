@@ -250,4 +250,14 @@ class FunctionsSpec extends SparkSpecBase {
     val shared = (fps(0) & fps(1)).size.toDouble
     assert(shared / math.max(1, fps(0).size) > 0.8)
   }
+
+  test("LongProbe sizing is computed without Int overflow") {
+    assert(Kernels.LongProbe.capacity(1024, 100) == 1024)
+    assert(Kernels.LongProbe.capacity(1024, 513) == 2048)
+    assert(Kernels.LongProbe.capacity(1024, 1 << 29) == (1 << 30))
+    // n = 2^30: 2n wraps negative in Int; the bound is checked before
+    // any table is allocated
+    val e = intercept[IllegalArgumentException](Kernels.LongProbe.capacity(1024, 1 << 30))
+    assert(e.getMessage.contains("exceeds"), e.getMessage)
+  }
 }

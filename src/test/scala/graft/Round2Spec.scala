@@ -424,13 +424,11 @@ class Round2Spec extends SparkSpecBase {
     val docs = (Seq((0L, hay)) ++ needles).toDF("id", "text")
     val cands = (1 to 10000).map(i => (0L, i.toLong)).toDF("id_a", "id_b")
     val result = ExactSubstring.containmentPairs(cands, docs)
-    // plan-shape gate on the LAZY form (materialize=true checkpoints,
-    // collapsing the plan): the hot branch is co-grouped/streamed; the
-    // only collect_list left is the anti-joined cold branch, whose
-    // groups are bounded by hotCap — and here the one hay is hot, so
-    // the cold branch is empty
-    val plan = ExactSubstring.containmentPairs(cands, docs, materialize = false)
-      .queryExecution.executedPlan.toString
+    // plan-shape gate: the hot branch is co-grouped/streamed; the only
+    // collect_list left is the anti-joined cold branch, whose groups
+    // are bounded by hotCap — and here the one hay is hot, so the
+    // result keeps the two-branch plan and the cold branch is empty
+    val plan = result.queryExecution.executedPlan.toString
     assert(plan.contains("CoGroup"), s"expected CoGroup in plan:\n$plan")
     val got = result.collect()
       .map(r => (r.getString(1).toLong, r.getBoolean(2))).toMap
