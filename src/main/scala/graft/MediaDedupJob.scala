@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Embeddings
 import graft.multimodal.BinaryPipeline
+import graft.pipeline.Dedup
 
 /** Production entry point for MEDIA dedup — the reference's own domain
   * (VideoDeduplication end-to-end: extract features -> generate matches
@@ -52,7 +53,7 @@ object MediaDedupJob {
       else Embeddings.srpThresholdPairs(embD, threshold)
     pairs.write.mode(SaveMode.Overwrite).parquet(s"$workDir/pairs/tag=$tag")
     val pairsD = spark.read.parquet(s"$workDir/pairs/tag=$tag")
-    val clusters = BinaryPipeline.mediaClusters(pairsD)
+    val clusters = Dedup.clusters(pairsD)
     clusters.write.mode(SaveMode.Overwrite).parquet(s"$workDir/clusters/tag=$tag")
     val clustersD = spark.read.parquet(s"$workDir/clusters/tag=$tag")
     BinaryPipeline.mediaKeepList(media, clustersD)

@@ -7,16 +7,18 @@ import org.apache.spark.sql.functions._
   * opaque `binary` columns with typed metadata.
   *
   * Image DECODE + featurization are REAL end-to-end:
-  *   - spec-exact pure-JVM decoders for 24-bit BMP (`decodeBmpPixels`),
-  *     8-bit non-interlaced PNG (`decodePngPixels`: chunk walk -> zlib
-  *     inflate -> all five spec unfilters) and non-interlaced GIF
-  *     (`decodeGifPixels`: from-scratch LZW + palette lookup) — these
+  *   - spec-exact pure-JVM decoders for 24-bit BMP (`decodeBmpPixels`,
+  *     ~8x cheaper per small item than ImageIO) and GIF
+  *     (`decodeGifPixels`: from-scratch LZW + palette lookup; the JDK
+  *     reader misplaces rows of interlaced GIFs 2-4 pixels tall) — these
   *     run first and are bit-tested against hand-built images;
   *   - the JDK's ImageIO codecs (`java.desktop` ships jpeg/png/gif/bmp/
-  *     tiff readers; headless, memory-cached) cover jpeg and ANIMATION
-  *     FRAMES (`decodeImageIOFrame(bytes, frameIdx)`) — multi-frame
-  *     media is the reference's video: one reader per item, sampled
-  *     frames decoded individually (`sampleAndFeaturize`);
+  *     tiff readers; headless, memory-cached) decode PNG (every layout),
+  *     jpeg and ANIMATION FRAMES (`decodeImageIOFrame(bytes, frameIdx)`)
+  *     — multi-frame media is the reference's video: one reader per
+  *     item, sampled frames decoded individually (`sampleAndFeaturize`);
+  *     gray images are read raw from the raster, and the pixel cap is
+  *     checked on the header dims before any pixel allocation;
   *   - decoded luma -> `gridLumaFeature` mean-pool grid (the
   *     reference's pooled-activation descriptor shape).
   * Header metadata is a spec byte parse (`decodeImageHeader`), enriched
@@ -108,6 +110,7 @@ object BinaryPipeline {
     * decode -> featurize path runs on REAL pixels end-to-end.
     */
   def decodeBmpPixels(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] = {
+    // kept over ImageIO: ~8x cheaper per 16x16 item, and media partitions hold thousands
     if (bytes == null || bytes.length < 54) return None
     def u8(i: Int) = bytes(i) & 0xff
     def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
@@ -122,7 +125,7 @@ object BinaryPipeline {
     val height = math.abs(heightRaw)
     val topDown = heightRaw < 0
     // forged-header bounds in LONG arithmetic + the same pixel cap the
-    // PNG/GIF decoders enforce: width*3 and width*height overflow Int
+    // GIF/ImageIO decoders enforce: width*3 and width*height overflow Int
     // for hostile dimensions, turning the extent check into a pass and
     // the allocation into a multi-GB OOM
     if (dataOff < 0 || height < 0 ||
@@ -143,113 +146,6 @@ object BinaryPipeline {
         x += 1
       }
       y += 1
-    }
-    Some((width, height, out))
-  }
-
-  /** REAL pixel decode for PNG (8-bit depth, non-interlaced, color
-    * types 0=gray / 2=rgb / 4=gray+alpha / 6=rgba): pure JVM — chunk
-    * walk, IDAT concat, zlib inflate (`java.util.zip.Inflater`),
-    * per-scanline unfilter (None/Sub/Up/Average/Paeth per the PNG
-    * spec), then BT.601 luma (gray passthrough for types 0/4). Returns
-    * row-major top-down luma like [[decodeBmpPixels]]; None for any
-    * unsupported layout (16-bit, palette, interlaced) or corrupt
-    * stream — callers fall back to the stub.
-    */
-  def decodePngPixels(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] = {
-    if (bytes == null || bytes.length < 45) return None
-    def u8(i: Int) = bytes(i) & 0xff
-    def be32(i: Int) = (u8(i) << 24) | (u8(i + 1) << 16) | (u8(i + 2) << 8) | u8(i + 3)
-    val sig = Array(0x89, 'P'.toInt, 'N'.toInt, 'G'.toInt, 0x0d, 0x0a, 0x1a, 0x0a)
-    var s = 0
-    while (s < 8) { if (u8(s) != sig(s)) return None; s += 1 }
-    var i = 8
-    var width = 0; var height = 0; var bitDepth = 0; var colorType = 0
-    var interlace = 0; var seenIhdr = false
-    val idat = new java.io.ByteArrayOutputStream()
-    var done = false
-    while (!done && i + 8 <= bytes.length) {
-      val len = be32(i)
-      val dataStart = i + 8
-      if (len < 0 || dataStart.toLong + len + 4 > bytes.length) return None
-      val typ = new String(bytes, i + 4, 4, "US-ASCII")
-      typ match {
-        case "IHDR" =>
-          if (len < 13) return None
-          width = be32(dataStart); height = be32(dataStart + 4)
-          bitDepth = u8(dataStart + 8); colorType = u8(dataStart + 9)
-          if (u8(dataStart + 10) != 0 || u8(dataStart + 11) != 0) return None
-          interlace = u8(dataStart + 12); seenIhdr = true
-        case "IDAT" => idat.write(bytes, dataStart, len)
-        case "IEND" => done = true
-        case _ => // ancillary chunk, skip
-      }
-      i = dataStart + len + 4
-    }
-    if (!seenIhdr || interlace != 0 || bitDepth != 8) return None
-    val channels = colorType match {
-      case 0 => 1; case 2 => 3; case 4 => 2; case 6 => 4; case _ => return None
-    }
-    // bound decoded size (64M pixels) — a forged IHDR must not OOM an executor
-    if (width <= 0 || height <= 0 || width.toLong * height > (1L << 26)) return None
-    val rowBytes = width * channels
-    val raw = new Array[Byte]((rowBytes + 1) * height)
-    val inflater = new java.util.zip.Inflater()
-    try {
-      inflater.setInput(idat.toByteArray)
-      var off = 0
-      while (off < raw.length && !inflater.finished()) {
-        val n = inflater.inflate(raw, off, raw.length - off)
-        if (n == 0 && (inflater.needsInput() || inflater.needsDictionary()))
-          return None // truncated / preset-dictionary stream
-        off += n
-      }
-      if (off < raw.length) return None
-    } catch {
-      case _: java.util.zip.DataFormatException => return None
-    } finally inflater.end()
-    // unfilter scanlines (filter byte precedes each row); unfiltered
-    // bytes stored as Array[Byte] (values are mod-256 anyway) — an
-    // Array[Int] here would 4x the dominant allocation of a hostile
-    // max-dimension PNG
-    val img = new Array[Byte](rowBytes * height)
-    val bpp = channels
-    var y = 0
-    while (y < height) {
-      val filter = raw((rowBytes + 1) * y) & 0xff
-      val src = (rowBytes + 1) * y + 1
-      var x = 0
-      while (x < rowBytes) {
-        val cur = raw(src + x) & 0xff
-        val a = if (x >= bpp) img(y * rowBytes + x - bpp) & 0xff else 0
-        val b = if (y > 0) img((y - 1) * rowBytes + x) & 0xff else 0
-        val c = if (x >= bpp && y > 0) img((y - 1) * rowBytes + x - bpp) & 0xff else 0
-        val v = filter match {
-          case 0 => cur
-          case 1 => cur + a
-          case 2 => cur + b
-          case 3 => cur + (a + b) / 2
-          case 4 =>
-            val p = a + b - c
-            val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-            cur + (if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c)
-          case _ => return None
-        }
-        img(y * rowBytes + x) = v.toByte
-        x += 1
-      }
-      y += 1
-    }
-    val out = new Array[Double](width * height)
-    var p = 0
-    while (p < width * height) {
-      val base = p * channels
-      out(p) = colorType match {
-        case 0 | 4 => (img(base) & 0xff).toDouble // gray (alpha ignored for luma)
-        case _ => 0.299 * (img(base) & 0xff) + 0.587 * (img(base + 1) & 0xff) +
-          0.114 * (img(base + 2) & 0xff)
-      }
-      p += 1
     }
     Some((width, height, out))
   }
@@ -335,6 +231,7 @@ object BinaryPipeline {
     * writer emits interlaced, with real dictionary-compressed LZW).
     */
   def decodeGifPixels(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] = {
+    // kept over ImageIO: the JDK reader misplaces rows of interlaced GIFs 2-4 px tall
     if (bytes == null || bytes.length < 14) return None
     def u8(i: Int) = bytes(i) & 0xff
     def le16(i: Int) = u8(i) | (u8(i + 1) << 8)
@@ -400,13 +297,12 @@ object BinaryPipeline {
     None
   }
 
-  /** Pixel decode across the pure-JVM spec decoders (24bpp BMP, 8-bit
-    * non-interlaced PNG, non-interlaced GIF); None -> ImageIO / stub
+  /** Pixel decode across the pure-JVM spec decoders (24bpp BMP first —
+    * the media workloads' hot format — then GIF); None -> ImageIO / stub
     * fallback in [[featurize]].
     */
   def decodePixels(bytes: Array[Byte]): Option[(Int, Int, Array[Double])] =
-    decodeBmpPixels(bytes).orElse(decodePngPixels(bytes))
-      .orElse(decodeGifPixels(bytes))
+    decodeBmpPixels(bytes).orElse(decodeGifPixels(bytes))
 
   // --- JDK ImageIO codec path (java.desktop ships jpeg/png/gif/bmp/tiff
   // readers — real codecs, headless-safe). Memory-cached streams: no
@@ -444,25 +340,34 @@ object BinaryPipeline {
   }
 
   /** Luma plane of one frame via an open reader (frame index past the
-    * end, corrupt frame data, forged dims -> None).
+    * end, corrupt frame data, forged dims -> None). The 64M-pixel cap is
+    * checked on the header dims BEFORE `read`, which would otherwise
+    * allocate the forged raster. Gray images are read raw from band 0
+    * (scaled to 0-255 by bit depth): `getRGB` would apply a
+    * linear-to-sRGB gamma to them.
     */
   private def readerFrameLuma(r: javax.imageio.ImageReader,
                               frameIdx: Int): Option[(Int, Int, Array[Double])] =
     try {
-      val img = r.read(frameIdx)
-      val w = img.getWidth; val h = img.getHeight
-      if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) None
+      if (r.getWidth(frameIdx).toLong * r.getHeight(frameIdx) > (1L << 26)) None
       else {
+        val img = r.read(frameIdx)
+        val w = img.getWidth; val h = img.getHeight
+        val cm = img.getColorModel
+        val gray = cm.getColorSpace.getType == java.awt.color.ColorSpace.TYPE_GRAY
+        val scale = 255.0 / ((1L << cm.getComponentSize(0)) - 1)
         val out = new Array[Double](w * h)
         val row = new Array[Int](w)
         var y = 0
         while (y < h) {
-          img.getRGB(0, y, w, 1, row, 0, w)
+          if (gray) img.getRaster.getSamples(0, y, w, 1, 0, row)
+          else img.getRGB(0, y, w, 1, row, 0, w)
           var x = 0
           while (x < w) {
             val p = row(x)
-            out(y * w + x) = 0.299 * ((p >> 16) & 0xff) +
-              0.587 * ((p >> 8) & 0xff) + 0.114 * (p & 0xff)
+            out(y * w + x) = if (gray) p * scale
+              else 0.299 * ((p >> 16) & 0xff) + 0.587 * ((p >> 8) & 0xff) +
+                0.114 * (p & 0xff)
             x += 1
           }
           y += 1
@@ -524,8 +429,8 @@ object BinaryPipeline {
   }
 
   /** Featurize: REAL pixel path for every decodable image — spec
-    * decoders first (frame 0: BMP/PNG/GIF, bit-tested), then the JDK
-    * ImageIO codecs (jpeg, animation frames via `frameIdx`);
+    * decoders first (frame 0: BMP/GIF, bit-tested), then the JDK
+    * ImageIO codecs (png, jpeg, animation frames via `frameIdx`);
     * deterministic stub only for genuinely undecodable bytes
     * (compressed-audio/video containers — no codecs for those in the JDK;
     * WAV/PCM audio is REAL via [[decodeWavPcm]]/[[audioFrames]]).
@@ -753,17 +658,6 @@ object BinaryPipeline {
     out.array()
   }
 
-  /** Visual near-duplicate pairs — the reference's OWN domain
-    * (VideoDeduplication: frame descriptors -> item signature ->
-    * pairwise match, `generate_matches.py:57-94`) running on REAL
-    * pixels: decode sampled frames (codecs above) -> grid-luma frame
-    * features -> mean-pooled item embedding -> ALL cosine >= threshold
-    * pairs, canonicalized (id_a < id_b) — COMPLETE at the threshold (a
-    * k-NN cut would silently drop qualifying pairs inside duplicate
-    * groups larger than ~k). The broadcast scan is exact, fine up to
-    * ~1M items; at corpus scale swap `Embeddings.srpTopK` in — the
-    * item-embedding table has the exact schema both paths share.
-    */
   /** media(id, bytes) -> item-embedding table (id, embedding float[]) —
     * the shared input schema of every pair-search path (threshold scan,
     * srpTopK, incremental).
@@ -773,38 +667,28 @@ object BinaryPipeline {
       .select(col("id"),
         expr("transform(embedding, x -> cast(x as float))").as("embedding"))
 
-  /** All visual duplicate pairs (cosine >= threshold over the pooled
-    * item embeddings). The DEFAULT path is the SRP-LSH bucket join —
-    * no corpus collect, the shape that survives corpus scale; recall
-    * at near-dup cosines (→1) is ~1 and is parity-tested against the
-    * exact scan. `mode = "exact"` opts into the broadcast-scan baseline
-    * (reference kd-tree analog), which enforces its corpus-size
-    * contract loudly.
+  /** Visual near-duplicate pairs — the reference's OWN domain
+    * (VideoDeduplication: frame descriptors -> item signature ->
+    * pairwise match, `generate_matches.py:57-94`) running on REAL
+    * pixels: decode sampled frames (codecs above) -> grid-luma frame
+    * features -> mean-pooled item embedding -> ALL cosine >= threshold
+    * pairs, canonicalized (id_a < id_b), from the SRP-LSH bucket join —
+    * no corpus collect, the shape that survives corpus scale. Recall at
+    * near-dup cosines (→1) is ~1, parity-tested against the exact
+    * broadcast scan (`MediaDedupJob` mode `exact`).
     */
   def mediaDuplicatePairs(media: DataFrame, threshold: Double = 0.995,
-                          stride: Int = 1, dim: Int = 16,
-                          mode: String = "lsh"): DataFrame = {
-    // validated, not defaulted-on-typo: a caller asking for "Exact" to
-    // build recall ground truth must not silently get the approximate path
-    require(mode == "lsh" || mode == "exact", s"mode must be lsh|exact, got $mode")
-    val emb = mediaEmbeddings(media, stride, dim)
-    if (mode == "exact")
-      // collect + rescan are SEPARATE jobs (no exchange reuse across
-      // actions): materialize once or the decode lineage runs twice
-      graft.functions.Embeddings.bruteForceThresholdPairs(
-        emb.localCheckpoint(true), threshold)
-    else
-      // the bucket join references emb on both sides WITHIN one plan,
-      // and Catalyst's ReusedExchange dedups the identical subtree —
-      // re-measured in round 6 (3-run A/B at sf0.1): an eager
-      // checkpoint was consistently ~0.2 s SLOWER than the lazy plan
-      // (medians 1.18 vs 0.98), confirming the round-5 reading — the
-      // decode already runs once here, a checkpoint is pure overhead
-      // (unlike the audio query path, where the planner broadcast a
-      // leg, the legs could not share an exchange, and its checkpoint
-      // won — the decision is per-plan, not per-principle)
-      graft.functions.Embeddings.srpThresholdPairs(emb, threshold)
-  }
+                          stride: Int = 1, dim: Int = 16): DataFrame =
+    // the bucket join references the embeddings on both sides WITHIN one
+    // plan, and Catalyst's ReusedExchange dedups the identical subtree —
+    // re-measured in round 6 (3-run A/B at sf0.1): an eager checkpoint
+    // was consistently ~0.2 s SLOWER than the lazy plan (medians 1.18 vs
+    // 0.98) — the decode already runs once here, a checkpoint is pure
+    // overhead (unlike the audio query path, where the planner broadcast
+    // a leg, the legs could not share an exchange, and its checkpoint
+    // won — the decision is per-plan, not per-principle)
+    graft.functions.Embeddings.srpThresholdPairs(
+      mediaEmbeddings(media, stride, dim), threshold)
 
   /** Incremental media matching — the reference fork's periodic loop
     * (`ray_extract_features.py:241-367`: new items matched against ALL
@@ -828,18 +712,11 @@ object BinaryPipeline {
         .broadcastThresholdJoin(ne, storeEmb, threshold))
   }
 
-  /** Pairs -> duplicate-group assignments (same CC operator as the text
-    * pipeline; cluster id = min member id).
-    */
-  def mediaClusters(pairs: DataFrame): DataFrame =
-    graft.pipeline.ConnectedComponents.run(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
-      .select(col("id"), col("component").as("cluster_id"))
-
   /** Canonical item per visual duplicate group: highest RESOLUTION wins
     * (width*height from the real metadata decode — what a curation
     * pipeline keeps), ties -> min id, singletons kept. Reuses the text
-    * pipeline's keep-list operator unchanged: quality is just a column.
+    * pipeline's CC (`Dedup.clusters`) and keep-list operators unchanged:
+    * quality is just a column.
     */
   def mediaKeepList(media: DataFrame, clusters: DataFrame): DataFrame =
     // widths/heights cast BEFORE the multiply: dims come from untrusted

@@ -551,30 +551,12 @@ object Dedup {
   /** Incremental matching: candidate pairs between a NEW batch and the
     * FULL accumulated corpus — new x all, never all x all (the fork's
     * periodic match regeneration, `ray_extract_features.py:241-367`, at
-    * per-batch cadence). Pairs are canonicalized (least/greatest) and
-    * verified exactly against the full shingle table.
-    */
-  def incrementalPairs(newSigs: DataFrame, allSigs: DataFrame,
-                       cfg: DedupConfig): DataFrame = {
-    val newBands = bandTable(validSignatures(newSigs), cfg)
-      .select(col("band_key"), col("id").as("id_x"))
-    val allBands = bandTable(validSignatures(allSigs), cfg)
-      .select(col("band_key"), col("id").as("id_y"))
-    val cands = newBands.join(allBands, "band_key")
-      .where(col("id_x") =!= col("id_y"))
-      .select(least(col("id_x"), col("id_y")).as("id_a"),
-        greatest(col("id_x"), col("id_y")).as("id_b"))
-      .distinct()
-    verifiedPairs(cands, allSigs.select(col("id"), col("shingles")), cfg)
-  }
-
-  /** Incremental matching against a PERSISTED band store (id, band_key):
-    * the all-side band keys are read back, never recomputed — per-batch
-    * work is O(new) banding + the keyed join, not O(corpus) re-banding
-    * (the fix for the fork's cadence semantics at streaming granularity,
-    * `ray_extract_features.py:241-367`). `newIds` selects the new-side
-    * rows out of the store; verification runs against the full shingle
-    * table exactly as in incrementalPairs.
+    * per-batch cadence) — against a PERSISTED band store (id, band_key):
+    * the all-side band keys are read back, never recomputed, so
+    * per-batch work is O(new) banding + the keyed join, not O(corpus)
+    * re-banding. `newIds` selects the new-side rows out of the store;
+    * pairs are canonicalized (least/greatest) and verified exactly
+    * against the full shingle table.
     */
   def incrementalPairsBanded(newIds: DataFrame, bandStore: DataFrame,
                              shingled: DataFrame, cfg: DedupConfig): DataFrame = {
@@ -596,8 +578,8 @@ object Dedup {
     * exactly when the shingle set is empty (every slot keeps the kernel's
     * init sentinel) — a forged/empty signature would otherwise share
     * every band key with every other degenerate row and join them all.
-    * Applied before banding in pairs / incrementalPairs /
-    * ResumableDedupJob.
+    * Applied before banding in pairs, the streaming band store
+    * (incrementalPairsBanded's input) and ResumableDedupJob.
     */
   def validSignatures(sigs: DataFrame): DataFrame =
     sigs.where(!(element_at(col("sig"), 1) === element_at(col("sig"), 2) &&

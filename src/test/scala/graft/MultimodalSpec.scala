@@ -126,7 +126,7 @@ class MultimodalSpec extends SparkSpecBase {
       Array(10, 20, 250), Array(15, 130, 7), Array(200, 0, 99), Array(1, 255, 128))
     val png = makePng(3, 4, colorType = 0, channels = 1, gray,
       filters = Array(0, 1, 2, 4))
-    val Some((w, h, luma)) = BinaryPipeline.decodePngPixels(png)
+    val Some((w, h, luma)) = BinaryPipeline.decodeImageIOFrame(png, 0)
     assert((w, h) == (3, 4))
     assert(luma.toSeq == gray.flatten.map(_.toDouble).toSeq)
     // RGB 2x2 with Average filter: BT.601 luma, same as the BMP contract
@@ -135,25 +135,75 @@ class MultimodalSpec extends SparkSpecBase {
       Array(255, 0, 0, 0, 255, 0))     // red, green
     val png2 = makePng(2, 2, colorType = 2, channels = 3, rgb,
       filters = Array(0, 3))
-    val Some((w2, h2, luma2)) = BinaryPipeline.decodePngPixels(png2)
+    val Some((w2, h2, luma2)) = BinaryPipeline.decodeImageIOFrame(png2, 0)
     assert((w2, h2) == (2, 2))
     assert(luma2(0) == 255.0 && luma2(1) == 0.0)
     assert(math.abs(luma2(2) - 76.245) < 1e-9 && math.abs(luma2(3) - 149.685) < 1e-9)
     // RGBA: alpha ignored for luma
     val rgba = Array(Array(255, 0, 0, 7, 0, 255, 0, 200))
-    val Some((_, _, luma3)) = BinaryPipeline.decodePngPixels(
-      makePng(2, 1, colorType = 6, channels = 4, rgba, filters = Array(4)))
+    val Some((_, _, luma3)) = BinaryPipeline.decodeImageIOFrame(
+      makePng(2, 1, colorType = 6, channels = 4, rgba, filters = Array(4)), 0)
     assert(math.abs(luma3(0) - 76.245) < 1e-9 && math.abs(luma3(1) - 149.685) < 1e-9)
     // featurize takes the REAL png path
     assert(BinaryPipeline.featurize(png2, 0, dim = 4).toSeq ==
       BinaryPipeline.gridLumaFeature(2, 2, luma2, grid = 2).toSeq)
     // corrupt/hostile inputs fall back cleanly: truncated IDAT, forged
-    // huge IHDR (must not allocate), palette color type
-    assert(BinaryPipeline.decodePngPixels(png.dropRight(30)).isEmpty)
+    // huge IHDR (must not allocate)
+    assert(BinaryPipeline.decodeImageIOFrame(png.dropRight(30), 0).isEmpty)
     val forged = pngSig ++ chunk("IHDR",
       be32(1 << 20) ++ be32(1 << 20) ++ Array[Byte](8, 0, 0, 0, 0)) ++
       chunk("IEND", Array.empty)
-    assert(BinaryPipeline.decodePngPixels(forged).isEmpty)
+    assert(BinaryPipeline.decodeImageIOFrame(forged, 0).isEmpty)
+    // the pixel cap is checked on the header dims BEFORE the reader
+    // allocates: 8192x8193 RGB (one row past 2^26 pixels) with a tiny
+    // IDAT must fall back to the stub without a ~192 MiB raster
+    val tinyIdat = {
+      val defl = new java.util.zip.Deflater()
+      defl.setInput(new Array[Byte](64)); defl.finish()
+      val buf = new Array[Byte](64)
+      val n = defl.deflate(buf); defl.end()
+      buf.take(n)
+    }
+    val overCap = pngSig ++ chunk("IHDR",
+      be32(8192) ++ be32(8193) ++ Array[Byte](8, 2, 0, 0, 0)) ++
+      chunk("IDAT", tinyIdat) ++ chunk("IEND", Array.empty)
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = threads.getThreadAllocatedBytes(tid)
+    val capped = BinaryPipeline.featurize(overCap, 0, dim = 4)
+    val allocated = threads.getThreadAllocatedBytes(tid) - before
+    assert(capped.toSeq == BinaryPipeline.featurizeStub(overCap, 0, dim = 4).toSeq)
+    assert(allocated < (16L << 20), s"over-cap png allocated $allocated bytes")
+    // gray is read raw, never through getRGB's linear-to-sRGB gamma: the
+    // same gray image written plain and Adam7-interlaced features
+    // identically, as the grid mean of its raw samples
+    val grayImg = new java.awt.image.BufferedImage(8, 6,
+      java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+    val raster = grayImg.getRaster
+    val samples = Array.tabulate(6, 8)((y, x) => (y * 41 + x * 29 + 10) % 256)
+    (0 until 6).foreach(y => (0 until 8).foreach(x => raster.setSample(x, y, 0, samples(y)(x))))
+    def writeGray(mode: Int): Array[Byte] = {
+      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
+      val bos = new java.io.ByteArrayOutputStream()
+      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+      try {
+        writer.setOutput(ios)
+        val param = writer.getDefaultWriteParam
+        param.setProgressiveMode(mode)
+        writer.write(null, new javax.imageio.IIOImage(grayImg, null, null), param)
+      } finally { ios.close(); writer.dispose() }
+      bos.toByteArray
+    }
+    val plainPng = writeGray(javax.imageio.ImageWriteParam.MODE_DISABLED)
+    val adam7Png = writeGray(javax.imageio.ImageWriteParam.MODE_DEFAULT)
+    assert(plainPng(28) == 0 && adam7Png(28) == 1) // IHDR interlace method
+    val plain = BinaryPipeline.featurize(plainPng, 0, dim = 4)
+    val adam7 = BinaryPipeline.featurize(adam7Png, 0, dim = 4)
+    val rawMean = BinaryPipeline.gridLumaFeature(8, 6,
+      samples.flatten.map(_.toDouble), grid = 2)
+    assert(plain.toSeq == adam7.toSeq, s"plain ${plain.toSeq} vs adam7 ${adam7.toSeq}")
+    assert(plain.toSeq == rawMean.toSeq, s"got ${plain.toSeq}, raw grid mean ${rawMean.toSeq}")
   }
 
   test("multimodal: REAL gif pixel decode (from-scratch LZW incl. KwKwK + code-width growth)") {
@@ -271,14 +321,16 @@ class MultimodalSpec extends SparkSpecBase {
       .collect().sortBy(_.frameIdx)
     assert(frames.map(_.frameIdx).toSeq == Seq(0, 1))
     assert(frames(0).feature.head == 0.0f && frames(1).feature.head == 255.0f)
-    // parity: the pure spec decoders and the JDK codec agree bit-for-bit
-    // on lossless formats (PNG path exercised via a JDK-written png)
-    val bos2 = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos2))
-    val png = bos2.toByteArray
-    val pure = BinaryPipeline.decodePngPixels(png)
-    val codec = BinaryPipeline.decodeImageIOFrame(png, 0)
-    assert(pure.isDefined, "JDK png output should be 8-bit non-interlaced")
+    // parity: the same image written as BMP (hand-written decoder) and
+    // as PNG (ImageIO) decodes to identical luma
+    def write(fmt: String): Array[Byte] = {
+      val bos2 = new java.io.ByteArrayOutputStream()
+      assert(javax.imageio.ImageIO.write(img, fmt, bos2))
+      bos2.toByteArray
+    }
+    val pure = BinaryPipeline.decodeBmpPixels(write("bmp"))
+    val codec = BinaryPipeline.decodeImageIOFrame(write("png"), 0)
+    assert(pure.isDefined && codec.isDefined)
     assert(pure.get._3.toSeq == codec.get._3.toSeq)
   }
 
@@ -310,7 +362,7 @@ class MultimodalSpec extends SparkSpecBase {
     val got = pairs.select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(got == Set(("a1", "a2"), ("b1", "b2")), s"got $got")
-    val clusters = BinaryPipeline.mediaClusters(pairs)
+    val clusters = graft.pipeline.Dedup.clusters(pairs)
       .collect().map(r => (r.getString(0), r.getString(1))).toMap
     assert(clusters == Map("a1" -> "a1", "a2" -> "a1", "b1" -> "b1", "b2" -> "b1"))
     // sanity: the cross-pattern cosine really is far from the threshold
@@ -348,7 +400,7 @@ class MultimodalSpec extends SparkSpecBase {
       ("b_small", makePng(16, top)), ("b_big", makePng(32, top))
     ).toDF("id", "bytes")
     val pairs = BinaryPipeline.mediaDuplicatePairs(media, threshold = 0.99)
-    val clusters = BinaryPipeline.mediaClusters(pairs)
+    val clusters = graft.pipeline.Dedup.clusters(pairs)
     val keep = BinaryPipeline.mediaKeepList(media, clusters)
       .collect().map(r => r.getString(0) -> r.getBoolean(3)).toMap
     assert(keep == Map("a_small" -> false, "a_big" -> true,
@@ -599,7 +651,6 @@ class MultimodalSpec extends SparkSpecBase {
       (0 until h).foreach(y => (0 until w).foreach(x =>
         img.setRGB(x, y, rnd.nextInt(1 << 24))))
       for ((fmt, pure) <- Seq(
-        ("png", BinaryPipeline.decodePngPixels _),
         ("bmp", BinaryPipeline.decodeBmpPixels _),
         ("gif", BinaryPipeline.decodeGifPixels _))) {
         val bytes = write(img, fmt)
@@ -612,8 +663,8 @@ class MultimodalSpec extends SparkSpecBase {
             if (fmt == "gif") gifDecoded += 1
           case None =>
             // only acceptable for layouts the pure decoder declares out of
-            // scope; the JDK writers emit 24bpp BMP / 8-bit PNG, so those
-            // must always take the pure path
+            // scope; the JDK writer emits 24bpp BMP, so that must always
+            // take the pure path
             assert(fmt == "gif", s"$fmt t=$t pure decoder refused a JDK-written file")
         }
       }
