@@ -22,7 +22,10 @@ import graft.queries.Curation
   * curated table is tag-stamped so a config change regenerates rather
   * than mixes. The near-dup stage reuses the bucket-checkpointed
   * resumable dedup (`ResumableDedupJob`), so a restart skips completed
-  * signature buckets.
+  * signature buckets and reuses the clusters table while the signature
+  * files are unchanged. Its keep stage always recomputes: the docs it
+  * reads are `localCheckpoint`ed, not file-backed, so they have no file
+  * identity to match.
   */
 object CurationJob {
   /** Funnel thresholds: lenient defaults a real corpus would tune. */

@@ -12,8 +12,10 @@ import graft.pipeline.{CheckpointStore, Dedup, DedupConfig, ResumableDedupJob}
   *     [buckets=64] [saltBuckets=16]
   *
   * Reads a pages table (url, warc_ts, html?, text, lang), resumes the
-  * bucket-checkpointed signature stage, regenerates pairs + clusters,
-  * MERGEs results, and prints a metrics summary. No master is set here —
+  * bucket-checkpointed signature stage, reuses the committed clusters
+  * and keep tables when their input files and outputs are unchanged
+  * (otherwise recomputes pairs -> clusters -> keep), and prints a
+  * metrics summary. No master is set here —
   * spark-submit supplies it (local fallback only for ad-hoc runs).
   */
 object DedupJob {

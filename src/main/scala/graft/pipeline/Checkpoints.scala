@@ -1,7 +1,17 @@
 package graft.pipeline
 
+import java.io.File
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.Files
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+
+import graft.store.MarkerFile
 
 /** Per-partition checkpoint / lineage / metrics store (north-rule:
   * "checkpoints per-partition progress with lineage and metrics ...
@@ -31,10 +41,13 @@ final class CheckpointStore(spark: SparkSession, path: String) {
     log.read(spark).getOrElse(empty)
   }
 
-  /** Buckets already completed for (stage, configTag). */
+  /** Buckets already completed for (stage, configTag). The rows are
+    * bounded by bucket records, not by corpus size, so `toSet` dedups
+    * them driver-side (a `distinct` would cost a shuffle job).
+    */
   def completedBuckets(stage: String, configTag: String): Set[Int] =
     read().where(col("stage") === stage && col("config_tag") === configTag)
-      .select("bucket").distinct().as[Int].collect().toSet
+      .select("bucket").as[Int].collect().toSet
 
   /** Record completion rows (atomic append commit; read-time dedup on
     * completedBuckets keeps idempotency under re-recording).
@@ -60,10 +73,26 @@ final class CheckpointStore(spark: SparkSession, path: String) {
 
 /** Resumable dedup job: signatures stage is computed bucket-by-bucket
   * (pmod(xxhash64(id), buckets)), checkpointed, and written as a
-  * partitioned parquet table; pairs + clusters stages recompute from the
-  * signatures table (cheap relative to signing at corpus scale, and the
-  * reference regenerates matches globally the same way,
-  * `ray_extract_features.py:100,241-367`).
+  * partitioned parquet table. The clusters and keep stages are skipped
+  * whole when nothing they read or wrote has changed: each writes a
+  * marker `stages/<clusters|keep>/tag=<configTag>` holding two
+  * identities, SHA-256 over
+  *   - its inputs: per input frame, the analyzed plan (expression ids
+  *     stripped) and the sorted (path, length, mtime) of the files it
+  *     scans;
+  *   - its output directory: the sorted (path, length, mtime) of every
+  *     file under it.
+  * A call reads the committed output back instead of computing it only
+  * when both still match (the identities themselves cost no job). A
+  * recomputed signature bucket (new file names), changed docs files, a
+  * rewritten or damaged output, a different config tag or a missing
+  * marker recomputes the stage. An input whose plan has
+  * any leaf other than a file scan (a `localCheckpoint`ed frame, a
+  * local relation) has no identity, so its stage always recomputes.
+  * The reference skips a representation whose (path, sha256,
+  * config-tag) key already exists (`extract_features.py:61`); file
+  * stats stand in for the content hash, since reading every byte back
+  * would cost what the skip saves.
   */
 object ResumableDedupJob {
 
@@ -160,30 +189,94 @@ object ResumableDedupJob {
 
   /** Keep-list stage: the curated-corpus decision table (one kept doc
     * per cluster, quality-ranked — [[Dedup.keepList]]), written durable
-    * and tag-stamped like every other stage artifact.
+    * and tag-stamped like every other stage artifact, and skipped while
+    * the files behind `docs` and `clusters` are unchanged.
     */
   def keepStage(docs: DataFrame, clusters: DataFrame, cfg: DedupConfig,
-                workDir: String): DataFrame = {
-    val keep = Dedup.keepList(docs,
-      clusters.select(col("id"), col("cluster_id")),
-      graft.functions.TextFunctions.qualityScore(col("text")))
-    val dir = s"$workDir/keep/tag=${cfg.configTag}"
-    keep.write.mode(SaveMode.Overwrite).parquet(dir)
-    docs.sparkSession.read.parquet(dir)
-  }
+                workDir: String): DataFrame =
+    reusedOrWritten("keep", cfg, workDir, Seq(docs, clusters)) { dir =>
+      Dedup.keepList(docs,
+        clusters.select(col("id"), col("cluster_id")),
+        graft.functions.TextFunctions.qualityScore(col("text")))
+        .write.mode(SaveMode.Overwrite).parquet(dir)
+    }
 
   /** Full resumable run: signatures (bucket-checkpointed) -> pairs ->
-    * clusters, with pairs/clusters written once and stamped by tag.
+    * clusters, with clusters written once, stamped by tag, and skipped
+    * while the signature table's files are unchanged.
     */
   def run(docs: DataFrame, cfg: DedupConfig, workDir: String,
           buckets: Int = 16, hotCap: Int = 1024,
           saltBuckets: Int = 16, waveBuckets: Int = 0): DataFrame = {
-    val spark = docs.sparkSession
     val sigs = signaturesStage(docs, cfg, workDir, buckets, waveBuckets)
-    val pairs = pairsStage(sigs, cfg, hotCap, saltBuckets)
-    val clusters = Dedup.clusters(pairs)
-    clusters.write.mode(SaveMode.Overwrite)
-      .parquet(s"$workDir/clusters/tag=${cfg.configTag}")
-    spark.read.parquet(s"$workDir/clusters/tag=${cfg.configTag}")
+    reusedOrWritten("clusters", cfg, workDir, Seq(sigs)) { dir =>
+      Dedup.clusters(pairsStage(sigs, cfg, hotCap, saltBuckets))
+        .write.mode(SaveMode.Overwrite).parquet(dir)
+    }
+  }
+
+  /** The stage-skip rule (see the object doc): returns the committed
+    * `$workDir/<stage>/tag=<configTag>` table, after `write` recomputes
+    * it unless the stage marker matches the current identities.
+    */
+  private def reusedOrWritten(stage: String, cfg: DedupConfig, workDir: String,
+                              inputs: Seq[DataFrame])(write: String => Unit): DataFrame = {
+    val dir = s"$workDir/$stage/tag=${cfg.configTag}"
+    val marker = new File(s"$workDir/stages/$stage", s"tag=${cfg.configTag}")
+    val inputId = inputIdentity(inputs)
+    def stamp(in: String) = s"input $in\noutput ${sha256(outputFiles(dir))}\n"
+    val current = inputId.exists(in => MarkerFile.read(marker).exists(_ == stamp(in)))
+    if (!current) {
+      // no marker while the output is being rewritten: a crash in
+      // between leaves a stage that recomputes, never a stale skip
+      Files.deleteIfExists(marker.toPath)
+      write(dir)
+      inputId.foreach(in => MarkerFile.write(marker, stamp(in)))
+    }
+    inputs.head.sparkSession.read.parquet(dir)
+  }
+
+  /** Identity of the stage inputs, or None when some input is not purely
+    * file-backed. File stats come from each scan's own file index (the
+    * listing the frame reads), so no job runs and no file is re-listed.
+    */
+  private def inputIdentity(inputs: Seq[DataFrame]): Option[String] = {
+    val perInput = inputs.map { df =>
+      val plan = df.queryExecution.analyzed
+      val scans = plan.collectWithSubqueries { case l: LeafNode => l }.map {
+        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
+          Some(fs.location.listFiles(Nil, Nil).flatMap(_.files)
+            .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}"))
+        case _ => None
+      }
+      if (scans.exists(_.isEmpty)) None
+      else Some(planText(plan) +: scans.flatten.flatten.sorted)
+    }
+    if (perInput.exists(_.isEmpty)) None else Some(sha256(perInput.flatten.flatten))
+  }
+
+  /** The analyzed plan without expression ids, which differ between
+    * sessions for the same query.
+    */
+  private def planText(plan: LogicalPlan): String =
+    plan.treeString(verbose = true, maxFields = Int.MaxValue).replaceAll("#\\d+", "")
+
+  /** (path, length, mtime) of every file under a local directory. */
+  private def outputFiles(dir: String): Seq[String] = {
+    val root = new File(dir).toPath
+    if (!Files.isDirectory(root)) Nil
+    else {
+      val walk = Files.walk(root)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        s"$p\t${Files.size(p)}\t${Files.getLastModifiedTime(p).toMillis}"
+      }.toList.sorted
+      finally walk.close()
+    }
+  }
+
+  private def sha256(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    lines.foreach(l => md.update((l + "\n").getBytes(UTF_8)))
+    md.digest().map("%02x".format(_)).mkString
   }
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import java.io.File
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +8,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.pipeline.{Dedup, DedupConfig, withCached}
-import graft.store.{SeenFilter, TxEntry, TxLog}
+import graft.store.{MarkerFile, SeenFilter, TxEntry, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
   * (`ray_extract_features.py:85-162`: 600 s ingest windows, periodic
@@ -253,35 +251,24 @@ object IncrementalIngest {
   private def matchStateFile(workDir: String, cfg: DedupConfig): File =
     new File(s"$workDir/match_state", s"tag=${cfg.configTag}.json")
 
-  private def readMatchedPaths(workDir: String, cfg: DedupConfig): Set[String] = {
-    val f = matchStateFile(workDir, cfg)
-    if (!f.exists()) Set.empty
-    else {
+  private def readMatchedPaths(workDir: String, cfg: DedupConfig): Set[String] =
+    MarkerFile.read(matchStateFile(workDir, cfg)).fold(Set.empty[String]) { text =>
       import org.json4s._
-      org.json4s.jackson.JsonMethods.parse(
-        new String(Files.readAllBytes(f.toPath), UTF_8)) match {
+      org.json4s.jackson.JsonMethods.parse(text) match {
         case JArray(items) => items.collect { case JString(s) => s }.toSet
         case other => sys.error(s"bad match state: $other")
       }
     }
-  }
 
-  /** Atomic single-writer marker update (tmp + move). Losing it (crash
-    * between pair commit and this write) only causes a re-match, which
-    * the pair-store anti-join makes exact.
+  /** Atomic single-writer marker update. Losing it (crash between pair
+    * commit and this write) only causes a re-match, which the pair-store
+    * anti-join makes exact.
     */
   private def writeMatchedPaths(workDir: String, cfg: DedupConfig,
-                                paths: Set[String]): Unit = {
-    val f = matchStateFile(workDir, cfg)
-    f.getParentFile.mkdirs()
-    val tmp = new File(f.getParentFile, s".tmp-${java.util.UUID.randomUUID()}")
-    val json = paths.toSeq.sorted
+                                paths: Set[String]): Unit =
+    MarkerFile.write(matchStateFile(workDir, cfg), paths.toSeq.sorted
       .map(p => "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
-    Files.write(tmp.toPath, json.getBytes(UTF_8))
-    Files.move(tmp.toPath, f.toPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING): Unit
-  }
+      .mkString("[", ",", "]"))
 
   /** The persisted incremental LSH band table (id, band_key). */
   def bandsDir(workDir: String, cfg: DedupConfig): String =

@@ -155,6 +155,148 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(s2.columns.sameElements(s1.columns))
   }
 
+  // --- stage-level resume: clusters and keep are skipped while their
+  // input files and committed output are unchanged ---
+
+  /** A fresh frame over the file-backed docs (as a restarted job builds it). */
+  private def fileDocs() =
+    Dedup.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
+
+  /** Relative name -> mtime of every file under a stage output directory. */
+  private def stageFiles(dir: String): Map[String, Long] = {
+    val root = new java.io.File(dir)
+    org.apache.commons.io.FileUtils.listFiles(root, null, true).toArray
+      .map(_.asInstanceOf[java.io.File])
+      .map(f => root.toPath.relativize(f.toPath).toString -> f.lastModified).toMap
+  }
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
+
+  private def clustersDir(dir: String, c: DedupConfig = cfg) = s"$dir/clusters/tag=${c.configTag}"
+  private def keepDir(dir: String, c: DedupConfig = cfg) = s"$dir/keep/tag=${c.configTag}"
+
+  private def deletePart(dir: String): Unit = {
+    val part = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .minBy(_.getName)
+    assert(part.delete())
+  }
+
+  test("stage resume: a second run + keepStage rewrites no clusters/keep file and returns identical rows") {
+    val dir = tmpDir("graft-stage-skip")
+    val c1 = ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    val k1 = ResumableDedupJob.keepStage(fileDocs(), c1, cfg, dir)
+    val (cRows, kRows) = (rowSet(c1), rowSet(k1))
+    val (cFiles, kFiles) = (stageFiles(clustersDir(dir)), stageFiles(keepDir(dir)))
+    assert(cFiles.keys.exists(_.startsWith("part-")) && kFiles.keys.exists(_.startsWith("part-")))
+    val c2 = ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    val k2 = ResumableDedupJob.keepStage(fileDocs(), c2, cfg, dir)
+    assert(stageFiles(clustersDir(dir)) == cFiles, "restart rewrote clusters/")
+    assert(stageFiles(keepDir(dir)) == kFiles, "restart rewrote keep/")
+    assert(rowSet(c2) == cRows && rowSet(k2) == kRows)
+  }
+
+  test("stage resume: a recomputed signature bucket makes run rewrite clusters/ with equal content") {
+    val dir = tmpDir("graft-stage-bucket")
+    val buckets = 4
+    val before = rowSet(ResumableDedupJob.run(fileDocs(), cfg, dir, buckets))
+    val cFiles = stageFiles(clustersDir(dir))
+    ResumableDedupJob.run(fileDocs(), cfg, dir, buckets)
+    assert(stageFiles(clustersDir(dir)) == cFiles, "unchanged signatures must skip clusters")
+    // crash model of the interrupted-run test: bucket 3 loses its
+    // checkpoint row and its partition
+    val stageTag = s"${cfg.configTag}-b$buckets"
+    val store = new CheckpointStore(spark, dir)
+    val rows = store.read().where(col("bucket") =!= 3).collect()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/checkpoints"))
+    store.record("signatures", stageTag, rows.map(r => (r.getInt(1), r.getLong(3))).toSeq, 0L)
+    org.apache.commons.io.FileUtils.deleteDirectory(
+      new java.io.File(s"$dir/signatures/tag=$stageTag/bucket=3"))
+    val after = rowSet(ResumableDedupJob.run(fileDocs(), cfg, dir, buckets))
+    assert(stageFiles(clustersDir(dir)).keySet.intersect(cFiles.keySet)
+      .forall(!_.startsWith("part-")), "a recomputed bucket must rewrite clusters/")
+    assert(after == before)
+  }
+
+  test("stage resume: a deleted clusters/keep part file or stage marker forces a full recompute") {
+    val dir = tmpDir("graft-stage-damage")
+    def flow() = {
+      val c = ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+      (c, ResumableDedupJob.keepStage(fileDocs(), c, cfg, dir))
+    }
+    val (c0, k0) = flow()
+    val (cRows, kRows) = (rowSet(c0), rowSet(k0))
+    val kFiles = stageFiles(keepDir(dir))
+    flow()
+    assert(stageFiles(keepDir(dir)) == kFiles, "undamaged stages must skip")
+
+    deletePart(clustersDir(dir))
+    val (c1, k1) = flow()
+    assert(rowSet(c1) == cRows && rowSet(k1) == kRows)
+    // keep read the rewritten clusters files, so it recomputed too
+    assert(stageFiles(keepDir(dir)) != kFiles)
+
+    val k1Files = stageFiles(keepDir(dir))
+    deletePart(keepDir(dir))
+    val (_, k2) = flow()
+    assert(rowSet(k2) == kRows && stageFiles(keepDir(dir)) != k1Files)
+
+    val cFiles = stageFiles(clustersDir(dir))
+    val marker = new java.io.File(s"$dir/stages/clusters/tag=${cfg.configTag}")
+    assert(marker.delete())
+    val (c3, _) = flow()
+    assert(rowSet(c3) == cRows && stageFiles(clustersDir(dir)) != cFiles)
+    assert(marker.exists(), "the recompute must stamp a new marker")
+  }
+
+  test("stage resume: keepStage over other clusters files, other docs or non-file-backed docs recomputes") {
+    val dir = tmpDir("graft-stage-keep")
+    val clusters = ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    val kRows = rowSet(ResumableDedupJob.keepStage(fileDocs(), clusters, cfg, dir))
+    var kFiles = stageFiles(keepDir(dir))
+    def keepRewritten(): Boolean = {
+      val now = stageFiles(keepDir(dir))
+      try now != kFiles finally kFiles = now
+    }
+    ResumableDedupJob.keepStage(fileDocs(), clusters, cfg, dir)
+    assert(!keepRewritten(), "same docs + clusters files must skip keep")
+
+    // the same rows behind other files: a different input identity
+    val copy = tmpDir("graft-stage-copy")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(clustersDir(dir)), new java.io.File(copy))
+    val k1 = ResumableDedupJob.keepStage(fileDocs(), spark.read.parquet(copy), cfg, dir)
+    assert(keepRewritten() && rowSet(k1) == kRows)
+    ResumableDedupJob.keepStage(fileDocs(), clusters, cfg, dir)
+    assert(keepRewritten(), "back on the original clusters files")
+
+    // the same docs files under another plan must not serve the old list
+    val dropped = fileDocs().select("id").head().get(0)
+    val k2 = ResumableDedupJob.keepStage(
+      fileDocs().where(col("id") =!= lit(dropped)), clusters, cfg, dir)
+    assert(keepRewritten() && k2.where(col("id") === lit(dropped)).isEmpty)
+
+    // localCheckpoint'ed docs have no file identity: every call recomputes
+    val marker = new java.io.File(s"$dir/stages/keep/tag=${cfg.configTag}")
+    (1 to 2).foreach { _ =>
+      val k = ResumableDedupJob.keepStage(fileDocs().localCheckpoint(true), clusters, cfg, dir)
+      assert(keepRewritten() && rowSet(k) == kRows)
+      assert(!marker.exists(), "a non-file-backed input must leave no marker")
+    }
+  }
+
+  test("stage resume: a config-tag change recomputes; the old tag's stages still skip") {
+    val dir = tmpDir("graft-stage-tag")
+    val cfg2 = cfg.copy(shingleK = 4)
+    ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    val cFiles = stageFiles(clustersDir(dir))
+    val other = ResumableDedupJob.run(fileDocs(), cfg2, dir, buckets = 4)
+    assert(new java.io.File(clustersDir(dir, cfg2)).exists())
+    assert(rowSet(other) == rowSet(Dedup.clusters(Dedup.pairs(fileDocs(), cfg2))))
+    ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    assert(stageFiles(clustersDir(dir)) == cFiles)
+  }
+
   test("intra-batch duplicate/null ids are hygienized before any store write; matchEvery guard") {
     val spark2 = spark
     import spark2.implicits._
