@@ -192,27 +192,6 @@ object SynthCorpus {
     (pages, labels)
   }
 
-  /** The cached benchmark corpus of the timing main (`ScalingBench`):
-    * seed-123, dupRate 0.2 pages (html dropped — the timed pipelines
-    * read text) persisted once per `nBase` under /tmp and reused across
-    * sessions, so runs never compare corpora generated with silently
-    * diverged parameters. Returns the corpus directory.
-    */
-  def ensureScalingCorpus(spark: SparkSession, nBase: Int): String = {
-    val corpusDir = s"/tmp/graft_scaling_corpus_$nBase"
-    // reuse only a COMMITTED write: the _SUCCESS marker appears at job
-    // commit, so a generator killed mid-write leaves a directory this
-    // check rejects and the overwrite below replaces (a bare exists()
-    // check silently benchmarked truncated corpora)
-    if (!new java.io.File(corpusDir, "_SUCCESS").exists()) {
-      val (pages, _) = generate(spark, seed = 123L, nBase = nBase,
-        dupRate = 0.2)
-      pages.drop("html").repartition(64)
-        .write.mode("overwrite").parquet(corpusDir)
-    }
-    corpusDir
-  }
-
   /** Word-3-gram jaccard used for label edit rates (driver-side). */
   def jaccardWords(a: String, b: String, k: Int = 3): Double = {
     def sh(s: String) = s.split(" ").sliding(k).filter(_.length == k)

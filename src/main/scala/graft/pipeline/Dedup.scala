@@ -197,18 +197,14 @@ object Dedup {
   }
 
   /** Full pipeline: docs(id, text) -> verified canonical pairs
-    * (id_a < id_b, jaccard >= threshold).
+    * (id_a < id_b, jaccard >= threshold), as a lazy plan that caches
+    * nothing. Each action over it recomputes the shingle table for both
+    * the signature path and the verify joins; callers that materialize
+    * the pair set use [[pairsMaterialized]], which caches it for the
+    * call only.
     */
   def pairs(docs: DataFrame, cfg: DedupConfig = DedupConfig()): DataFrame = {
-    // The shingle table fans into both the signature path and the verify
-    // joins — persist it once rather than recomputing the scan+shingling
-    // three times (at cluster scale this is the materialized
-    // intermediate table, reference repr-store semantics SURVEY.md S5).
-    // NOTE: lazy — the persisted shingle table stays cached for the
-    // session. Callers that materialize the pair set once should use
-    // pairsMaterialized, which evicts the cache after computing.
     val shingled = shingleSets(kernelParallel(docs), cfg)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigs = signatures(shingled, cfg)
     verifiedPairs(candidatePairs(bandTable(validSignatures(sigs), cfg)), shingled, cfg)
   }

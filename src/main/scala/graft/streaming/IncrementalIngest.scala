@@ -5,10 +5,9 @@ import java.io.File
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.util.sketch.BloomFilter
 
 import graft.pipeline.{Dedup, DedupConfig, withCached}
-import graft.store.{MarkerFile, SeenFilter, TxEntry, TxLog}
+import graft.store.{MarkerFile, TxEntry, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
   * (`ray_extract_features.py:85-162`: 600 s ingest windows, periodic
@@ -16,15 +15,11 @@ import graft.store.{MarkerFile, SeenFilter, TxEntry, TxLog}
   * as Structured Streaming over [[TxLog]] tables:
   *
   *   pages stream -> stateless shingle+sign -> foreachBatch:
-  *     (1) idempotent signature flush with a bloom-prefiltered
-  *         skip-if-done ([[SeenFilter]] — reference `exists()`,
-  *         `winnow/storage/db_result_storage.py:46-58`): the store
-  *         sketch is built once per rebuild cadence; bloom-miss rows
-  *         (almost all of a mostly-new corpus) skip the store join
-  *         entirely, and exactness is restored by anti-joining only
-  *         the residue plus the store's post-sketch DELTA (tracked
-  *         precisely via the commit log's immutable entry paths)
-  *     (2) band-table append for never-banded ids
+  *     (1) idempotent signature flush: skip-if-done (reference
+  *         `exists()`, `winnow/storage/db_result_storage.py:46-58`) as
+  *         one left-anti join of the batch against the signature store
+  *     (2) band-table append for never-banded ids (the same anti-join
+  *         against the band store)
   *     (3) incremental matching every `matchEvery` batches (the fork
   *         runs ingest/flush/match at 600/1200/3600 s — decoupled
   *         cadences, `ray_extract_features.py:100-112`): NEW ids since
@@ -60,10 +55,6 @@ object IncrementalIngest {
     * @param compactEvery compact the stores every Nth batch (0 = never;
     *                    matching is forced first so the path-diff match
     *                    state survives the rewrite)
-    * @param bloomRebuildEvery rebuild the seen-filter sketch after this
-    *                    many store commits accumulate beyond it (the
-    *                    delta anti-join stays exact regardless — this
-    *                    only bounds the residue volume)
     * @param trigger     AvailableNow (default — drain what exists and
     *                    stop, the testable batch-ish mode) or
     *                    `Trigger.ProcessingTime("600 seconds")` for the
@@ -74,10 +65,8 @@ object IncrementalIngest {
     */
   def start(pagesStream: DataFrame, cfg: DedupConfig, workDir: String,
             checkpointDir: String, matchEvery: Int = 1, compactEvery: Int = 0,
-            bloomRebuildEvery: Int = 8,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(matchEvery >= 1, "matchEvery must be >= 1")
-    val state = new IngestState
     pagesStream
       .select(col("url").as("id"), col("text"))
       .writeStream
@@ -85,40 +74,36 @@ object IncrementalIngest {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, cfg, workDir,
-          matchEvery, compactEvery, bloomRebuildEvery, state)
+        processBatch(batch, batchId, cfg, workDir, matchEvery, compactEvery)
       }
       .start()
   }
 
-  /** Seen-filter state carried across batches of one query: the sketch
-    * covers exactly the store entries in `bloomPaths`; anything
-    * committed since is the delta and is anti-joined directly.
+  /** Carries nothing: every batch reads what it needs from the stores.
+    * It exists only because the perfbench ingest workload constructs one
+    * and passes it to [[processBatch]] as `state`.
     */
-  final class IngestState {
-    private[streaming] var bloom: BloomFilter = null
-    private[streaming] var bloomPaths: Set[String] = Set.empty
-  }
+  final class IngestState
 
   /** One micro-batch of the ingest loop (exposed for direct testing —
     * in production [[start]]'s foreachBatch drives it). IDEMPOTENT
     * under micro-batch re-delivery: every store write is dedupled by
-    * CONTENT (seen filter / anti-joins) and committed as an APPEND —
-    * never as a batch-replace, which on a retry would substitute the
-    * first attempt's rows with the (now empty, already-seen) re-run.
+    * CONTENT (store anti-joins, [[absentFrom]]) and committed as an
+    * APPEND — never as a batch-replace, which on a retry would
+    * substitute the first attempt's rows with the (now empty,
+    * already-seen) re-run. `state` is unused (see [[IngestState]]).
     */
   def processBatch(batch: DataFrame, batchId: Long, cfg: DedupConfig,
                    workDir: String, matchEvery: Int = 1, compactEvery: Int = 0,
-                   bloomRebuildEvery: Int = 8,
                    state: IngestState = new IngestState): Unit = {
     require(matchEvery >= 1, s"matchEvery must be >= 1, got $matchEvery")
     val spark = batch.sparkSession
     val sl = sigLog(workDir, cfg)
     val bl = bandLog(workDir, cfg)
     // identity hygiene BEFORE anything is written: a crawl revisit can
-    // repeat an id WITHIN one micro-batch — the seen filter and store
-    // anti-joins compare only against the STORE, so intra-batch
-    // duplicates would land twice and duplicate every downstream pair.
+    // repeat an id WITHIN one micro-batch — the store anti-joins
+    // compare only against the STORE, so intra-batch duplicates
+    // would land twice and duplicate every downstream pair.
     // One deterministic winner per id (lowest text hash); null ids
     // have no dedup identity at all and are dropped here, loudly
     // documented, because a null key can never join/match later.
@@ -128,49 +113,16 @@ object IncrementalIngest {
           .orderBy(xxhash64(col("text")).asc_nulls_last)))
       .where(col("__ingest_rn") === 1).drop("__ingest_rn")
     withCached(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)) { newSigs =>
-      // (1) seen-filtered idempotent signature flush
-      val snap = sl.snapshot()
-      val pending =
-        if (snap.entries.isEmpty) newSigs
-        else {
-          val store = sl.readSnapshot(spark, snap)
-          val delta = snap.entries.filterNot(e => state.bloomPaths.contains(e.path))
-          if (state.bloom == null || delta.size >= bloomRebuildEvery) {
-            // size the sketch from manifest record counts (an upper
-            // bound on distinct ids — exactly what a Bloom sizing
-            // wants); the column-scan count survives only as the
-            // legacy-manifest fallback, so a 100-TB store rebuild
-            // costs no extra pass
-            val keyEstimate = math.max(1024L,
-              snap.rowCount.getOrElse(store.select("id").count()))
-            state.bloom = SeenFilter.build(store, col("id"), keyEstimate)
-            state.bloomPaths = snap.entries.map(_.path).toSet
-            // sketch now covers the whole snapshot: no delta left
-            SeenFilter.notSeen(newSigs, col("id"), state.bloom, store, col("id"))
-          } else {
-            // bloom-miss rows skip the store join; the residue
-            // anti-joins the full store, and rows added since the
-            // sketch (the delta commits) are anti-joined exactly
-            val unseenVsSketch =
-              SeenFilter.notSeen(newSigs, col("id"), state.bloom, store, col("id"))
-            if (delta.isEmpty) unseenVsSketch
-            else unseenVsSketch.join(
-              sl.readEntries(spark, delta).select("id"), Seq("id"), "left_anti")
-          }
-        }
-      writeCommit(sl, pending, batchId)
+      // (1) idempotent signature flush (append only: see absentFrom)
+      sl.writeAppend(absentFrom(sl, "id")(newSigs), batchId)
 
       // (2) incremental BAND store: append band keys for ids the
       // store has never banded (anti-join vs the band store itself,
       // so a crash between the sig and band commits self-heals on
       // retry). The all-side of every later match run is READ from
       // here — never recomputed from the full signature store.
-      val bandPending = bl.read(spark) match {
-        case Some(bs) => Dedup.validSignatures(newSigs)
-          .join(bs.select("id"), Seq("id"), "left_anti")
-        case None => Dedup.validSignatures(newSigs)
-      }
-      writeCommit(bl,
+      val bandPending = absentFrom(bl, "id")(Dedup.validSignatures(newSigs))
+      bl.writeAppend(
         Dedup.bandTable(bandPending, cfg).select(col("id"), col("band_key")),
         batchId)
 
@@ -197,8 +149,6 @@ object IncrementalIngest {
           if (src.subsetOf(matched))
             writeMatchedPaths(workDir, cfg, (matched -- src) ++ dst)
         }
-        state.bloom = null // compaction rewrote the paths → rebuild next batch
-        state.bloomPaths = Set.empty
       }
     }
   }
@@ -224,27 +174,24 @@ object IncrementalIngest {
     val bandStore = bandLog(workDir, cfg).read(spark)
       .getOrElse(sys.error(s"band store missing under $workDir"))
     val newPairs = Dedup.incrementalPairsBanded(newIds, bandStore, allSigs, cfg)
-    val fresh = pl.read(spark) match {
-      case Some(p) =>
-        newPairs.join(p.select("id_a", "id_b"), Seq("id_a", "id_b"), "left_anti")
-      case None => newPairs
-    }
-    writeCommit(pl, fresh, -1L)
+    pl.writeAppend(absentFrom(pl, "id_a", "id_b")(newPairs))
     writeMatchedPaths(workDir, cfg, snap.entries.map(_.path).toSet)
   }
 
-  /** Write a DataFrame as one committed data directory, ALWAYS as an
-    * append. The TxLog's batch-replace mode must not be used here: the
-    * streaming writes dedup by CONTENT against the store, so a retried
-    * micro-batch legitimately produces an empty pending set — a
-    * replace commit would swap the first attempt's rows for that empty
-    * set and lose data. Content dedup alone makes the retry exact.
+  /** The rows of `df` whose `keys` the table behind `log` does not hold
+    * yet (all of `df` while the table has no commit): the one skip-if-done
+    * rule of the signature, band and pair flushes. Its result is always
+    * written with `writeAppend`, never with the TxLog's batch-replace
+    * mode: a retried micro-batch legitimately leaves nothing absent, and
+    * a replace commit would swap the first attempt's rows for that empty
+    * set and lose data. Content dedup alone makes the retry exact. A
+    * store read failure propagates and fails the batch.
     */
-  private def writeCommit(log: TxLog, df: DataFrame, batchId: Long): Unit =
-    // writeAppend = the same stage-then-commit this used to spell out,
-    // plus the manifest schema declaration every TxLog table gets
-    // (pinned reads instead of footer-resolution drift)
-    log.writeAppend(df, batchId): Unit
+  private def absentFrom(log: TxLog, keys: String*)(df: DataFrame): DataFrame =
+    log.read(df.sparkSession) match {
+      case Some(stored) => df.join(stored.select(keys.map(col): _*), keys, "left_anti")
+      case None => df
+    }
 
   // --- match-state marker (which store paths a match run has covered) ---
 
@@ -277,7 +224,7 @@ object IncrementalIngest {
   /** Compact the append-per-batch stores (signatures, bands, pairs):
     * each accumulates one commit per micro-batch, which at streaming
     * cadence becomes the classic small-files problem. Content is
-    * already deduplicated at write time (seen filter / anti-joins), so
+    * already deduplicated at write time (store anti-joins), so
     * compaction is a pure rewrite: read the snapshot, coalesce toward
     * spark.sql.shuffle.partitions, commit a REPLACE manifest (atomic —
     * a crash at any point leaves either the old or the new snapshot

@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.pipeline.{Dedup, DedupConfig}
 import graft.queries.Curation
-import graft.store.SeenFilter
+import graft.streaming.IncrementalIngest
 
 /** Curation operators: repetition stats, decontamination, deterministic
-  * sampling, bloom-prefiltered seen check.
+  * sampling, the ingest seen check.
   */
 class CurationSpec extends SparkSpecBase {
 
@@ -505,22 +506,39 @@ class CurationSpec extends SparkSpecBase {
       length(col("text")) >= length(col("orig"))).count() == 0)
   }
 
-  test("SeenFilter.notSeen == plain anti-join (bloom split is exact)") {
+  test("ingest seen check: a batch flushes only the ids the stores lack") {
     val spark2 = spark
     import spark2.implicits._
-    val store = (0L until 3000L).filter(_ % 3 == 0).toDF("id")
-    val fresh = (0L until 1000L).toDF("id").withColumn("payload", col("id") * 2)
-    // tight sketch -> false positives likely -> residue path exercised
-    val bloom = SeenFilter.build(store, col("id"), expectedKeys = 1000L, fpp = 0.2)
-    val got = SeenFilter.notSeen(fresh, col("id"), bloom, store, col("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = fresh.join(store, Seq("id"), "left_anti")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got == want)
-    assert(want.size == 666, "2/3 of fresh ids are unseen")
-    // no false negatives by construction: every stored key bloom-hits
-    val misses = store.collect().map(_.getLong(0).toString)
-      .count(s => !bloom.mightContainString(s))
-    assert(misses == 0)
+    val cfg = DedupConfig()
+    val workDir = java.nio.file.Files.createTempDirectory("graft-seen").toString
+    def text(i: Int, tail: String) =
+      s"page $i alpha beta gamma delta epsilon zeta eta theta $tail ${i * 7} end"
+    val first = (0 until 12).map(i => (s"u$i", text(i, "stored")))
+    IncrementalIngest.processBatch(first.toDF("id", "text"), 0L, cfg, workDir)
+    def storedRows(id: String) = IncrementalIngest.signatures(spark, workDir, cfg)
+      .where(col("id") === id).collect().map(_.toSeq).toSeq
+    val changedBefore = storedRows("u5")
+    assert(changedBefore.size == 1)
+
+    val fresh = (0 until 6).map(i => (s"n$i", text(100 + i, "fresh")))
+    val second =
+      first.take(5) ++                      // stored ids, same text
+      Seq(("u5", text(5, "edited"))) ++     // stored id, changed text
+      fresh ++                              // new ids
+      Seq(fresh.head)                       // intra-batch duplicate
+    IncrementalIngest.processBatch(second.toDF("id", "text"), 1L, cfg, workDir)
+
+    // a stored id keeps the signature of the text it was first stored
+    // with; every id lands exactly once
+    val expectedDocs = (first ++ fresh).toDF("id", "text")
+    val want = Dedup.signatures(Dedup.shingleSets(expectedDocs, cfg), cfg)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "shingles", "sig", "simhash", "n_shingles").collect()
+        .map(_.toSeq).toSeq.sortBy(_.head.toString)
+    assert(rows(IncrementalIngest.signatures(spark, workDir, cfg)) == rows(want))
+    assert(storedRows("u5") == changedBefore, "a changed text replaced the stored row")
+    val perId = IncrementalIngest.bands(spark, workDir, cfg).groupBy("id").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perId == (first ++ fresh).map(_._1 -> cfg.bands.toLong).toMap)
   }
 }

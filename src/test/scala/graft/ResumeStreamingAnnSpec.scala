@@ -307,8 +307,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
       ("u2", "one two three four five six seven eight nine ten"),
       (null.asInstanceOf[String], "a null id has no dedup identity at all")
     ).toDF("id", "text")
-    val state = new IncrementalIngest.IngestState
-    IncrementalIngest.processBatch(batch, 0L, cfg, workDir, state = state)
+    IncrementalIngest.processBatch(batch, 0L, cfg, workDir)
     val sigs = IncrementalIngest.signatures(spark, workDir, cfg)
     assert(sigs.where(col("id").isNull).count() == 0, "null ids must not land")
     assert(sigs.count() == 2, "intra-batch revisit must keep one row")
@@ -317,19 +316,11 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val batch2 = Seq(
       ("u3", "aa bb cc dd ee ff gg hh ii jj"),
       ("u3", "aa bb cc dd ee ff gg hh ii kk")).toDF("id", "text")
-    IncrementalIngest.processBatch(batch2, 1L, cfg, workDir, state = state)
+    IncrementalIngest.processBatch(batch2, 1L, cfg, workDir)
     assert(IncrementalIngest.signatures(spark, workDir, cfg)
       .where(col("id") === "u3").count() == 1)
     intercept[IllegalArgumentException] { // fails fast, before any write
       IncrementalIngest.processBatch(batch2, 2L, cfg, workDir, matchEvery = 0)
-    }
-    // SeenFilter reserved read-time columns fail loudly
-    val store = Seq(("u1", 1)).toDF("id", "v")
-    val bloom = graft.store.SeenFilter.build(store, col("id"), 16L)
-    intercept[IllegalArgumentException] {
-      graft.store.SeenFilter.notSeen(
-        Seq(("a", "b")).toDF("id", "_seen_key"), col("id"), bloom,
-        store, col("id"))
     }
   }
 
@@ -433,7 +424,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(sigs.select("id").distinct().count() == sigs.count())
   }
 
-  test("seen filter: re-delivered rows are skipped; bloom-miss rows bypass the store join") {
+  test("seen check: re-delivered rows are skipped") {
     val spark2 = spark
     import spark2.implicits._
     val (pages, _) = SynthCorpus.generate(spark, seed = 13L, nBase = 60, dupRate = 0.2)
@@ -453,18 +444,6 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val sigs = IncrementalIngest.signatures(spark, workDir, cfg)
     assert(sigs.count() == n1, "re-delivered rows were appended again")
     assert(sigs.select("id").distinct().count() == n1)
-
-    // residue evidence: for a disjoint fresh batch, almost every row is
-    // a bloom MISS — only the (tiny) false-positive residue can reach
-    // the store anti-join (the split itself is exactness-tested in
-    // CurationSpec)
-    val store = IncrementalIngest.signatures(spark, workDir, cfg)
-    val bloom = graft.store.SeenFilter.build(store, col("id"), math.max(1024L, n1))
-    val freshKeys = (0 until 500).map(i => s"https://unseen.example/$i").toDF("id")
-    val bcast = spark.sparkContext.broadcast(bloom)
-    val mightContain = udf((s: String) => bcast.value.mightContainString(s))
-    val residue = freshKeys.where(mightContain(col("id"))).count()
-    assert(residue <= 25, s"bloom residue too large to claim join bypass: $residue/500")
   }
 
   test("continuous ProcessingTime trigger: same stores, same pair set as AvailableNow") {
@@ -502,11 +481,10 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val rows = pages.select("url", "text").as[(String, String)].collect().toSeq
     val workDir = tmpDir("graft-retry")
     val (b1, b2) = rows.splitAt(rows.size / 2)
-    val state = new IncrementalIngest.IngestState
     def asDf(b: Seq[(String, String)]) = b.toDF("url", "text")
       .select(col("url").as("id"), col("text"))
-    IncrementalIngest.processBatch(asDf(b1), 0L, cfg, workDir, state = state)
-    IncrementalIngest.processBatch(asDf(b2), 1L, cfg, workDir, state = state)
+    IncrementalIngest.processBatch(asDf(b1), 0L, cfg, workDir)
+    IncrementalIngest.processBatch(asDf(b2), 1L, cfg, workDir)
     val sigsBefore = IncrementalIngest.signatures(spark, workDir, cfg).count()
     val pairsBefore = IncrementalIngest.pairs(spark, workDir, cfg)
       .select("id_a", "id_b").collect()
@@ -515,7 +493,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     // before the checkpoint commit — re-running it must change nothing
     // (in particular it must NOT replace batch 1's commit with the
     // now-empty already-seen set)
-    IncrementalIngest.processBatch(asDf(b2), 1L, cfg, workDir, state = state)
+    IncrementalIngest.processBatch(asDf(b2), 1L, cfg, workDir)
     val sigs = IncrementalIngest.signatures(spark, workDir, cfg)
     assert(sigs.count() == sigsBefore, "retry changed the signature store")
     assert(sigs.select("id").distinct().count() == sigsBefore)
