@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.store.MarkerFile
 
@@ -34,32 +35,50 @@ final class CheckpointStore(spark: SparkSession, path: String) {
 
   private val log = new graft.store.TxLog(s"$path/checkpoints")
 
+  /** Every checkpoint row. `dir` names the directory that holds a
+    * bucket's rows (null for a row recorded before the column existed).
+    */
   def read(): DataFrame = {
     val empty = spark.createDataset(
-      Seq.empty[(String, Int, String, Long, Long, Long)])
-      .toDF("stage", "bucket", "config_tag", "rows", "wall_ms", "ts")
-    log.read(spark).getOrElse(empty)
+      Seq.empty[(String, Int, String, Long, Long, Long, String)])
+      .toDF("stage", "bucket", "config_tag", "rows", "wall_ms", "ts", "dir")
+    val rows = log.read(spark).getOrElse(empty)
+    if (rows.columns.contains("dir")) rows
+    else rows.withColumn("dir", lit(null).cast("string"))
   }
 
-  /** Buckets already completed for (stage, configTag). The rows are
-    * bounded by bucket records, not by corpus size, so `toSet` dedups
-    * them driver-side (a `distinct` would cost a shuffle job).
+  /** Buckets already completed for (stage, configTag): those in
+    * [[committedDirs]].
     */
   def completedBuckets(stage: String, configTag: String): Set[Int] =
+    committedDirs(stage, configTag).keySet
+
+  /** Bucket -> the directory its LATEST row for (stage, configTag) names
+    * (ties by directory name), the only copy of its rows a read may see.
+    * A bucket whose latest row names no directory is left out, so it
+    * counts as not done. The rows are bounded by bucket records, not by
+    * corpus size, so the pick runs driver-side (a groupBy or `distinct`
+    * would cost a shuffle job).
+    */
+  def committedDirs(stage: String, configTag: String): Map[Int, String] =
     read().where(col("stage") === stage && col("config_tag") === configTag)
-      .select("bucket").as[Int].collect().toSet
+      .select("bucket", "ts", "dir").as[(Int, Long, Option[String])].collect()
+      .groupBy(_._1).toSeq.flatMap { case (b, rows) =>
+        rows.maxBy { case (_, ts, dir) => (ts, dir.getOrElse("")) }._3.map(b -> _)
+      }.toMap
 
   /** Record completion rows (atomic append commit; read-time dedup on
-    * completedBuckets keeps idempotency under re-recording).
+    * completedBuckets keeps idempotency under re-recording), each naming
+    * `dir`, the directory the buckets' rows live in.
     */
   def record(stage: String, configTag: String,
-             bucketRows: Seq[(Int, Long)], wallMs: Long): Unit = {
+             bucketRows: Seq[(Int, Long)], wallMs: Long, dir: String): Unit = {
     val ts = System.currentTimeMillis()
     // writeAppend = the same stage-then-commit this used to spell out,
     // plus the manifest schema declaration every TxLog table gets
     log.writeAppend(spark.createDataset(bucketRows.map { case (b, n) =>
-      (stage, b, configTag, n, wallMs, ts)
-    }).toDF("stage", "bucket", "config_tag", "rows", "wall_ms", "ts")
+      (stage, b, configTag, n, wallMs, ts, dir)
+    }).toDF("stage", "bucket", "config_tag", "rows", "wall_ms", "ts", "dir")
       .coalesce(1)): Unit
   }
 
@@ -71,17 +90,25 @@ final class CheckpointStore(spark: SparkSession, path: String) {
         max(col("ts")).as("last_ts"))
 }
 
-/** Resumable dedup job: signatures stage is computed bucket-by-bucket
-  * (pmod(xxhash64(id), buckets)), checkpointed, and written as a
-  * partitioned parquet table. The clusters and keep stages are skipped
-  * whole when nothing they read or wrote has changed: each writes a
-  * marker `stages/<clusters|keep>/tag=<configTag>` holding two
-  * identities, SHA-256 over
+/** Resumable dedup job: the signatures stage is computed bucket-by-bucket
+  * (pmod(xxhash64(id), buckets)) in waves; each wave is written as one
+  * plain parquet directory (one file per scan task, `bucket` a column)
+  * and then recorded, one checkpoint row per bucket naming that
+  * directory. The rows are the only commit point: the table is each
+  * bucket's rows from the directory its latest row names, so a wave
+  * that crashed before its record, or the stale rows of a bucket that
+  * was dropped and recomputed elsewhere, are never read. The clusters
+  * and keep stages are skipped whole when nothing they read or wrote
+  * has changed: each writes a marker
+  * `stages/<clusters|keep>/tag=<configTag>` holding two identities,
+  * SHA-256 over
   *   - its inputs: per input frame, the analyzed plan (expression ids
   *     stripped) and the sorted (path, length, mtime) of the files it
   *     scans;
   *   - its output directory: the sorted (path, length, mtime) of every
-  *     file under it.
+  *     file under it;
+  * and the schema of the written table, which every read-back declares
+  * (so none runs a schema-inference job).
   * A call reads the committed output back instead of computing it only
   * when both still match (the identities themselves cost no job). A
   * recomputed signature bucket (new file names), changed docs files, a
@@ -98,7 +125,10 @@ object ResumableDedupJob {
 
   /** Run (or resume) the signature stage; returns the signatures table.
     * Skips buckets checkpointed under the same config tag; recomputes
-    * everything if the tag changed.
+    * everything if the tag changed. A directory under the stage table
+    * that no bucket's latest row names (a crashed wave, superseded
+    * buckets, the older `bucket=N` layout, whose rows name none) is
+    * deleted before the missing buckets run.
     *
     * `waveBuckets` sets the INTRA-RUN progress granularity: the missing
     * buckets are processed in waves of that many, and each wave is
@@ -114,64 +144,63 @@ object ResumableDedupJob {
     */
   def signaturesStage(docs: DataFrame, cfg: DedupConfig, workDir: String,
                       buckets: Int = 16, waveBuckets: Int = 0): DataFrame = {
+    require(buckets > 0, s"buckets must be positive, got $buckets")
     val spark = docs.sparkSession
     val store = new CheckpointStore(spark, workDir)
     // the bucket COUNT is part of the checkpoint identity: a resume
     // with a different `buckets` must recompute from scratch — pmod-16
     // checkpoints say nothing about pmod-32 buckets, and mixing moduli
     // in one signatures table would duplicate every doc whose old
-    // partition also survives (the stage tag also names the table
-    // path, so differently-bucketed tables never share files)
+    // bucket also survives (the stage tag also names the table path,
+    // so differently-bucketed tables never share files)
     val stageTag = s"${cfg.configTag}-b$buckets"
-    val done = store.completedBuckets("signatures", stageTag)
-    val missing = (0 until buckets).filterNot(done.contains)
     val sigDir = s"$workDir/signatures/tag=$stageTag"
+    val committed = scala.collection.mutable.Map(
+      store.committedDirs("signatures", stageTag).toSeq: _*)
+    val live = committed.values.toSet
+    Option(new File(sigDir).listFiles()).getOrElse(Array.empty[File])
+      .filterNot(f => live.contains(f.getName))
+      .foreach(graft.store.TxLog.deleteRecursively)
+    val missing = (0 until buckets).filterNot(committed.contains)
+    val bucket = pmod(xxhash64(col("id")), lit(buckets)).cast("int")
     // the signature table schema is a pure function of the config (plan
     // derivation only, no job) — read-backs below declare it explicitly
-    // so they never depend on footer inference (which LISTS data files
-    // and FAILS on a legitimately empty table)
+    // so they never depend on footer inference (which costs a job per
+    // read and FAILS on a legitimately empty table)
     val sigSchema = Dedup.signatures(Dedup.shingleSets(
         docs.select(col("id"), col("text")).limit(0), cfg), cfg)
-      .withColumn("bucket", pmod(xxhash64(col("id")), lit(buckets)).cast("int"))
+      .withColumn("bucket", bucket)
       .schema
     val waves =
       if (waveBuckets <= 0 || missing.isEmpty) Seq(missing)
       else missing.grouped(waveBuckets).toSeq
     waves.filter(_.nonEmpty).foreach { wave =>
       val t0 = System.currentTimeMillis()
-      val withBucket = docs
-        .withColumn("bucket", pmod(xxhash64(col("id")), lit(buckets)).cast("int"))
-        .where(col("bucket").isin(wave: _*))
+      // `wave=<id>`: a plain read of the whole table directory then
+      // sees every wave's files (as a `wave` partition column)
+      val dir = s"wave=${java.util.UUID.randomUUID()}"
       // bucket is a pure function of the id the signature rows already
       // carry — recompute it narrowly instead of re-scanning docs and
       // shuffling both sides on id just to re-attach it
       val sigs = Dedup.signatures(Dedup.shingleSets(
-          withBucket.select(col("id"), col("text")), cfg), cfg)
-        .withColumn("bucket", pmod(xxhash64(col("id")), lit(buckets)).cast("int"))
-      // dynamic partition overwrite: a crash after a bucket's files
-      // committed but before store.record would otherwise leave rows
-      // that a resume re-appends (duplicate signatures); overwrite of
-      // exactly the recomputed buckets makes the retry idempotent
-      sigs.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(sigDir)
-      // lineage counts, read back column-pruned from the just-written
-      // files under the EXPLICIT schema: an all-empty wave (zero data
-      // files yet) reads as an empty table instead of failing footer
-      // inference, and a genuine read error still throws HERE — before
-      // store.record can durably mark the wave's buckets complete (a
-      // swallowed error there would wedge every later resume: `missing`
-      // empty, nothing recomputed, the final read failing forever)
-      val counts = spark.read.schema(sigSchema).parquet(sigDir)
-        .where(col("bucket").isin(wave: _*))
-        .groupBy("bucket").count()
-        .collect().map(r => (r.getInt(0), r.getLong(1))).toMap
+          docs.where(bucket.isin(wave: _*)).select(col("id"), col("text")), cfg), cfg)
+        .withColumn("bucket", bucket)
+      // lineage counts, one per bucket, observed inside the write job; a
+      // failing write throws HERE, before store.record can durably mark
+      // the wave's buckets complete, and its directory is never read
+      val (_, counts) = observed(sigs,
+          wave.map(b => count_if(col("bucket") === b).as(s"b$b")): _*)(
+        _.write.parquet(s"$sigDir/$dir"))
       // buckets that produced zero rows still count as completed
-      val all = wave.map(b => (b, counts.getOrElse(b, 0L))).toSeq
-      store.record("signatures", stageTag, all,
-        System.currentTimeMillis() - t0)
+      store.record("signatures", stageTag,
+        wave.map(b => (b, counts(s"b$b").asInstanceOf[Long])),
+        System.currentTimeMillis() - t0, dir)
+      committed ++= wave.map(_ -> dir)
     }
-    docs.sparkSession.read.schema(sigSchema).parquet(sigDir)
+    committed.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (dir, bs) =>
+      spark.read.schema(sigSchema).parquet(s"$sigDir/$dir")
+        .where(col("bucket").isin(bs.map(_._1).sorted: _*))
+    }.reduce(_ union _)
   }
 
   /** Pairs stage from a signatures table: validity filter -> skew-aware
@@ -194,11 +223,10 @@ object ResumableDedupJob {
     */
   def keepStage(docs: DataFrame, clusters: DataFrame, cfg: DedupConfig,
                 workDir: String): DataFrame =
-    reusedOrWritten("keep", cfg, workDir, Seq(docs, clusters)) { dir =>
+    reusedOrWritten("keep", cfg, workDir, Seq(docs, clusters)) {
       Dedup.keepList(docs,
         clusters.select(col("id"), col("cluster_id")),
         graft.functions.TextFunctions.qualityScore(col("text")))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
     }
 
   /** Full resumable run: signatures (bucket-checkpointed) -> pairs ->
@@ -209,31 +237,43 @@ object ResumableDedupJob {
           buckets: Int = 16, hotCap: Int = 1024,
           saltBuckets: Int = 16, waveBuckets: Int = 0): DataFrame = {
     val sigs = signaturesStage(docs, cfg, workDir, buckets, waveBuckets)
-    reusedOrWritten("clusters", cfg, workDir, Seq(sigs)) { dir =>
+    reusedOrWritten("clusters", cfg, workDir, Seq(sigs)) {
       Dedup.clusters(pairsStage(sigs, cfg, hotCap, saltBuckets))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
     }
   }
 
   /** The stage-skip rule (see the object doc): returns the committed
-    * `$workDir/<stage>/tag=<configTag>` table, after `write` recomputes
-    * it unless the stage marker matches the current identities.
+    * `$workDir/<stage>/tag=<configTag>` table, after writing `compute`
+    * there unless the stage marker matches the current identities. The
+    * table is read back under the schema of the frame written, kept in
+    * the marker for the reuse path.
     */
   private def reusedOrWritten(stage: String, cfg: DedupConfig, workDir: String,
-                              inputs: Seq[DataFrame])(write: String => Unit): DataFrame = {
+                              inputs: Seq[DataFrame])(compute: => DataFrame): DataFrame = {
     val dir = s"$workDir/$stage/tag=${cfg.configTag}"
     val marker = new File(s"$workDir/stages/$stage", s"tag=${cfg.configTag}")
     val inputId = inputIdentity(inputs)
-    def stamp(in: String) = s"input $in\noutput ${sha256(outputFiles(dir))}\n"
-    val current = inputId.exists(in => MarkerFile.read(marker).exists(_ == stamp(in)))
-    if (!current) {
+    def stamp(in: String, schema: String) =
+      s"input $in\noutput ${sha256(outputFiles(dir))}\nschema $schema\n"
+    val reused = for {
+      in <- inputId
+      text <- MarkerFile.read(marker)
+      schema <- text.linesIterator.collectFirst {
+        case l if l.startsWith("schema ") => l.stripPrefix("schema ")
+      }
+      if text == stamp(in, schema)
+    } yield schema
+    val schema = reused.getOrElse {
       // no marker while the output is being rewritten: a crash in
       // between leaves a stage that recomputes, never a stale skip
       Files.deleteIfExists(marker.toPath)
-      write(dir)
-      inputId.foreach(in => MarkerFile.write(marker, stamp(in)))
+      val df = compute
+      df.write.mode(SaveMode.Overwrite).parquet(dir)
+      inputId.foreach(in => MarkerFile.write(marker, stamp(in, df.schema.json)))
+      df.schema.json
     }
-    inputs.head.sparkSession.read.parquet(dir)
+    inputs.head.sparkSession.read
+      .schema(DataType.fromJson(schema).asInstanceOf[StructType]).parquet(dir)
   }
 
   /** Identity of the stage inputs, or None when some input is not purely

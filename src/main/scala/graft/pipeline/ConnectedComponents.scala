@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * "Connected Components in MapReduce and Beyond", SoCC'14) expressed as
   * DataFrame joins/aggregations. Converges in O(log^2 n) rounds; each
   * round is two shuffles. Lineage is cut with localCheckpoint() every
-  * round so plans stay bounded on deep graphs.
+  * round so plans stay bounded on deep graphs; the round's convergence
+  * fingerprint is observed inside that checkpoint job.
   */
 object ConnectedComponents {
 
@@ -34,32 +35,12 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIterations: Int = 50,
           localThreshold: Long = LocalThreshold): DataFrame = {
-    // canonical undirected edges as (big, small) with big > small;
-    // self-loops dropped
-    var e = edges
-      .select(
-        greatest(col("src"), col("dst")).as("u"),
-        least(col("src"), col("dst")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
-
-    val nEdges = e.count()
+    var (e, fp) = canonicalEdges(edges)
+    val (nEdges, _) = fp
     if (nEdges <= localThreshold) return localRun(e)
 
     var iter = 0
     var converged = false
-    // convergence fingerprint: (row count, order-free content hash).
-    // Labels only decrease monotonically, so an unchanged fingerprint
-    // means an unchanged edge set (collision prob ~2^-64); one tiny
-    // aggregate per round instead of two except() jobs. Uses the shared
-    // duplicate-sensitive primitive (wrap-around hash sum) rather than a
-    // bit_xor fold — the `.distinct()` on every round's output makes
-    // even-multiset XOR cancellation impossible here, but the sum fold
-    // holds without that precondition being load-bearing.
-    def fingerprint(df: DataFrame): (Long, Long) =
-      graft.store.TxLog.contentFingerprint(df, Seq(col("u"), col("v")))
-    var fp = fingerprint(e)
     while (!converged && iter < maxIterations) {
       // large-star: for each node u, connect every strictly-larger
       // neighbor w to m = min(Gamma(u) ∪ {u})
@@ -81,11 +62,9 @@ object ConnectedComponents {
         .union(ssMin.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .distinct()
-        .localCheckpoint(true)
-
-      val fpNew = fingerprint(ss)
+      val (next, fpNew) = checkpointed(ss)
       e.unpersist()
-      e = ss
+      e = next
       converged = fpNew == fp
       fp = fpNew
       iter += 1
@@ -96,6 +75,34 @@ object ConnectedComponents {
     e.select(col("u").as("id"), col("v").as("component"))
       .union(e.select(col("v").as("id"), col("v").as("component")))
       .distinct()
+  }
+
+  /** Canonical undirected edges as (u, v) with u > v, self-loops and
+    * duplicates dropped, checkpointed, with their fingerprint (the edge
+    * count comes first).
+    */
+  private[graft] def canonicalEdges(edges: DataFrame): (DataFrame, (Long, Long)) =
+    checkpointed(edges
+      .select(
+        greatest(col("src"), col("dst")).as("u"),
+        least(col("src"), col("dst")).as("v"))
+      .where(col("u") =!= col("v"))
+      .distinct())
+
+  /** `e` localCheckpointed, with its convergence fingerprint (row count,
+    * order-free content hash) observed inside the checkpoint job, so a
+    * round costs no extra job. Labels only decrease monotonically, so an
+    * unchanged fingerprint means an unchanged edge set (collision prob
+    * ~2^-64). The fold is the shared duplicate-sensitive one of
+    * [[graft.store.TxLog.contentFingerprint]] (wrap-around hash sum)
+    * rather than a bit_xor fold — the `.distinct()` on every round's
+    * output makes even-multiset XOR cancellation impossible here, but
+    * the sum fold holds without that precondition being load-bearing.
+    */
+  private def checkpointed(e: DataFrame): (DataFrame, (Long, Long)) = {
+    val (cp, values) = observed(e,
+      graft.store.TxLog.fingerprintAggs(Seq(col("u"), col("v"))): _*)(_.localCheckpoint(true))
+    (cp, graft.store.TxLog.fingerprintOf(values))
   }
 
   /** Single-task path-compressed union-find over a small edge set,

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.functions.{Expressions, SimHash, TextFunctions}
 
@@ -94,7 +95,14 @@ object Dedup {
   private[graft] def kernelParallel(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
+    df.queryExecution.executedPlan match {
+      // an exchange upstream: adaptive execution may coalesce it at run
+      // time (to one partition on small data), and `.rdd.getNumPartitions`
+      // would run it to find out; an explicit count is never coalesced
+      case _: AdaptiveSparkPlanExec => df.repartition(p)
+      // no exchange: the partition count is known without a job
+      case _ => if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
+    }
   }
 
   /** Stage 2 — MinHash signatures + SimHash fingerprint per doc.

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.storage.StorageLevel
 
 package object pipeline {
@@ -16,5 +16,19 @@ package object pipeline {
   def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
     val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     try body(cached) finally { cached.unpersist(); () }
+  }
+
+  /** Runs `action` (one action: a write, a localCheckpoint) on `df` with
+    * the named aggregates `aggs` computed inside that same job
+    * (`Dataset.observe`), and returns its result with the aggregates by
+    * name — a count or a fingerprint without a second job over the
+    * output. The values are read only after `action` returns, so a
+    * failing action throws instead of waiting for values that never
+    * come. `action` must execute `df` exactly once.
+    */
+  def observed[T](df: DataFrame, aggs: Column*)(action: DataFrame => T): (T, Map[String, Any]) = {
+    val obs = Observation()
+    val out = action(df.observe(obs, aggs.head, aggs.tail: _*))
+    (out, obs.get)
   }
 }

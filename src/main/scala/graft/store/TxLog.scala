@@ -1219,13 +1219,29 @@ object TxLog {
   def contentFingerprint(df: DataFrame,
                          cols: Seq[org.apache.spark.sql.Column])
       : (Long, Long) = {
+    val aggs = fingerprintAggs(cols)
+    val r = df.agg(aggs.head, aggs.tail: _*).head()
+    fingerprintOf(r.getValuesMap[Any](r.schema.fieldNames.toSeq))
+  }
+
+  /** The two aggregates of [[contentFingerprint]], named `fp_rows` and
+    * `fp_hash`, for a caller that computes them inside a job it already
+    * runs (`graft.pipeline.observed`); [[fingerprintOf]] folds them.
+    */
+  private[graft] def fingerprintAggs(cols: Seq[org.apache.spark.sql.Column])
+      : Seq[org.apache.spark.sql.Column] = {
     import org.apache.spark.sql.functions.{count, lit, sum, xxhash64}
-    val r = df.agg(count(lit(1)),
+    Seq(count(lit(1)).as("fp_rows"),
       sum(xxhash64(cols: _*)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0)))).head()
-    val h = if (r.isNullAt(1)) 0L
-            else r.getDecimal(1).toBigInteger.longValue()
-    (r.getLong(0), h)
+        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("fp_hash"))
+  }
+
+  private[graft] def fingerprintOf(values: Map[String, Any]): (Long, Long) = {
+    val h = values("fp_hash") match {
+      case null => 0L
+      case d: java.math.BigDecimal => d.toBigInteger.longValue()
+    }
+    (values("fp_rows").asInstanceOf[Long], h)
   }
 
   /** Row count of a just-written data directory, summed from parquet

@@ -103,4 +103,23 @@ class DedupPipelineSpec extends SparkSpecBase {
     } yield (a, b)).toSet
     assert(got == want)
   }
+
+  test("kernelParallel plans its parallelism floor without running a job") {
+    val p = spark.sparkContext.defaultParallelism
+    // a shuffled frame: `.rdd.getNumPartitions` would run the shuffle
+    // under adaptive execution, which coalesces it to fewer partitions
+    val grouped = spark.range(0, 1000).groupBy((col("id") % 10).as("k")).count()
+    val (g, groupedJobs) = jobsDuring(Dedup.kernelParallel(grouped))
+    assert(groupedJobs == 0, s"kernelParallel ran $groupedJobs job(s)")
+    assert(g.rdd.getNumPartitions == p, "the shuffled frame must be floored")
+    assert(g.collect().toSet == grouped.collect().toSet)
+    // a one-split input is raised to the floor; a wide one is kept
+    val (narrow, narrowJobs) = jobsDuring(Dedup.kernelParallel(spark.range(0, 100, 1, 1).toDF()))
+    assert(narrowJobs == 0 && narrow.rdd.getNumPartitions == p)
+    val wide = spark.range(0, 100, 1, p).toDF()
+    assert(jobsDuring(Dedup.kernelParallel(wide)) == ((wide, 0)))
+    val scan = spark.read.parquet(s"$sfDir/documents.parquet")
+    val (floored, scanJobs) = jobsDuring(Dedup.kernelParallel(scan))
+    assert(scanJobs == 0 && floored.rdd.getNumPartitions >= p)
+  }
 }

@@ -17,6 +17,20 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** Rewrites the signatures checkpoint table with only the rows `keep`
+    * selects — the crash model: the other rows' record never committed.
+    * Each kept row still names its directory.
+    */
+  private def keepCheckpointRows(workDir: String, stageTag: String,
+                                 keep: org.apache.spark.sql.Column): Unit = {
+    val store = new CheckpointStore(spark, workDir)
+    val rows = store.read().where(keep).collect()
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$workDir/checkpoints"))
+    rows.groupBy(_.getAs[String]("dir")).foreach { case (dir, rs) =>
+      store.record("signatures", stageTag, rs.map(r => (r.getInt(1), r.getLong(3))).toSeq, 0L, dir)
+    }
+  }
+
   test("resumable job: interrupted run skips completed buckets, final tables identical") {
     val docs = Dedup.fromDocuments(
       spark.read.parquet(s"$sfDir/documents.parquet"))
@@ -39,20 +53,9 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(doneAfterKill == (0 until buckets).toSet,
       "subset run records all buckets it attempted")
     // drop checkpoint rows for buckets >= 4 to model a crash mid-stage:
-    // rewrite the checkpoint table keeping only buckets 0..3
-    val kept = store.read().where(col("bucket") < 4)
-    val rows = kept.collect()
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$resumeDir/checkpoints"))
-    store.record("signatures", s"${cfg.configTag}-b$buckets",
-      rows.map(r => (r.getInt(1), r.getLong(3))).toSeq, 0L)
-    // ALSO remove the parquet rows of un-checkpointed buckets (a crash
-    // before commit leaves nothing durable for them)
-    val sigDir = s"$resumeDir/signatures/tag=${cfg.configTag}-b$buckets"
-    (4 until buckets).foreach { b =>
-      val d = new java.io.File(s"$sigDir/bucket=$b")
-      if (d.exists()) org.apache.commons.io.FileUtils.deleteDirectory(d)
-    }
+    // rewrite the checkpoint table keeping only buckets 0..3 (rows that
+    // un-checkpointed buckets left in a wave directory are never read)
+    keepCheckpointRows(resumeDir, s"${cfg.configTag}-b$buckets", col("bucket") < 4)
 
     // resume: full input; must recompute exactly buckets 4..7
     val before = store.completedBuckets("signatures", s"${cfg.configTag}-b$buckets")
@@ -155,6 +158,157 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(s2.columns.sameElements(s1.columns))
   }
 
+  // --- signature table layout: one parquet directory per wave, read
+  // through the checkpoint rows that name it ---
+
+  private def sigTableDir(workDir: String, buckets: Int) =
+    s"$workDir/signatures/tag=${cfg.configTag}-b$buckets"
+
+  /** Parquet data files under a directory, recursively. */
+  private def dataFiles(dir: String): Seq[java.io.File] = {
+    val root = new java.io.File(dir)
+    if (!root.exists()) Nil
+    else org.apache.commons.io.FileUtils.listFiles(root, null, true).toArray.toSeq
+      .map(_.asInstanceOf[java.io.File])
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+  }
+
+  private def subDirs(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  /** id -> the rest of its signature row; fails if an id appears twice. */
+  private def rowsById(df: org.apache.spark.sql.DataFrame): Map[Any, Seq[Any]] = {
+    val rows = df.collect().map(r => r.get(0) -> r.toSeq.tail)
+    val byId = rows.toMap
+    assert(byId.size == rows.length, s"${rows.length - byId.size} duplicate signature rows")
+    byId
+  }
+
+  /** The table a single uninterrupted pass produces. */
+  private def singlePass(buckets: Int): Map[Any, Seq[Any]] =
+    rowsById(ResumableDedupJob.signaturesStage(fileDocs(), cfg, tmpDir("graft-single"), buckets))
+
+  for (wb <- Seq(0, 1)) {
+    test(s"signature layout (waveBuckets=$wb): a wave directory written but never recorded is never read; the next run removes it") {
+      val buckets = 4
+      val dir = tmpDir("graft-orphan")
+      val want = singlePass(buckets)
+      val first = ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      // a crash between a wave's write and its record: rows on disk that
+      // no checkpoint row names
+      val orphan = s"${sigTableDir(dir, buckets)}/wave=crashed"
+      first.write.parquet(orphan)
+      assert(dataFiles(orphan).nonEmpty)
+      assert(rowsById(first) == want, "the unrecorded wave was read")
+      val second = ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      assert(!new java.io.File(orphan).exists(), "the next run must remove the unrecorded wave")
+      assert(rowsById(second) == want)
+    }
+
+    test(s"signature layout (waveBuckets=$wb): a dropped checkpoint row recomputes its bucket; the rows it left behind are not read") {
+      val buckets = 4
+      val dir = tmpDir("graft-dropped")
+      val want = singlePass(buckets)
+      ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      val table = sigTableDir(dir, buckets)
+      val staleRows = spark.read.parquet(table).where(col("bucket") === 2).count()
+      assert(staleRows > 0, "bucket 2 must hold rows for the crash model to bite")
+      keepCheckpointRows(dir, s"${cfg.configTag}-b$buckets", col("bucket") =!= 2)
+      val resumed = ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      assert(rowsById(resumed) == want, "the resume must give every id once, bit-identical")
+      val store = new CheckpointStore(spark, dir)
+      val committed = store.committedDirs("signatures", s"${cfg.configTag}-b$buckets")
+      assert(committed.keySet == (0 until buckets).toSet)
+      assert(subDirs(table) == committed.values.toSet)
+      if (wb == 0) {
+        // the first wave's directory still holds bucket 2's old rows
+        val firstWave = committed(0)
+        assert(committed(2) != firstWave)
+        assert(spark.read.parquet(s"$table/$firstWave").where(col("bucket") === 2).count() == staleRows)
+      }
+    }
+
+    test(s"signature layout (waveBuckets=$wb): a workDir in the bucket=N layout, whose rows name no directory, recomputes") {
+      val buckets = 4
+      val dir = tmpDir("graft-old-layout")
+      val stageTag = s"${cfg.configTag}-b$buckets"
+      val want = singlePass(buckets)
+      // the older layout: a bucket-partitioned table, and checkpoint rows
+      // (recorded before the `dir` column existed) that name no directory
+      val old = ResumableDedupJob.signaturesStage(fileDocs(), cfg, tmpDir("graft-old-src"), buckets)
+      old.write.partitionBy("bucket").parquet(sigTableDir(dir, buckets))
+      val counts = old.groupBy("bucket").count().collect().map(r => (r.getInt(0), r.getLong(1)))
+      new graft.store.TxLog(s"$dir/checkpoints").writeAppend(spark.createDataFrame(
+          counts.toSeq.map { case (b, n) => ("signatures", b, stageTag, n, 0L, 0L) })
+        .toDF("stage", "bucket", "config_tag", "rows", "wall_ms", "ts"))
+      val store = new CheckpointStore(spark, dir)
+      assert(store.read().count() == buckets)
+      assert(store.completedBuckets("signatures", stageTag).isEmpty)
+      val resumed = ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      assert(rowsById(resumed) == want)
+      val committed = store.committedDirs("signatures", stageTag)
+      assert(committed.keySet == (0 until buckets).toSet)
+      assert(subDirs(sigTableDir(dir, buckets)) == committed.values.toSet,
+        "the bucket=N directories must be gone")
+    }
+
+    test(s"signature layout (waveBuckets=$wb): a wave writes no more data files than its scan has partitions") {
+      val buckets = 4
+      val dir = tmpDir("graft-files")
+      val docs = fileDocs().repartition(3)
+      ResumableDedupJob.signaturesStage(docs, cfg, dir, buckets, waveBuckets = wb)
+      val waves = new graft.store.TxLog(s"$dir/checkpoints").history().size
+      assert(waves == (if (wb == 0) 1 else buckets))
+      val table = sigTableDir(dir, buckets)
+      assert(dataFiles(table).size <= waves * 3,
+        s"${dataFiles(table).size} data files for $waves wave(s) over 3 scan partitions")
+      subDirs(table).foreach(d => assert(dataFiles(s"$table/$d").size <= 3))
+    }
+
+    test(s"lineage (waveBuckets=$wb): each bucket's checkpoint rows equal the table's per-bucket count") {
+      val buckets = 8
+      val dir = tmpDir("graft-lineage")
+      // few docs over many buckets, so some buckets are empty
+      val table = ResumableDedupJob.signaturesStage(
+        fileDocs().limit(5), cfg, dir, buckets, waveBuckets = wb)
+      val counted = table.groupBy("bucket").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val recorded = new CheckpointStore(spark, dir).read().collect()
+        .map(r => r.getAs[Int]("bucket") -> r.getAs[Long]("rows")).toMap
+      assert(recorded == (0 until buckets).map(b => b -> counted.getOrElse(b, 0L)).toMap)
+      assert(recorded.values.exists(_ == 0L), "an empty bucket is recorded with 0 rows")
+    }
+
+    test(s"signature layout (waveBuckets=$wb): a wave whose write fails records nothing, throws promptly and leaves nothing readable") {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration._
+      val buckets = 4
+      val dir = tmpDir("graft-fail-wave")
+      val stageTag = s"${cfg.configTag}-b$buckets"
+      val want = singlePass(buckets)
+      val victim = fileDocs().select("id").head().get(0)
+      val victimBucket = fileDocs().where(col("id") === lit(victim))
+        .select(pmod(xxhash64(col("id")), lit(buckets)).cast("int")).head().getInt(0)
+      val poisoned = fileDocs().withColumn("text",
+        when(col("id") === lit(victim), raise_error(lit("poisoned doc"))).otherwise(col("text")))
+      val attempt = Future(scala.util.Try(
+        ResumableDedupJob.signaturesStage(poisoned, cfg, dir, buckets, waveBuckets = wb)))(
+        ExecutionContext.global)
+      assert(Await.result(attempt, 120.seconds).isFailure, "the poisoned wave must throw")
+      val store = new CheckpointStore(spark, dir)
+      val done = store.completedBuckets("signatures", stageTag)
+      assert(!done.contains(victimBucket) && (wb == 1 || done.isEmpty))
+      val named = store.committedDirs("signatures", stageTag).values.toSet
+      assert(dataFiles(sigTableDir(dir, buckets)).forall(f => named.contains(f.getParentFile.getName)),
+        "a data file outside every recorded wave")
+      val retried = ResumableDedupJob.signaturesStage(fileDocs(), cfg, dir, buckets, waveBuckets = wb)
+      assert(rowsById(retried) == want)
+      assert(subDirs(sigTableDir(dir, buckets)) ==
+        store.committedDirs("signatures", stageTag).values.toSet)
+    }
+  }
+
   // --- stage-level resume: clusters and keep are skipped while their
   // input files and committed output are unchanged ---
 
@@ -196,6 +350,21 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(rowSet(c2) == cRows && rowSet(k2) == kRows)
   }
 
+  test("stage resume: fresh and reused clusters/keep frames have equal schemas and rows; a reuse infers no schema") {
+    val dir = tmpDir("graft-stage-schema")
+    val c1 = ResumableDedupJob.run(fileDocs(), cfg, dir, buckets = 4)
+    val k1 = ResumableDedupJob.keepStage(fileDocs(), c1, cfg, dir)
+    val docs = fileDocs()
+    val (c2, runJobs) = jobsDuring(ResumableDedupJob.run(docs, cfg, dir, buckets = 4))
+    val (k2, keepJobs) = jobsDuring(ResumableDedupJob.keepStage(docs, c2, cfg, dir))
+    assert(runJobs == 1, "a reused run only reads the checkpoint rows")
+    assert(keepJobs == 0, "a reused keep stage runs no job")
+    assert(c1.schema == c2.schema && k1.schema == k2.schema)
+    assert(c1.schema == spark.read.parquet(clustersDir(dir)).schema &&
+      k1.schema == spark.read.parquet(keepDir(dir)).schema, "declared schema != inferred")
+    assert(rowSet(c1) == rowSet(c2) && rowSet(k1) == rowSet(k2))
+  }
+
   test("stage resume: a recomputed signature bucket makes run rewrite clusters/ with equal content") {
     val dir = tmpDir("graft-stage-bucket")
     val buckets = 4
@@ -204,14 +373,8 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     ResumableDedupJob.run(fileDocs(), cfg, dir, buckets)
     assert(stageFiles(clustersDir(dir)) == cFiles, "unchanged signatures must skip clusters")
     // crash model of the interrupted-run test: bucket 3 loses its
-    // checkpoint row and its partition
-    val stageTag = s"${cfg.configTag}-b$buckets"
-    val store = new CheckpointStore(spark, dir)
-    val rows = store.read().where(col("bucket") =!= 3).collect()
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/checkpoints"))
-    store.record("signatures", stageTag, rows.map(r => (r.getInt(1), r.getLong(3))).toSeq, 0L)
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(s"$dir/signatures/tag=$stageTag/bucket=3"))
+    // checkpoint row (its rows stay in the wave directory, unread)
+    keepCheckpointRows(dir, s"${cfg.configTag}-b$buckets", col("bucket") =!= 3)
     val after = rowSet(ResumableDedupJob.run(fileDocs(), cfg, dir, buckets))
     assert(stageFiles(clustersDir(dir)).keySet.intersect(cFiles.keySet)
       .forall(!_.startsWith("part-")), "a recomputed bucket must rewrite clusters/")

@@ -120,6 +120,31 @@ class ServingAndGraphSpec extends SparkSpecBase {
     assert(got.values.toSet == Set(0L) && got.size == 51)
   }
 
+  test("connected components: the edge count observed in the checkpoint job equals count() and picks the path") {
+    val spark2 = spark
+    import spark2.implicits._
+    // reversed duplicates and self-loops, which the canonical edges drop
+    val edges = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 3L), (10L, 11L), (11L, 10L), (5L, 5L))
+      .toDF("src", "dst")
+    val (e, (n, h)) = ConnectedComponents.canonicalEdges(edges)
+    assert(n == 3 && n == e.count())
+    assert((n, h) == graft.store.TxLog.contentFingerprint(e, Seq(col("u"), col("v"))))
+    def isLocal(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst {
+        case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m
+      }.nonEmpty
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
+    for ((threshold, local) <- Seq(ConnectedComponents.LocalThreshold -> true,
+        n -> true, (n - 1) -> false, 0L -> false)) {
+      val out = ConnectedComponents.run(edges, localThreshold = threshold)
+      assert(isLocal(out) == local, s"localThreshold=$threshold")
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
+    }
+    // no edge at all: the empty checkpoint job still reports its count
+    val (none, (n0, h0)) = ConnectedComponents.canonicalEdges(edges.where(lit(false)))
+    assert(n0 == 0 && h0 == 0L && none.isEmpty)
+  }
+
   test("connected components (property): random sparse-id graphs match a local union-find") {
     val spark2 = spark
     import spark2.implicits._

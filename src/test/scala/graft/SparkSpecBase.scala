@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +17,38 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     */
   def fuzzSeed(default: Long): Long =
     sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(default)
+
+  /** `body`'s result and the number of Spark jobs it started. Jobs are
+    * told apart by a local property of this thread (which the jobs of
+    * its SQL queries inherit); listener events arrive asynchronously but
+    * in order, so the count is read once a marker job submitted after
+    * `body` has been seen.
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val token = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case `token` => jobs.incrementAndGet()
+          case t if t == s"$token-end" => markerSeen.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, token)
+      val out = try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, s"$token-end")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the marker job never reached the listener")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpecBase {

@@ -246,7 +246,7 @@ class TxLogSpec extends SparkSpecBase {
     val dir = tmp("ckpt-corrupt")
     val store = new graft.pipeline.CheckpointStore(spark, dir)
     assert(store.read().count() == 0) // never-written table IS empty
-    store.record("stage", "tag", Seq((0, 10L)), 1L)
+    store.record("stage", "tag", Seq((0, 10L)), 1L, "d")
     assert(store.completedBuckets("stage", "tag") == Set(0))
     // corrupt the single committed data file
     val log = new TxLog(s"$dir/checkpoints")
