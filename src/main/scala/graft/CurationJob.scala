@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Dedup, DedupConfig, ResumableDedupJob}
+import graft.pipeline.{checkpointed, observed, Dedup, DedupConfig, ResumableDedupJob}
 import graft.queries.Curation
 
 /** End-to-end training-data curation entry point — the funnel a
@@ -18,9 +18,11 @@ import graft.queries.Curation
   *     [benchPath|-] [heldoutNumerator=8192] [spanTokens=0]
   *
   * Every stage count is reported in one funnel JSON line (the
-  * reference's count-back style, `generate_matches.py:57-62`); the
-  * curated table is tag-stamped so a config change regenerates rather
-  * than mixes. The near-dup stage reuses the bucket-checkpointed
+  * reference's count-back style, `generate_matches.py:57-62`), each
+  * observed inside the job that materializes its stage (the stage's
+  * `localCheckpoint`, the curated write) rather than by a second job;
+  * the curated table is tag-stamped so a config change regenerates
+  * rather than mixes. The near-dup stage reuses the bucket-checkpointed
   * resumable dedup (`ResumableDedupJob`), so a restart skips completed
   * signature buckets and reuses the clusters table while the signature
   * files are unchanged. Its keep stage always recomputes: the docs it
@@ -112,36 +114,34 @@ object CurationJob {
     }
     val t0 = System.currentTimeMillis()
     val raw = spark.read.parquet(docsPath)
-    val docs = (if (raw.columns.contains("doc_id")) Dedup.fromDocuments(raw)
-                else Dedup.fromPages(raw)).localCheckpoint(true)
-    val n0 = docs.count()
+    def counted(df: DataFrame): (DataFrame, Long) = {
+      val (out, agg) = checkpointed(df, count(lit(1)).as("n"))
+      (out, agg("n").asInstanceOf[Long])
+    }
+    val (docs, n0) = counted(
+      if (raw.columns.contains("doc_id")) Dedup.fromDocuments(raw) else Dedup.fromPages(raw))
 
     // 1. exact dedup: one shuffle on the content hash, keep min id
-    val afterExact = docs.join(
+    val (afterExact, n1) = counted(docs.join(
       Dedup.exactDuplicates(docs).select(col("keeper_id").as("id")),
-      Seq("id"), "left_semi").localCheckpoint(true)
-    val n1 = afterExact.count()
+      Seq("id"), "left_semi"))
 
     // 2. near-dup clusters (bucket-checkpointed, skew-aware salted) +
     //    quality-ranked canonical per cluster
     val clusters = ResumableDedupJob.run(afterExact, cfg, workDir)
     val keep = ResumableDedupJob.keepStage(afterExact, clusters, cfg, workDir)
-    val afterNear = afterExact
+    val (afterNear, n2) = counted(afterExact
       .join(keep.where(col("kept"))
-        .select(col("id"), col("cluster_id"), col("quality")), Seq("id"))
-      .localCheckpoint(true)
-    val n2 = afterNear.count()
+        .select(col("id"), col("cluster_id"), col("quality")), Seq("id")))
 
     // 3. quality + repetition + compressibility filters (narrow kernel passes)
     val rep = Curation.repetitionStats(afterNear, idCol = "id")
-    val afterQuality = afterNear
+    val (afterQuality, n3) = counted(afterNear
       .join(rep, Seq("id"), "left_outer") // <2-token docs carry null stats
-      .where(textFilters)
-      .localCheckpoint(true)
-    val n3 = afterQuality.count()
+      .where(textFilters))
 
     // 4. optional benchmark decontamination (broadcast gram semi-join)
-    val afterDecontam = benchPath match {
+    val (afterDecontam, n4) = benchPath match {
       case Some(p) =>
         val bench = spark.read.parquet(p)
         val benchDocs =
@@ -149,11 +149,9 @@ object CurationJob {
           else bench.toDF("text") // one text column
         val hit = Curation.contaminatedDocs(
           afterQuality, benchDocs, decontamK, idCol = "id")
-        afterQuality.join(hit.select("id"), Seq("id"), "left_anti")
-          .localCheckpoint(true)
-      case None => afterQuality
+        counted(afterQuality.join(hit.select("id"), Seq("id"), "left_anti"))
+      case None => (afterQuality, n3)
     }
-    val n4 = afterDecontam.count()
 
     // 4b. optional C4-style duplicate-span removal over the survivors:
     // the rewrite runs AFTER dedup/quality (don't pay span hashing for
@@ -164,12 +162,11 @@ object CurationJob {
       else {
         val rewritten = Curation.removeDuplicateSpans(
           afterDecontam, spanTokens, idCol = "id")
-        val joined = afterDecontam.drop("text")
+        val (joined, agg) = checkpointed(afterDecontam.drop("text")
           .join(rewritten.select(col("id"), col("kept_text").as("text"),
-            col("n_removed")), Seq("id"))
-          .localCheckpoint(true)
-        (joined,
-          joined.agg(coalesce(sum(col("n_removed")), lit(0L))).head.getLong(0))
+            col("n_removed")), Seq("id")),
+          coalesce(sum(col("n_removed")), lit(0L)).as("removed"))
+        (joined, agg("removed").asInstanceOf[Long])
       }
 
     // 5. leakage-free split keyed by dup cluster
@@ -186,10 +183,12 @@ object CurationJob {
     // variant — the stage config is part of the output identity
     val variant = if (spanTokens > 0) s"-span$spanTokens" else ""
     val outDir = s"$workDir/curated/tag=${cfg.configTag}$variant"
-    curated.write.mode(SaveMode.Overwrite).parquet(outDir)
-    val persisted: DataFrame = spark.read.parquet(outDir)
-    val nHeldout = persisted.where(col("split") === "heldout").count()
-    val nTrain = persisted.where(col("split") === "train").count()
+    val (_, splits) = observed(curated,
+      count_if(col("split") === "heldout").as("heldout"),
+      count_if(col("split") === "train").as("train"))(
+      _.write.mode(SaveMode.Overwrite).parquet(outDir))
+    val nHeldout = splits("heldout").asInstanceOf[Long]
+    val nTrain = splits("train").asInstanceOf[Long]
 
     val wall = (System.currentTimeMillis() - t0) / 1000.0
     val spanField =

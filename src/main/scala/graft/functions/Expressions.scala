@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
@@ -203,6 +204,48 @@ object Expressions {
       copy(child = newChild)
   }
 
+  /** Generated-code handle on a broadcast [[Kernels.DfTable]]: the
+    * value is fetched once per generated-class instance (per task), not
+    * per row — `Broadcast.value` synchronizes.
+    */
+  private def dfTableState(ctx: CodegenContext, table: Broadcast[Kernels.DfTable]): String = {
+    val ref = ctx.addReferenceObj("dfTableBroadcast", table,
+      "org.apache.spark.broadcast.Broadcast")
+    ctx.addMutableState("graft.functions.Kernels.DfTable", "dfTable",
+      v => s"$v = (graft.functions.Kernels.DfTable) $ref.value();", forceInline = true)
+  }
+
+  /** shingle-hash array -> the same hashes rarest-first by the broadcast
+    * document frequencies (see [[Kernels.rankByDf]]).
+    */
+  case class RankByDf(child: Expression, table: Broadcast[Kernels.DfTable])
+      extends UnaryExpression with ImplicitCastInputTypes {
+    override def inputTypes: Seq[GraftGlue.SqlAbstractDataType] = Seq(ArrayType(LongType))
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullSafeEval(input: Any): Any =
+      Kernels.rankByDf(input.asInstanceOf[ArrayData], table.value)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val t = dfTableState(ctx, table)
+      defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.rankByDf($c, $t)")
+    }
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
+  /** shingle hash -> its broadcast document frequency (bigint). */
+  case class DfOf(child: Expression, table: Broadcast[Kernels.DfTable])
+      extends UnaryExpression with ImplicitCastInputTypes {
+    override def inputTypes: Seq[GraftGlue.SqlAbstractDataType] = Seq(LongType)
+    override def dataType: DataType = LongType
+    override def nullSafeEval(input: Any): Any = table.value.df(input.asInstanceOf[Long]).toLong
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val t = dfTableState(ctx, table)
+      defineCodeGen(ctx, ev, c => s"(long) $t.df($c)")
+    }
+    override protected def withNewChildInternal(newChild: Expression): Expression =
+      copy(child = newChild)
+  }
+
   // Column-level API
   def cosineSim(a: Column, b: Column): Column =
     GraftGlue.column(CosineSim(GraftGlue.expression(a), GraftGlue.expression(b)))
@@ -230,4 +273,8 @@ object Expressions {
     GraftGlue.column(WinnowHashes(GraftGlue.expression(text), w, p))
   def nearestCentroids(v: Column, centroids: Array[Array[Float]], nProbe: Int): Column =
     GraftGlue.column(NearestCentroids(GraftGlue.expression(v), centroids, nProbe))
+  def rankByDf(shingles: Column, table: Broadcast[Kernels.DfTable]): Column =
+    GraftGlue.column(RankByDf(GraftGlue.expression(shingles), table))
+  def dfOf(h: Column, table: Broadcast[Kernels.DfTable]): Column =
+    GraftGlue.column(DfOf(GraftGlue.expression(h), table))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /** Tight primitive kernels shared by the interpreted `eval` and the
@@ -392,5 +392,84 @@ object Kernels {
     i = 0
     while (i < nb) { if (set.contains(big.getLong(i))) inter += 1; i += 1 }
     inter
+  }
+
+  /** Primitive open-addressing `shingle hash -> document frequency`
+    * table, filled once on the driver from the corpus frequency
+    * aggregate ([[DfTable.ofSize]], then one [[put]] per shingle) and
+    * broadcast to the per-doc ranking kernel ([[rankByDf]]) and the
+    * `DfOf` expression. Two parallel arrays at load factor <= 0.5; a
+    * zero frequency marks an empty slot (a stored shingle occurs in at
+    * least one doc).
+    */
+  final class DfTable private (keys: Array[Long], dfs: Array[Int]) extends Serializable {
+    private val mask = keys.length - 1
+    private var largest = 0
+
+    private def slot(h: Long): Int = {
+      var x = h * 0x9e3779b97f4a7c15L
+      x ^= (x >>> 32)
+      x.toInt & mask
+    }
+
+    /** Stores distinct hash `h` with frequency `df` (1..Int.MaxValue). */
+    def put(h: Long, df: Long): Unit = {
+      require(df >= 1 && df <= Int.MaxValue, s"frequency $df out of range")
+      var i = slot(h)
+      while (dfs(i) != 0) i = (i + 1) & mask
+      keys(i) = h
+      dfs(i) = df.toInt
+      if (df > largest) largest = df.toInt
+    }
+
+    /** The largest stored frequency, 0 for an empty table. */
+    def maxDf: Long = largest
+
+    /** Document frequency of `h`; every shingle of the corpus the table
+      * was built from is present, so a miss means a foreign input.
+      */
+    def df(h: Long): Int = {
+      var i = slot(h)
+      while (dfs(i) != 0) {
+        if (keys(i) == h) return dfs(i)
+        i = (i + 1) & mask
+      }
+      throw new IllegalStateException(s"shingle $h is not in the frequency table")
+    }
+  }
+
+  object DfTable {
+    /** An empty table with room for `n` entries. */
+    def ofSize(n: Int): DfTable = {
+      val cap = LongProbe.capacity(16, n)
+      new DfTable(new Array[Long](cap), new Array[Int](cap))
+    }
+
+    /** Bytes of the slot arrays of a table sized for `n` entries (12 per
+      * slot), or Long.MaxValue past the largest table.
+      */
+    def bytes(n: Long): Long =
+      if (2L * n > LongProbe.MaxCapacity) Long.MaxValue
+      else 12L * LongProbe.capacity(16, n.toInt)
+  }
+
+  /** A doc's distinct shingle hashes in rarest-first order: ascending
+    * document frequency, ties by ascending (signed) hash — the order
+    * the prefix filters index. Two primitive sorts: the hashes, then
+    * `df << 32 | position` keys (df and position both fit 31 bits).
+    */
+  def rankByDf(shingles: ArrayData, table: DfTable): ArrayData = {
+    val n = shingles.numElements()
+    val hs = new Array[Long](n)
+    var i = 0
+    while (i < n) { hs(i) = shingles.getLong(i); i += 1 }
+    java.util.Arrays.sort(hs)
+    val keys = new Array[Long](n)
+    i = 0
+    while (i < n) { keys(i) = (table.df(hs(i)).toLong << 32) | i; i += 1 }
+    java.util.Arrays.sort(keys)
+    i = 0
+    while (i < n) { keys(i) = hs(keys(i).toInt); i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(keys)
   }
 }

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import graft.functions.{Expressions, SimHash, TextFunctions}
+import org.apache.spark.sql.GraftGlue
+import graft.functions.{Expressions, Kernels, SimHash, TextFunctions}
 
 /** Configuration of the fingerprint cascade. Mirrors the reference's
   * representation-affecting config subset (`winnow/config/config.py:31,37`;
@@ -277,40 +278,112 @@ object Dedup {
     * LAST inside every doc and fall outside the prefix unless a doc is
     * nearly all boilerplate — the join key distribution is bounded by the
     * rare end of the vocabulary instead of the hot end. Costs one extra
-    * aggregation (doc frequency) + a per-doc window; both shuffle on keys
-    * that stay bounded at corpus scale (shingle, doc id).
+    * aggregation (doc frequency) plus a per-doc ranking: a narrow
+    * projection against the broadcast frequency table when it fits,
+    * else a join-back and a per-doc window (see [[withRankedIndex]]).
     */
   def exactJaccardPairsPrefix(docs: DataFrame, cfg: DedupConfig): DataFrame =
-    withCached(shingleSets(kernelParallel(docs), cfg)) { shingled =>
-      // the prefix table feeds BOTH legs of the candidate self-join:
-      // cached so a broadcast-planned join cannot re-run the freq-join
-      // + window lineage per leg (guide §2.4). A lazy cache is enough
-      // here (unlike containmentPairs' eagerly filled ranked index): a
-      // broadcast-planned self-join builds its broadcast side BEFORE the
-      // probe stage runs, so the first leg populates the cache and the
-      // second reads it — no concurrent cold-cache scans, and an eager
-      // count would be one extra job
-      withCached(prefixTable(rankedIndex(shingled), cfg.threshold)) { prefix =>
-        verifiedPairs(pairCandidatesFromPrefix(prefix, cfg.threshold), shingled, cfg)
-          .localCheckpoint(true)
+    withRankedIndex(shingleSets(kernelParallel(docs), cfg)) { ranked =>
+      // the prefix table feeds BOTH legs of the candidate self-join; the
+      // ranked rows are cheap to read once per leg (see RankedIndex)
+      verifiedPairs(pairCandidatesFromPrefix(prefixTable(ranked.rows, cfg.threshold),
+        cfg.threshold), ranked.shingled, cfg).localCheckpoint(true)
+    }
+
+  /** The ranked inverted index of [[withRankedIndex]] over its
+    * materialized shingle table.
+    *
+    * @param shingled the (id, shingles) table, materialized for the call
+    * @param rows     one row per (doc, shingle): `id`, the doc's
+    *                 cardinality `c`, the shingle hash `h`, its corpus
+    *                 document frequency `df`, and `rn` = its 1-based
+    *                 position in the doc's rarest-first (df asc, hash
+    *                 asc) order. Cheap to read once per join leg on
+    *                 either path: a narrow projection over `shingled`,
+    *                 or a checkpoint of the join-back and window
+    * @param maxDf    the largest `df`, 0 for an empty corpus
+    */
+  private[graft] final case class RankedIndex(shingled: DataFrame, rows: DataFrame, maxDf: Long)
+
+  /** Runs `body` on the ranked inverted index behind every prefix-filter
+    * operator, over `shingleSets` (id, shingles) materialized once for
+    * the call; whatever it holds is released when `body` returns or
+    * throws. ONE frequency aggregation over the exploded shingle sets;
+    * consumers slice the rows with plain filters (prefix bound, hot/cold
+    * df split) instead of re-joining.
+    *
+    * When a frequency table sized for every shingle occurrence fits the
+    * session's broadcast budget (`spark.sql.autoBroadcastJoinThreshold`
+    * against the table's slot bytes, [[Kernels.DfTable.bytes]]) the
+    * table is collected once into a primitive [[Kernels.DfTable]] and
+    * broadcast, and each doc's shingle set is ranked locally in one
+    * narrow pass (the global token order broadcast of Vernica et al.,
+    * SIGMOD 2010): no join-back, no second shuffle. Otherwise — a
+    * threshold of -1, more occurrences than the budget holds — the rows
+    * come from the join-back and a per-doc window ([[rankedIndex]]),
+    * checkpointed once with max(df) observed in the same job: the
+    * consumers' join legs run as concurrent stages, and concurrent
+    * scans of a cold cache would each recompute the lineage (the block
+    * store is compute-then-publish, not compute-once). Both paths give
+    * the same rows. The occurrence count, an upper bound on the table
+    * size, is observed in the job that materializes the shingle table,
+    * so the size decision makes no pass of its own.
+    */
+  private[graft] def withRankedIndex[T](shingleSets: DataFrame)(body: RankedIndex => T): T =
+    withCheckpointed(shingleSets,
+        coalesce(sum(size(col("shingles"))), lit(0L)).as("occurrences")) { (shingled, agg) =>
+      val sh = explodedShingles(shingled)
+      val freq = sh.groupBy("h").agg(count(lit(1)).as("df"))
+      val threshold = GraftGlue.autoBroadcastJoinThreshold(shingled.sparkSession)
+      if (threshold >= 0 &&
+          Kernels.DfTable.bytes(agg("occurrences").asInstanceOf[Long]) <= threshold) {
+        val local = GraftGlue.collectRows(freq) { (n, rows) =>
+          val t = Kernels.DfTable.ofSize(n.toInt)
+          rows.foreach(r => t.put(r.getLong(0), r.getLong(1)))
+          t
+        }
+        val sc = shingled.sparkSession.sparkContext
+        val table = sc.broadcast(local)
+        // adaptive execution does not cancel a query stage its finished
+        // query no longer needs; such a leftover job must not outlive the
+        // table it reads, so every job of the scope carries a tag
+        val tag = s"graft-ranked-index-${table.id}"
+        sc.addJobTag(tag)
+        try {
+          val ranked = shingled.select(col("id"), size(col("shingles")).as("c"),
+              posexplode(Expressions.rankByDf(col("shingles"), table)).as(Seq("pos", "h")))
+            .select(col("id"), col("c"), col("h"),
+              Expressions.dfOf(col("h"), table).as("df"), (col("pos") + 1).as("rn"))
+          body(RankedIndex(shingled, ranked, local.maxDf))
+        } finally {
+          sc.removeJobTag(tag)
+          sc.cancelJobsWithTag(tag)
+          GraftGlue.destroyNow(table)
+        }
+      } else withCheckpointed(joinBack(sh, freq),
+          coalesce(max(col("df")), lit(0L)).as("max_df")) { (rows, m) =>
+        body(RankedIndex(shingled, rows, m("max_df").asInstanceOf[Long]))
       }
     }
 
-  /** Ranked inverted index behind every prefix-filter operator: one row
-    * per (doc, shingle) with the doc's cardinality `c`, the shingle's
-    * corpus document frequency `df`, and `rn` = the shingle's 1-based
-    * position in the doc's rarest-first (df asc, hash asc) order. ONE
-    * freq aggregation + ONE window; consumers slice it with plain
-    * filters (prefix bound, hot/cold df split) instead of re-joining.
+  private def explodedShingles(shingled: DataFrame): DataFrame =
+    shingled.select(col("id"), size(col("shingles")).as("c"),
+      explode(col("shingles")).as("h"))
+
+  private def joinBack(sh: DataFrame, freq: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    sh.join(freq, "h")
+      .select(col("id"), col("c"), col("h"), col("df"), row_number().over(
+        Window.partitionBy("id").orderBy(col("df"), col("h"))).as("rn"))
+  }
+
+  /** The rows of [[withRankedIndex]] as one lazy plan: frequency
+    * aggregation, join-back and per-doc window, holding nothing. For
+    * plan dumps and the pruning-evidence candidates.
     */
   private[graft] def rankedIndex(shingled: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sh = shingled.select(col("id"), size(col("shingles")).as("c"),
-      explode(col("shingles")).as("h"))
-    val freq = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    sh.join(freq, "h")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("id").orderBy(col("df"), col("h"))))
+    val sh = explodedShingles(shingled)
+    joinBack(sh, sh.groupBy("h").agg(count(lit(1)).as("df")))
   }
 
   /** Prefix slice of [[rankedIndex]] for symmetric Jaccard at `tau`.
@@ -381,22 +454,12 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, cfg: DedupConfig, tau: Double,
                        hotCap: Int = 1024, saltBuckets: Int = 16): DataFrame =
-    withCached(shingleSets(kernelParallel(docs), cfg)) { shingled =>
-      // ONE ranked inverted index (id, c, h, df, rn) feeds every slice
-      // of the plan; cached because up to four join legs consume it
-      withCached(rankedIndex(shingled)) { ranked =>
-        // populate the cache EAGERLY: the join legs run as concurrent
-        // stages of one job, and concurrent scans of a cold cache each
-        // recompute the freq-join + window lineage (block store is
-        // compute-then-publish, not compute-once) — measured 2x slower
-        // than a single eager pass at sf0.1. The same pass returns
-        // max(df), deciding up front whether a hot branch is needed at
-        // all (the ExactSubstring.hotHays pattern).
-        val maxDf = ranked.agg(max(col("df"))).head
-        val hot = !maxDf.isNullAt(0) && maxDf.getLong(0) > hotCap
-        containmentPlan(shingled, ranked, tau, hotCap, saltBuckets, hot)
-          .localCheckpoint(true)
-      }
+    // ONE ranked inverted index (id, c, h, df, rn) feeds up to four join
+    // legs. Its max(df) decides up front whether a hot branch is needed
+    // at all (the ExactSubstring.hotHays pattern)
+    withRankedIndex(shingleSets(kernelParallel(docs), cfg)) { ranked =>
+      containmentPlan(ranked.shingled, ranked.rows, tau, hotCap, saltBuckets,
+        hot = ranked.maxDf > hotCap).localCheckpoint(true)
     }
 
   /** The lazy plan behind [[containmentPairs]] over its shingle table
@@ -410,7 +473,7 @@ object Dedup {
                                      hot: Boolean): DataFrame = {
     // df and rn ride each row of the ranked index, so hot/cold
     // membership and the prefix bound are plain filters — no extra
-    // joins, no broadcasts (guide §2.4).
+    // joins (guide §2.4).
     // +2 not +1: the verify predicate is the DOUBLE quotient i/|A| >=
     // tau, which can round up across tau while ceil(c*tau) = i+1 in
     // exact arithmetic — one element of slack keeps the window

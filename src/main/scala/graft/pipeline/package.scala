@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 package object pipeline {
@@ -31,4 +32,36 @@ package object pipeline {
     val out = action(df.observe(obs, aggs.head, aggs.tail: _*))
     (out, obs.get)
   }
+
+  /** `df` materialized once as a local checkpoint, with the named
+    * aggregates `aggs` computed inside the job that materializes it (see
+    * [[observed]]). The checkpoint is declared lazily and filled by one
+    * output-less write, so when that job fails its blocks are released
+    * before the error propagates (an eager `localCheckpoint` whose job
+    * fails leaves its RDD persisted). On success the caller owns the
+    * blocks, like those of any local checkpoint.
+    */
+  def checkpointed(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
+    val out = df.localCheckpoint(eager = false)
+    try {
+      val (_, values) = observed(out, aggs: _*)(
+        _.write.format("noop").mode(SaveMode.Overwrite).save())
+      (out, values)
+    } catch { case e: Throwable => release(out); throw e }
+  }
+
+  /** Runs `body` on [[checkpointed]] `df` and its aggregates, and
+    * releases the checkpoint's blocks when `body` returns or throws.
+    */
+  def withCheckpointed[T](df: DataFrame, aggs: Column*)(
+      body: (DataFrame, Map[String, Any]) => T): T = {
+    val (out, values) = checkpointed(df, aggs: _*)
+    try body(out, values) finally release(out)
+  }
+
+  private def release(checkpoint: DataFrame): Unit =
+    checkpoint.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ =>
+    }
 }

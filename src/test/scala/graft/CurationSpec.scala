@@ -480,6 +480,23 @@ class CurationSpec extends SparkSpecBase {
       curated.orderBy("id").collect().toSeq)
   }
 
+  test("CurationJob: funnel counts are observed inside the jobs that already run") {
+    import graft.pipeline.DedupConfig
+    val work = java.nio.file.Files.createTempDirectory("graft-curation-jobs").toString
+    val docsPath = s"$sfDir/documents.parquet"
+    val (metrics, jobs) = jobNamesDuring(CurationJob.run(spark, docsPath, work, None, 8192))
+    def field(k: String) = s""""$k":(\\d+)""".r.findFirstMatchIn(metrics).get.group(1).toLong
+    val curated = spark.read.parquet(s"$work/curated/tag=${DedupConfig().configTag}")
+    assert(field("docs") == spark.read.parquet(docsPath).count())
+    assert(field("after_decontam") == field("after_quality"))
+    assert(field("after_quality") == curated.count())
+    assert(field("train") == curated.where(col("split") === "train").count())
+    assert(field("heldout") == curated.where(col("split") === "heldout").count())
+    // a checkpoint followed by a count per stage and two read-back
+    // counts of the curated table ran 47 jobs here
+    assert(jobs.size <= 32, s"${jobs.size} jobs: ${jobs.mkString(" | ")}")
+  }
+
   test("CurationJob with spanTokens: curated table carries span-rewritten text") {
     import graft.pipeline.DedupConfig
     val work = java.nio.file.Files.createTempDirectory("graft-curation-span").toString
@@ -491,6 +508,9 @@ class CurationSpec extends SparkSpecBase {
     val curated = spark.read.parquet(
       s"$work/curated/tag=${DedupConfig().configTag}-span20")
     assert(curated.columns.contains("text") && curated.columns.contains("n_removed"))
+    // the reported removal count is the curated table's
+    assert(metrics.contains(s""""span_removed":${curated.agg(sum("n_removed")).head.get(0)},"""),
+      metrics)
     // rewritten text is consistent with the removal count: docs with
     // n_removed = 0 keep their original text verbatim
     val orig = spark.read.parquet(docsPath)

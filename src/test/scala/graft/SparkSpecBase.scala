@@ -18,22 +18,29 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   def fuzzSeed(default: Long): Long =
     sys.env.get("GRAFT_FUZZ_SEED").map(_.toLong).getOrElse(default)
 
-  /** `body`'s result and the number of Spark jobs it started. Jobs are
-    * told apart by a local property of this thread (which the jobs of
-    * its SQL queries inherit); listener events arrive asynchronously but
-    * in order, so the count is read once a marker job submitted after
-    * `body` has been seen.
-    */
+  /** `body`'s result and the number of Spark jobs it started. */
   def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, names) = jobNamesDuring(body)
+    (out, names.size)
+  }
+
+  /** `body`'s result and the call site of each Spark job it started (the
+    * name of the job's last stage, e.g. `count at Dedup.scala:12`), in
+    * start order. Jobs are told apart by a local property of this thread
+    * (which the jobs of its SQL queries inherit); listener events arrive
+    * asynchronously but in order, so the list is read once a marker job
+    * submitted after `body` has been seen.
+    */
+  def jobNamesDuring[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val key = "graft.test.jobsDuring"
     val token = java.util.UUID.randomUUID().toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val markerSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty(key)).foreach {
-          case `token` => jobs.incrementAndGet()
+          case `token` => names.add(e.stageInfos.maxBy(_.stageId).name)
           case t if t == s"$token-end" => markerSeen.countDown()
           case _ =>
         }
@@ -46,7 +53,8 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
       assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "the marker job never reached the listener")
-      (out, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (out, names.asScala.toList)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,10 +1,27 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.storage.BroadcastBlockId
+
 /** Test access to the `private[sql]` count of a session's cache entries
-  * (one per `Dataset.persist` / cached table); lives in this package
-  * purely for access.
+  * (one per `Dataset.persist` / cached table) and to the broadcast values
+  * the driver's block manager holds; lives in this package purely for
+  * access.
   */
 object CacheProbe {
   def cachedEntries(s: SparkSession): Int =
     s.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
+
+  /** Ids of the live broadcasts whose value, held deserialized on the
+    * driver, is a `cls`.
+    */
+  def broadcastsHolding(cls: Class[_]): Set[Long] = {
+    val bm = SparkEnv.get.blockManager
+    bm.getMatchingBlockIds(_.isBroadcast).collect {
+      case b: BroadcastBlockId if b.field.isEmpty &&
+          scala.util.Try(bm.memoryStore.getValues(b)
+            .exists(it => it.hasNext && cls.isInstance(it.next()))).getOrElse(false) =>
+        b.broadcastId
+    }.toSet
+  }
 }
