@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.pipeline.{checkpointed, observed, Dedup, DedupConfig, ResumableDedupJob}
 import graft.queries.Curation
@@ -20,13 +20,13 @@ import graft.queries.Curation
   * Every stage count is reported in one funnel JSON line (the
   * reference's count-back style, `generate_matches.py:57-62`), each
   * observed inside the job that materializes its stage (the stage's
-  * `localCheckpoint`, the curated write) rather than by a second job;
+  * checkpoint, the curated write) rather than by a second job;
   * the curated table is tag-stamped so a config change regenerates
   * rather than mixes. The near-dup stage reuses the bucket-checkpointed
   * resumable dedup (`ResumableDedupJob`), so a restart skips completed
   * signature buckets and reuses the clusters table while the signature
   * files are unchanged. Its keep stage always recomputes: the docs it
-  * reads are `localCheckpoint`ed, not file-backed, so they have no file
+  * reads are checkpointed, not file-backed, so they have no file
   * identity to match.
   */
 object CurationJob {
@@ -114,15 +114,11 @@ object CurationJob {
     }
     val t0 = System.currentTimeMillis()
     val raw = spark.read.parquet(docsPath)
-    def counted(df: DataFrame): (DataFrame, Long) = {
-      val (out, agg) = checkpointed(df, count(lit(1)).as("n"))
-      (out, agg("n").asInstanceOf[Long])
-    }
-    val (docs, n0) = counted(
+    val (docs, c0) = checkpointed(
       if (raw.columns.contains("doc_id")) Dedup.fromDocuments(raw) else Dedup.fromPages(raw))
 
     // 1. exact dedup: one shuffle on the content hash, keep min id
-    val (afterExact, n1) = counted(docs.join(
+    val (afterExact, c1) = checkpointed(docs.join(
       Dedup.exactDuplicates(docs).select(col("keeper_id").as("id")),
       Seq("id"), "left_semi"))
 
@@ -130,18 +126,18 @@ object CurationJob {
     //    quality-ranked canonical per cluster
     val clusters = ResumableDedupJob.run(afterExact, cfg, workDir)
     val keep = ResumableDedupJob.keepStage(afterExact, clusters, cfg, workDir)
-    val (afterNear, n2) = counted(afterExact
+    val (afterNear, c2) = checkpointed(afterExact
       .join(keep.where(col("kept"))
         .select(col("id"), col("cluster_id"), col("quality")), Seq("id")))
 
     // 3. quality + repetition + compressibility filters (narrow kernel passes)
     val rep = Curation.repetitionStats(afterNear, idCol = "id")
-    val (afterQuality, n3) = counted(afterNear
+    val (afterQuality, c3) = checkpointed(afterNear
       .join(rep, Seq("id"), "left_outer") // <2-token docs carry null stats
       .where(textFilters))
 
     // 4. optional benchmark decontamination (broadcast gram semi-join)
-    val (afterDecontam, n4) = benchPath match {
+    val (afterDecontam, c4) = benchPath match {
       case Some(p) =>
         val bench = spark.read.parquet(p)
         val benchDocs =
@@ -149,8 +145,8 @@ object CurationJob {
           else bench.toDF("text") // one text column
         val hit = Curation.contaminatedDocs(
           afterQuality, benchDocs, decontamK, idCol = "id")
-        counted(afterQuality.join(hit.select("id"), Seq("id"), "left_anti"))
-      case None => (afterQuality, n3)
+        checkpointed(afterQuality.join(hit.select("id"), Seq("id"), "left_anti"))
+      case None => (afterQuality, c3)
     }
 
     // 4b. optional C4-style duplicate-span removal over the survivors:
@@ -193,9 +189,10 @@ object CurationJob {
     val wall = (System.currentTimeMillis() - t0) / 1000.0
     val spanField =
       if (spanTokens > 0) s""""span_removed":$nSpansRemoved,""" else ""
-    s"""{"job":"graft-curation","config_tag":"${cfg.configTag}","docs":$n0,""" +
-      s""""after_exact":$n1,"after_neardup":$n2,"after_quality":$n3,""" +
-      s""""after_decontam":$n4,$spanField"train":$nTrain,"heldout":$nHeldout,""" +
-      s""""wall_sec":$wall,"docs_per_sec":${n0 / wall}}"""
+    s"""{"job":"graft-curation","config_tag":"${cfg.configTag}","docs":${c0("rows")},""" +
+      s""""after_exact":${c1("rows")},"after_neardup":${c2("rows")},""" +
+      s""""after_quality":${c3("rows")},"after_decontam":${c4("rows")},""" +
+      s"""$spanField"train":$nTrain,"heldout":$nHeldout,""" +
+      s""""wall_sec":$wall,"docs_per_sec":${c0("rows").asInstanceOf[Long] / wall}}"""
   }
 }

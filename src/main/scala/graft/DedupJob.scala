@@ -49,8 +49,8 @@ object DedupJob {
 
     val clusters =
       ResumableDedupJob.run(docs, cfg, workDir, buckets, saltBuckets = saltBuckets)
-    val nClusters = clusters.select("cluster_id").distinct().count()
-    val nMembers = clusters.count()
+    val counts = clusters.agg(count(lit(1)), count_distinct(col("cluster_id"))).head()
+    val (nMembers, nClusters) = (counts.getLong(0), counts.getLong(1))
     val nDocs = docs.count()
     // curated-corpus output: one quality-ranked keeper per cluster
     val keep = ResumableDedupJob.keepStage(docs, clusters, cfg, workDir)

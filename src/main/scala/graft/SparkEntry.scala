@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Embeddings
-import graft.pipeline.{Dedup, DedupConfig, ExactSubstring}
+import graft.pipeline.{checkpointed, Dedup, DedupConfig, ExactSubstring}
 import graft.queries.Serving
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -188,8 +188,8 @@ object SparkEntry {
   /** Memoized materialized pair table per (session, dir) — the reference
     * persists matches to its result store once and serves every query
     * from it (`db_result_storage.py`); recomputing the cascade per query
-    * would misrepresent the serving layer. localCheckpoint = the local
-    * stand-in for the matches table.
+    * would misrepresent the serving layer. The pairs' checkpoint is the
+    * local stand-in for the matches table.
     */
   // session-keyed (not identity-hash): a reassigned identity hash could
   // hand a NEW session a DataFrame bound to a dead SparkContext. Weak
@@ -355,7 +355,7 @@ object SparkEntry {
     "q_list_by_dup_count" -> ((s, dir) =>
       Serving.listByMatchCount(docs(s, dir), edges(s, dir), limit = 20,
         minSim = 0.8)),
-    // no localCheckpoint here: edges() is already backed by the memoized
+    // no checkpoint here: edges() is already backed by the memoized
     // checkpointed pair table, and nHopCluster checkpoints its own
     // both-direction view — the extra copy was one redundant job per rep
     "q_nhop_cluster" -> ((s, dir) => {
@@ -537,9 +537,8 @@ object SparkEntry {
       // sd feeds TWO consumers (the group-min aggregate and the final
       // join); materialized (600 tiny rows) so the SRP pair join + CC +
       // keep-list tree underneath executes once, not once per consumer
-      val sd = graft.queries.Curation.semanticDedup(
-        corpus, threshold = 0.999, quality = -col("id").cast("double"))
-        .localCheckpoint(true)
+      val (sd, _) = checkpointed(graft.queries.Curation.semanticDedup(
+        corpus, threshold = 0.999, quality = -col("id").cast("double")))
       val gmin = sd.groupBy("cluster_id")
         .agg(min(col("id").cast("long")).as("group_min_id"))
       sd.join(gmin, "cluster_id")
@@ -613,11 +612,10 @@ object SparkEntry {
       // decode -> feature -> pooling lineage cannot share an exchange
       // and re-executes per leg (measured ~2x at sf0.1); the table is
       // one narrow row per item
-      val emb = BinaryPipeline.itemEmbedding(
+      val (emb, _) = checkpointed(BinaryPipeline.itemEmbedding(
           BinaryPipeline.audioFrames(syntheticAudio(s, dir)))
         .select(col("id"),
-          expr("transform(embedding, x -> cast(x as float))").as("embedding"))
-        .localCheckpoint(true)
+          expr("transform(embedding, x -> cast(x as float))").as("embedding")))
       graft.functions.Embeddings.srpThresholdPairs(emb, audioDedupThreshold)
         .select(col("id_a").cast("long").as("doc_id_a"),
           col("id_b").cast("long").as("doc_id_b"), col("cosine"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.SynthCorpus
-import graft.pipeline.{Dedup, DedupConfig}
+import graft.pipeline.{checkpointed, withCheckpointed, Dedup, DedupConfig}
 import graft.queries.Metrics
 
 /** Config-sweep evaluation harness — the reference's benchmark protocol
@@ -77,26 +77,24 @@ object SweepJob {
       .union(pairs.select(col("id_b"), col("id_a"), col("jaccard")))
     val w = Window.partitionBy("query_id")
       .orderBy(col("jaccard").desc, col("neighbor_id").asc)
-    val ranked = both.withColumn("rank", row_number().over(w))
-      .select("query_id", "neighbor_id", "rank")
-      .localCheckpoint(true)
-    val truthBoth = truth.select(col("id_a").as("query_id"),
-        col("id_b").as("neighbor_id"))
-      .union(truth.select(col("id_b"), col("id_a")))
-      .localCheckpoint(true)
-    // trial t keeps queries with xxhash64(query_id, t) % 5 != 0 — a
-    // deterministic 4/5 resample, independent across trials
-    def sampled(df: DataFrame, t: Int): DataFrame =
-      df.where(pmod(xxhash64(col("query_id"), lit(t)), lit(5)) =!= 0)
-    val mapTrials = (0 until trials).map(t =>
-      Metrics.meanAveragePrecision(sampled(ranked, t), sampled(truthBoth, t)))
-    val map = mapTrials.sum / mapTrials.size
-    // 21-point interpolated PR curve over the full query set, on the
-    // SAME materialized ranked lists (reference protocol: every
-    // get_result call returns (mAP, pr_curve), `benchmarks/utils.py:103`)
-    val curve = Metrics.prCurve(ranked, truthBoth)
-    Cell(cfg.shingleK, cfg.threshold, p, r, f1, map, mapTrials, curve,
-      nPairs, wall)
+    withCheckpointed(both.withColumn("rank", row_number().over(w))
+        .select("query_id", "neighbor_id", "rank")) { (ranked, _) =>
+    withCheckpointed(truth.select(col("id_a").as("query_id"), col("id_b").as("neighbor_id"))
+        .union(truth.select(col("id_b"), col("id_a")))) { (truthBoth, _) =>
+      // trial t keeps queries with xxhash64(query_id, t) % 5 != 0 — a
+      // deterministic 4/5 resample, independent across trials
+      def sampled(df: DataFrame, t: Int): DataFrame =
+        df.where(pmod(xxhash64(col("query_id"), lit(t)), lit(5)) =!= 0)
+      val mapTrials = (0 until trials).map(t =>
+        Metrics.meanAveragePrecision(sampled(ranked, t), sampled(truthBoth, t)))
+      val map = mapTrials.sum / mapTrials.size
+      // 21-point interpolated PR curve over the full query set, on the
+      // SAME materialized ranked lists (reference protocol: every
+      // get_result call returns (mAP, pr_curve), `benchmarks/utils.py:103`)
+      val curve = Metrics.prCurve(ranked, truthBoth)
+      Cell(cfg.shingleK, cfg.threshold, p, r, f1, map, mapTrials, curve,
+        nPairs, wall)
+    }}
   }
 
   def main(args: Array[String]): Unit = {
@@ -111,10 +109,9 @@ object SweepJob {
 
     val (pages, labels) = SynthCorpus.generate(spark, seed = 99L,
       nBase = nBase, dupRate = 0.25)
-    val docs = Dedup.fromPages(pages).localCheckpoint(true)
-    val lab = labels.localCheckpoint(true)
-    val defaultCfg = DedupConfig()
-    val truth = truthPairs(pages, lab, defaultCfg.threshold).localCheckpoint(true)
+    val (docs, _) = checkpointed(Dedup.fromPages(pages))
+    val (lab, _) = checkpointed(labels)
+    val (truth, nTruth) = checkpointed(truthPairs(pages, lab, DedupConfig().threshold))
 
     val grid = for {
       k <- Seq(2, 3, 4)
@@ -132,7 +129,7 @@ object SweepJob {
     }.mkString("[\n  ", ",\n  ", "\n]")
     val best = cells.maxBy(_.f1)
     val out = s"""{"metric":"config_sweep","n_base":$nBase,""" +
-      s""""truth_pairs":${truth.count()},""" +
+      s""""truth_pairs":${nTruth("rows")},""" +
       s""""best":{"shingleK":${best.shingleK},"threshold":${best.threshold},"f1":${best.f1}},""" +
       s""""cells":$json}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("SCOREBOARD.json"), out)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
@@ -74,15 +74,4 @@ object MinHash {
   /** MinHash UDAF column over a LongType shingle-hash column. */
   def minhashAgg(numHashes: Int)(h: Column): Column =
     udaf(new MinHashAgg(numHashes)).apply(h)
-
-  /** Estimated Jaccard between two equal-length signatures: fraction of
-    * agreeing components (reference distance-threshold analog,
-    * `winnow/utils/utils.py:76-83`).
-    */
-  def estJaccard(s1: Column, s2: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val eq = zip_with(s1, s2, (x, y) => when(x === y, 1).otherwise(0))
-    aggregate(eq, org.apache.spark.sql.functions.lit(0), (acc, v) => acc + v)
-      .cast("double") / size(s1)
-  }
 }

@@ -1,60 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
 
-/** 64-bit SimHash fingerprint aggregator (Charikar random hyperplanes over
-  * the shingle multiset). Plays the role of the reference's compact
-  * 500-d signature embedding (`winnow/feature_extraction/similarity_model.py:
-  * 30-44`): a fixed-width per-item fingerprint whose bitwise distance
-  * approximates content similarity.
-  *
-  * For each input shingle hash, each of the 64 output bits votes +1/-1
-  * according to the corresponding bit of the hash; the final fingerprint
-  * takes the sign of each counter. Merge = element-wise counter sum
-  * (commutative/associative), so map-side partial aggregation applies.
+/** Helpers over 64-bit SimHash fingerprints (Charikar random
+  * hyperplanes over the shingle multiset, computed by
+  * [[Expressions.simhash64]]). The fingerprint plays the role of the
+  * reference's compact 500-d signature embedding
+  * (`winnow/feature_extraction/similarity_model.py:30-44`): a
+  * fixed-width per-item fingerprint whose bitwise distance approximates
+  * content similarity.
   */
 object SimHash {
-
-  final class SimHashAgg extends Aggregator[Long, Array[Int], Long] {
-    override def zero: Array[Int] = new Array[Int](64)
-
-    override def reduce(buf: Array[Int], h: Long): Array[Int] = {
-      var i = 0
-      while (i < 64) {
-        if (((h >>> i) & 1L) == 1L) buf(i) += 1 else buf(i) -= 1
-        i += 1
-      }
-      buf
-    }
-
-    override def merge(x: Array[Int], y: Array[Int]): Array[Int] = {
-      var i = 0
-      while (i < 64) { x(i) += y(i); i += 1 }
-      x
-    }
-
-    override def finish(buf: Array[Int]): Long = {
-      var out = 0L
-      var i = 0
-      while (i < 64) {
-        if (buf(i) > 0) out |= (1L << i)
-        i += 1
-      }
-      out
-    }
-
-    override def bufferEncoder: Encoder[Array[Int]] =
-      ExpressionEncoder[Array[Int]]()
-    override def outputEncoder: Encoder[Long] =
-      ExpressionEncoder[Long]()
-  }
-
-  /** SimHash UDAF column over a LongType shingle-hash column. */
-  def simhashAgg(h: Column): Column = udaf(new SimHashAgg).apply(h)
-
   /** Hamming distance between two 64-bit fingerprints — the verification
     * predicate (reference match predicate analog `winnow/utils/utils.py:76-83`).
     */

@@ -706,7 +706,7 @@ object BinaryPipeline {
     // broadcast small side); materialized once so a decode-backed
     // lineage doesn't re-run per consumer — it is BOUNDED by the same
     // contract that lets it broadcast at all
-    val ne = newEmb.localCheckpoint(true)
+    val (ne, _) = graft.pipeline.checkpointed(newEmb)
     graft.functions.Embeddings.bruteForceThresholdPairs(ne, threshold)
       .unionByName(graft.functions.Embeddings
         .broadcastThresholdJoin(ne, storeEmb, threshold))

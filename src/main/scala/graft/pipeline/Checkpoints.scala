@@ -114,7 +114,7 @@ final class CheckpointStore(spark: SparkSession, path: String) {
   * recomputed signature bucket (new file names), changed docs files, a
   * rewritten or damaged output, a different config tag or a missing
   * marker recomputes the stage. An input whose plan has
-  * any leaf other than a file scan (a `localCheckpoint`ed frame, a
+  * any leaf other than a file scan (a checkpointed frame, a
   * local relation) has no identity, so its stage always recomputes.
   * The reference skips a representation whose (path, sha256,
   * config-tag) key already exists (`extract_features.py:61`); file

@@ -13,9 +13,11 @@ import org.apache.spark.sql.functions._
   * Algorithm: alternating large-star / small-star (Kiveris et al.,
   * "Connected Components in MapReduce and Beyond", SoCC'14) expressed as
   * DataFrame joins/aggregations. Converges in O(log^2 n) rounds; each
-  * round is two shuffles. Lineage is cut with localCheckpoint() every
+  * round is two shuffles. Lineage is cut with [[checkpointed]] every
   * round so plans stay bounded on deep graphs; the round's convergence
-  * fingerprint is observed inside that checkpoint job.
+  * fingerprint is observed inside that checkpoint job. Each round
+  * releases the checkpoint it supersedes, and a failing run releases
+  * the live one, so only the result's own checkpoint stays persisted.
   */
 object ConnectedComponents {
 
@@ -41,7 +43,7 @@ object ConnectedComponents {
 
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIterations) {
+    try while (!converged && iter < maxIterations) {
       // large-star: for each node u, connect every strictly-larger
       // neighbor w to m = min(Gamma(u) ∪ {u})
       val largeNbr = e.select(col("u"), col("v"))
@@ -62,13 +64,14 @@ object ConnectedComponents {
         .union(ssMin.select(col("u"), col("m").as("v")))
         .where(col("u") =!= col("v"))
         .distinct()
-      val (next, fpNew) = checkpointed(ss)
-      e.unpersist()
+      val (next, values) = checkpointed(ss, fingerprint: _*)
+      release(e)
       e = next
+      val fpNew = graft.store.TxLog.fingerprintOf(values)
       converged = fpNew == fp
       fp = fpNew
       iter += 1
-    }
+    } finally if (!converged) release(e)
     require(converged, s"connected components did not converge in $maxIterations rounds")
 
     // e is now a star forest: (member, root). Add roots themselves.
@@ -81,16 +84,18 @@ object ConnectedComponents {
     * duplicates dropped, checkpointed, with their fingerprint (the edge
     * count comes first).
     */
-  private[graft] def canonicalEdges(edges: DataFrame): (DataFrame, (Long, Long)) =
-    checkpointed(edges
+  private[graft] def canonicalEdges(edges: DataFrame): (DataFrame, (Long, Long)) = {
+    val (e, values) = checkpointed(edges
       .select(
         greatest(col("src"), col("dst")).as("u"),
         least(col("src"), col("dst")).as("v"))
       .where(col("u") =!= col("v"))
-      .distinct())
+      .distinct(), fingerprint: _*)
+    (e, graft.store.TxLog.fingerprintOf(values))
+  }
 
-  /** `e` localCheckpointed, with its convergence fingerprint (row count,
-    * order-free content hash) observed inside the checkpoint job, so a
+  /** The convergence fingerprint of an edge checkpoint (row count,
+    * order-free content hash), observed inside the checkpoint job, so a
     * round costs no extra job. Labels only decrease monotonically, so an
     * unchanged fingerprint means an unchanged edge set (collision prob
     * ~2^-64). The fold is the shared duplicate-sensitive one of
@@ -99,11 +104,7 @@ object ConnectedComponents {
     * output makes even-multiset XOR cancellation impossible here, but
     * the sum fold holds without that precondition being load-bearing.
     */
-  private def checkpointed(e: DataFrame): (DataFrame, (Long, Long)) = {
-    val (cp, values) = observed(e,
-      graft.store.TxLog.fingerprintAggs(Seq(col("u"), col("v"))): _*)(_.localCheckpoint(true))
-    (cp, graft.store.TxLog.fingerprintOf(values))
-  }
+  private def fingerprint = graft.store.TxLog.fingerprintAggs(Seq(col("u"), col("v")))
 
   /** Single-task path-compressed union-find over a small edge set,
     * executed as ONE Spark task via a 1-partition mapPartitions (the

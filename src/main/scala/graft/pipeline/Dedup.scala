@@ -163,7 +163,7 @@ object Dedup {
     // semi-join probe, cold anti-join probe) — materialized once, or
     // the upstream lineage (parquet scan + minhash slicing + band
     // hashing) executes three times per run
-    val b = bands.localCheckpoint(true)
+    val (b, _) = checkpointed(bands)
     val hotKeys = b.groupBy("band_key").count()
       .where(col("count") > hotCap).select("band_key")
     val hot = b.join(broadcast(hotKeys), Seq("band_key"), "left_semi")
@@ -219,7 +219,7 @@ object Dedup {
   }
 
   /** Eagerly-materialized pairs: computes the verified pair set once
-    * (localCheckpoint) with the intermediate caches scoped to the call,
+    * ([[checkpointed]]) with the intermediate caches scoped to the call,
     * so repeated invocations (bench warmup+timed run, per-dir serving
     * caches) don't accumulate cached blocks for the life of the session.
     */
@@ -231,7 +231,7 @@ object Dedup {
       // would execute once per leg (guide §2.4 — the skew-aware variant
       // materializes for the same reason). Narrow rows (~40 bands/doc).
       withCached(bandTable(validSignatures(signatures(shingled, cfg)), cfg)) { bands =>
-        verifiedPairs(candidatePairs(bands), shingled, cfg).localCheckpoint(true)
+        checkpointed(verifiedPairs(candidatePairs(bands), shingled, cfg))._1
       }
     }
 
@@ -286,8 +286,8 @@ object Dedup {
     withRankedIndex(shingleSets(kernelParallel(docs), cfg)) { ranked =>
       // the prefix table feeds BOTH legs of the candidate self-join; the
       // ranked rows are cheap to read once per leg (see RankedIndex)
-      verifiedPairs(pairCandidatesFromPrefix(prefixTable(ranked.rows, cfg.threshold),
-        cfg.threshold), ranked.shingled, cfg).localCheckpoint(true)
+      checkpointed(verifiedPairs(pairCandidatesFromPrefix(prefixTable(ranked.rows,
+        cfg.threshold), cfg.threshold), ranked.shingled, cfg))._1
     }
 
   /** The ranked inverted index of [[withRankedIndex]] over its
@@ -458,8 +458,8 @@ object Dedup {
     // legs. Its max(df) decides up front whether a hot branch is needed
     // at all (the ExactSubstring.hotHays pattern)
     withRankedIndex(shingleSets(kernelParallel(docs), cfg)) { ranked =>
-      containmentPlan(ranked.shingled, ranked.rows, tau, hotCap, saltBuckets,
-        hot = ranked.maxDf > hotCap).localCheckpoint(true)
+      checkpointed(containmentPlan(ranked.shingled, ranked.rows, tau, hotCap, saltBuckets,
+        hot = ranked.maxDf > hotCap))._1
     }
 
   /** The lazy plan behind [[containmentPairs]] over its shingle table
@@ -569,10 +569,9 @@ object Dedup {
     // cluster join execute once per consumer — for an expensive quality
     // (text scoring, media decode via mediaKeepList) that doubles the
     // dominant cost. Materialized narrow (id, quality, cluster_id) rows.
-    val scored = docs.select(col("id"), quality.as("quality"))
+    val (scored, _) = checkpointed(docs.select(col("id"), quality.as("quality"))
       .join(clusters.select(col("id"), col("cluster_id")), Seq("id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("id")))
-      .localCheckpoint(true)
+      .withColumn("cluster_id", coalesce(col("cluster_id"), col("id"))))
     // min over (-quality, id) == (max quality, ties by min id): the
     // exact ordering the old window used, as one partial-aggregatable
     // struct-min; null quality -> +Inf so it sorts LAST like the

@@ -178,13 +178,12 @@ object ExactSubstring {
         col("id_b").cast("string").as("id_b"))
       .join(lens.select(col("id").as("id_a"), col("len").as("len_a")), "id_a")
       .join(lens.select(col("id").as("id_b"), col("len").as("len_b")), "id_b")
-    val oriented = withLen.select(
+    val (oriented, _) = checkpointed(withLen.select(
       when(col("len_a") >= col("len_b"), col("id_a")).otherwise(col("id_b"))
         .as("hay_id"),
       when(col("len_a") >= col("len_b"), col("id_b")).otherwise(col("id_a"))
         .as("needle_id"),
-      col("id_a"), col("id_b"))
-      .localCheckpoint(true)
+      col("id_a"), col("id_b")))
     // 2. needle text attaches per pair (each needle ships once per pair,
     //    bounded); the hay text never rides the pair rows
     val needleTexts = docs.select(col("id").cast("string").as("needle_id"),
@@ -193,12 +192,11 @@ object ExactSubstring {
       orientedSide.join(needleTexts, "needle_id")
         .select(col("hay_id"), col("id_a"), col("id_b"), col("needle_text"))
     // 3. measured hot split: ids-only count per hay, hot set broadcast.
-    //    Checkpointed: it feeds the isEmpty probe plus three broadcast
-    //    consumers (anti/semi/semi) — lazy, the aggregation would re-run
-    //    once per consumer.
-    val hotHays = oriented.groupBy("hay_id").agg(count(lit(1)).as("n"))
-      .where(col("n") > hotCap).select("hay_id")
-      .localCheckpoint(true)
+    //    Checkpointed with its row count observed: it feeds three
+    //    broadcast consumers (anti/semi/semi) — lazy, the aggregation
+    //    would re-run once per consumer.
+    val (hotHays, hot) = checkpointed(oriented.groupBy("hay_id")
+      .agg(count(lit(1)).as("n")).where(col("n") > hotCap).select("hay_id"))
     val hayTexts = docs.select(col("id").cast("string").as("hay_id"),
       col("text").as("hay_text"))
     // 4a. cold hays (bounded groups): collect_list + one join per group
@@ -216,10 +214,11 @@ object ExactSubstring {
           (ia, ib, containedIn(hay, sa, Option(needle0).getOrElse("")))
         }
       }.toDF("id_a", "id_b", "contained")
-    if (hotHays.isEmpty) {
+    if (hot("rows") == 0L) {
       // no hot hay anywhere (the normal case): single-consumer cold
       // plan, no split joins, no second branch — round-3 shape + one
       // ids-only aggregation
+      release(hotHays)
       return coldPath(pairRowsOf(oriented))
     }
     // 4b. hot hays exist: split on the broadcast hot set; hot needles

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 
 package object pipeline {
@@ -12,14 +13,14 @@ package object pipeline {
     * action inside `body` fills it; a body that needs it populated up
     * front runs its own eager pass. Whatever `body` returns must not
     * read the cache lazily afterwards: materialize it inside
-    * (localCheckpoint, collect, write).
+    * ([[checkpointed]], collect, write).
     */
   def withCached[T](df: DataFrame)(body: DataFrame => T): T = {
     val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
     try body(cached) finally { cached.unpersist(); () }
   }
 
-  /** Runs `action` (one action: a write, a localCheckpoint) on `df` with
+  /** Runs `action` (one action, such as a write) on `df` with
     * the named aggregates `aggs` computed inside that same job
     * (`Dataset.observe`), and returns its result with the aggregates by
     * name — a count or a fingerprint without a second job over the
@@ -33,19 +34,28 @@ package object pipeline {
     (out, obs.get)
   }
 
-  /** `df` materialized once as a local checkpoint, with the named
-    * aggregates `aggs` computed inside the job that materializes it (see
-    * [[observed]]). The checkpoint is declared lazily and filled by one
-    * output-less write, so when that job fails its blocks are released
+  /** `df` materialized once as a local checkpoint — the engine's only
+    * way to cut a lineage — with its row count (`rows`) and the named
+    * aggregates `aggs` computed inside the job that materializes it
+    * (see [[observed]]), so no second job counts or probes the
+    * checkpoint. The checkpoint is declared lazily and filled by one
+    * job (a count of its RDD, or an observed output-less write when
+    * `aggs` are given), so when that job fails its blocks are released
     * before the error propagates (an eager `localCheckpoint` whose job
     * fails leaves its RDD persisted). On success the caller owns the
-    * blocks, like those of any local checkpoint.
+    * blocks: they stay persisted while anything reads the checkpoint,
+    * and a caller that supersedes one (an iteration) hands it to
+    * [[release]].
     */
   def checkpointed(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
     val out = df.localCheckpoint(eager = false)
     try {
-      val (_, values) = observed(out, aggs: _*)(
-        _.write.format("noop").mode(SaveMode.Overwrite).save())
+      // no aggregate: the RDD counts itself, as an eager checkpoint does (an
+      // observed write adds a query and an observation wait, ~20 ms a call)
+      val values =
+        if (aggs.isEmpty) Map[String, Any]("rows" -> rdds(out).head.count())
+        else observed(out, count(lit(1)).as("rows") +: aggs: _*)(
+          _.write.format("noop").mode(SaveMode.Overwrite).save())._2
       (out, values)
     } catch { case e: Throwable => release(out); throw e }
   }
@@ -59,9 +69,12 @@ package object pipeline {
     try body(out, values) finally release(out)
   }
 
-  private def release(checkpoint: DataFrame): Unit =
-    checkpoint.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
-      case _ =>
-    }
+  /** Drops the blocks of a local checkpoint made by [[checkpointed]]
+    * (`unpersist` would not: it only drops cache-manager entries).
+    */
+  private[graft] def release(checkpoint: DataFrame): Unit =
+    rdds(checkpoint).foreach(_.unpersist(blocking = false))
+
+  private def rdds(checkpoint: DataFrame) =
+    checkpoint.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.pipeline.{checkpointed, withCheckpointed}
 
 /** The reference's serving/query layer re-expressed as pure
   * DataFrame -> DataFrame functions (SURVEY.md §3.3): FilesDAO /
@@ -86,8 +87,6 @@ object Serving {
     */
   def nHopCluster(edges: DataFrame, sourceId: Any, hops: Int,
                   minSim: Double = 0.0, maxSim: Double = 1.0): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
     // same convention as listByMatchCount: at the no-band default a
     // null-similarity edge must still connect (null >= 0.0 is null →
     // an unconditional filter would silently drop it), so the filter
@@ -96,36 +95,33 @@ object Serving {
       if (minSim <= 0.0 && maxSim >= 1.0) bothDirections(edges)
       else bothDirections(edges)
         .where(col("similarity") >= minSim && col("similarity") <= maxSim)
-    val e = banded
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true)
-    var seen = edges.sparkSession.createDataFrame(
-      Seq(Tuple1(sourceId.toString))).toDF("doc_id")
-      .select(col("doc_id").cast(e.schema("src").dataType),
-        lit(0).as("hop"))
-    var frontier = seen
-    // the seed frontier is nonempty by construction, so the emptiness
-    // check rides the count of each hop's ALREADY-CHECKPOINTED frontier
-    // (a near-free job) instead of a separate limit(1).count() probe
-    // per iteration; `seen` stays a lazy union of the checkpointed
-    // frontiers — its plan depth is bounded by `hops`, so the per-hop
-    // re-checkpoint of the union was pure job overhead (2 fewer driver
-    // round-trips per hop)
-    var frontierNonEmpty = true
-    var h = 0
-    while (h < hops && frontierNonEmpty) {
-      h += 1
-      val next = frontier.select(col("doc_id").as("src"))
-        .join(e, "src").select(col("dst").as("doc_id"))
-        .distinct()
-        .join(seen.select("doc_id"), Seq("doc_id"), "left_anti")
-        .withColumn("hop", lit(h))
-        .localCheckpoint(true)
-      frontierNonEmpty = next.count() > 0
-      seen = seen.union(next)
-      frontier = next
+    withCheckpointed(banded.select(col("src"), col("dst"))) { (e, _) =>
+      var seen = edges.sparkSession.createDataFrame(
+        Seq(Tuple1(sourceId.toString))).toDF("doc_id")
+        .select(col("doc_id").cast(e.schema("src").dataType),
+          lit(0).as("hop"))
+      var frontier = seen
+      // the seed frontier is nonempty by construction, so the emptiness
+      // check rides the row count observed in each hop's checkpoint job
+      // instead of a separate count or limit(1) probe per iteration;
+      // `seen` stays a lazy union of the checkpointed frontiers — its
+      // plan depth is bounded by `hops`, so a per-hop re-checkpoint of
+      // the union would be pure job overhead
+      var frontierNonEmpty = true
+      var h = 0
+      while (h < hops && frontierNonEmpty) {
+        h += 1
+        val (next, n) = checkpointed(frontier.select(col("doc_id").as("src"))
+          .join(e, "src").select(col("dst").as("doc_id"))
+          .distinct()
+          .join(seen.select("doc_id"), Seq("doc_id"), "left_anti")
+          .withColumn("hop", lit(h)))
+        frontierNonEmpty = n("rows") != 0L
+        seen = seen.union(next)
+        frontier = next
+      }
+      seen
     }
-    seen
   }
 
   /** Deterministic result slice of the n-hop expansion

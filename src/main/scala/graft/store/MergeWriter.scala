@@ -207,16 +207,3 @@ object MergeWriter {
     */
   val CompactedEntryTag: Long = Long.MinValue
 }
-
-/** Flat-file report sinks (reference CSV reports,
-  * `generate_matches.py:96-100,161-191`, `extract_exif.py:51-53`) —
-  * debug/report surface only; the canonical sink is the keyed store.
-  */
-object ReportSink {
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(path)
-
-  def readCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-}

@@ -2,28 +2,35 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{CacheProbe, Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Kernels
-import graft.pipeline.{Dedup, DedupConfig}
+import graft.pipeline.{ConnectedComponents, Dedup, DedupConfig, ExactSubstring, ResumableDedupJob}
+import graft.queries.Serving
 import graft.streaming.IncrementalIngest
 
 /** Resource hygiene of the materializing operators: every cache, every
   * persisted RDD and every broadcast an operator makes for its own use is
   * released before it returns — on success and when one of its jobs
-  * throws. Only the operator's own result stays persisted (its
-  * `localCheckpoint`). The lazy `Dedup.pairs` holds nothing at all.
+  * throws. Only the checkpoints the operator's result reads stay
+  * persisted: `pipeline.checkpointed` releases its own blocks when the
+  * job that fills it fails, and connected components releases every
+  * round it supersedes. The lazy `Dedup.pairs` holds nothing at all.
   */
 class CacheHygieneSpec extends SparkSpecBase {
   private val cfg = DedupConfig()
 
-  private def cachedEntries: Int = org.apache.spark.sql.CacheProbe.cachedEntries(spark)
+  private def cachedEntries: Int = CacheProbe.cachedEntries(spark)
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-  private def frequencyTables: Set[Long] =
-    org.apache.spark.sql.CacheProbe.broadcastsHolding(classOf[Kernels.DfTable])
+  private def frequencyTables: Set[Long] = CacheProbe.broadcastsHolding(classOf[Kernels.DfTable])
 
   /** Runs `op`, forces its result, and asserts that the session holds
     * exactly the cache entries it held before.
@@ -34,46 +41,127 @@ class CacheHygieneSpec extends SparkSpecBase {
     assert(cachedEntries == before, s"$name left a persisted table behind")
   }
 
+  /** Runs `op` and returns its outcome with the ids of the RDDs it left
+    * persisted. The context registers persisted RDDs weakly: one that
+    * nothing references drops out of `getPersistentRDDs` at the next
+    * garbage collection, while its blocks stay until a cleaner reaches
+    * them. So every RDD persisted when one of `op`'s jobs starts is held
+    * here, and judged by its own storage level.
+    */
+  private def persistedBy[T](op: => T): (Try[T], Set[Int]) = {
+    val sc = spark.sparkContext
+    val before = persistedRdds
+    val held = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]()
+    def hold(): Unit = sc.getPersistentRDDs.foreach { case (id, r) => held.put(id, r) }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = hold()
+    }
+    sc.addSparkListener(listener)
+    val out = try Try(op) finally {
+      CacheProbe.drainListeners(spark)
+      sc.removeSparkListener(listener)
+    }
+    hold()
+    (out, held.values.asScala.filter(_.getStorageLevel != StorageLevel.NONE).map(_.id).toSet -- before)
+  }
+
   /** [[assertNoLeak]] for an operator returning a frame, which must be
-    * non-empty: besides the cache entries, the RDDs persisted after the
-    * call are those before it plus the result's own checkpoint, and no
-    * frequency-table broadcast is left.
+    * non-empty: besides the cache entries, the only RDDs it leaves
+    * persisted are its result's own checkpoints, and no frequency-table
+    * broadcast is left.
     */
   private def assertReleased(name: String)(op: => DataFrame): Unit = {
-    val rddsBefore = persistedRdds
     assertNoLeak(name) {
-      val result = op
-      assert(result.count() > 0)
-      val own = result.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
-      assert(persistedRdds -- rddsBefore == own, s"$name left a persisted RDD behind")
+      val (out, left) = persistedBy { val r = op; assert(r.count() > 0); r }
+      val own = out.get.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+      assert(left == own, s"$name left a persisted RDD behind")
     }
     assert(frequencyTables.isEmpty, s"$name left its frequency table broadcast")
+  }
+
+  /** Runs `op`, which must fail with a job's `boom`, and asserts that it
+    * left no cache entry, persisted RDD or frequency-table broadcast.
+    */
+  private def assertReleasedOnFailure(name: String)(op: => DataFrame): Unit = {
+    val before = cachedEntries
+    val (out, left) = persistedBy(op.count())
+    val e = out.failed.getOrElse(fail(s"$name did not fail"))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("boom")), s"$name: $e")
+    assert(cachedEntries == before, s"$name: a persisted table leaked on the failure path")
+    assert(left.isEmpty, s"$name: a persisted RDD leaked on the failure path")
+    assert(frequencyTables.isEmpty, s"$name: the frequency table broadcast leaked on the failure path")
   }
 
   /** Near-duplicate docs over a multi-partition range scan (not a local
     * relation, so no projection over it is evaluated at planning time).
     */
-  private def docs(text: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
+  private def docs(text: Column => Column): DataFrame =
     spark.range(0, 60, 1, 4).select(col("id"),
       text(concat_ws(" ", lit("the quick brown fox jumps over the lazy dog"),
         (col("id") % 10).cast("string"), lit("and then some more words"),
         (col("id") % 7).cast("string"))).as("text"))
 
-  private val plainText = (t: org.apache.spark.sql.Column) => t
+  private val plainText = (t: Column) => t
+
+  /** `boom` for row 17 of a range scan, `otherwise` for every other row. */
+  private def boomAt17(otherwise: Column): Column =
+    when(col("id") === 17, raise_error(lit("boom"))).otherwise(otherwise)
 
   test("containmentPairs releases its caches when a job throws") {
-    val failing = docs(t => when(col("id") === 17, raise_error(lit("boom"))).otherwise(t))
-    val before = cachedEntries
-    val rddsBefore = persistedRdds
-    for (op <- Seq(() => Dedup.containmentPairs(failing, cfg, tau = 0.6),
-                   () => Dedup.exactJaccardPairsPrefix(failing, cfg))) {
-      val e = intercept[Exception](op().count())
-      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(c => String.valueOf(c.getMessage).contains("boom")), e)
+    val failing = docs(boomAt17)
+    assertReleasedOnFailure("containmentPairs")(Dedup.containmentPairs(failing, cfg, tau = 0.6))
+    assertReleasedOnFailure("exactJaccardPairsPrefix")(Dedup.exactJaccardPairsPrefix(failing, cfg))
+  }
+
+  private def boomEdges: DataFrame =
+    spark.range(0, 50, 1, 2).select(col("id").as("src"), boomAt17(col("id") + 1).as("dst"))
+
+  // each `boom` below fires inside the operator's first checkpoint job
+  for ((name, op) <- Seq[(String, () => DataFrame)](
+      "ResumableDedupJob.pairsStage (band table)" -> (() => ResumableDedupJob.pairsStage(
+        Dedup.signatures(Dedup.shingleSets(docs(plainText), cfg), cfg)
+          .withColumn("sig", boomAt17(col("sig"))), cfg)),
+      "Dedup.keepList" -> (() => Dedup.keepList(docs(plainText),
+        spark.range(0, 60, 1, 4).select(col("id"), (col("id") % 10).as("cluster_id")),
+        boomAt17(length(col("text"))))),
+      "ExactSubstring.containmentPairs" -> (() => ExactSubstring.containmentPairs(
+        spark.range(0, 59, 1, 4).select(col("id").as("id_a"), (col("id") + 1).as("id_b")),
+        docs(boomAt17))),
+      "Serving.nHopCluster" -> (() => Serving.nHopCluster(boomEdges.select(col("src").as("id_a"),
+        col("dst").as("id_b"), lit(0.9).as("similarity")), 0L, hops = 2)),
+      "ConnectedComponents.run (distributed)" -> (() =>
+        ConnectedComponents.run(boomEdges, localThreshold = 0))))
+    test(s"$name releases its checkpoint when the job filling it throws") {
+      // without adaptive execution and broadcast joins, every stage of a
+      // checkpoint, shuffles included, runs inside the job that fills it;
+      // adaptive execution would run a shuffle stage ahead of that job
+      val conf = Seq("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val prev = conf.map { case (k, _) => k -> spark.conf.get(k) }
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assertReleasedOnFailure(name)(op())
+      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
     }
-    assert(cachedEntries == before, "a persisted table leaked on the failure path")
-    assert(persistedRdds == rddsBefore, "a persisted RDD leaked on the failure path")
-    assert(frequencyTables.isEmpty, "the frequency table broadcast leaked on the failure path")
+
+  /** A 200-edge chain (several rounds) plus a 50-edge star. */
+  private def chainAndStar: DataFrame = {
+    val spark2 = spark
+    import spark2.implicits._
+    ((0L until 200L).map(i => (i, i + 1)) ++ (1L to 50L).map(j => (1000L, 1000L + j)))
+      .toDF("src", "dst")
+  }
+
+  test("connected components keeps only its result's checkpoint") {
+    assertReleased("ConnectedComponents.run")(
+      ConnectedComponents.run(chainAndStar, localThreshold = 0))
+  }
+
+  test("connected components cut short releases the round it holds") {
+    val (out, left) = persistedBy(
+      ConnectedComponents.run(chainAndStar, maxIterations = 1, localThreshold = 0))
+    assert(out.failed.get.getMessage.contains("did not converge"), out)
+    assert(left.isEmpty, "a round's checkpoint leaked on the failure path")
   }
 
   test("prefix joins release their broadcast table when a job fails while it is live") {

@@ -4,9 +4,9 @@ import org.apache.spark.SparkEnv
 import org.apache.spark.storage.BroadcastBlockId
 
 /** Test access to the `private[sql]` count of a session's cache entries
-  * (one per `Dataset.persist` / cached table) and to the broadcast values
-  * the driver's block manager holds; lives in this package purely for
-  * access.
+  * (one per `Dataset.persist` / cached table), to the broadcast values
+  * the driver's block manager holds and to the `private[spark]` listener
+  * bus; lives in this package purely for access.
   */
 object CacheProbe {
   def cachedEntries(s: SparkSession): Int =
@@ -24,4 +24,7 @@ object CacheProbe {
         b.broadcastId
     }.toSet
   }
+
+  /** Blocks until every listener has seen every event posted so far. */
+  def drainListeners(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
 }
