@@ -618,16 +618,15 @@ object Dedup {
     * FULL accumulated corpus — new x all, never all x all (the fork's
     * periodic match regeneration, `ray_extract_features.py:241-367`, at
     * per-batch cadence) — against a PERSISTED band store (id, band_key):
-    * the all-side band keys are read back, never recomputed, so
-    * per-batch work is O(new) banding + the keyed join, not O(corpus)
-    * re-banding. `newIds` selects the new-side rows out of the store;
-    * pairs are canonicalized (least/greatest) and verified exactly
+    * the all-side band keys are read back, never recomputed, and only
+    * the new side's signatures `newSigs` are banded here, so per-batch
+    * work is O(new) banding + the keyed join, not O(corpus) re-banding.
+    * Pairs are canonicalized (least/greatest) and verified exactly
     * against the full shingle table.
     */
-  def incrementalPairsBanded(newIds: DataFrame, bandStore: DataFrame,
+  def incrementalPairsBanded(newSigs: DataFrame, bandStore: DataFrame,
                              shingled: DataFrame, cfg: DedupConfig): DataFrame = {
-    val newBands = bandStore
-      .join(newIds.select("id"), Seq("id"), "left_semi")
+    val newBands = bandTable(validSignatures(newSigs), cfg)
       .select(col("band_key"), col("id").as("id_x"))
     val allBands = bandStore.select(col("band_key"), col("id").as("id_y"))
     val cands = newBands.join(allBands, "band_key")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
@@ -67,6 +69,33 @@ package object pipeline {
       body: (DataFrame, Map[String, Any]) => T): T = {
     val (out, values) = checkpointed(df, aggs: _*)
     try body(out, values) finally release(out)
+  }
+
+  /** Runs `bodies` at the same time and returns their results in order.
+    * Each body runs on a fresh thread, never a pool's, so it inherits the
+    * caller's Spark local properties (job tags, job group, span ids) and
+    * active session as they are at the call. Every thread is joined
+    * before this returns or throws; the first failure is rethrown, with
+    * the others added to it as suppressed.
+    */
+  def concurrently[T](bodies: (() => T)*): Seq[T] = {
+    val results = new Array[Try[T]](bodies.size)
+    val threads = bodies.indices.map { i =>
+      new Thread(() => results(i) = try Success(bodies(i)()) catch { case e: Throwable => Failure(e) },
+        s"graft-concurrently-$i")
+    }
+    var interrupted = false
+    try threads.foreach(_.start())
+    finally threads.foreach { t =>
+      // an interrupted caller passes the interrupt on and still waits
+      while (t.isAlive) try t.join() catch {
+        case _: InterruptedException => interrupted = true; threads.foreach(_.interrupt())
+      }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    val failures = results.toSeq.collect { case Failure(e) => e }
+    failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    results.toSeq.map(_.get)
   }
 
   /** Drops the blocks of a local checkpoint made by [[checkpointed]]

@@ -842,11 +842,12 @@ final class TxLog(val root: String) {
   }
 
   /** Read only the given entries (e.g. the delta since a remembered
-    * version's path set), optionally pinned to a manifest schema (see
-    * [[readSnapshot]]).
+    * version's path set), pinned to a manifest schema when there is one
+    * (see [[readSnapshot]]). Pass the snapshot's: with `None` Spark runs
+    * a job to infer the schema from the files' footers.
     */
   def readEntries(spark: SparkSession, entries: Seq[TxEntry],
-                  schemaJson: Option[String] = None): DataFrame = {
+                  schemaJson: Option[String]): DataFrame = {
     require(entries.nonEmpty, s"no entries to read in $root")
     val reader = schemaJson match {
       case Some(s) => spark.read.schema(TxLog.structOf(s))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.pipeline.{Dedup, DedupConfig, withCached}
+import graft.pipeline.{Dedup, DedupConfig, concurrently, withCheckpointed}
 import graft.store.{MarkerFile, TxEntry, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
@@ -19,7 +19,7 @@ import graft.store.{MarkerFile, TxEntry, TxLog}
   *         `exists()`, `winnow/storage/db_result_storage.py:46-58`) as
   *         one left-anti join of the batch against the signature store
   *     (2) band-table append for never-banded ids (the same anti-join
-  *         against the band store)
+  *         against the band store), run at the same time as (1)
   *     (3) incremental matching every `matchEvery` batches (the fork
   *         runs ingest/flush/match at 600/1200/3600 s — decoupled
   *         cadences, `ray_extract_features.py:100-112`): NEW ids since
@@ -112,19 +112,20 @@ object IncrementalIngest {
         org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
           .orderBy(xxhash64(col("text")).asc_nulls_last)))
       .where(col("__ingest_rn") === 1).drop("__ingest_rn")
-    withCached(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)) { newSigs =>
-      // (1) idempotent signature flush (append only: see absentFrom)
-      sl.writeAppend(absentFrom(sl, "id")(newSigs), batchId)
-
-      // (2) incremental BAND store: append band keys for ids the
-      // store has never banded (anti-join vs the band store itself,
-      // so a crash between the sig and band commits self-heals on
-      // retry). The all-side of every later match run is READ from
-      // here — never recomputed from the full signature store.
-      val bandPending = absentFrom(bl, "id")(Dedup.validSignatures(newSigs))
-      bl.writeAppend(
-        Dedup.bandTable(bandPending, cfg).select(col("id"), col("band_key")),
-        batchId)
+    // one job fills the checkpoint and is the only reader of `batch`: a
+    // cache is filled inside its first reader's query, so the two
+    // concurrent flushes below would each run that fill
+    withCheckpointed(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)) { (newSigs, _) =>
+      // (1) idempotent signature flush and (2) incremental BAND store
+      // append, at once. Each is an append deduped against its own
+      // store (see absentFrom), so a crash between or during the two
+      // commits self-heals on retry in any order. The all-side of every
+      // later match run is READ from the band store — never recomputed
+      // from the full signature store.
+      concurrently(
+        () => sl.writeAppend(absentFrom(sl, "id")(newSigs), batchId),
+        () => bl.writeAppend(Dedup.bandTable(absentFrom(bl, "id")(Dedup.validSignatures(newSigs)), cfg),
+          batchId))
 
       // (3) match cadence (fork: 3600 s regeneration vs 600 s ingest)
       if ((batchId + 1) % matchEvery == 0)
@@ -169,11 +170,9 @@ object IncrementalIngest {
     val matched = readMatchedPaths(workDir, cfg)
     val newEntries = snap.entries.filterNot(e => matched.contains(e.path))
     if (newEntries.isEmpty) return
-    val newIds = sl.readEntries(spark, newEntries).select("id")
+    val newSigs = sl.readEntries(spark, newEntries, snap.schemaJson)
     val allSigs = sl.readSnapshot(spark, snap)
-    val bandStore = bandLog(workDir, cfg).read(spark)
-      .getOrElse(sys.error(s"band store missing under $workDir"))
-    val newPairs = Dedup.incrementalPairsBanded(newIds, bandStore, allSigs, cfg)
+    val newPairs = Dedup.incrementalPairsBanded(newSigs, bands(spark, workDir, cfg), allSigs, cfg)
     pl.writeAppend(absentFrom(pl, "id_a", "id_b")(newPairs))
     writeMatchedPaths(workDir, cfg, snap.entries.map(_.path).toSet)
   }
@@ -228,7 +227,11 @@ object IncrementalIngest {
     * compaction is a pure rewrite: read the snapshot, coalesce toward
     * spark.sql.shuffle.partitions, commit a REPLACE manifest (atomic —
     * a crash at any point leaves either the old or the new snapshot
-    * fully readable), then vacuum superseded files. A concurrent
+    * fully readable), then vacuum superseded files. The three stores
+    * are rewritten at once, each on its own thread with its own commit
+    * and vacuum; a failure in one is rethrown once all three have ended
+    * (the others' commits stand, and a retry skips a compacted store,
+    * which holds one entry). A concurrent
     * append that wins the commit race aborts the rewrite for that
     * store (compaction is an optimization; inside `start()` it runs
     * serially with the writes, so the race only matters for manual
@@ -251,32 +254,28 @@ object IncrementalIngest {
                     keepVersions: Int = 1, retainMs: Long = 0L)
       : Option[(Set[String], Set[String])] = {
     val targetParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    var sigRewrite: Option[(Set[String], Set[String])] = None
-    Seq((sigLog(workDir, cfg), true), (bandLog(workDir, cfg), false),
-      (pairLog(workDir, cfg), false))
-      .foreach { case (log, isSig) =>
-        val snap = log.snapshot()
-        if (snap.entries.size > 1) {
-          val maxBatch = snap.entries.map(_.batch).max
-          val dir = log.newDataDir()
-          log.readSnapshot(spark, snap).coalesce(targetParts)
-            .write.mode(SaveMode.Overwrite).parquet(dir.getPath)
-          val entry = TxEntry(log.relativize(dir), maxBatch,
-            rows = TxLog.footerRowCount(dir))
-          if (log.commitReplace(Seq(entry), snap.version)) {
-            if (keepVersions >= 1)
-              log.vacuum(keepVersions, orphanGraceMs = vacuumGraceMs,
-                retainMs = retainMs)
-            if (isSig)
-              sigRewrite =
-                Some((snap.entries.map(_.path).toSet, Set(entry.path)))
-          } else
-            TxLog.deleteRecursively(dir)
-        }
+    // (source paths, replacement paths) of the store's rewrite when it
+    // committed — for the signature store, processBatch's match-state
+    // fast-forward input
+    def compact(log: TxLog): Option[(Set[String], Set[String])] = {
+      val snap = log.snapshot()
+      if (snap.entries.size <= 1) None
+      else {
+        val dir = log.newDataDir()
+        log.readSnapshot(spark, snap).coalesce(targetParts)
+          .write.mode(SaveMode.Overwrite).parquet(dir.getPath)
+        val entry = TxEntry(log.relativize(dir), snap.entries.map(_.batch).max,
+          rows = TxLog.footerRowCount(dir))
+        if (log.commitReplace(Seq(entry), snap.version)) {
+          if (keepVersions >= 1)
+            log.vacuum(keepVersions, orphanGraceMs = vacuumGraceMs, retainMs = retainMs)
+          Some((snap.entries.map(_.path).toSet, Set(entry.path)))
+        } else { TxLog.deleteRecursively(dir); None }
       }
-    // (source paths, replacement paths) of the SIGNATURE store rewrite
-    // when it committed — processBatch's match-state fast-forward input
-    sigRewrite
+    }
+    // the three stores are independent tables: rewrite them at once
+    concurrently(() => compact(sigLog(workDir, cfg)), () => compact(bandLog(workDir, cfg)),
+      () => compact(pairLog(workDir, cfg))).head
   }
 
   def bands(spark: SparkSession, workDir: String, cfg: DedupConfig): DataFrame =

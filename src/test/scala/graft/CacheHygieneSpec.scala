@@ -222,4 +222,73 @@ class CacheHygieneSpec extends SparkSpecBase {
     }
     assert(IncrementalIngest.signatures(spark, workDir, cfg).count() == 60)
   }
+
+  /** Rows of a slice of the near-duplicate docs, ids as strings. */
+  private def ingestBatch(from: Long, until: Long): DataFrame =
+    docs(plainText).where(col("id") >= from && col("id") < until)
+      .select(col("id").cast("string").as("id"), col("text"))
+
+  /** Every row of the signature, band and pair stores under `workDir`. */
+  private def ingestStores(workDir: String): Seq[Seq[String]] =
+    Seq(IncrementalIngest.signatures _, IncrementalIngest.bands _, IncrementalIngest.pairs _)
+      .map(read => read(spark, workDir, cfg).collect().map(_.toString).toSeq.sorted)
+
+  /** Names of the live threads that `pipeline.concurrently` started. */
+  private def concurrentThreads: Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
+      .filter(_.startsWith("graft-concurrently-"))
+
+  test("IncrementalIngest.processBatch throws a failed flush once the other has ended, and its retry is exact") {
+    val clean = Files.createTempDirectory("graft-ingest-clean").toString
+    val workDir = Files.createTempDirectory("graft-ingest-fail").toString
+    // a plain file where the band store's log directory belongs: the
+    // band flush writes its data, then fails to commit it
+    val obstacle = new java.io.File(IncrementalIngest.bandLog(workDir, cfg).root, "_log")
+    assert(obstacle.getParentFile.mkdirs() && obstacle.createNewFile())
+    val before = cachedEntries
+    val (out, left) = persistedBy(IncrementalIngest.processBatch(ingestBatch(0, 40), 0L, cfg, workDir))
+    val e = out.failed.getOrElse(fail("processBatch did not fail"))
+    assert(e.isInstanceOf[java.nio.file.FileSystemException] &&
+      e.getMessage.contains(obstacle.getPath), e)
+    assert(concurrentThreads.isEmpty, "processBatch threw while a flush was still running")
+    assert(IncrementalIngest.sigLog(workDir, cfg).snapshot().version == 0,
+      "the signature flush did not commit")
+    assert(cachedEntries == before, "a persisted table leaked on the failure path")
+    assert(left.isEmpty, "a persisted RDD leaked on the failure path")
+    assert(obstacle.delete())
+    IncrementalIngest.processBatch(ingestBatch(0, 40), 0L, cfg, workDir)
+    IncrementalIngest.processBatch(ingestBatch(0, 40), 0L, cfg, clean)
+    Seq(workDir, clean).foreach(IncrementalIngest.processBatch(ingestBatch(30, 60), 1L, cfg, _))
+    assert(ingestStores(workDir) == ingestStores(clean))
+  }
+
+  test("IncrementalIngest.compactStores throws a failed rewrite once the others have ended, and its retry is exact") {
+    val clean = Files.createTempDirectory("graft-compact-clean").toString
+    val workDir = Files.createTempDirectory("graft-compact-fail").toString
+    for (dir <- Seq(clean, workDir); (from, i) <- Seq(0L, 30L).zipWithIndex)
+      IncrementalIngest.processBatch(ingestBatch(from, from + 30), i.toLong, cfg, dir)
+    IncrementalIngest.compactStores(spark, clean, cfg, vacuumGraceMs = 0L)
+    val logs = Seq(IncrementalIngest.sigLog _, IncrementalIngest.bandLog _, IncrementalIngest.pairLog _)
+      .map(_(workDir, cfg))
+    assert(logs.forall(_.snapshot().entries.size == 2))
+    // one of the pair store's data directories moved away: its rewrite
+    // cannot read the store
+    val pl = logs.last
+    val moved = new java.io.File(pl.root, pl.snapshot().entries.head.path)
+    val aside = new java.io.File(pl.root, "aside")
+    assert(moved.renameTo(aside))
+    val before = cachedEntries
+    val (out, left) = persistedBy(IncrementalIngest.compactStores(spark, workDir, cfg, vacuumGraceMs = 0L))
+    val e = out.failed.getOrElse(fail("compactStores did not fail"))
+    assert(String.valueOf(e.getMessage).contains(moved.getName), e)
+    assert(concurrentThreads.isEmpty, "compactStores threw while a rewrite was still running")
+    assert(logs.map(_.snapshot().entries.size) == Seq(1, 1, 2), "the other rewrites did not commit")
+    assert(cachedEntries == before, "a persisted table leaked on the failure path")
+    assert(left.isEmpty, "a persisted RDD leaked on the failure path")
+    assert(aside.renameTo(moved))
+    assert(IncrementalIngest.compactStores(spark, workDir, cfg, vacuumGraceMs = 0L).isEmpty,
+      "the signature store was rewritten twice")
+    assert(logs.forall(_.snapshot().entries.size == 1))
+    assert(ingestStores(workDir) == ingestStores(clean))
+  }
 }

@@ -83,9 +83,9 @@ class EdgeCaseSpec extends SparkSpecBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // "new batch" = docs with even ids, matched against a band store
     // holding every valid signature
-    val newIds = allSigs.where(col("id") % 2 === 0).select("id")
+    val newSigs = allSigs.where(col("id") % 2 === 0)
     val bandStore = Dedup.bandTable(Dedup.validSignatures(allSigs), cfg)
-    val inc = Dedup.incrementalPairsBanded(newIds, bandStore, allSigs, cfg)
+    val inc = Dedup.incrementalPairsBanded(newSigs, bandStore, allSigs, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = fullPairs.filter { case (a, b) => a % 2 == 0 || b % 2 == 0 }
     assert(inc == want)

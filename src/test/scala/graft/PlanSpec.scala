@@ -97,8 +97,8 @@ class PlanSpec extends SparkSpecBase {
         .localCheckpoint(true)
       val bandStore = Dedup.bandTable(Dedup.validSignatures(sigs), cfg)
         .select(col("id"), col("band_key")).localCheckpoint(true)
-      val newIds = sigs.select("id").orderBy("id").limit(5).localCheckpoint(true)
-      val df = Dedup.incrementalPairsBanded(newIds, bandStore,
+      val newSigs = sigs.orderBy("id").limit(5).localCheckpoint(true)
+      val df = Dedup.incrementalPairsBanded(newSigs, bandStore,
         sigs.select("id", "shingles"), cfg)
       df.collect() // materialize so AQE's final plan is available
       val plan = df.queryExecution.executedPlan.toString
