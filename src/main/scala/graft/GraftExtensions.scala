@@ -22,9 +22,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft.functions.Expressions", name),
         GraftFunctions.checked(name, arity, builder)))
     }
-    // statement-level `MERGE INTO TXLOG ...` (delegates everything else
-    // verbatim — see graft.store.TxLogSqlParser)
-    ext.injectParser((_, delegate) =>
-      new graft.store.TxLogSqlParser(delegate))
   }
 }

@@ -76,14 +76,6 @@ object TextFunctions {
   def tokenCount(text: Column): Column =
     when(length(trim(text)) === 0, 0).otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword count: alphanumeric runs + individual punctuation.
-    * ALL whitespace splits are dropped, not just the literal space —
-    * newlines/tabs are separators, never tokens.
-    */
-  def bpeishTokenCount(text: Column): Column =
-    size(filter(split(text, "(?=[^\\p{L}\\p{N}])|(?<=[^\\p{L}\\p{N}])"),
-      t => length(t) > 0 && !t.rlike("^\\s+$")))
-
   private val stopwords =
     Seq("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 

@@ -194,9 +194,12 @@ object ExactSubstring {
     // 3. measured hot split: ids-only count per hay, hot set broadcast.
     //    Checkpointed with its row count observed: it feeds three
     //    broadcast consumers (anti/semi/semi) — lazy, the aggregation
-    //    would re-run once per consumer.
-    val (hotHays, hot) = checkpointed(oriented.groupBy("hay_id")
-      .agg(count(lit(1)).as("n")).where(col("n") > hotCap).select("hay_id"))
+    //    would re-run once per consumer. `oriented` is the result's;
+    //    when this job fails it is released before the error propagates.
+    val (hotHays, hot) =
+      try checkpointed(oriented.groupBy("hay_id")
+        .agg(count(lit(1)).as("n")).where(col("n") > hotCap).select("hay_id"))
+      catch { case t: Throwable => release(oriented); throw t }
     val hayTexts = docs.select(col("id").cast("string").as("hay_id"),
       col("text").as("hay_text"))
     // 4a. cold hays (bounded groups): collect_list + one join per group

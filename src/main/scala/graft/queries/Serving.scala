@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.pipeline.{checkpointed, withCheckpointed}
+import graft.pipeline.{checkpointed, release, withCheckpointed}
 
 /** The reference's serving/query layer re-expressed as pure
   * DataFrame -> DataFrame functions (SURVEY.md §3.3): FilesDAO /
@@ -109,17 +109,21 @@ object Serving {
       // the union would be pure job overhead
       var frontierNonEmpty = true
       var h = 0
-      while (h < hops && frontierNonEmpty) {
+      // the filled frontiers are the result's; a later hop that fails
+      // releases them before the error propagates
+      var filled = List.empty[DataFrame]
+      try while (h < hops && frontierNonEmpty) {
         h += 1
         val (next, n) = checkpointed(frontier.select(col("doc_id").as("src"))
           .join(e, "src").select(col("dst").as("doc_id"))
           .distinct()
           .join(seen.select("doc_id"), Seq("doc_id"), "left_anti")
           .withColumn("hop", lit(h)))
+        filled ::= next
         frontierNonEmpty = n("rows") != 0L
         seen = seen.union(next)
         frontier = next
-      }
+      } catch { case t: Throwable => filled.foreach(release); throw t }
       seen
     }
   }
@@ -135,15 +139,6 @@ object Serving {
     nHopCluster(edges, sourceId, hops, minSim, maxSim)
       .orderBy(col("doc_id").asc)
       .offset(offset).limit(limit)
-
-  /** Edges within a seen set (`db/access/matches.py:97-109`): all edges
-    * whose both endpoints belong to `members(doc_id)`.
-    */
-  def edgesWithin(edges: DataFrame, members: DataFrame): DataFrame =
-    edges
-      .join(members.select(col("doc_id").as("id_a")), "id_a", "left_semi")
-      .join(members.select(col("doc_id").as("id_b")), "id_b", "left_semi")
-      .select(col("id_a"), col("id_b"), col("similarity"))
 
   /** ilike path search (`db/access/files.py:156-160`) + extension-suffix
     * filter (`files.py:162-168`: OR of case-insensitive `%.ext` suffix

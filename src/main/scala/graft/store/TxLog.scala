@@ -36,8 +36,8 @@ final case class BloomMeta(mBits: Int, k: Int, file: String)
 
 /** One committed data directory: `path` is relative to the table root
   * (always under `data/`), `batch` is the logical writer batch id
-  * (−1 for plain appends). The `_batch` COLUMN inside the files carries
-  * the same id for read-time last-writer-wins resolution. `stats`
+  * (−1 for plain appends; a `replaceBatch` commit drops the live
+  * entries of its batch id). `stats`
   * optionally carries per-column min/max bounds for manifest-level
   * file skipping ([[TxLog.pruneRange]]); `blooms` optionally carries
   * per-column Bloom filters for point-lookup skipping
@@ -66,12 +66,10 @@ final case class TxSnapshot(version: Long, entries: Vector[TxEntry],
                             schemaJson: Option[String] = None,
                             colLineage: Map[String, String] = Map.empty) {
   /** Total manifest-recorded row count, `None` if ANY entry predates
-    * row counts (a partial sum would silently under-report). For
-    * last-writer-wins stores ([[MergeWriter]]) this counts every live
-    * PHYSICAL row — superseded versions of a key included until
-    * compaction — so it is an upper bound on distinct keys; exact for
-    * append-only tables. Sized-from-above consumers (Bloom sketches,
-    * shuffle-partition planning) want exactly that bound.
+    * row counts (a partial sum would silently under-report): every live
+    * PHYSICAL row, an upper bound on distinct keys. Sized-from-above
+    * consumers (Bloom sketches, shuffle-partition planning) want
+    * exactly that bound.
     */
   def rowCount: Option[Long] =
     if (entries.forall(_.rows >= 0L)) Some(entries.map(_.rows).sum)
@@ -125,7 +123,7 @@ final class TxLog(val root: String) {
   def exists: Boolean = currentVersion() >= 0
 
   /** Retained manifest files, (version, file), ascending by version —
-    * the ONE listing used by currentVersion/vacuum/history.
+    * the ONE listing used by currentVersion/versionCount/vacuum.
     */
   private def listManifests(): Array[(Long, File)] =
     Option(logDir.listFiles()).getOrElse(Array.empty)
@@ -140,9 +138,8 @@ final class TxLog(val root: String) {
     listManifests().foldLeft(-1L) { case (m, (v, _)) => math.max(m, v) }
 
   /** Number of retained manifest versions — one directory listing, no
-    * manifest parsing (history() reads and parses every manifest; a
-    * count must not pay that, nor fail on one unparseable legacy
-    * manifest).
+    * manifest parsing (a count must not pay for reading every manifest,
+    * nor fail on one unparseable legacy manifest).
     */
   def versionCount(): Int = listManifests().length
 
@@ -151,7 +148,7 @@ final class TxLog(val root: String) {
     * temp file is invisible by construction (publish is the last step).
     *
     * The list-then-read pair is not atomic: a concurrent commit + vacuum
-    * (e.g. MergeWriter.compact with default retention) can delete the
+    * (e.g. a store compaction with default retention) can delete the
     * manifest this call just resolved. That race means a NEWER version
     * exists, so re-resolving is guaranteed fresh progress, never a spin
     * on the same version — retried a bounded number of times so a
@@ -211,7 +208,6 @@ final class TxLog(val root: String) {
                    replaceBatch: Option[Long] = None,
                    op: String = "append",
                    schemaJson: Option[String] = None,
-                   widenSchema: Boolean = false,
                    seedLineage: Map[String, String] = Map.empty): Long = {
     newEntries.foreach(e => requireSafePath(e.path))
     @tailrec def loop(): Long = {
@@ -224,11 +220,6 @@ final class TxLog(val root: String) {
       // table schema (add/drop columns only — type changes fail, see
       // TxLog.evolve); a commit without one carries the current
       // schema forward, so raw-entry commits never erase evolution.
-      // widenSchema = the declared schema can only ADD columns: the
-      // union with the current schema is computed here, inside the CAS
-      // loop, so a batch narrower than the table never drops columns
-      // and two concurrent widening writers never clobber each other's
-      // additions.
       // seedLineage (legacy footer columns, requireLegacyCompatible)
       // fills in only NAMES the live lineage doesn't know — applied
       // inside the CAS loop so a concurrent first-declarer's lineage
@@ -237,7 +228,7 @@ final class TxLog(val root: String) {
         cur.colLineage.keysIterator.exists(_.equalsIgnoreCase(n))
       } ++ cur.colLineage
       val (next, lineage) =
-        TxLog.evolve(cur.schemaJson, seeded, schemaJson, widenSchema)
+        TxLog.evolve(cur.schemaJson, seeded, schemaJson)
       val v = cur.version + 1
       if (tryPublish(v, render(v, op, kept ++ newEntries, next, lineage))) v
       else loop()
@@ -294,9 +285,9 @@ final class TxLog(val root: String) {
              retainMs: Long = 0L): Unit = {
     require(keepVersions >= 1, "must keep at least the current version")
     // the list-then-read prelude is not atomic: a CONCURRENT vacuum
-    // (e.g. IvfCentroidStore first-caller races, or SQL VACUUM next to
-    // MergeWriter.compact's post-compaction vacuum) can delete one of
-    // the manifests this call just listed as kept. A vanished manifest
+    // (e.g. IvfCentroidStore first-caller races, or a vacuum next to a
+    // store compaction's post-compaction vacuum) can delete one of the
+    // manifests this call just listed as kept. A vanished manifest
     // means the other vacuum already retired that version, so
     // re-listing is guaranteed fresh progress — bounded retries, same
     // policy as snapshot(), so a genuinely torn log still fails loudly.
@@ -374,23 +365,6 @@ final class TxLog(val root: String) {
       .foreach(_.delete())
   }
 
-  /** Commit history over the retained manifests, oldest first:
-    * (version, op, entry count) — the `DESCRIBE HISTORY` analog.
-    * Vacuumed-past versions are simply absent.
-    */
-  def history(): Seq[(Long, String, Int, Option[Long])] =
-    listManifests().flatMap { case (v, f) =>
-      // a manifest deleted between the listing and this read was
-      // vacuumed concurrently — by definition no longer retained, so
-      // absent from history, same as if the listing had run after the
-      // vacuum (parse failures still propagate: corrupt ≠ vacuumed)
-      try {
-        val text = new String(Files.readAllBytes(f.toPath), UTF_8)
-        val (snap, op) = parseManifestWithOp(text) // same strictness as reads
-        Some((v, op, snap.entries.size, snap.rowCount))
-      } catch { case _: java.nio.file.NoSuchFileException => None }
-    }.toSeq
-
   /** Latest table contents, or None when the table is genuinely empty
     * (no committed version / no live entries). Anything else — a
     * missing or corrupt data file, an unreadable manifest — PROPAGATES:
@@ -416,55 +390,6 @@ final class TxLog(val root: String) {
     readEntries(spark, snap.entries, snap.schemaJson)
   }
 
-  /** Metadata-only DDL — the `ALTER TABLE ADD COLUMN` analog. Commits
-    * a manifest whose schema gains `name: dataType` with ZERO data
-    * written or rewritten (the defining Iceberg property: on a 100-TB
-    * table this is one tiny JSON commit); every existing file reads
-    * the new column as null. Fails if the table has no declared schema
-    * yet (declare one with a writer first — there is nothing to alter),
-    * if the column already exists, or if the lineage forbids the type
-    * (see [[TxLog.evolve]]). Returns the committed version.
-    */
-  def alterAddColumn(name: String,
-                     dataType: org.apache.spark.sql.types.DataType): Long =
-    alter("alter-add") { curSchema =>
-      require(!curSchema.fieldNames.exists(_.equalsIgnoreCase(name)),
-        s"column '$name' already exists")
-      curSchema.add(name, dataType)
-    }
-
-  /** Metadata-only DDL — the `ALTER TABLE DROP COLUMN` analog: the
-    * column disappears from every read, no data touched. The lineage
-    * remembers its type, so a later re-add must use the original type.
-    * Returns the committed version.
-    */
-  def alterDropColumn(name: String): Long =
-    alter("alter-drop") { curSchema =>
-      // case-insensitive like add/resolution: 'Count' drops 'count'
-      require(curSchema.fieldNames.exists(_.equalsIgnoreCase(name)),
-        s"no column '$name'")
-      require(curSchema.fields.length > 1, "cannot drop the last column")
-      org.apache.spark.sql.types.StructType(
-        curSchema.fields.filterNot(_.name.equalsIgnoreCase(name)))
-    }
-
-  /** DDL commit loop: the new schema is derived from the snapshot it
-    * is committed against (replace-CAS, retried on conflict), so a
-    * concurrent commit's schema change can never be silently clobbered
-    * by an alter computed from a stale snapshot.
-    */
-  @tailrec
-  private def alter(op: String)(f: org.apache.spark.sql.types.StructType =>
-      org.apache.spark.sql.types.StructType): Long = {
-    val cur = snapshot()
-    val curSchema = cur.schemaJson.map(TxLog.structOf).getOrElse(
-      sys.error(s"table at $root has no declared schema to alter " +
-        "(write with a schema-declaring writer first)"))
-    if (commitReplace(cur.entries, cur.version, op = op,
-        schemaJson = Some(f(curSchema).json))) cur.version + 1
-    else alter(op)(f)
-  }
-
   /** First schema declaration over a LEGACY (pre-evolution) non-empty
     * table: the declared schema must be checked against what the live
     * files actually contain, or pinning would break reads of old files
@@ -476,7 +401,7 @@ final class TxLog(val root: String) {
     * Returns a column-lineage SEED covering every legacy column from
     * the footer union — not just the declared fields. A legacy column
     * absent from the first declaration would otherwise never enter
-    * lineage, and a later `alterAddColumn` could re-add it at a
+    * lineage, and a later declaration could re-add it at a
     * different type, breaking pinned reads over the old files — exactly
     * the drop-then-re-add hole lineage exists to close. Empty when the
     * table already has a schema (lineage is current) or is empty.
@@ -656,14 +581,12 @@ final class TxLog(val root: String) {
     * new snapshot (compaction is an optimization — it never clobbers a
     * live write). Intended for append-style tables: the merged entry's
     * batch id is −1, so it is not a target for `replaceBatch`
-    * re-delivery (keyed stores compact via [[MergeWriter.compact]],
-    * which understands last-writer-wins). Returns true if a compaction
-    * committed, false if nothing needed it or retries were exhausted.
+    * re-delivery. Returns true if a compaction committed, false if
+    * nothing needed it or retries were exhausted.
     *
     * Retention after the commit is governed by `keepVersions`/`retainMs`
     * — the SAME contract as [[vacuum]], so a pinned reader
-    * ([[graft.store.TxLogSql.pinView]] / [[snapshotAt]]) within the
-    * retention window survives compaction. `keepVersions = 0` skips the
+    * ([[snapshotAt]]) within the retention window survives compaction. `keepVersions = 0` skips the
     * vacuum entirely (the caller owns retention); the default of 1
     * reclaims everything superseded, matching vacuum's own default.
     */
@@ -696,8 +619,8 @@ final class TxLog(val root: String) {
       // driver loop of per-partition jobs — a day's worth of hourly
       // micro-batches over hundreds of partitions must not serialize
       // into hundreds of tiny jobs). The partition value is recovered
-      // from the file path, same anchored-tail technique as
-      // MergeWriter's read-time sequence column.
+      // from the file path, anchored to its tail so a table rooted
+      // under a path holding `_part=` still reads its own segment.
       val hotEntries = hot.valuesIterator.flatten.toSeq
       val dir = newDataDir()
       val src = readEntries(spark, hotEntries, snap.schemaJson)
@@ -1004,11 +927,7 @@ final class TxLog(val root: String) {
     s"""{"version":$version,"op":${jstr(op)}$sch$cols,"entries":[$es]}"""
   }
 
-  private def parseManifest(text: String): TxSnapshot =
-    parseManifestWithOp(text)._1
-
-  /** One parse serves both the snapshot and the op tag (history()). */
-  private def parseManifestWithOp(text: String): (TxSnapshot, String) = {
+  private def parseManifest(text: String): TxSnapshot = {
     import org.json4s._
     val j = org.json4s.jackson.JsonMethods.parse(text)
     val version = j \ "version" match {
@@ -1085,11 +1004,7 @@ final class TxLog(val root: String) {
       }.toMap
       case other => sys.error(s"bad manifest cols: $other")
     }
-    val op = j \ "op" match {
-      case JString(s) => s
-      case _          => "unknown"
-    }
-    (TxSnapshot(version, entries, schemaJson, colLineage), op)
+    TxSnapshot(version, entries, schemaJson, colLineage)
   }
 
   private def deleteRecursively(f: File): Unit =
@@ -1160,27 +1075,12 @@ object TxLog {
     */
   private[store] def evolve(curSchema: Option[String],
                             curLineage: Map[String, String],
-                            declared: Option[String],
-                            widen: Boolean = false)
+                            declared: Option[String])
       : (Option[String], Map[String, String]) =
     declared match {
       case None => (curSchema, curLineage)
-      case Some(s0) =>
-        curSchema.foreach(requireEvolvable(_, s0))
-        // widen-only mode: the committed schema is current ∪ declared
-        // (current's field order and types first, declared-only fields
-        // appended) — a declaration narrower than the table cannot
-        // drop columns (requireEvolvable above already pinned the
-        // common columns' types)
-        val s = (curSchema, widen) match {
-          case (Some(c), true) =>
-            val cs = structOf(c)
-            val have = cs.fieldNames.map(_.toLowerCase).toSet
-            org.apache.spark.sql.types.StructType(cs.fields ++
-              structOf(s0).fields.filterNot(f => have(f.name.toLowerCase))
-            ).json
-          case _ => s0
-        }
+      case Some(s) =>
+        curSchema.foreach(requireEvolvable(_, s))
         val fields = structOf(s).fields
         // case-INSENSITIVE like requireEvolvable: a case-variant
         // re-add ('Count' dropped, 'count' re-added) still targets the

@@ -117,6 +117,19 @@ class CacheHygieneSpec extends SparkSpecBase {
   private def boomEdges: DataFrame =
     spark.range(0, 50, 1, 2).select(col("id").as("src"), boomAt17(col("id") + 1).as("dst"))
 
+  /** Runs `body` with `conf` set, and without adaptive execution and
+    * broadcast joins: then every stage of a checkpoint, shuffles
+    * included, runs inside the job that fills it (adaptive execution
+    * would run a shuffle stage ahead of that job).
+    */
+  private def withoutAdaptive[T](conf: (String, String)*)(body: => T): T = {
+    val all = Seq("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ conf
+    val prev = all.map { case (k, _) => k -> spark.conf.get(k) }
+    all.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   // each `boom` below fires inside the operator's first checkpoint job
   for ((name, op) <- Seq[(String, () => DataFrame)](
       "ResumableDedupJob.pairsStage (band table)" -> (() => ResumableDedupJob.pairsStage(
@@ -133,15 +146,41 @@ class CacheHygieneSpec extends SparkSpecBase {
       "ConnectedComponents.run (distributed)" -> (() =>
         ConnectedComponents.run(boomEdges, localThreshold = 0))))
     test(s"$name releases its checkpoint when the job filling it throws") {
-      // without adaptive execution and broadcast joins, every stage of a
-      // checkpoint, shuffles included, runs inside the job that fills it;
-      // adaptive execution would run a shuffle stage ahead of that job
-      val conf = Seq("spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = conf.map { case (k, _) => k -> spark.conf.get(k) }
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try assertReleasedOnFailure(name)(op())
-      finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
+      withoutAdaptive()(assertReleasedOnFailure(name)(op()))
+    }
+
+  // Here a later job of the call fails after earlier checkpoints were
+  // filled. Those jobs read only checkpointed data, so no `boom` in the
+  // input reaches them: a listener cancels the operator's `nth`
+  // checkpoint job (`pipeline.checkpointed` fills a checkpoint without
+  // aggregates with `count at package.scala`) when it starts.
+  for ((name, nth, op) <- Seq[(String, Int, () => DataFrame)](
+      ("ExactSubstring.containmentPairs", 2, () => ExactSubstring.containmentPairs(
+        spark.range(0, 59, 1, 4).select(col("id").as("id_a"), (col("id") + 1).as("id_b")),
+        docs(plainText))),
+      // the edges, hop 1's frontier, then hop 2's
+      ("Serving.nHopCluster", 3, () => Serving.nHopCluster(spark.range(0, 50, 1, 2).select(
+        col("id").as("id_a"), (col("id") + 1).as("id_b"), lit(0.9).as("similarity")), 0L, hops = 3))))
+    test(s"$name releases the checkpoints it filled when a later job of the call fails") {
+      val sc = spark.sparkContext
+      val started = new java.util.concurrent.atomic.AtomicInteger
+      val canceller = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.stageInfos.maxBy(_.stageId).name.startsWith("count at package.scala") &&
+              started.incrementAndGet() == nth) sc.cancelJob(e.jobId)
+      }
+      // more shuffle tasks keep the cancelled job running until the
+      // listener reaches it
+      withoutAdaptive("spark.sql.shuffle.partitions" -> "16") {
+        val before = cachedEntries
+        sc.addSparkListener(canceller)
+        val (out, left) = try persistedBy(op().count()) finally sc.removeSparkListener(canceller)
+        val e = out.failed.getOrElse(fail(s"$name did not fail"))
+        assert(String.valueOf(e.getMessage).contains("cancelled"), e)
+        assert(started.get == nth, s"$name: the failure came before its checkpoint job $nth")
+        assert(cachedEntries == before, s"$name: a persisted table leaked on the failure path")
+        assert(left.isEmpty, s"$name: a filled checkpoint leaked when a later job failed")
+      }
     }
 
   /** A 200-edge chain (several rounds) plus a 50-edge star. */

@@ -60,202 +60,4 @@ class ExtensionsSpec extends AnyFunSuite {
       prior.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
     }
   }
-
-  test("SQL MERGE INTO TXLOG: upsert + pinned-version read purely through spark.sql") {
-    val base = SparkSpecBase.session
-    val prior = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = Class.forName("graft.GraftExtensions")
-        .getDeclaredConstructor().newInstance()
-        .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(ext)
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      assert(s2 ne base)
-      val dir = java.nio.file.Files.createTempDirectory("txlog-sql-merge").toString
-
-      // first batch from a named view, second from an inline SELECT —
-      // both via the injected statement; each returns its committed
-      // version, which feeds VERSION-AS-OF pinning below
-      s2.sql("CREATE OR REPLACE TEMP VIEW merge_src AS " +
-        "SELECT 'a' AS k, 1 AS v UNION ALL SELECT 'b' AS k, 2 AS v")
-      val v0 = s2.sql(
-        s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH 1 USING merge_src")
-        .collect()(0).getLong(0)
-      val v1 = s2.sql(
-        s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH 2 USING SELECT 'b' AS k, 9 AS v")
-        .collect()(0).getLong(0)
-      assert(v1 == v0 + 1)
-
-      // SQL lexer realities: leading comments and backquoted key names
-      // must not knock the statement through to the delegate parser
-      val v2 = s2.sql(
-        "-- nightly upsert\n/* batch 3 */\n" +
-          s"MERGE INTO TXLOG '$dir' KEYS (`k`) BATCH 3 USING SELECT 'c' AS k, 7 AS v")
-        .collect()(0).getLong(0)
-      assert(v2 == v1 + 1)
-
-      // time travel + history WITHOUT any Scala call: PIN pins a
-      // version (or latest) as a temp view, DESCRIBE lists the commits
-      assert(s2.sql(s"PIN TXLOG '$dir' KEYS (k) AS store_v0 VERSION AS OF $v0")
-        .collect()(0).getLong(0) == v0)
-      assert(s2.sql(s"PIN TXLOG '$dir' KEYS (k) AS store_now")
-        .collect()(0).getLong(0) == v2)
-      def rows(view: String) = s2.sql(s"SELECT k, v FROM $view")
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-      assert(rows("store_v0") == Set(("a", 1), ("b", 2)))
-      assert(rows("store_now") == Set(("a", 1), ("b", 9), ("c", 7)))
-      val hist = s2.sql(s"DESCRIBE TXLOG '$dir/table'").collect()
-      assert(hist.length == 3)
-      assert(hist.forall(_.getString(1) == "upsert"))
-      // n_rows = manifest-recorded physical rows at each version
-      assert(hist.map(r => (r.getLong(0), r.getLong(3))).toSeq ==
-        Seq((v0, 2L), (v1, 3L), (v2, 4L)))
-
-      // USING is restricted to QUERIES: a command placed there is
-      // rejected up front and must NOT execute as a side effect (spark
-      // .sql runs commands eagerly — ungated, this CREATE VIEW would
-      // run with session privileges and the merge would then commit the
-      // command's empty output as a junk batch)
-      intercept[Exception](s2.sql(
-        s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH 9 " +
-          "USING CREATE OR REPLACE TEMP VIEW pwned AS SELECT 'z' AS k, 0 AS v"))
-      assert(!s2.catalog.tableExists("pwned"),
-        "the command in USING must not have executed")
-      assert(s2.sql(s"DESCRIBE TXLOG '$dir/table'").collect().length == 3,
-        "no junk batch committed")
-
-      // a typo'd key column fails loudly BEFORE anything durable
-      // happens — this SQL boundary is where user-typed key names first
-      // meet a schema; committing would leave the store unreadable
-      val keyErr = intercept[Exception](s2.sql(
-        s"MERGE INTO TXLOG '$dir' KEYS (kk) BATCH 9 " +
-          "USING SELECT 'z' AS k, 0 AS v"))
-      assert(keyErr.getMessage.contains("kk"))
-      assert(s2.sql(s"DESCRIBE TXLOG '$dir/table'").collect().length == 3)
-
-      // a malformed statement falls through to the delegate parser and
-      // fails as ordinary SQL — the injection never shadows real errors
-      intercept[Exception](s2.sql("MERGE INTO TXLOG missing-quotes"))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
-    }
-  }
-
-  test("SQL VACUUM/COMPACT TXLOG: store maintenance purely through spark.sql") {
-    val base = SparkSpecBase.session
-    val prior = SparkSession.getActiveSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val ext = Class.forName("graft.GraftExtensions")
-        .getDeclaredConstructor().newInstance()
-        .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
-      val s2 = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(ext)
-        .config("spark.sql.shuffle.partitions", "4")
-        .getOrCreate()
-      assert(s2 ne base)
-      val dir = java.nio.file.Files.createTempDirectory("txlog-sql-maint").toString
-
-      (1 to 3).foreach { b =>
-        s2.sql(s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH $b " +
-          s"USING SELECT 'k$b' AS k, $b AS v"): Unit
-      }
-      def rows() = {
-        s2.sql(s"PIN TXLOG '$dir' KEYS (k) AS maint_now"): Unit
-        s2.sql("SELECT k, v FROM maint_now")
-          .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-      }
-      val before = rows()
-      assert(before == Set(("k1", 1), ("k2", 2), ("k3", 3)))
-
-      // keyed compaction with retention left to the caller (KEEP 0):
-      // history collapses the three upsert entries into one rewrite
-      // commit, every prior version stays pinned-readable
-      val vC = s2.sql(s"COMPACT TXLOG '$dir' KEYS (k) KEEP 0 VERSIONS")
-        .collect()(0).getLong(0)
-      assert(vC == 3L, "compact must commit one replace version")
-      assert(rows() == before, "compaction changed table contents")
-      assert(s2.sql(s"DESCRIBE TXLOG '$dir/table'").collect().length == 4)
-      assert(s2.sql(s"PIN TXLOG '$dir' KEYS (k) AS maint_v0 VERSION AS OF 0")
-        .collect()(0).getLong(0) == 0L) // KEEP 0 retained the history
-
-      // now expire: KEEP 2 first, then KEEP 1 with zero grace
-      assert(s2.sql(s"VACUUM TXLOG '$dir/table' KEEP 2 VERSIONS")
-        .collect()(0).getLong(0) == 2L)
-      assert(s2.sql(
-        s"VACUUM TXLOG '$dir/table' KEEP 1 VERSIONS GRACE 0 SECONDS")
-        .collect()(0).getLong(0) == 1L)
-      assert(rows() == before, "vacuum changed current table contents")
-
-      // store-ROOT maintenance: DESCRIBE/VACUUM accept the same
-      // MergeWriter store root MERGE/PIN address (resolved to its
-      // /table child) — previously a silent no-op over an empty log
-      assert(s2.sql(s"DESCRIBE TXLOG '$dir'").collect().length ==
-        s2.sql(s"DESCRIBE TXLOG '$dir/table'").collect().length)
-      assert(s2.sql(s"VACUUM TXLOG '$dir' KEEP 1 VERSIONS GRACE 0 SECONDS")
-        .collect()(0).getLong(0) == 1L)
-      // a path with no commit log anywhere fails loudly instead of
-      // reporting a successful vacuum over nothing
-      intercept[Exception](
-        s2.sql(s"VACUUM TXLOG '$dir-nowhere' KEEP 1 VERSIONS").collect())
-
-      // keyed COMPACT validates its path: the raw TABLE root (which
-      // VACUUM accepts) and a missing path both fail loudly instead of
-      // no-op "compacting" a store implied into existence
-      intercept[Exception](
-        s2.sql(s"COMPACT TXLOG '$dir/table' KEYS (k)").collect())
-      intercept[Exception](
-        s2.sql(s"COMPACT TXLOG '$dir-nowhere' KEYS (k)").collect())
-
-      // keyed COMPACT honors MIN n ENTRIES: after two fresh upserts the
-      // 3-entry history (compacted + 2) is below MIN 5 and must be left
-      // alone; MIN 3 then collapses it
-      s2.sql(s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH 4 " +
-        "USING SELECT 'k4' AS k, 4 AS v"): Unit
-      s2.sql(s"MERGE INTO TXLOG '$dir' KEYS (k) BATCH 5 " +
-        "USING SELECT 'k5' AS k, 5 AS v"): Unit
-      def storeEntries() =
-        new graft.store.TxLog(s"$dir/table").snapshot().entries.size
-      assert(storeEntries() == 3)
-      s2.sql(s"COMPACT TXLOG '$dir' KEYS (k) MIN 5 ENTRIES KEEP 0 VERSIONS")
-        .collect(): Unit
-      assert(storeEntries() == 3, "MIN 5 ENTRIES must skip a 3-entry history")
-      s2.sql(s"COMPACT TXLOG '$dir' KEYS (k) MIN 3 ENTRIES KEEP 0 VERSIONS")
-        .collect(): Unit
-      assert(storeEntries() == 1, "MIN 3 ENTRIES must compact a 3-entry history")
-      assert(rows() == before ++ Set(("k4", 4), ("k5", 5)))
-
-      // partition-scoped compaction (no KEYS): two partitioned appends
-      // accumulate two entries per week; COMPACT merges them
-      val proot = java.nio.file.Files.createTempDirectory("txlog-sql-part")
-        .toString + "/t"
-      val plog = new graft.store.TxLog(proot)
-      import org.apache.spark.sql.functions.col
-      import s2.implicits._
-      (0 until 2).foreach { i =>
-        plog.writePartitionedAppend(
-          Seq(("w1", i), ("w2", i + 10)).toDF("wk", "n"),
-          col("wk"), statsCols = Seq("n")): Unit
-      }
-      assert(plog.snapshot().entries.size == 4)
-      val vP = s2.sql(s"COMPACT TXLOG '$proot' MIN 2 ENTRIES KEEP 1 VERSIONS")
-        .collect()(0).getLong(0)
-      assert(vP == 2L)
-      assert(plog.snapshot().entries.size == 2, "partitions not merged")
-      assert(plog.read(s2).get.count() == 4)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach { p => SparkSession.setDefaultSession(p); SparkSession.setActiveSession(p) }
-    }
-  }
 }

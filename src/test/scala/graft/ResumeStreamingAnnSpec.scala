@@ -114,11 +114,11 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     // intra-run durability: each wave committed separately — a crash
     // between waves loses at most one wave (4 buckets / wave size 1 =
     // 4 append commits in the checkpoint log, vs 1 for the single pass)
-    val waveCommits = new graft.store.TxLog(s"$waveDir/checkpoints").history()
-    val oneCommits = new graft.store.TxLog(s"$oneDir/checkpoints").history()
-    assert(waveCommits.size == buckets,
-      s"expected one checkpoint commit per wave, got ${waveCommits.size}")
-    assert(oneCommits.size == 1)
+    val waveCommits = new graft.store.TxLog(s"$waveDir/checkpoints").versionCount()
+    val oneCommits = new graft.store.TxLog(s"$oneDir/checkpoints").versionCount()
+    assert(waveCommits == buckets,
+      s"expected one checkpoint commit per wave, got $waveCommits")
+    assert(oneCommits == 1)
     val store = new CheckpointStore(spark, waveDir)
     assert(store.completedBuckets("signatures", s"${cfg.configTag}-b$buckets")
       == (0 until buckets).toSet)
@@ -133,7 +133,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
 
     // re-entry is a no-op: nothing missing, no new commits
     ResumableDedupJob.signaturesStage(docs, cfg, waveDir, buckets, waveBuckets = 1)
-    assert(new graft.store.TxLog(s"$waveDir/checkpoints").history().size == buckets)
+    assert(new graft.store.TxLog(s"$waveDir/checkpoints").versionCount() == buckets)
   }
 
   test("signatures stage is total on an empty corpus and resume does not wedge") {
@@ -258,7 +258,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
       val dir = tmpDir("graft-files")
       val docs = fileDocs().repartition(3)
       ResumableDedupJob.signaturesStage(docs, cfg, dir, buckets, waveBuckets = wb)
-      val waves = new graft.store.TxLog(s"$dir/checkpoints").history().size
+      val waves = new graft.store.TxLog(s"$dir/checkpoints").versionCount()
       assert(waves == (if (wb == 0) 1 else buckets))
       val table = sigTableDir(dir, buckets)
       assert(dataFiles(table).size <= waves * 3,

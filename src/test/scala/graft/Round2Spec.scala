@@ -124,35 +124,6 @@ class Round2Spec extends SparkSpecBase {
     assert(slice == Seq(2L, 3L))
   }
 
-  test("merge store: compaction preserves read() and collapses history; upserts continue") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val w = new graft.store.MergeWriter(spark, dir, Seq("url"))
-    w.upsert(Seq(("u1", 10), ("u2", 20)).toDF("url", "v"), batchId = 1)
-    w.upsert(Seq(("u2", 21), ("u3", 30)).toDF("url", "v"), batchId = 2)
-    w.upsert(Seq(("u1", 11)).toDF("url", "v"), batchId = 3)
-    val before = w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(before == Set(("u1", 11), ("u2", 21), ("u3", 30)))
-    w.compact(vacuumGraceMs = 0L)
-    val snap = w.txLog.snapshot()
-    assert(snap.entries.size == 1 &&
-      snap.entries.head.batch == graft.store.MergeWriter.CompactedEntryTag,
-      s"history not collapsed: ${snap.entries}")
-    // vacuum reclaimed the superseded data dirs: only the compacted one
-    val dataDirs = Option(new java.io.File(s"$dir/table/data").listFiles())
-      .getOrElse(Array.empty).map(_.getName).toSeq
-    assert(dataDirs.size == 1, s"superseded data dirs not vacuumed: $dataDirs")
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet == before)
-    // post-compaction upsert still wins over compacted state
-    w.upsert(Seq(("u3", 31)).toDF("url", "v"), batchId = 4)
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("u1", 11), ("u2", 21), ("u3", 31)))
-    // retried batch replaces itself even with different values
-    w.upsert(Seq(("u3", 32)).toDF("url", "v"), batchId = 4)
-    assert(w.read().where(col("url") === "u3").head.getInt(1) == 32)
-  }
-
   test("scene segmentation: per-item percentile threshold cuts, segment stats (hand oracle)") {
     val spark2 = spark
     import spark2.implicits._

@@ -60,16 +60,6 @@ class ServingAndGraphSpec extends SparkSpecBase {
     assert(res(99L) == 2) // 0 -> 100 -> 99
   }
 
-  test("edgesWithin returns exactly the edges inside a member set") {
-    val e = edgeDf(chains)
-    val members = Serving.nHopCluster(e, 0L, 2)
-      .select(col("doc_id"))
-    val within = Serving.edgesWithin(e, members).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(within.map(t => Set(t._1, t._2)) ==
-      Set(Set(0L, 1L), Set(1L, 2L), Set(0L, 11L), Set(11L, 12L)))
-  }
-
   test("counts pass: total/related/duplicates/unique with thresholds") {
     val docs = docDf(Seq(1L, 2L, 3L, 4L, 5L))
     val e = edgeDf(Seq((1L, 2L, 0.95), (2L, 3L, 0.6)))

@@ -1,82 +1,65 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.queries.Metrics
-import graft.store.MergeWriter
+import graft.store.{TxEntry, TxLog}
 
-/** MergeWriter upsert-idempotency tests (reference
+/** The store's batch-fold model over the raw transaction log (reference
   * `tests/winnow/storage/test_db_result_storage.py:66-93`: write->check,
   * update->check, no entity duplication) and metric-harness checks.
   */
 class StoreAndMetricsSpec extends SparkSpecBase {
 
-  test("merge writer: insert, update, no duplication, idempotent rewrite") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-merge").toString
-    val w = new MergeWriter(spark, dir, Seq("url"))
-
-    w.upsert(Seq(("u1", 10), ("u2", 20)).toDF("url", "v"), batchId = 1)
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("u1", 10), ("u2", 20)))
-
-    // update u2, insert u3 (merge: matched update, unmatched insert)
-    w.upsert(Seq(("u2", 21), ("u3", 30)).toDF("url", "v"), batchId = 2)
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("u1", 10), ("u2", 21), ("u3", 30)))
-
-    // no entity duplication
-    assert(w.read().groupBy("url").count().where(col("count") > 1).count() == 0)
-
-    // idempotent re-write of the same batch id replaces itself
-    w.upsert(Seq(("u2", 21), ("u3", 30)).toDF("url", "v"), batchId = 2)
-    assert(w.read().count() == 3)
-  }
-
   test("randomized op sequence matches a batch-fold model (upsert/redeliver/compact/vacuum/time-travel)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-merge-rand").toString
-    val w = new MergeWriter(spark, dir, Seq("k"))
+    val log = new TxLog(java.nio.file.Files.createTempDirectory("graft-log-rand").toString)
     val rnd = new scala.util.Random(fuzzSeed(20260819L))
     val keySpace = (0 until 12).map(i => f"k$i%02d")
 
-    // exact model: the store's view is the batch-id-ordered fold of the
-    // live batches' key→value maps. Compaction collapses the history
-    // into one max-batch-tagged row set, after which REDELIVERING an
-    // older batch id is only idempotent for identical content (the
-    // compacted rows outrank it) — so redelivery here is restricted to
-    // post-compaction ids, where replace-by-batch-id semantics hold and
-    // the fold model is exact. (The production streaming writer obeys
-    // the same discipline: micro-batch ids are monotone and a replay
-    // carries the same content.)
-    val batches = scala.collection.mutable.SortedMap.empty[Long, Map[String, Int]]
+    // exact model: the store's rows are the multiset union of the live
+    // batches' rows. A batch commit replaces the live entries of its
+    // batch id (`replaceBatch`), so a redelivered batch replaces itself.
+    // A rewrite (one `commitReplace` of the whole snapshot, as the
+    // ingest stores compact) keeps the rows and tags them -1, after
+    // which redelivering an older batch id would add its rows again —
+    // so redelivery is restricted to ids committed since the last
+    // rewrite. (The streaming writer obeys the same discipline: batch
+    // ids are monotone and a replay carries the same content.)
+    val batches = scala.collection.mutable.SortedMap.empty[Long, Seq[(String, Int)]]
     val redeliverable = scala.collection.mutable.Set.empty[Long]
-    def view: Map[String, Int] =
-      batches.values.foldLeft(Map.empty[String, Int])(_ ++ _)
-    def randomContent(): Map[String, Int] =
+    def view: Seq[(String, Int)] = batches.values.flatten.toSeq.sorted
+    def randomContent(): Seq[(String, Int)] =
       rnd.shuffle(keySpace).take(1 + rnd.nextInt(5))
-        .map(k => k -> rnd.nextInt(1000)).toMap
-    def upsert(b: Long, content: Map[String, Int]): Long =
-      w.upsert(content.toSeq.toDF("k", "v"), b)
-    def check(df: org.apache.spark.sql.DataFrame, expect: Map[String, Int],
+        .map(k => k -> rnd.nextInt(1000))
+    def upsert(b: Long, content: Seq[(String, Int)]): Long = {
+      val dir = log.newDataDir()
+      content.toDF("k", "v").write.parquet(dir.getPath)
+      log.commitAppend(Seq(TxEntry(log.relativize(dir), b,
+        rows = TxLog.footerRowCount(dir))), replaceBatch = Some(b))
+    }
+    def rewrite(): Boolean = {
+      val snap = log.snapshot()
+      val dir = log.newDataDir()
+      log.readSnapshot(spark, snap).write.parquet(dir.getPath)
+      log.commitReplace(Seq(TxEntry(log.relativize(dir), -1L,
+        rows = TxLog.footerRowCount(dir))), snap.version)
+    }
+    def check(df: org.apache.spark.sql.DataFrame, expect: Seq[(String, Int)],
               what: String): Unit = {
-      val got = df.collect().map(r => r.getString(0) -> r.getInt(1)).toSeq
-      assert(got.map(_._1).distinct.size == got.size,
-        s"$what: duplicate keys in ${got.sortBy(_._1)}")
-      assert(got.toMap == expect, s"$what: got ${got.toMap} want $expect")
+      val got = df.collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+      assert(got == expect, s"$what: got $got want $expect")
     }
 
     // pinned versions recorded as we go; all manifests retained below
     // (keepVersions far above the op count), so every recorded version
     // must reconstruct exactly at the end
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[(Long, Map[String, Int])]
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(String, Int)])]
 
     upsert(0L, { val c = randomContent(); batches(0L) = c; redeliverable += 0L; c })
     var step = 1L
     (1 to 21).foreach { _ =>
       rnd.nextInt(10) match {
-        case n if n <= 5 => // fresh upsert, monotone batch id
+        case n if n <= 5 => // fresh batch, monotone batch id
           val c = randomContent()
           val v = upsert(step, c)
           batches(step) = c; redeliverable += step
@@ -87,24 +70,27 @@ class StoreAndMetricsSpec extends SparkSpecBase {
           val c = randomContent()
           upsert(b, c)
           batches(b) = c
-        case 8 => // compact: view-preserving, collapses batch history
-          w.compact(keepVersions = 1000, minEntries = 2)
-          val maxBatch = batches.keys.max
+        case 8 => // rewrite: row-preserving, collapses the batch history
+          assert(rewrite(), "an uncontended rewrite lost its CAS")
           val v = view
-          batches.clear(); batches(maxBatch) = v
+          batches.clear(); batches(-1L) = v
           redeliverable.clear()
         case _ => // vacuum with everything retained: must change nothing
-          w.txLog.vacuum(keepVersions = 1000)
+          log.vacuum(keepVersions = 1000)
       }
-      check(w.read(), view, s"after step $step")
+      check(log.read(spark).get, view, s"after step $step")
+      assert(log.snapshot().rowCount.contains(view.size.toLong),
+        s"manifest row count after step $step")
     }
-    // time travel: every pinned pre/post-compaction version reconstructs
+    // time travel: every pinned pre/post-rewrite version reconstructs
     pinned.foreach { case (v, expect) =>
-      check(w.readAsOf(v), expect, s"readAsOf($v)")
+      check(log.readSnapshot(spark, log.snapshotAt(v)), expect, s"snapshotAt($v)")
     }
-    // and a final compact + vacuum leaves exactly the live view
-    w.compact(keepVersions = 1, minEntries = 2)
-    check(w.read(), view, "after final compact")
+    // and a final rewrite + vacuum leaves exactly the live view
+    assert(rewrite())
+    log.vacuum(keepVersions = 1, orphanGraceMs = 0L)
+    assert(log.snapshot().entries.size == 1 && log.versionCount() == 1)
+    check(log.read(spark).get, view, "after final rewrite")
   }
 
   test("mAP: perfect ranking = 1.0; worst ranking < 1; no-truth queries excluded") {

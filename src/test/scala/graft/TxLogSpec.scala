@@ -4,7 +4,8 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.store.{MergeWriter, TxEntry, TxLog}
+import graft.store.{TxEntry, TxLog}
+import org.apache.spark.sql.DataFrame
 
 /** Transaction-log table format: atomicity, optimistic concurrency
   * (concurrent writers never lose updates), crash-safety (orphans and
@@ -17,33 +18,40 @@ class TxLogSpec extends SparkSpecBase {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  test("append commits merge and version monotonically; read is last-writer-wins") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = tmp("txlog-basic")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    assert(!w.exists())
-    w.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"), batchId = 1)
-    w.upsert(Seq(("b", 3)).toDF("k", "v"), batchId = 2)
-    assert(w.txLog.currentVersion() == 1L) // versions 0 and 1
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("a", 1), ("b", 3)))
+  /** Stages `df` and commits it as batch `batch`, dropping the live
+    * entries of that batch id first: the log's batch-level upsert, so a
+    * re-delivered batch replaces itself (the IVF centroid store commits
+    * this way). Returns the committed version.
+    */
+  private def upsert(log: TxLog, df: DataFrame, batch: Long): Long = {
+    val dir = log.newDataDir()
+    df.write.parquet(dir.getPath)
+    log.commitAppend(Seq(TxEntry(log.relativize(dir), batch,
+      rows = TxLog.footerRowCount(dir))), replaceBatch = Some(batch),
+      schemaJson = Some(df.schema.json))
   }
+
+  /** The table as of a retained version (snapshot-isolation read). */
+  private def readAsOf(log: TxLog, version: Long): DataFrame =
+    log.readSnapshot(spark, log.snapshotAt(version))
+
+  private def pairs(df: DataFrame): Set[(String, Int)] =
+    df.collect().map(r => (r.getString(0), r.getInt(1))).toSet
 
   test("concurrent upserts from multiple threads: no lost updates, every version distinct") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-conc")
-    val w = new MergeWriter(spark, dir, Seq("k"))
+    val log = new TxLog(tmp("txlog-conc"))
     val nThreads = 4
     val perThread = 5
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val versions = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val threads = (0 until nThreads).map { t =>
       new Thread(() => {
         try {
           (0 until perThread).foreach { i =>
             val batch = t * perThread + i + 1
-            w.upsert(Seq((s"k$t-$i", batch)).toDF("k", "v"), batchId = batch.toLong)
+            versions.add(upsert(log, Seq((s"k$t-$i", batch)).toDF("k", "v"), batch.toLong))
           }
         } catch { case e: Throwable => errors.add(e); () }
       })
@@ -51,75 +59,75 @@ class TxLogSpec extends SparkSpecBase {
     threads.foreach(_.start())
     threads.foreach(_.join())
     assert(errors.isEmpty, s"writer errors: ${errors.toArray.mkString(", ")}")
-    // every commit landed: one entry per batch, one row per key
-    val snap = w.txLog.snapshot()
-    assert(snap.entries.size == nThreads * perThread,
-      s"lost commits: ${snap.entries.size} of ${nThreads * perThread}")
-    assert(snap.version == nThreads * perThread - 1L)
-    assert(w.read().count() == nThreads * perThread)
+    // every commit landed at its own version: one entry per batch, one
+    // row per key
+    val n = nThreads * perThread
+    assert(versions.toArray.toSet == (0L until n).toSet)
+    val snap = log.snapshot()
+    assert(snap.entries.size == n, s"lost commits: ${snap.entries.size} of $n")
+    assert(snap.entries.map(_.batch).toSet == (1L to n).toSet)
+    assert(snap.version == n - 1L)
+    assert(log.read(spark).get.count() == n)
   }
 
   test("compaction races a concurrent writer safely (replace commit aborts on conflict)") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-race")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    (1 to 4).foreach(b => w.upsert(Seq((s"k$b", b)).toDF("k", "v"), b.toLong))
+    val log = new TxLog(tmp("txlog-race"))
+    def write(b: Int): Unit =
+      log.writePartitionedAppend(Seq((s"k$b", b)).toDF("k", "v"),
+        (col("v") % 2).cast("string"), statsCols = Nil, batch = b.toLong): Unit
+    (1 to 4).foreach(write)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val writer = new Thread(() => {
-      try (5 to 10).foreach { b =>
-        w.upsert(Seq((s"k$b", b)).toDF("k", "v"), b.toLong)
-      } catch { case e: Throwable => errors.add(e); () }
+      try (5 to 10).foreach(write)
+      catch { case e: Throwable => errors.add(e); () }
     })
     val compactor = new Thread(() => {
-      try (0 until 3).foreach { _ => w.compact(vacuumGraceMs = 60000L) }
+      try (0 until 3).foreach { _ => log.compactPartitions(spark, vacuumGraceMs = 60000L) }
       catch { case e: Throwable => errors.add(e); () }
     })
     writer.start(); compactor.start()
     writer.join(); compactor.join()
     assert(errors.isEmpty, s"errors: ${errors.toArray.mkString(", ")}")
     // no write was lost regardless of which compactions won their CAS
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      (1 to 10).map(b => (s"k$b", b)).toSet)
+    assert(pairs(log.read(spark).get) == (1 to 10).map(b => (s"k$b", b)).toSet)
   }
 
   test("crash artifacts are invisible: orphan data dir + torn manifest tmp never corrupt reads") {
     val spark2 = spark
     import spark2.implicits._
     val dir = tmp("txlog-crash")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-    val before = w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet
+    val log = new TxLog(dir)
+    log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
+    val before = pairs(log.read(spark).get)
 
     // crash between data write and commit: orphan data directory
-    val orphan = w.txLog.newDataDir()
-    Seq(("ghost", 99)).toDF("k", "v").withColumn("_batch", lit(99L))
-      .write.parquet(orphan.getPath)
+    val orphan = log.newDataDir()
+    Seq(("ghost", 99)).toDF("k", "v").write.parquet(orphan.getPath)
     // crash mid-manifest-write: torn temp file in the log dir
-    val torn = new File(s"$dir/table/_log/.tmp-torn")
+    val torn = new File(s"$dir/_log/.tmp-torn")
     Files.write(torn.toPath, """{"version":7,"op":"appe""".getBytes("UTF-8"))
 
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet == before,
-      "uncommitted data must be invisible")
+    assert(pairs(log.read(spark).get) == before, "uncommitted data must be invisible")
     // vacuum with zero grace reclaims both artifacts
-    w.txLog.vacuum(keepVersions = 1, orphanGraceMs = 0L)
+    log.vacuum(keepVersions = 1, orphanGraceMs = 0L)
     assert(!orphan.exists(), "orphan data dir survives vacuum")
     assert(!torn.exists(), "torn manifest tmp survives vacuum")
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet == before)
+    assert(pairs(log.read(spark).get) == before)
   }
 
   test("vacuum orphan age is the tree's newest mtime: an in-flight staged write past the grace window survives") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-stagedage")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
+    val log = new TxLog(tmp("txlog-stagedage"))
+    log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
 
     // simulate a long-running Spark stage: the job writes only under
     // _temporary/ until job commit, so every path the OS timestamps at
     // write time is DEEP in the tree — the top-level dir mtime froze at
     // job start, which here is backdated past the grace window
-    val staged = w.txLog.newDataDir()
+    val staged = log.newDataDir()
     val taskDir = new File(staged, "_temporary/0/_temporary/attempt_1/")
     assert(taskDir.mkdirs())
     Files.write(new File(taskDir, "part-00000.parquet").toPath,
@@ -129,7 +137,7 @@ class TxLogSpec extends SparkSpecBase {
     assert(new File(staged, "_temporary").setLastModified(old))
     assert(new File(staged, "_temporary/0").setLastModified(old))
 
-    w.txLog.vacuum(keepVersions = 1, orphanGraceMs = 60000L)
+    log.vacuum(keepVersions = 1, orphanGraceMs = 60000L)
     assert(staged.exists(),
       "vacuum deleted a staged directory whose stage is still writing " +
         "(top-level mtime is stale during a long Spark write)")
@@ -142,104 +150,78 @@ class TxLogSpec extends SparkSpecBase {
       f.setLastModified(old): Unit
     }
     backdate(staged)
-    w.txLog.vacuum(keepVersions = 1, orphanGraceMs = 60000L)
+    log.vacuum(keepVersions = 1, orphanGraceMs = 60000L)
     assert(!staged.exists(), "all-old crash orphan survived vacuum")
-  }
-
-  test("retried upsert of the latest batch after compaction does not wipe the table") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = tmp("txlog-retrycompact")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("k1", 1)).toDF("k", "v"), batchId = 1)
-    w.upsert(Seq(("k2", 2)).toDF("k", "v"), batchId = 2)
-    w.compact(vacuumGraceMs = 0L)
-    // batch 2 is re-delivered after a crash: replaceBatch must drop only
-    // batch 2's own entry — the compacted all-history entry carries a
-    // reserved tag precisely so this retry can't wipe k1
-    w.upsert(Seq(("k2", 2)).toDF("k", "v"), batchId = 2)
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("k1", 1), ("k2", 2)),
-      "retry of the compacted max batch wiped other keys")
-    intercept[IllegalArgumentException] {
-      w.upsert(Seq(("x", 0)).toDF("k", "v"), graft.store.MergeWriter.CompactedEntryTag)
-    }
   }
 
   test("replace commit with a stale expected version fails and changes nothing") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-stale")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-    val staleVersion = w.txLog.currentVersion()
-    w.upsert(Seq(("b", 2)).toDF("k", "v"), batchId = 2)
-    val d = w.txLog.newDataDir()
-    Seq(("x", 0)).toDF("k", "v").withColumn("_batch", lit(9L)).write.parquet(d.getPath)
-    assert(!w.txLog.commitReplace(
-      Seq(TxEntry(w.txLog.relativize(d), 9L)), staleVersion),
+    val log = new TxLog(tmp("txlog-stale"))
+    log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
+    val staleVersion = log.currentVersion()
+    log.writeAppend(Seq(("b", 2)).toDF("k", "v"), batch = 2L)
+    val d = log.newDataDir()
+    Seq(("x", 0)).toDF("k", "v").write.parquet(d.getPath)
+    assert(!log.commitReplace(Seq(TxEntry(log.relativize(d), 9L)), staleVersion),
       "stale replace must lose the CAS")
-    assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-      Set(("a", 1), ("b", 2)))
+    assert(pairs(log.read(spark).get) == Set(("a", 1), ("b", 2)))
   }
 
   test("vacuum retention: keepVersions=2 preserves the previous snapshot's files") {
     val spark2 = spark
     import spark2.implicits._
     val dir = tmp("txlog-retain")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-    val oldSnap = w.txLog.snapshot()
-    w.upsert(Seq(("b", 2)).toDF("k", "v"), batchId = 2)
-    w.txLog.vacuum(keepVersions = 2, orphanGraceMs = 0L)
+    val log = new TxLog(dir)
+    log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
+    val oldSnap = log.snapshot()
+    // a rewrite supersedes the first data directory
+    val d = log.newDataDir()
+    Seq(("b", 2)).toDF("k", "v").write.parquet(d.getPath)
+    assert(log.commitReplace(Seq(TxEntry(log.relativize(d), 2L)), oldSnap.version))
+    log.vacuum(keepVersions = 2, orphanGraceMs = 0L)
     // the previous version's manifest AND data remain readable (snapshot
     // isolation for a long-running reader)
-    val oldDf = w.txLog.readSnapshot(spark, w.txLog.snapshotAt(oldSnap.version))
-    assert(oldDf.select("k").as[String].collect().toSet == Set("a"))
+    assert(readAsOf(log, oldSnap.version).select("k").as[String].collect().toSet == Set("a"))
     // but keepVersions=1 expires it
-    w.txLog.vacuum(keepVersions = 1, orphanGraceMs = 0L)
-    assert(!new File(s"$dir/table/_log/v${"%012d".format(oldSnap.version)}.json").exists())
+    log.vacuum(keepVersions = 1, orphanGraceMs = 0L)
+    assert(!new File(s"$dir/_log/v${"%012d".format(oldSnap.version)}.json").exists())
+    assert(!new File(dir, oldSnap.entries.head.path).exists())
+    assert(pairs(log.read(spark).get) == Set(("b", 2)))
   }
 
   test("time travel: readAsOf reconstructs every retained version exactly") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-travel")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"), batchId = 1)
-    val v0 = w.txLog.currentVersion()
-    w.upsert(Seq(("b", 3), ("c", 4)).toDF("k", "v"), batchId = 2)
-    val v1 = w.txLog.currentVersion()
-    w.upsert(Seq(("a", 9)).toDF("k", "v"), batchId = 3)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(rows(w.readAsOf(v0)) == Set(("a", 1), ("b", 2)))
-    assert(rows(w.readAsOf(v1)) == Set(("a", 1), ("b", 3), ("c", 4)))
-    assert(rows(w.read()) == Set(("a", 9), ("b", 3), ("c", 4)))
+    val log = new TxLog(tmp("txlog-travel"))
+    val v0 = upsert(log, Seq(("a", 1), ("b", 2)).toDF("k", "v"), batch = 1L)
+    val v1 = upsert(log, Seq(("b", 3), ("c", 4)).toDF("k", "v"), batch = 2L)
+    // batch 2 re-delivered with other rows replaces itself; v1 keeps it
+    upsert(log, Seq(("a", 9)).toDF("k", "v"), batch = 2L)
+    assert(pairs(readAsOf(log, v0)) == Set(("a", 1), ("b", 2)))
+    assert(pairs(readAsOf(log, v1)) == Set(("a", 1), ("b", 2), ("b", 3), ("c", 4)))
+    assert(pairs(log.read(spark).get) == Set(("a", 1), ("b", 2), ("a", 9)))
     // a vacuumed-past version fails loudly, current state unaffected
-    w.txLog.vacuum(keepVersions = 1, orphanGraceMs = 0L)
-    intercept[Exception] { w.readAsOf(v0).collect() }
-    assert(rows(w.read()) == Set(("a", 9), ("b", 3), ("c", 4)))
+    log.vacuum(keepVersions = 1, orphanGraceMs = 0L)
+    intercept[Exception] { readAsOf(log, v0).collect() }
+    assert(pairs(log.read(spark).get) == Set(("a", 1), ("b", 2), ("a", 9)))
   }
 
   test("corrupt data file FAILS the read loudly (never classified as empty store)") {
     val spark2 = spark
     import spark2.implicits._
     val dir = tmp("txlog-corrupt")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"), batchId = 1)
+    val log = new TxLog(dir)
+    log.writeAppend(Seq(("a", 1), ("b", 2)).toDF("k", "v"), batch = 1L)
     // truncate every parquet part file in the live data dir (torn disk)
-    val snap = w.txLog.snapshot()
-    val live = new File(s"$dir/table", snap.entries.head.path)
+    val snap = log.snapshot()
+    val live = new File(dir, snap.entries.head.path)
     val parts = live.listFiles().filter(_.getName.endsWith(".parquet"))
     assert(parts.nonEmpty)
     parts.foreach(p => Files.write(p.toPath, Array[Byte](1, 2, 3)))
-    val ex = intercept[Exception] { w.read().collect() }
-    assert(ex != null)
-    // and the log-level read() reports Some(corrupt) -> throws, not None
-    intercept[Exception] {
-      w.txLog.read(spark).get.collect()
-    }
+    // read() reports Some(corrupt) -> throws, not None
+    intercept[Exception] { log.read(spark).get.collect() }
+    intercept[Exception] { readAsOf(log, snap.version).collect() }
   }
 
   test("CheckpointStore: corrupt checkpoint table fails loudly instead of reading empty") {
@@ -255,76 +237,6 @@ class TxLogSpec extends SparkSpecBase {
       .foreach(p => Files.write(p.toPath, Array[Byte](0)))
     intercept[Exception] { store.read().collect() }
     intercept[Exception] { store.completedBuckets("stage", "tag") }
-  }
-
-  test("compaction + retried upsert of maxBatch: retry wins deterministically (commit-order tiebreak)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = tmp("txlog-tiebreak")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), batchId = 1)
-    w.upsert(Seq(("b", 2), ("c", 2)).toDF("k", "v"), batchId = 2)
-    w.compact(vacuumGraceMs = 60000L) // rows now stamped _batch = 2
-    // a redelivered batch 2 with DIFFERENT values: same _batch as the
-    // compacted rows, but its manifest entry is later -> it must win
-    w.upsert(Seq(("b", 99), ("c", 99)).toDF("k", "v"), batchId = 2)
-    (1 to 3).foreach { _ =>
-      assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-        Set(("a", 1), ("b", 99), ("c", 99)))
-    }
-  }
-
-  test("commit-order tiebreak survives a store ROOT containing a /data/ path segment") {
-    val spark2 = spark
-    import spark2.implicits._
-    // the _seq extraction must anchor to the path TAIL: an unanchored
-    // /data/([^/]+)/ match would capture "nested" here and zero every
-    // _seq, making the compaction-vs-retry tiebreak nondeterministic
-    val dir = s"${tmp("txlog-dataroot")}/data/nested/sigs"
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), batchId = 1)
-    w.upsert(Seq(("b", 2), ("c", 2)).toDF("k", "v"), batchId = 2)
-    w.compact(vacuumGraceMs = 60000L)
-    w.upsert(Seq(("b", 99), ("c", 99)).toDF("k", "v"), batchId = 2)
-    (1 to 3).foreach { _ =>
-      assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-        Set(("a", 1), ("b", 99), ("c", 99)))
-    }
-  }
-
-  test("SQL time travel: two pinned versions queryable side by side + DESCRIBE HISTORY analog") {
-    val spark2 = spark
-    import spark2.implicits._
-    import graft.store.TxLogSql
-    val dir = tmp("txlog-sql")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), batchId = 1) // version 0
-    w.upsert(Seq(("b", 2), ("c", 2)).toDF("k", "v"), batchId = 2) // version 1
-    TxLogSql.pinView(spark, "store_v0", dir, Seq("k"), version = 0)
-    TxLogSql.pinView(spark, "store_v1", dir, Seq("k"), version = 1)
-    def rows(view: String) =
-      spark.sql(s"SELECT k, v FROM $view ORDER BY k")
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-    assert(rows("store_v0") == Seq(("a", 1), ("b", 1)))
-    assert(rows("store_v1") == Seq(("a", 1), ("b", 2), ("c", 2)))
-    // versions join in ONE SQL statement (the serving use case: diff a
-    // store against its previous snapshot)
-    val changed = spark.sql(
-      """SELECT cur.k FROM store_v1 cur LEFT JOIN store_v0 old ON cur.k = old.k
-        |WHERE old.v IS NULL OR old.v <> cur.v ORDER BY cur.k""".stripMargin)
-      .collect().map(_.getString(0)).toSeq
-    assert(changed == Seq("b", "c"))
-    // a later commit does NOT move a pinned view until re-pinned
-    w.upsert(Seq(("a", 9)).toDF("k", "v"), batchId = 3)
-    assert(rows("store_v1") == Seq(("a", 1), ("b", 2), ("c", 2)))
-    TxLogSql.pinViewLatest(spark, "store_latest", dir, Seq("k"))
-    assert(rows("store_latest") == Seq(("a", 9), ("b", 2), ("c", 2)))
-    // history: one append-style commit per upsert, entry counts grow
-    val hist = TxLogSql.history(spark, s"$dir/table")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
-    assert(hist.map(_._1) == Seq(0L, 1L, 2L))
-    assert(hist.forall(_._2 == "upsert"))
-    assert(hist.map(_._3) == Seq(1, 2, 3))
   }
 
   test("randomized probes: manifest skipping is never lossy (range stats + point blooms)") {
@@ -624,21 +536,19 @@ class TxLogSpec extends SparkSpecBase {
   test("no-hardlink filesystems: commit fails loudly unless the unsafe fallback is opted into") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-nolink")
-    val w = new MergeWriter(spark, dir, Seq("k"))
+    val log = new TxLog(tmp("txlog-nolink"))
     TxLog.simulateNoHardLinks = true
     try {
       val ex = intercept[IllegalStateException] {
-        w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
+        log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
       }
       assert(ex.getMessage.contains(TxLog.UnsafePublishFallbackProp))
-      assert(!w.exists(), "failed publish must not leave a manifest")
+      assert(!log.exists, "failed publish must not leave a manifest")
       // explicit opt-in: the single-JVM atomic-move fallback engages
       System.setProperty(TxLog.UnsafePublishFallbackProp, "true")
       try {
-        w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-        assert(w.read().collect().map(r => (r.getString(0), r.getInt(1))).toSet ==
-          Set(("a", 1)))
+        log.writeAppend(Seq(("a", 1)).toDF("k", "v"), batch = 1L)
+        assert(pairs(log.read(spark).get) == Set(("a", 1)))
       } finally {
         System.clearProperty(TxLog.UnsafePublishFallbackProp); ()
       }
@@ -751,122 +661,100 @@ class TxLogSpec extends SparkSpecBase {
     assert(legacy.read(spark).get.count() == 2)
   }
 
-  test("metadata-only ALTER TABLE: add/drop columns without touching data; lineage enforced on re-add") {
+  test("schema declarations: each write adds or drops columns; a re-added column keeps its first type (column lineage)") {
     val spark2 = spark
     import spark2.implicits._
-    import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
-    val log = new TxLog(tmp("txlog-alter"))
+    val log = new TxLog(tmp("txlog-declare"))
     log.writeAppend(Seq((1L, "a")).toDF("id", "s"))
-    def dataFiles(): Int = {
-      def walk(f: File): Int =
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-        else 1
-      walk(new File(log.root, "data"))
-    }
-    val before = dataFiles()
-    log.alterAddColumn("score", DoubleType)
-    assert(dataFiles() == before, "ALTER must write zero data")
+    // a wider frame adds a column: earlier files read it as null
+    log.writeAppend(Seq((2L, "b", 0.5)).toDF("id", "s", "score"))
     val df = log.read(spark).get
     assert(df.columns.toSeq == Seq("id", "s", "score"))
     assert(df.where(col("score").isNull).count() == 1)
-    // a writer can then fill the altered-in column
-    log.writeAppend(Seq((2L, "b", 0.5)).toDF("id", "s", "score"))
-    assert(log.read(spark).get.where(col("score") === 0.5).count() == 1)
-    // drop is also metadata-only, and the lineage survives it
-    log.alterDropColumn("s")
+    // a narrower frame drops one, and the lineage survives the drop
+    log.writeAppend(Seq((3L, 0.7)).toDF("id", "score"))
     assert(log.read(spark).get.columns.toSeq == Seq("id", "score"))
-    intercept[IllegalArgumentException] {
-      log.alterAddColumn("s", LongType) // s was committed as string
+    val before = log.currentVersion()
+    intercept[IllegalArgumentException] { // s was committed as string
+      log.writeAppend(Seq((4L, 0.1, 7L)).toDF("id", "score", "s"))
     }
-    log.alterAddColumn("s", StringType): Unit // original type: fine
-    assert(log.read(spark).get.columns.toSeq == Seq("id", "score", "s"))
-    // duplicate add is rejected case-insensitively (resolver semantics)
-    intercept[IllegalArgumentException] {
-      log.alterAddColumn("ID", LongType)
-    }
+    assert(log.currentVersion() == before, "rejected commit must not publish")
+    log.writeAppend(Seq((4L, 0.1, "d")).toDF("id", "score", "s")) // original type: fine
+    val back = log.read(spark).get
+    assert(back.columns.toSeq == Seq("id", "score", "s"))
+    assert(back.collect().map(r => (r.getLong(0), Option(r.getString(2)))).toSet ==
+      Set((1L, Some("a")), (2L, Some("b")), (3L, None), (4L, Some("d"))))
   }
 
-  test("schema evolution through MergeWriter: evolved store reads old batches with nulls; readAsOf keeps the old shape") {
+  test("schema evolution through compaction: evolved table reads old entries with nulls; snapshotAt keeps the old shape") {
     val spark2 = spark
     import spark2.implicits._
-    val dir = tmp("txlog-evolve-mw")
-    val w = new MergeWriter(spark, dir, Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 2)).toDF("k", "v"), batchId = 1)
-    val v0 = w.txLog.currentVersion()
-    w.upsert(Seq(("b", 3, 0.7)).toDF("k", "v", "score"), batchId = 2)
-    val now = w.read().collect().map(r =>
+    val log = new TxLog(tmp("txlog-evolve-compact"))
+    log.writePartitionedAppend(Seq(("a", 1), ("b", 2)).toDF("k", "v"),
+      lit("p"), statsCols = Nil)
+    val v0 = log.currentVersion()
+    log.writePartitionedAppend(Seq(("b", 3, 0.7)).toDF("k", "v", "score"),
+      lit("p"), statsCols = Nil)
+    val now = log.read(spark).get.collect().map(r =>
       (r.getString(0), r.getInt(1), Option(r.get(2)))).toSet
-    assert(now == Set(("a", 1, None), ("b", 3, Some(0.7))))
+    assert(now == Set(("a", 1, None), ("b", 2, None), ("b", 3, Some(0.7))))
     // time travel: the pre-evolution version keeps its own schema
-    assert(w.readAsOf(v0).columns.toSeq == Seq("k", "v"))
+    assert(readAsOf(log, v0).columns.toSeq == Seq("k", "v"))
     // compaction carries the evolved schema through the replace commit
-    w.compact(vacuumGraceMs = 60000L)
-    assert(w.read().columns.toSeq == Seq("k", "v", "score"))
-    assert(w.read().where(col("score").isNull).count() == 1)
+    assert(log.compactPartitions(spark, vacuumGraceMs = 60000L))
+    assert(log.snapshot().entries.size == 1)
+    assert(log.read(spark).get.columns.toSeq == Seq("k", "v", "score"))
+    assert(log.read(spark).get.where(col("score").isNull).count() == 2)
   }
 
   test("vacuum age-based retention: young manifests survive count-only expiry; retainMs=0 is count-only") {
     val spark2 = spark
     import spark2.implicits._
     val log = new TxLog(tmp("txlog-retain"))
+    // retained versions, ascending (manifest files are _log/v%012d.json)
+    def retained(l: TxLog): Seq[Long] =
+      new File(l.root, "_log").listFiles().map(_.getName)
+        .collect { case n if n.matches("""v\d{12}\.json""") => n.drop(1).take(12).toLong }
+        .sorted.toSeq
     (1 to 3).foreach(i => log.writeAppend(Seq((i, s"v$i")).toDF("id", "v")): Unit)
-    assert(log.history().size == 3)
+    assert(log.versionCount() == 3)
     // all three manifests are seconds old: a 1h age guard keeps every
     // one of them even though keepVersions=1 would drop two
     log.vacuum(keepVersions = 1, orphanGraceMs = 0L, retainMs = 3600000L)
-    assert(log.history().size == 3, "age guard must override count expiry")
+    assert(log.versionCount() == 3, "age guard must override count expiry")
     assert(log.readSnapshot(spark, log.snapshotAt(0)).count() == 1) // still readable
     // age the first two manifests artificially past the cut
-    log.history() // (manifest files are _log/v%012d.json)
     (0 to 1).foreach { v =>
       val f = new File(new File(log.root, "_log"), f"v$v%012d.json")
       assert(f.setLastModified(System.currentTimeMillis() - 7200000L))
     }
     log.vacuum(keepVersions = 1, orphanGraceMs = 0L, retainMs = 3600000L)
-    assert(log.history().map(_._1) == Seq(2L), "aged manifests expire")
+    assert(retained(log) == Seq(2L), "aged manifests expire")
     assert(log.read(spark).get.count() == 3)
     // retainMs = 0 behaves exactly as before (count-only)
     val log2 = new TxLog(tmp("txlog-retain0"))
     (1 to 3).foreach(i => log2.writeAppend(Seq((i, s"v$i")).toDF("id", "v")): Unit)
     log2.vacuum(keepVersions = 1, orphanGraceMs = 0L)
-    assert(log2.history().map(_._1) == Seq(2L))
+    assert(retained(log2) == Seq(2L))
   }
 
-  test("schema evolution guards are case-insensitive; upsert widens but never narrows; reserved read columns rejected") {
+  test("schema evolution guards are case-insensitive: a case-variant re-add at another type fails at commit") {
     val spark2 = spark
     import spark2.implicits._
-    import org.apache.spark.sql.types.{LongType, StringType}
     // Spark resolves parquet columns case-insensitively, so a
     // case-variant re-add at a new type is a TYPE CHANGE and must fail
     // at commit, not at some later pinned scan
     val log = new TxLog(tmp("txlog-case"))
     log.writeAppend(Seq((1L, 2L)).toDF("id", "Count"))
-    log.alterDropColumn("Count")
+    log.writeAppend(Seq(Tuple1(2L)).toDF("id")) // drops Count
     intercept[IllegalArgumentException] {
-      log.alterAddColumn("count", StringType)
+      log.writeAppend(Seq((3L, "s")).toDF("id", "count"))
     }
-    log.alterAddColumn("count", LongType): Unit // original type: fine
-    intercept[IllegalArgumentException] { // writer-declared case-variant
-      log.writeAppend(Seq((2L, "s")).toDF("id", "COUNT"))
+    log.writeAppend(Seq((3L, 4L)).toDF("id", "count")) // original type: fine
+    intercept[IllegalArgumentException] { // case-variant of a live column
+      log.writeAppend(Seq((4L, "s")).toDF("id", "COUNT"))
     }
-
-    // a batch NARROWER than the table must not hide the table's other
-    // columns (dropping is a deliberate DDL, never a batch side effect)
-    val w = new MergeWriter(spark, tmp("txlog-widen"), Seq("k"))
-    w.upsert(Seq(("a", 1, 0.5), ("b", 2, 0.6)).toDF("k", "v", "score"),
-      batchId = 1)
-    w.upsert(Seq(("b", 3)).toDF("k", "v"), batchId = 2) // narrow batch
-    val df = w.read()
-    assert(df.columns.toSeq == Seq("k", "v", "score"))
-    // row-level MERGE semantics: the narrow batch's winning row carries
-    // null for the column it did not provide; untouched keys keep theirs
-    val got = df.collect()
-      .map(r => (r.getString(0), r.getInt(1), Option(r.get(2)))).toSet
-    assert(got == Set(("a", 1, Some(0.5)), ("b", 3, None)))
-    // read-time reserved names would be silently overwritten + dropped
-    intercept[IllegalArgumentException] {
-      w.upsert(Seq(("c", 1)).toDF("k", "_seq"), batchId = 3)
-    }
+    assert(log.read(spark).get.count() == 3)
   }
 
   test("Bloom point-skip: high-cardinality keys prune to the right directory where min/max cannot") {
@@ -983,7 +871,6 @@ class TxLogSpec extends SparkSpecBase {
   test("legacy columns absent from the first declaration still seed the lineage") {
     val spark2 = spark
     import spark2.implicits._
-    import org.apache.spark.sql.types.{LongType, StringType}
     // legacy (pre-evolution) table whose live files carry `extra:string`
     val log = new TxLog(tmp("txlog-legacy-lineage"))
     val dir = log.newDataDir()
@@ -997,13 +884,13 @@ class TxLogSpec extends SparkSpecBase {
     log.writeAppend(Seq(2L).toDF("id"))
     assert(log.read(spark).get.columns.toSeq == Seq("id"))
     val ex = intercept[IllegalArgumentException] {
-      log.alterAddColumn("extra", LongType)
+      log.writeAppend(Seq((3L, 7L)).toDF("id", "extra"))
     }
     assert(ex.getMessage.contains("extra"))
-    log.alterAddColumn("extra", StringType): Unit // original type: fine
+    log.writeAppend(Seq((3L, "back")).toDF("id", "extra")) // original type: fine
     val rows = log.read(spark).get.collect()
       .map(r => (r.getLong(0), Option(r.getString(1)))).toSet
-    assert(rows == Set((1L, Some("keep-me")), (2L, None)))
+    assert(rows == Set((1L, Some("keep-me")), (2L, None), (3L, Some("back"))))
   }
 
   test("compaction honors vacuum retention: pinned pre-compact snapshots survive keepVersions>1") {
@@ -1021,25 +908,19 @@ class TxLogSpec extends SparkSpecBase {
     assert(log.compactPartitions(spark, vacuumGraceMs = 0L, keepVersions = 3))
     // the pre-compact snapshot is still fully readable: neither its
     // manifest nor its data files were reclaimed
-    assert(log.readSnapshot(spark, log.snapshotAt(pinned)).count() == 1)
-    // keyed-store compaction (MergeWriter.compact) under the same contract
-    val w = new MergeWriter(spark, tmp("txlog-mw-retain"), Seq("k"))
-    w.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-    val v0 = w.txLog.currentVersion()
-    w.upsert(Seq(("a", 2)).toDF("k", "v"), batchId = 2)
-    w.compact(vacuumGraceMs = 0L, keepVersions = 4)
-    assert(w.readAsOf(v0).collect().map(r => (r.getString(0), r.getInt(1)))
-      .toSet == Set(("a", 1)))
+    assert(readAsOf(log, pinned).count() == 1)
     // keepVersions = 0 skips the vacuum entirely (caller owns retention)
-    val w2 = new MergeWriter(spark, tmp("txlog-mw-novac"), Seq("k"))
-    w2.upsert(Seq(("a", 1)).toDF("k", "v"), batchId = 1)
-    w2.upsert(Seq(("a", 2)).toDF("k", "v"), batchId = 2)
-    val preVersions = w2.txLog.history().size
-    w2.compact(vacuumGraceMs = 0L, keepVersions = 0)
-    assert(w2.txLog.history().size == preVersions + 1,
+    val log2 = new TxLog(tmp("txlog-compact-novac"))
+    (1L to 2L).foreach(i => log2.writePartitionedAppend(
+      Seq((i, ts("2026-01-05 00:00:00"))).toDF("id", "ts"), weekExpr, Seq("ts")): Unit)
+    val preVersions = log2.versionCount()
+    val preDirs = new File(log2.root, "data").list().toSet
+    assert(log2.compactPartitions(spark, vacuumGraceMs = 0L, keepVersions = 0))
+    assert(log2.versionCount() == preVersions + 1,
       "keepVersions=0 must leave every manifest in place")
-    assert(w2.read().collect().map(r => (r.getString(0), r.getInt(1)))
-      .toSet == Set(("a", 2)))
+    assert(preDirs.subsetOf(new File(log2.root, "data").list().toSet),
+      "keepVersions=0 must leave every superseded data directory in place")
+    assert(log2.read(spark).get.select("id").as[Long].collect().toSet == Set(1L, 2L))
   }
 
   test("crash-injection matrix: table readable + correct at every kill point; vacuum + next writer heal") {
@@ -1105,7 +986,7 @@ class TxLogSpec extends SparkSpecBase {
         assert(log.compactPartitions(spark, keepVersions = 0))
         Set.empty
       },
-      "replace loser killed before staged cleanup (alter/compact CAS retry)" -> { log =>
+      "replace loser killed before staged cleanup (compact CAS retry)" -> { log =>
         val v = log.currentVersion()
         log.writeAppend( // the competing writer that wins the CAS
           Seq((50L, ts("2026-02-09 00:00:00"))).toDF("id", "ts"))
@@ -1183,13 +1064,13 @@ class TxLogSpec extends SparkSpecBase {
     assert(legacy.snapshot().rowCount.isEmpty)
     legacy.writeAppend(Seq(3L).toDF("id"))
     assert(legacy.snapshot().rowCount.isEmpty, "one legacy entry taints the sum")
-    // keyed store: physical-row upper bound before compaction, exact after
-    val w = new MergeWriter(spark, tmp("txlog-rows-mw"), Seq("k"))
-    w.upsert(Seq(("a", 1), ("b", 1)).toDF("k", "v"), batchId = 1)
-    w.upsert(Seq(("a", 2)).toDF("k", "v"), batchId = 2)
-    assert(w.txLog.snapshot().rowCount.contains(3L)) // a superseded + a,b live
-    w.compact(vacuumGraceMs = 0L)
-    assert(w.txLog.snapshot().rowCount.contains(2L)) // exact after rewrite
+    // a re-delivered batch replaces its entry, and so its count
+    val up = new TxLog(tmp("txlog-rows-redeliver"))
+    upsert(up, Seq(("a", 1), ("b", 1)).toDF("k", "v"), batch = 1L)
+    upsert(up, Seq(("c", 2)).toDF("k", "v"), batch = 2L)
+    assert(up.snapshot().rowCount.contains(3L))
+    upsert(up, Seq(("c", 3), ("d", 3), ("e", 3)).toDF("k", "v"), batch = 2L)
+    assert(up.snapshot().rowCount.contains(5L))
   }
 
   test("string stats pruning compares in UTF-8 byte order (supplementary plane)") {
@@ -1233,7 +1114,7 @@ class TxLogSpec extends SparkSpecBase {
     // reads — the prelude must re-list (progress is guaranteed: a
     // vanished manifest means the other vacuum already retired it),
     // never crash the caller (IvfCentroidStore.loadOrTrain first-caller
-    // races and SQL VACUUM next to MergeWriter.compact are this shape)
+    // races and a vacuum next to a store compaction are this shape)
     @volatile var failure: Option[Throwable] = None
     val racer = new Thread(() => {
       try (0 until 40).foreach { i =>
@@ -1263,7 +1144,10 @@ class TxLogSpec extends SparkSpecBase {
     // an op carrying quotes/backslashes must round-trip, not brick
     // every later parse of the manifest
     assert(log.snapshot().entries.size == 1)
-    assert(log.history().map(_._2) == Seq("load \"v2\"\\nightly"))
-    assert(log.versionCount() == log.history().size)
+    val manifest = new File(log.root, "_log/v000000000000.json")
+    val op = org.json4s.jackson.JsonMethods.parse(
+      new String(Files.readAllBytes(manifest.toPath), "UTF-8")) \ "op"
+    assert(op == org.json4s.JString("load \"v2\"\\nightly"))
+    assert(log.versionCount() == 1)
   }
 }
