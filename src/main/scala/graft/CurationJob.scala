@@ -1,8 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{checkpointed, observed, Dedup, DedupConfig, ResumableDedupJob}
+import graft.pipeline.{checkpointed, observed, release, Dedup, DedupConfig, ResumableDedupJob}
 import graft.queries.Curation
 
 /** End-to-end training-data curation entry point — the funnel a
@@ -112,87 +112,97 @@ object CurationJob {
       val out = fs.create(marker, true)
       try out.write(docsPath.getBytes("UTF-8")) finally out.close()
     }
-    val t0 = System.currentTimeMillis()
-    val raw = spark.read.parquet(docsPath)
-    val (docs, c0) = checkpointed(
-      if (raw.columns.contains("doc_id")) Dedup.fromDocuments(raw) else Dedup.fromPages(raw))
-
-    // 1. exact dedup: one shuffle on the content hash, keep min id
-    val (afterExact, c1) = checkpointed(docs.join(
-      Dedup.exactDuplicates(docs).select(col("keeper_id").as("id")),
-      Seq("id"), "left_semi"))
-
-    // 2. near-dup clusters (bucket-checkpointed, skew-aware salted) +
-    //    quality-ranked canonical per cluster
-    val clusters = ResumableDedupJob.run(afterExact, cfg, workDir)
-    val keep = ResumableDedupJob.keepStage(afterExact, clusters, cfg, workDir)
-    val (afterNear, c2) = checkpointed(afterExact
-      .join(keep.where(col("kept"))
-        .select(col("id"), col("cluster_id"), col("quality")), Seq("id")))
-
-    // 3. quality + repetition + compressibility filters (narrow kernel passes)
-    val rep = Curation.repetitionStats(afterNear, idCol = "id")
-    val (afterQuality, c3) = checkpointed(afterNear
-      .join(rep, Seq("id"), "left_outer") // <2-token docs carry null stats
-      .where(textFilters))
-
-    // 4. optional benchmark decontamination (broadcast gram semi-join)
-    val (afterDecontam, c4) = benchPath match {
-      case Some(p) =>
-        val bench = spark.read.parquet(p)
-        val benchDocs =
-          if (bench.columns.contains("text")) bench
-          else bench.toDF("text") // one text column
-        val hit = Curation.contaminatedDocs(
-          afterQuality, benchDocs, decontamK, idCol = "id")
-        checkpointed(afterQuality.join(hit.select("id"), Seq("id"), "left_anti"))
-      case None => (afterQuality, c3)
+    // every stage checkpoint this call fills is released when it returns
+    // or throws: nothing it returns reads them
+    val filled = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def stage(df: DataFrame, aggs: Column*): (DataFrame, Map[String, Any]) = {
+      val r = checkpointed(df, aggs: _*)
+      filled += r._1
+      r
     }
+    try {
+      val t0 = System.currentTimeMillis()
+      val raw = spark.read.parquet(docsPath)
+      val (docs, c0) = stage(
+        if (raw.columns.contains("doc_id")) Dedup.fromDocuments(raw) else Dedup.fromPages(raw))
 
-    // 4b. optional C4-style duplicate-span removal over the survivors:
-    // the rewrite runs AFTER dedup/quality (don't pay span hashing for
-    // docs the funnel drops) and the curated table carries the
-    // rewritten text
-    val (afterSpans, nSpansRemoved) =
-      if (spanTokens <= 0) (afterDecontam, -1L)
-      else {
-        val rewritten = Curation.removeDuplicateSpans(
-          afterDecontam, spanTokens, idCol = "id")
-        val (joined, agg) = checkpointed(afterDecontam.drop("text")
-          .join(rewritten.select(col("id"), col("kept_text").as("text"),
-            col("n_removed")), Seq("id")),
-          coalesce(sum(col("n_removed")), lit(0L)).as("removed"))
-        (joined, agg("removed").asInstanceOf[Long])
+      // 1. exact dedup: one shuffle on the content hash, keep min id
+      val (afterExact, c1) = stage(docs.join(
+        Dedup.exactDuplicates(docs).select(col("keeper_id").as("id")),
+        Seq("id"), "left_semi"))
+
+      // 2. near-dup clusters (bucket-checkpointed, skew-aware salted) +
+      //    quality-ranked canonical per cluster
+      val clusters = ResumableDedupJob.run(afterExact, cfg, workDir)
+      val keep = ResumableDedupJob.keepStage(afterExact, clusters, cfg, workDir)
+      val (afterNear, c2) = stage(afterExact
+        .join(keep.where(col("kept"))
+          .select(col("id"), col("cluster_id"), col("quality")), Seq("id")))
+
+      // 3. quality + repetition + compressibility filters (narrow kernel passes)
+      val rep = Curation.repetitionStats(afterNear, idCol = "id")
+      val (afterQuality, c3) = stage(afterNear
+        .join(rep, Seq("id"), "left_outer") // <2-token docs carry null stats
+        .where(textFilters))
+
+      // 4. optional benchmark decontamination (broadcast gram semi-join)
+      val (afterDecontam, c4) = benchPath match {
+        case Some(p) =>
+          val bench = spark.read.parquet(p)
+          val benchDocs =
+            if (bench.columns.contains("text")) bench
+            else bench.toDF("text") // one text column
+          val hit = Curation.contaminatedDocs(
+            afterQuality, benchDocs, decontamK, idCol = "id")
+          stage(afterQuality.join(hit.select("id"), Seq("id"), "left_anti"))
+        case None => (afterQuality, c3)
       }
 
-    // 5. leakage-free split keyed by dup cluster
-    val split = Curation.leakageFreeSplit(
-      afterSpans.select(col("id")), clusters, heldoutNumerator, idCol = "id")
-      .select(col("id"), col("split"))
-    val curated = afterSpans
-      .select(Seq(col("id"), col("cluster_id"), col("quality")) ++
-        (if (spanTokens > 0) Seq(col("text"), col("n_removed")) else Nil): _*)
-      .join(split, Seq("id"))
+      // 4b. optional C4-style duplicate-span removal over the survivors:
+      // the rewrite runs AFTER dedup/quality (don't pay span hashing for
+      // docs the funnel drops) and the curated table carries the
+      // rewritten text
+      val (afterSpans, nSpansRemoved) =
+        if (spanTokens <= 0) (afterDecontam, -1L)
+        else {
+          val rewritten = Curation.removeDuplicateSpans(
+            afterDecontam, spanTokens, idCol = "id")
+          val (joined, agg) = stage(afterDecontam.drop("text")
+            .join(rewritten.select(col("id"), col("kept_text").as("text"),
+              col("n_removed")), Seq("id")),
+            coalesce(sum(col("n_removed")), lit(0L)).as("removed"))
+          (joined, agg("removed").asInstanceOf[Long])
+        }
 
-    // the span-removal variant changes the curated SCHEMA (adds
-    // text/n_removed), so it must not share a tag path with the plain
-    // variant — the stage config is part of the output identity
-    val variant = if (spanTokens > 0) s"-span$spanTokens" else ""
-    val outDir = s"$workDir/curated/tag=${cfg.configTag}$variant"
-    val (_, splits) = observed(curated,
-      count_if(col("split") === "heldout").as("heldout"),
-      count_if(col("split") === "train").as("train"))(
-      _.write.mode(SaveMode.Overwrite).parquet(outDir))
-    val nHeldout = splits("heldout").asInstanceOf[Long]
-    val nTrain = splits("train").asInstanceOf[Long]
+      // 5. leakage-free split keyed by dup cluster
+      val split = Curation.leakageFreeSplit(
+        afterSpans.select(col("id")), clusters, heldoutNumerator, idCol = "id")
+        .select(col("id"), col("split"))
+      val curated = afterSpans
+        .select(Seq(col("id"), col("cluster_id"), col("quality")) ++
+          (if (spanTokens > 0) Seq(col("text"), col("n_removed")) else Nil): _*)
+        .join(split, Seq("id"))
 
-    val wall = (System.currentTimeMillis() - t0) / 1000.0
-    val spanField =
-      if (spanTokens > 0) s""""span_removed":$nSpansRemoved,""" else ""
-    s"""{"job":"graft-curation","config_tag":"${cfg.configTag}","docs":${c0("rows")},""" +
-      s""""after_exact":${c1("rows")},"after_neardup":${c2("rows")},""" +
-      s""""after_quality":${c3("rows")},"after_decontam":${c4("rows")},""" +
-      s"""$spanField"train":$nTrain,"heldout":$nHeldout,""" +
-      s""""wall_sec":$wall,"docs_per_sec":${c0("rows").asInstanceOf[Long] / wall}}"""
+      // the span-removal variant changes the curated SCHEMA (adds
+      // text/n_removed), so it must not share a tag path with the plain
+      // variant — the stage config is part of the output identity
+      val variant = if (spanTokens > 0) s"-span$spanTokens" else ""
+      val outDir = s"$workDir/curated/tag=${cfg.configTag}$variant"
+      val (_, splits) = observed(curated,
+        count_if(col("split") === "heldout").as("heldout"),
+        count_if(col("split") === "train").as("train"))(
+        _.write.mode(SaveMode.Overwrite).parquet(outDir))
+      val nHeldout = splits("heldout").asInstanceOf[Long]
+      val nTrain = splits("train").asInstanceOf[Long]
+
+      val wall = (System.currentTimeMillis() - t0) / 1000.0
+      val spanField =
+        if (spanTokens > 0) s""""span_removed":$nSpansRemoved,""" else ""
+      s"""{"job":"graft-curation","config_tag":"${cfg.configTag}","docs":${c0("rows")},""" +
+        s""""after_exact":${c1("rows")},"after_neardup":${c2("rows")},""" +
+        s""""after_quality":${c3("rows")},"after_decontam":${c4("rows")},""" +
+        s"""$spanField"train":$nTrain,"heldout":$nHeldout,""" +
+        s""""wall_sec":$wall,"docs_per_sec":${c0("rows").asInstanceOf[Long] / wall}}"""
+    } finally filled.foreach(release)
   }
 }

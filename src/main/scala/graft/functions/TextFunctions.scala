@@ -131,14 +131,8 @@ object TextFunctions {
 
   // ---------------------------------------------------------------------
   // C-path: path/url scalars (reference `repr_utils.py:11-32` —
-  // get_path_resolver/basename over storage paths; here over urls).
+  // get_path_resolver over storage paths; here over urls).
   // ---------------------------------------------------------------------
-
-  /** Last path segment (reference basename semantics; trailing slashes
-    * ignored; the whole input when it has no '/').
-    */
-  def basename(path: Column): Column =
-    regexp_extract(path, "([^/]+)/*$", 1)
 
   /** Path relative to `base` (reference relative-path resolver): strips
     * the base prefix plus any leading slashes; inputs outside `base`

@@ -16,6 +16,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `date` (epoch days), `string` (lexicographic). A column absent from
   * an entry's map means "unknown" — pruning keeps such entries, so
   * stats are always an optimization, never a correctness input.
+  * [[TxLog.writePartitionedAppend]] stamps them; a plain append or a
+  * [[TxLog.compact]] rewrite carries none.
   */
 final case class ColStats(typ: String, min: String, max: String)
 
@@ -30,7 +32,7 @@ final case class ColStats(typ: String, min: String, max: String)
   * `mBits` is a power of two; `k` is the probe count. Membership tests
   * are conservative: a missing/corrupt sidecar or unknown geometry
   * keeps the entry — Bloom skipping is an optimization, never a
-  * correctness input.
+  * correctness input. Only [[TxLog.writePartitionedAppend]] builds them.
   */
 final case class BloomMeta(mBits: Int, k: Int, file: String)
 
@@ -41,10 +43,11 @@ final case class BloomMeta(mBits: Int, k: Int, file: String)
   * optionally carries per-column min/max bounds for manifest-level
   * file skipping ([[TxLog.pruneRange]]); `blooms` optionally carries
   * per-column Bloom filters for point-lookup skipping
-  * ([[TxLog.prunePoint]]); `rows` is the directory's row count (the
-  * Iceberg manifest `record_count` analog — lets a reader size sketches
-  * or report totals without a table scan), −1 when unknown (legacy
-  * manifests written before the field existed).
+  * ([[TxLog.prunePoint]]); of the writers, only
+  * [[TxLog.writePartitionedAppend]] sets either. `rows` is the
+  * directory's row count (the Iceberg manifest `record_count` analog —
+  * lets a reader size sketches or report totals without a table scan),
+  * −1 when unknown (legacy manifests written before the field existed).
   */
 final case class TxEntry(path: String, batch: Long,
                          stats: Map[String, ColStats] = Map.empty,
@@ -106,11 +109,16 @@ final case class TxSnapshot(version: Long, entries: Vector[TxEntry],
   *    manifest once and reads exactly those immutable files; writers
   *    and compactors never disturb it. Old versions remain readable
   *    until `vacuum` expires them (time-travel for free).
-  *  - **Crash-safe compaction.** Compaction writes the compacted data
+  *  - **Crash-safe compaction.** [[compact]] writes the compacted data
   *    directory, then publishes a replace manifest. There is no window
   *    where the table is empty or half-swapped (the round-2 judge's
   *    stash-then-swap hazard is structurally gone). Superseded files
   *    are deleted only by `vacuum`, never by the commit itself.
+  *
+  * Writers: [[writeAppend]] (one plain directory per commit, the ingest
+  * stores and the checkpoint table) and [[writePartitionedAppend]] (one
+  * entry per hidden partition, with min/max stats and Bloom filters
+  * that [[readRange]]/[[readPoint]] skip by).
   */
 final class TxLog(val root: String) {
 
@@ -345,7 +353,7 @@ final class TxLog(val root: String) {
       if (!direct && !viaSub && newestMtime(d) < cutoff)
         deleteRecursively(d)
       else if (!direct && viaSub) {
-        // partition-granular reclaim: a compaction that superseded
+        // partition-granular reclaim: a replace commit that superseded
         // SOME of this dir's partition subdirs leaves the dir live via
         // the others — the superseded subdirs would otherwise leak
         // forever (whole-dir deletion never fires while any sibling is
@@ -418,58 +426,17 @@ final class TxLog(val root: String) {
     } else Map.empty
   }
 
-  /** Stage `df` into a fresh data directory and commit it as an append,
-    * optionally stamping per-column min/max stats on `statsCols`
-    * (computed by reading back only those columns of the just-written
-    * files — footer-cheap relative to the write) and per-column Bloom
-    * filters on `bloomCols` (one extra column-pruned pass per bloom
-    * column; see [[BloomMeta]] / [[TxLog.prunePoint]]). Returns the
-    * committed version.
+  /** Stage `df` into a fresh data directory and commit it as an append
+    * of batch `batch`, with the directory's row count from the parquet
+    * footers. Returns the committed version.
     */
-  def writeAppend(df: DataFrame, batch: Long = -1L,
-                  statsCols: Seq[String] = Nil,
-                  bloomCols: Seq[String] = Nil): Long = {
-    // validate bloom keys BEFORE the write — a bad bloom column is a
-    // caller bug and must not leave an orphaned data directory behind
-    bloomCols.foreach { c =>
-      require(df.columns.contains(c), s"bloom column '$c' not in data")
-      TxLog.requireBloomable(c, df.schema(c).dataType)
-    }
+  def writeAppend(df: DataFrame, batch: Long = -1L): Long = {
     val seed = requireLegacyCompatible(df.sparkSession, df.schema.json)
     val dir = newDataDir()
     df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir.getPath)
     val rows = TxLog.footerRowCount(dir) // manifest record_count, job-free
-    val stats =
-      if (statsCols.isEmpty) Map.empty[String, ColStats]
-      else TxLog.statsOf(df.sparkSession, dir.getPath, statsCols)
-    val blooms = writeBloomSidecars(df.sparkSession, dir, bloomCols, rows)
-    commitAppend(Seq(TxEntry(relativize(dir), batch, stats, blooms, rows)),
+    commitAppend(Seq(TxEntry(relativize(dir), batch, rows = rows)),
       schemaJson = Some(df.schema.json), seedLineage = seed)
-  }
-
-  /** Build and write `_bloom_<col>.bin` sidecars for the just-written
-    * data directory `dir`: one distributed pass per bloom column (the
-    * scan is column-pruned; partial filters are OR-folded, so the
-    * shuffle carries one bit array per task, never the keys). Bloom
-    * keys are hashed over their canonical STRING rendering, which must
-    * match the probe side ([[TxLog.encodeValue]]) — hence only string
-    * and integral key columns are accepted (the point-lookup types:
-    * urls, ids); anything else is a caller bug and fails loudly.
-    */
-  private def writeBloomSidecars(spark: SparkSession, dir: File,
-                                 bloomCols: Seq[String],
-                                 rowCount: Long): Map[String, BloomMeta] = {
-    import org.apache.spark.sql.functions.col
-    if (bloomCols.isEmpty) return Map.empty
-    val back = spark.read.parquet(dir.getPath)
-    val mBits = TxLog.bloomBitsFor(rowCount) // footer count from the commit
-    bloomCols.map { c =>
-      val bits = TxLog.buildBloomBits(
-        back.select(col(c).cast("string")), mBits)
-      val fname = s"_bloom_$c.bin"
-      Files.write(new File(dir, fname).toPath, bits)
-      c -> BloomMeta(mBits, TxLog.BloomK, fname)
-    }.toMap
   }
 
   /** Hidden-partitioning append (Iceberg partition-transform analog):
@@ -483,7 +450,9 @@ final class TxLog(val root: String) {
     * to filesystem-safe strings (`[A-Za-z0-9._-]+`, non-null) — e.g.
     * `date_format(date_trunc("week", ts), "yyyyMMdd")` — anything else
     * fails loudly rather than committing escaped paths. Returns the
-    * committed version.
+    * committed version. This is the one writer that stamps skip
+    * indexes: min/max stats on `statsCols`, and per-partition Bloom
+    * filters on `bloomCols` for [[prunePoint]].
     */
   def writePartitionedAppend(df: DataFrame, partExpr:
       org.apache.spark.sql.Column, statsCols: Seq[String],
@@ -493,7 +462,8 @@ final class TxLog(val root: String) {
     // default, so a column named _PART would be silently overwritten
     require(!df.columns.exists(_.equalsIgnoreCase("_part")),
       "_part is reserved by writePartitionedAppend; rename the input column")
-    // same pre-write validation contract as writeAppend
+    // validate bloom keys BEFORE the write: a bad bloom column is a
+    // caller bug and must not leave an orphaned data directory behind
     bloomCols.foreach { c =>
       require(df.columns.contains(c), s"bloom column '$c' not in data")
       TxLog.requireBloomable(c, df.schema(c).dataType)
@@ -565,94 +535,33 @@ final class TxLog(val root: String) {
       seedLineage = seed)
   }
 
-  /** Partition-scoped compaction for hidden-partitioned tables — the
-    * Iceberg `rewrite_data_files` analog at PARTITION granularity.
-    * Repeated [[writePartitionedAppend]] ingest accumulates one entry
-    * per (write, partition); at 100-TB scale a full-table rewrite to
-    * fix that would touch every byte, so this rewrites ONLY partitions
-    * holding at least `minEntries` live entries, merging each into one
-    * `data/<uuid>/_part=<v>` directory. Per-column stats of the merged
-    * entry come from MERGING the manifest stats (min of mins / max of
-    * maxs; a column missing stats in any source entry gets none — never
-    * lossy), so compaction does zero read-back aggregation. Entries
-    * without a `_part=` segment (plain appends) are left untouched.
-    * Publishes one replace commit; on CAS conflict with a concurrent
-    * writer the staged rewrite is discarded and retried against the
-    * new snapshot (compaction is an optimization — it never clobbers a
-    * live write). Intended for append-style tables: the merged entry's
-    * batch id is −1, so it is not a target for `replaceBatch`
-    * re-delivery. Returns true if a compaction committed, false if
-    * nothing needed it or retries were exhausted.
-    *
-    * Retention after the commit is governed by `keepVersions`/`retainMs`
-    * — the SAME contract as [[vacuum]], so a pinned reader
-    * ([[snapshotAt]]) within the retention window survives compaction. `keepVersions = 0` skips the
-    * vacuum entirely (the caller owns retention); the default of 1
-    * reclaims everything superseded, matching vacuum's own default.
+  /** Rewrite the whole table into one data directory and publish it as
+    * one replace commit — the small-files control of an append-per-batch
+    * table (the Iceberg `rewrite_data_files` analog). The snapshot is
+    * read under its pinned schema and coalesced to
+    * `spark.sql.shuffle.partitions` files; the new entry carries the
+    * largest batch id of the entries it replaces and its row count from
+    * the parquet footers (no stats, no Bloom filters). A table of at
+    * most one entry is left as it is. When a concurrent commit wins the
+    * CAS the staged directory is deleted and nothing changes (a rewrite
+    * is an optimization, never a reason to clobber a live write).
+    * Superseded files stay until [[vacuum]]. Returns the replaced and
+    * the replacing entry paths when the rewrite committed, else None.
     */
-  def compactPartitions(spark: SparkSession, minEntries: Int = 2,
-                        maxRetries: Int = 3,
-                        vacuumGraceMs: Long = 600000L,
-                        keepVersions: Int = 1,
-                        retainMs: Long = 0L): Boolean = {
-    require(minEntries >= 2, "compacting partitions of <2 entries is a no-op")
-    val partOf = """.*/(_part=[A-Za-z0-9._\-]+)$""".r
-    var attempt = 0
-    while (attempt < maxRetries) {
-      val snap = snapshot()
-      val keyed = snap.entries.map { e =>
-        e.path match {
-          case partOf(p) => (Some(p), e)
-          case _         => (None, e)
-        }
-      }
-      val hot: Map[String, Vector[TxEntry]] = keyed
-        .collect { case (Some(p), e) => (p, e) }
-        .groupBy(_._1).map { case (p, es) => p -> es.map(_._2) }
-        .filter(_._2.size >= minEntries)
-      if (hot.isEmpty) return false
-      val untouched = keyed.collect {
-        case (None, e)                          => e
-        case (Some(p), e) if !hot.contains(p)   => e
-      }
-      // ONE partitionBy job rewrites every hot partition (not a
-      // driver loop of per-partition jobs — a day's worth of hourly
-      // micro-batches over hundreds of partitions must not serialize
-      // into hundreds of tiny jobs). The partition value is recovered
-      // from the file path, anchored to its tail so a table rooted
-      // under a path holding `_part=` still reads its own segment.
-      val hotEntries = hot.valuesIterator.flatten.toSeq
+  def compact(spark: SparkSession): Option[(Set[String], Set[String])] = {
+    val snap = snapshot()
+    if (snap.entries.size <= 1) None
+    else {
       val dir = newDataDir()
-      val src = readEntries(spark, hotEntries, snap.schemaJson)
-      require(!src.columns.exists(_.equalsIgnoreCase("_part")),
-        "_part is reserved by hidden partitioning; this table has a real " +
-          "_part column and cannot be partition-compacted")
-      src
-        .withColumn("_part", org.apache.spark.sql.functions.regexp_extract(
-          org.apache.spark.sql.functions.input_file_name(),
-          "/_part=([^/]+)/[^/]*$", 1))
-        .write.partitionBy("_part")
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir.getPath)
-      val staged = hot.toSeq.sortBy(_._1).map { case (p, es) =>
-        // row-preserving rewrite: the merged count is the sum of the
-        // source counts when all are known (same contract as mergeStats
-        // — a legacy source without a count degrades to unknown rather
-        // than guessing)
-        val rows = if (es.forall(_.rows >= 0L)) es.map(_.rows).sum else -1L
-        TxEntry(s"${relativize(dir)}/$p", -1L, TxLog.mergeStats(es.map(_.stats)),
-          mergeBloomSidecars(es, new File(dir, p)), rows)
-      }
-      if (commitReplace(untouched ++ staged, snap.version,
-          op = "compact-partitions")) {
-        if (keepVersions >= 1)
-          vacuum(keepVersions, orphanGraceMs = vacuumGraceMs,
-            retainMs = retainMs)
-        return true
-      }
-      TxLog.deleteRecursively(dir)
-      attempt += 1
+      readSnapshot(spark, snap)
+        .coalesce(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir.getPath)
+      val entry = TxEntry(relativize(dir), snap.entries.map(_.batch).max,
+        rows = TxLog.footerRowCount(dir))
+      if (commitReplace(Seq(entry), snap.version))
+        Some((snap.entries.map(_.path).toSet, Set(entry.path)))
+      else { deleteRecursively(dir); None }
     }
-    false
   }
 
   /** Manifest-level file skipping: the entries of `snap` that can
@@ -777,40 +686,6 @@ final class TxLog(val root: String) {
       case None    => spark.read
     }
     reader.parquet(entries.map(e => new File(root, e.path).getPath): _*)
-  }
-
-  /** Bloom filters survive a row-preserving partition rewrite by
-    * OR-folding the source sidecars (a Bloom union is exact for the
-    * union of key sets — no read-back of the data): a column keeps its
-    * filter only if EVERY source entry carries one at the SAME geometry
-    * with a readable sidecar; anything else drops the column's filter
-    * (pruning then keeps the merged entry — conservative, never lossy).
-    * The merged sidecar is written into the staged partition directory,
-    * so a CAS-aborted rewrite discards it with the staged data.
-    */
-  private def mergeBloomSidecars(es: Seq[TxEntry],
-                                 destDir: File): Map[String, BloomMeta] = {
-    val common = es.map(_.blooms.keySet).reduce(_ intersect _)
-    common.flatMap { c =>
-      val ms = es.map(_.blooms(c))
-      val geom = ms.map(m => (m.mBits, m.k)).distinct
-      if (geom.size != 1) None
-      else try {
-        val (mBits, k) = geom.head
-        val acc = new Array[Byte](mBits / 8)
-        es.zip(ms).foreach { case (e, bm) =>
-          val b = Files.readAllBytes(
-            new File(root, s"${e.path}/${bm.file}").toPath)
-          if (b.length != acc.length)
-            throw new java.io.IOException(s"bloom sidecar size mismatch: $c")
-          var i = 0
-          while (i < acc.length) { acc(i) = (acc(i) | b(i)).toByte; i += 1 }
-        }
-        val fname = s"_bloom_$c.bin"
-        Files.write(new File(destDir, fname).toPath, acc)
-        Some(c -> BloomMeta(mBits, k, fname))
-      } catch { case _: java.io.IOException => None }
-    }.toMap
   }
 
   // --- commit internals --------------------------------------------------
@@ -1071,7 +946,7 @@ object TxLog {
     * time (the drop-then-re-add hole a current-schema-only check
     * leaves open). The lineage never resets within a table root, even
     * across full-rewrite replace commits — a replace may legitimately
-    * keep old entries (partition-scoped compaction does).
+    * keep old entries.
     */
   private[store] def evolve(curSchema: Option[String],
                             curLineage: Map[String, String],
@@ -1261,36 +1136,11 @@ object TxLog {
     true
   }
 
-  /** Distributed Bloom build over a single-column DataFrame of string
-    * keys: each task folds its partition into one m-bit array, the
-    * partials OR-reduce — the exchange carries one bit array per task,
-    * never the keys. Nulls are skipped (a null probe is not a point
-    * lookup). An empty input yields the all-zero filter (correctly
-    * prunes every probe).
-    */
-  private[store] def buildBloomBits(keys: DataFrame, mBits: Int): Array[Byte] = {
-    val partials = keys.toDF("__k")
-      .mapPartitions { it =>
-        val bits = new Array[Byte](mBits / 8)
-        while (it.hasNext) {
-          val r = it.next()
-          if (!r.isNullAt(0))
-            setBloomBits(bits, bloomPositions(r.getString(0), mBits, BloomK))
-        }
-        Iterator.single(bits)
-      }(org.apache.spark.sql.Encoders.BINARY)
-    try partials.reduce(orInto _)
-    catch { // zero-partition input (e.g. an empty relation)
-      case _: UnsupportedOperationException => new Array[Byte](mBits / 8)
-    }
-  }
-
   /** Typed Bloom aggregator: PARTIAL-aggregatable, so the per-group
     * build gets a map-side combine — each task folds its rows into
     * per-group bit arrays locally and the exchange carries those
     * arrays, never the keys (at ingest scale the key column dwarfs the
-    * filters; this is the same partials-over-rows shape as
-    * [[buildBloomBits]]). The buffer starts empty and is sized lazily
+    * filters). The buffer starts empty and is sized lazily
     * from `mOf` at the first row, because the geometry is per-group
     * while an Aggregator's zero is global.
     */
@@ -1409,58 +1259,5 @@ object TxLog {
         catch { case _: NumberFormatException => None }
       case _ => None
     }
-  }
-
-  /** Merge per-entry column stats for a row-preserving rewrite
-    * (compaction): a column keeps stats only if EVERY source entry has
-    * them, in the SAME domain, with parseable bounds — anything else
-    * drops the column's stats (pruning then keeps the merged entry;
-    * conservative, never lossy). Used by [[TxLog.compactPartitions]] so
-    * compaction needs no read-back aggregation.
-    */
-  private[store] def mergeStats(
-      all: Seq[Map[String, ColStats]]): Map[String, ColStats] = {
-    require(all.nonEmpty, "mergeStats of no entries")
-    val common = all.map(_.keySet).reduce(_ intersect _)
-    common.flatMap { c =>
-      val css = all.map(_(c))
-      val typ = css.head.typ
-      if (!css.forall(_.typ == typ)) None
-      else {
-        val merged = css.tail.foldLeft(Option(css.head)) { (accOpt, cs) =>
-          accOpt.flatMap { acc =>
-            for {
-              dMin <- cmp(typ, cs.min, typ, acc.min)
-              dMax <- cmp(typ, cs.max, typ, acc.max)
-            } yield ColStats(typ,
-              if (dMin < 0) cs.min else acc.min,
-              if (dMax > 0) cs.max else acc.max)
-          }
-        }
-        merged.map(c -> _)
-      }
-    }.toMap
-  }
-
-  /** Per-column min/max of a staged data directory, reading back only
-    * the stat columns. Columns that are absent, all-null, or of an
-    * unsupported type simply get no stats (never an error — stats are
-    * an optimization).
-    */
-  def statsOf(spark: SparkSession, dir: String,
-              cols: Seq[String]): Map[String, ColStats] = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val df = spark.read.parquet(dir)
-    val present = cols.filter(df.columns.contains)
-    if (present.isEmpty) return Map.empty
-    val aggs = present.flatMap(c =>
-      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c")))
-    val row = df.select(present.map(col): _*).agg(aggs.head, aggs.tail: _*).head()
-    present.zipWithIndex.flatMap { case (c, i) =>
-      for {
-        mn <- Option(row.get(2 * i)).flatMap(encodeValue)
-        mx <- Option(row.get(2 * i + 1)).flatMap(encodeValue)
-      } yield c -> ColStats(mn._1, mn._2, mx._2)
-    }.toMap
   }
 }

@@ -2,12 +2,12 @@ package graft.streaming
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.pipeline.{Dedup, DedupConfig, concurrently, withCheckpointed}
-import graft.store.{MarkerFile, TxEntry, TxLog}
+import graft.store.{MarkerFile, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
   * (`ray_extract_features.py:85-162`: 600 s ingest windows, periodic
@@ -223,19 +223,17 @@ object IncrementalIngest {
   /** Compact the append-per-batch stores (signatures, bands, pairs):
     * each accumulates one commit per micro-batch, which at streaming
     * cadence becomes the classic small-files problem. Content is
-    * already deduplicated at write time (store anti-joins), so
-    * compaction is a pure rewrite: read the snapshot, coalesce toward
-    * spark.sql.shuffle.partitions, commit a REPLACE manifest (atomic —
-    * a crash at any point leaves either the old or the new snapshot
-    * fully readable), then vacuum superseded files. The three stores
-    * are rewritten at once, each on its own thread with its own commit
-    * and vacuum; a failure in one is rethrown once all three have ended
-    * (the others' commits stand, and a retry skips a compacted store,
-    * which holds one entry). A concurrent
-    * append that wins the commit race aborts the rewrite for that
-    * store (compaction is an optimization; inside `start()` it runs
-    * serially with the writes, so the race only matters for manual
-    * out-of-band calls).
+    * already deduplicated at write time (store anti-joins), so each
+    * store's compaction is a pure [[graft.store.TxLog.compact]] rewrite
+    * (one replace commit — a crash at any point leaves either the old or
+    * the new snapshot fully readable) followed by a
+    * [[graft.store.TxLog.vacuum]] of the superseded files. The three
+    * stores are rewritten at once, each on its own thread; a failure in
+    * one is rethrown once all three have ended (the others' commits
+    * stand, and a retry skips a compacted store, which holds one entry).
+    * A concurrent append that wins the commit race aborts the rewrite
+    * for that store (inside `start()` compaction runs serially with the
+    * writes, so the race only matters for manual out-of-band calls).
     *
     * `vacuumGraceMs` defaults to the same protective 10-minute grace as
     * [[graft.store.TxLog.vacuum]]: an out-of-band invocation must not
@@ -244,34 +242,18 @@ object IncrementalIngest {
     * files — silent corruption instead of a clean CAS abort) nor yank
     * files from a reader holding a pre-compact snapshot. Pass 0 only in
     * tests / known-quiescent maintenance windows.
-    * `keepVersions`/`retainMs` pass straight to
-    * [[graft.store.TxLog.vacuum]] so pinned snapshot readers within the
-    * retention window keep their files; `keepVersions = 0` skips the
-    * vacuum (caller owns retention).
+    *
+    * Returns the signature store's (replaced, replacing) entry paths
+    * when its rewrite committed: processBatch's match-state
+    * fast-forward input.
     */
   def compactStores(spark: SparkSession, workDir: String, cfg: DedupConfig,
-                    vacuumGraceMs: Long = 600000L,
-                    keepVersions: Int = 1, retainMs: Long = 0L)
+                    vacuumGraceMs: Long = 600000L)
       : Option[(Set[String], Set[String])] = {
-    val targetParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // (source paths, replacement paths) of the store's rewrite when it
-    // committed — for the signature store, processBatch's match-state
-    // fast-forward input
     def compact(log: TxLog): Option[(Set[String], Set[String])] = {
-      val snap = log.snapshot()
-      if (snap.entries.size <= 1) None
-      else {
-        val dir = log.newDataDir()
-        log.readSnapshot(spark, snap).coalesce(targetParts)
-          .write.mode(SaveMode.Overwrite).parquet(dir.getPath)
-        val entry = TxEntry(log.relativize(dir), snap.entries.map(_.batch).max,
-          rows = TxLog.footerRowCount(dir))
-        if (log.commitReplace(Seq(entry), snap.version)) {
-          if (keepVersions >= 1)
-            log.vacuum(keepVersions, orphanGraceMs = vacuumGraceMs, retainMs = retainMs)
-          Some((snap.entries.map(_.path).toSet, Set(entry.path)))
-        } else { TxLog.deleteRecursively(dir); None }
-      }
+      val rewrite = log.compact(spark)
+      if (rewrite.nonEmpty) log.vacuum(orphanGraceMs = vacuumGraceMs)
+      rewrite
     }
     // the three stores are independent tables: rewrite them at once
     concurrently(() => compact(sigLog(workDir, cfg)), () => compact(bandLog(workDir, cfg)),

@@ -49,6 +49,12 @@ class CacheHygieneSpec extends SparkSpecBase {
     * here, and judged by its own storage level.
     */
   private def persistedBy[T](op: => T): (Try[T], Set[Int]) = {
+    val (out, left) = rddsPersistedBy(op)
+    (out, left.map(_.id))
+  }
+
+  /** [[persistedBy]], returning the RDDs themselves. */
+  private def rddsPersistedBy[T](op: => T): (Try[T], Set[RDD[_]]) = {
     val sc = spark.sparkContext
     val before = persistedRdds
     val held = new java.util.concurrent.ConcurrentHashMap[Int, RDD[_]]()
@@ -62,7 +68,8 @@ class CacheHygieneSpec extends SparkSpecBase {
       sc.removeSparkListener(listener)
     }
     hold()
-    (out, held.values.asScala.filter(_.getStorageLevel != StorageLevel.NONE).map(_.id).toSet -- before)
+    (out, held.values.asScala.filter(r => r.getStorageLevel != StorageLevel.NONE &&
+      !before.contains(r.id)).toSet)
   }
 
   /** [[assertNoLeak]] for an operator returning a frame, which must be
@@ -329,5 +336,29 @@ class CacheHygieneSpec extends SparkSpecBase {
       "the signature store was rewritten twice")
     assert(logs.forall(_.snapshot().entries.size == 1))
     assert(ingestStores(workDir) == ingestStores(clean))
+  }
+
+  test("CurationJob.run releases its stage checkpoints when it returns and when it throws") {
+    val docsPath = Files.createTempDirectory("graft-curation-docs").resolve("docs").toString
+    docs(plainText).select(col("id").as("doc_id"), col("text")).write.parquet(docsPath)
+    // the persisted RDDs `op` leaves whose creating stack enters the
+    // engine at CurationJob.scala (the stage checkpoints it fills itself;
+    // the near-dup stages it calls have checkpoints of their own)
+    def leftByRun(op: => String): (Try[String], Seq[String]) = {
+      val (out, left) = rddsPersistedBy(op)
+      (out, left.toSeq.map(CacheProbe.creationStack).filter(_.linesIterator
+        .find(l => l.startsWith("graft.") && !l.contains("(package.scala"))
+        .exists(_.contains("(CurationJob.scala"))))
+    }
+    def work() = Files.createTempDirectory("graft-curation-hygiene").toString
+    val (ok, leftOk) = leftByRun(CurationJob.run(spark, docsPath, work(), None, 8192))
+    assert(ok.get.contains("\"after_quality\":"))
+    assert(leftOk.isEmpty, s"stage checkpoints left persisted:\n${leftOk.mkString("\n\n")}")
+    // the benchmark table is missing: the call throws at the
+    // decontamination stage, after four stage checkpoints were filled
+    val (failed, leftFailed) = leftByRun(
+      CurationJob.run(spark, docsPath, work(), Some(s"$docsPath-missing-bench"), 8192))
+    assert(failed.failed.map(_.getMessage).getOrElse("").contains("missing-bench"), failed)
+    assert(leftFailed.isEmpty, s"stage checkpoints leaked on the failure path:\n${leftFailed.mkString("\n\n")}")
   }
 }

@@ -84,7 +84,9 @@ class TxLogSpec extends SparkSpecBase {
       catch { case e: Throwable => errors.add(e); () }
     })
     val compactor = new Thread(() => {
-      try (0 until 3).foreach { _ => log.compactPartitions(spark, vacuumGraceMs = 60000L) }
+      try (0 until 3).foreach { _ =>
+        if (log.compact(spark).nonEmpty) log.vacuum(orphanGraceMs = 60000L)
+      }
       catch { case e: Throwable => errors.add(e); () }
     })
     writer.start(); compactor.start()
@@ -254,8 +256,8 @@ class TxLogSpec extends SparkSpecBase {
       val base = rnd.nextInt(500).toLong
       val rows = Seq.fill(20)((base + rnd.nextInt(60),
         "" + ('a' + rnd.nextInt(8)).toChar + ('a' + rnd.nextInt(8)).toChar))
-      log.writeAppend(rows.toDF("id", "s"), batch = c,
-        statsCols = Seq("id", "s"), bloomCols = Seq("s"))
+      log.writePartitionedAppend(rows.toDF("id", "s"), lit("p"),
+        statsCols = Seq("id", "s"), batch = c, bloomCols = Seq("s"))
       c.toLong -> rows
     }.toMap
     val allRows = byCommit.values.flatten.toSeq
@@ -303,14 +305,16 @@ class TxLogSpec extends SparkSpecBase {
     }
   }
 
-  test("column stats: writeAppend stamps min/max; pruneRange skips disjoint commits, keeps stats-less ones") {
+  test("column stats: writePartitionedAppend stamps min/max; pruneRange skips disjoint commits, keeps stats-less ones") {
     val spark2 = spark
     import spark2.implicits._
     val log = new TxLog(tmp("txlog-stats"))
     // three commits with disjoint id ranges + one legacy commit without stats
-    log.writeAppend(Seq((1L, "a"), (9L, "b")).toDF("id", "s"), statsCols = Seq("id"))
-    log.writeAppend(Seq((10L, "c"), (19L, "d")).toDF("id", "s"), statsCols = Seq("id"))
-    log.writeAppend(Seq((20L, "e"), (29L, "f")).toDF("id", "s"), statsCols = Seq("id"))
+    def write(rows: Seq[(Long, String)]): Unit =
+      log.writePartitionedAppend(rows.toDF("id", "s"), lit("p"), statsCols = Seq("id")): Unit
+    write(Seq((1L, "a"), (9L, "b")))
+    write(Seq((10L, "c"), (19L, "d")))
+    write(Seq((20L, "e"), (29L, "f")))
     val legacyDir = log.newDataDir()
     Seq((100L, "z")).toDF("id", "s").write.parquet(legacyDir.getPath)
     log.commitAppend(Seq(TxEntry(log.relativize(legacyDir), -1L)))
@@ -374,8 +378,7 @@ class TxLogSpec extends SparkSpecBase {
 
     // vacuum must treat the shared parent data dir as live when only
     // its _part subdirs are referenced (regression: startsWith check)
-    log.writeAppend(Seq((9L, ts("2026-02-02 00:00:00"))).toDF("id", "ts"),
-      statsCols = Seq("ts"))
+    log.writeAppend(Seq((9L, ts("2026-02-02 00:00:00"))).toDF("id", "ts"))
     log.vacuum(keepVersions = 1, orphanGraceMs = 0L)
     assert(log.read(spark).get.count() == 5)
 
@@ -386,45 +389,6 @@ class TxLogSpec extends SparkSpecBase {
     }
   }
 
-  test("partition-scoped compaction: merges only multi-entry partitions, merged manifest stats, rows identical") {
-    val spark2 = spark
-    import spark2.implicits._
-    val log = new TxLog(tmp("txlog-part-compact"))
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val weekExpr = date_format(date_trunc("week", col("ts")), "yyyyMMdd")
-    // two ingests hitting the SAME week + one ingest of a second week +
-    // one plain (unpartitioned) append
-    log.writePartitionedAppend(Seq((1L, ts("2026-01-05 00:00:00")),
-      (2L, ts("2026-01-06 12:00:00"))).toDF("id", "ts"), weekExpr, Seq("ts"))
-    log.writePartitionedAppend(Seq((3L, ts("2026-01-07 00:00:00"))).toDF("id", "ts"),
-      weekExpr, Seq("ts"))
-    log.writePartitionedAppend(Seq((4L, ts("2026-01-12 00:00:00"))).toDF("id", "ts"),
-      weekExpr, Seq("ts"))
-    log.writeAppend(Seq((9L, ts("2026-02-02 00:00:00"))).toDF("id", "ts"),
-      statsCols = Seq("ts"))
-    val before = log.read(spark).get.collect().map(_.getLong(0)).toSet
-    assert(log.snapshot().entries.size == 4) // 2 + 1 + 1 plain
-
-    assert(log.compactPartitions(spark, vacuumGraceMs = 0L))
-    val snap = log.snapshot()
-    // hot week merged into one entry; cold week + plain entry untouched
-    assert(snap.entries.size == 3)
-    assert(snap.entries.count(_.path.contains("_part=20260105")) == 1)
-    // merged stats span both source entries (min of mins / max of maxs)
-    val merged = snap.entries.find(_.path.contains("_part=20260105")).get
-    val enc = (t: java.sql.Timestamp) =>
-      t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000
-    assert(merged.stats("ts").min == enc(ts("2026-01-05 00:00:00")).toString)
-    assert(merged.stats("ts").max == enc(ts("2026-01-07 00:00:00")).toString)
-    // rows identical, pruning still partition-accurate, vacuum ran
-    assert(log.read(spark).get.collect().map(_.getLong(0)).toSet == before)
-    val kept = log.pruneRange(snap, "ts",
-      Some(ts("2026-01-05 12:00:00")), Some(ts("2026-01-06 00:00:00")))
-    assert(kept.size == 1 && kept.head.path.contains("_part=20260105"))
-    // idempotent: nothing left to compact
-    assert(!log.compactPartitions(spark, vacuumGraceMs = 0L))
-  }
-
   test("vacuum reclaims superseded partition subdirs inside a parent kept live by a sibling partition") {
     val spark2 = spark
     import spark2.implicits._
@@ -432,20 +396,24 @@ class TxLogSpec extends SparkSpecBase {
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val weekExpr = date_format(date_trunc("week", col("ts")), "yyyyMMdd")
     // ONE write carrying two weeks -> both _part subdirs share a uuid
-    // parent; a second write makes week 1 hot
+    // parent; a second write adds a second week-1 entry
     log.writePartitionedAppend(Seq((1L, ts("2026-01-05 00:00:00")),
       (2L, ts("2026-01-12 00:00:00"))).toDF("id", "ts"), weekExpr, Seq("ts"))
     log.writePartitionedAppend(Seq((3L, ts("2026-01-06 00:00:00"))).toDF("id", "ts"),
       weekExpr, Seq("ts"))
-    val sharedParent = new File(log.root,
-      log.snapshot().entries.find(_.path.contains("_part=20260112")).get
-        .path.split("/").init.mkString("/"))
+    val snap = log.snapshot()
+    val (week1, week2) = snap.entries.partition(_.path.endsWith("_part=20260105"))
+    val sharedParent = new File(log.root, week2.head.path.split("/").init.mkString("/"))
     assert(new File(sharedParent, "_part=20260105").exists())
 
-    // compacting week 1 supersedes sharedParent/_part=20260105, but the
-    // parent stays live via _part=20260112 — the stale subdir must be
+    // a replace commit that rewrites week 1 into one new partition
+    // directory supersedes sharedParent/_part=20260105, but the parent
+    // stays live via _part=20260112 — the stale subdir must be
     // reclaimed, not leaked
-    assert(log.compactPartitions(spark, vacuumGraceMs = 0L))
+    val staged = new File(log.newDataDir(), "_part=20260105")
+    log.readEntries(spark, week1, snap.schemaJson).write.parquet(staged.getPath)
+    assert(log.commitReplace(week2 :+ TxEntry(log.relativize(staged), -1L), snap.version))
+    log.vacuum(orphanGraceMs = 0L)
     assert(new File(sharedParent, "_part=20260112").exists(),
       "live sibling partition must survive vacuum")
     assert(!new File(sharedParent, "_part=20260105").exists(),
@@ -459,14 +427,14 @@ class TxLogSpec extends SparkSpecBase {
     import spark2.implicits._
     val log = new TxLog(tmp("txlog-stats-ts"))
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    log.writeAppend(
+    log.writePartitionedAppend(
       Seq((ts("2024-01-01 00:00:00"), """he said "hi"\path"""),
         (ts("2024-01-07 23:59:59"), "bbb")).toDF("ts", "s"),
-      statsCols = Seq("ts", "s"))
-    log.writeAppend(
+      lit("p"), statsCols = Seq("ts", "s"))
+    log.writePartitionedAppend(
       Seq((ts("2024-02-01 00:00:00"), "x1"),
         (ts("2024-02-07 23:59:59"), "x2")).toDF("ts", "s"),
-      statsCols = Seq("ts", "s"))
+      lit("p"), statsCols = Seq("ts", "s"))
 
     val snap = log.snapshot() // re-parsed from disk: escaping round-trip
     assert(snap.entries.forall(_.stats.contains("s")))
@@ -492,8 +460,8 @@ class TxLogSpec extends SparkSpecBase {
     val log = new TxLog(tmp("txlog-stats-nan"))
     // NaN poisons max() (NaN sorts greatest): the column gets NO stats
     // rather than an unparseable "NaN" bound
-    log.writeAppend(Seq((1L, Double.NaN), (2L, 0.5)).toDF("id", "v"),
-      statsCols = Seq("id", "v"))
+    log.writePartitionedAppend(Seq((1L, Double.NaN), (2L, 0.5)).toDF("id", "v"),
+      lit("p"), statsCols = Seq("id", "v"))
     val e = log.snapshot().entries.head
     assert(e.stats.contains("id"))
     assert(!e.stats.contains("v"))
@@ -515,10 +483,10 @@ class TxLogSpec extends SparkSpecBase {
     def ntz(src: org.apache.spark.sql.DataFrame) =
       src.select(col("ts").cast("timestamp_ntz").as("ts"), col("v"))
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    log.writeAppend(ntz(Seq((ts("2024-01-01 00:00:00"), 1),
-      (ts("2024-01-07 00:00:00"), 2)).toDF("ts", "v")), statsCols = Seq("ts"))
-    log.writeAppend(ntz(Seq((ts("2024-02-01 00:00:00"), 3),
-      (ts("2024-02-07 00:00:00"), 4)).toDF("ts", "v")), statsCols = Seq("ts"))
+    log.writePartitionedAppend(ntz(Seq((ts("2024-01-01 00:00:00"), 1),
+      (ts("2024-01-07 00:00:00"), 2)).toDF("ts", "v")), lit("p"), statsCols = Seq("ts"))
+    log.writePartitionedAppend(ntz(Seq((ts("2024-02-01 00:00:00"), 3),
+      (ts("2024-02-07 00:00:00"), 4)).toDF("ts", "v")), lit("p"), statsCols = Seq("ts"))
     val snap = log.snapshot()
     assert(snap.entries.forall(_.stats.get("ts").exists(_.typ == "timestamp_ntz")))
     // wall-clock probe (LocalDateTime) prunes to the January commit
@@ -626,8 +594,8 @@ class TxLogSpec extends SparkSpecBase {
     import spark2.implicits._
     val log = new TxLog(tmp("txlog-ctrl"))
     // a newline inside a string bound must not brick the manifest
-    log.writeAppend(Seq(("a\nb\tc", 1L), ("zz", 2L)).toDF("s", "id"),
-      statsCols = Seq("s", "id"))
+    log.writePartitionedAppend(Seq(("a\nb\tc", 1L), ("zz", 2L)).toDF("s", "id"),
+      lit("p"), statsCols = Seq("s", "id"))
     val snap = log.snapshot() // parses the manifest — must not throw
     assert(snap.entries.head.stats("s").min == "a\nb\tc")
     assert(log.pruneRange(snap, "s", Some("a"), Some("a\nz")).size == 1)
@@ -701,7 +669,8 @@ class TxLogSpec extends SparkSpecBase {
     // time travel: the pre-evolution version keeps its own schema
     assert(readAsOf(log, v0).columns.toSeq == Seq("k", "v"))
     // compaction carries the evolved schema through the replace commit
-    assert(log.compactPartitions(spark, vacuumGraceMs = 60000L))
+    assert(log.compact(spark).nonEmpty)
+    log.vacuum(orphanGraceMs = 60000L)
     assert(log.snapshot().entries.size == 1)
     assert(log.read(spark).get.columns.toSeq == Seq("k", "v", "score"))
     assert(log.read(spark).get.where(col("score").isNull).count() == 2)
@@ -767,12 +736,19 @@ class TxLogSpec extends SparkSpecBase {
     (0 until 3).foreach { r =>
       val keys = (0 until 300 by 3).map(i => f"u${i + r}%03d": String)
       val rows = keys.map(k => (k, s"payload-$k")) :+ (null, "null-key-row")
-      log.writeAppend(rows.toDF("k", "v"), batch = r.toLong,
-        statsCols = Seq("k"), bloomCols = Seq("k")): Unit
+      log.writePartitionedAppend(rows.toDF("k", "v"), lit("p"),
+        statsCols = Seq("k"), batch = r.toLong, bloomCols = Seq("k")): Unit
     }
     val snap = log.snapshot()
     assert(snap.entries.size == 3)
     assert(snap.entries.forall(_.blooms.contains("k")))
+    // the grouped bloom build must PARTIAL-aggregate (map-side combine:
+    // the exchange carries bit arrays, never the key column)
+    val probe = Seq(("a", Option("k1")), ("b", Option("k2")))
+      .toDS().groupByKey(_._1)
+      .agg(new TxLog.BloomAgg(Map("a" -> 8192, "b" -> 8192)).toColumn)
+    val plan = probe.queryExecution.executedPlan.toString
+    assert(plan.contains("partial_"), s"no map-side partial in:\n$plan")
     // stats overlap on every entry: a range probe keeps all three
     assert(log.pruneRange(snap, "k", Some("u004"), Some("u004")).size == 3)
     // the bloom prunes to the single directory holding the key
@@ -802,7 +778,7 @@ class TxLogSpec extends SparkSpecBase {
     val spark2 = spark
     import spark2.implicits._
     val log = new TxLog(tmp("txlog-bloom-fallback"))
-    log.writeAppend(Seq((10L, "a")).toDF("id", "v"),
+    log.writePartitionedAppend(Seq((10L, "a")).toDF("id", "v"), lit("p"),
       statsCols = Seq("id"), bloomCols = Seq("id")): Unit
     log.writeAppend(Seq((20L, "b")).toDF("id", "v")): Unit // no stats/bloom
     val snap = log.snapshot()
@@ -821,51 +797,9 @@ class TxLogSpec extends SparkSpecBase {
       log.prunePoint(snap, "id", Seq(new Object))
     }
     intercept[IllegalArgumentException] { // non-integral bloom key type
-      log.writeAppend(Seq((0.5, "x")).toDF("d", "v"), bloomCols = Seq("d"))
+      log.writePartitionedAppend(Seq((0.5, "x")).toDF("d", "v"), lit("p"),
+        statsCols = Nil, bloomCols = Seq("d"))
     }
-  }
-
-  test("partitioned blooms OR-merge through compaction at uniform geometry; mixed geometry drops conservatively") {
-    val spark2 = spark
-    import spark2.implicits._
-    val log = new TxLog(tmp("txlog-bloom-compact"))
-    def write(ids: Seq[Long]): Unit =
-      log.writePartitionedAppend(ids.toDF("id"),
-        concat(lit("b"), pmod(col("id"), lit(2)).cast("string")),
-        statsCols = Nil, bloomCols = Seq("id")): Unit
-    // the grouped bloom build must PARTIAL-aggregate (map-side combine:
-    // the exchange carries bit arrays, never the key column)
-    locally {
-      val probe = Seq(("a", Option("k1")), ("b", Option("k2")))
-        .toDS().groupByKey(_._1)
-        .agg(new TxLog.BloomAgg(Map("a" -> 8192, "b" -> 8192)).toColumn)
-      val plan = probe.queryExecution.executedPlan.toString
-      assert(plan.contains("partial_"), s"no map-side partial in:\n$plan")
-    }
-    // two same-sized writes: uniform bloom geometry per partition
-    write(0L until 100L)
-    write(1000L until 1100L)
-    val pre = log.snapshot()
-    assert(pre.entries.size == 4 && pre.entries.forall(_.blooms.contains("id")))
-    // a key from write 2 keeps only its (write, bucket) entry
-    assert(log.prunePoint(pre, "id", Seq(1042L)).size == 1)
-    assert(log.compactPartitions(spark, minEntries = 2, vacuumGraceMs = 0L))
-    val post = log.snapshot()
-    assert(post.entries.size == 2 && post.entries.forall(_.blooms.contains("id")))
-    // the merged bloom contains keys from BOTH source writes
-    assert(log.prunePoint(post, "id", Seq(42L)).size == 1)
-    assert(log.prunePoint(post, "id", Seq(1042L)).size == 1)
-    assert(log.prunePoint(post, "id", Seq(4242L)).isEmpty) // absent key
-    assert(log.read(spark).get.count() == 200)
-    // third write is much larger: its bloom geometry differs, so the
-    // next compaction drops the merged partitions' blooms instead of
-    // unioning incompatible filters — and stays correct
-    write(10000L until 14000L)
-    assert(log.compactPartitions(spark, minEntries = 2, vacuumGraceMs = 0L))
-    val mixed = log.snapshot()
-    assert(mixed.entries.size == 2 && mixed.entries.forall(_.blooms.isEmpty))
-    assert(log.prunePoint(mixed, "id", Seq(42L)).size == 2) // conservative
-    assert(log.read(spark).get.count() == 4200)
   }
 
   test("legacy columns absent from the first declaration still seed the lineage") {
@@ -896,30 +830,25 @@ class TxLogSpec extends SparkSpecBase {
   test("compaction honors vacuum retention: pinned pre-compact snapshots survive keepVersions>1") {
     val spark2 = spark
     import spark2.implicits._
-    // partition-scoped compaction (compactPartitions)
     val log = new TxLog(tmp("txlog-compact-retain"))
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val weekExpr = date_format(date_trunc("week", col("ts")), "yyyyMMdd")
-    log.writePartitionedAppend(Seq((1L, ts("2026-01-05 00:00:00"))).toDF("id", "ts"),
-      weekExpr, Seq("ts"))
+    log.writeAppend(Seq(1L).toDF("id"))
     val pinned = log.currentVersion()
-    log.writePartitionedAppend(Seq((2L, ts("2026-01-06 00:00:00"))).toDF("id", "ts"),
-      weekExpr, Seq("ts"))
-    assert(log.compactPartitions(spark, vacuumGraceMs = 0L, keepVersions = 3))
+    log.writeAppend(Seq(2L).toDF("id"))
+    assert(log.compact(spark).nonEmpty)
+    log.vacuum(keepVersions = 3, orphanGraceMs = 0L)
     // the pre-compact snapshot is still fully readable: neither its
     // manifest nor its data files were reclaimed
     assert(readAsOf(log, pinned).count() == 1)
-    // keepVersions = 0 skips the vacuum entirely (caller owns retention)
+    // compact alone vacuums nothing (the caller owns retention)
     val log2 = new TxLog(tmp("txlog-compact-novac"))
-    (1L to 2L).foreach(i => log2.writePartitionedAppend(
-      Seq((i, ts("2026-01-05 00:00:00"))).toDF("id", "ts"), weekExpr, Seq("ts")): Unit)
+    (1L to 2L).foreach(i => log2.writeAppend(Seq(i).toDF("id")): Unit)
     val preVersions = log2.versionCount()
     val preDirs = new File(log2.root, "data").list().toSet
-    assert(log2.compactPartitions(spark, vacuumGraceMs = 0L, keepVersions = 0))
+    assert(log2.compact(spark).nonEmpty)
     assert(log2.versionCount() == preVersions + 1,
-      "keepVersions=0 must leave every manifest in place")
+      "compact must leave every manifest in place")
     assert(preDirs.subsetOf(new File(log2.root, "data").list().toSet),
-      "keepVersions=0 must leave every superseded data directory in place")
+      "compact must leave every superseded data directory in place")
     assert(log2.read(spark).get.select("id").as[Long].collect().toSet == Set(1L, 2L))
   }
 
@@ -932,8 +861,8 @@ class TxLogSpec extends SparkSpecBase {
     // Every scenario kills a writer protocol at a named step. Each
     // simulated crash state is built from PUBLIC-API prefixes of the
     // real protocol (stage = the writer's own parquet write into
-    // newDataDir, replace-no-vacuum = the real replace commit with the
-    // vacuum suppressed), so the injected state is exactly what a kill
+    // newDataDir, replace-no-vacuum = the real compaction, whose vacuum
+    // is a separate call), so the injected state is exactly what a kill
     // at that step leaves on disk. Invariants checked at every point:
     // (1) reads serve the last committed snapshot, (2) vacuum heals the
     // debris without disturbing it, (3) the next writer lands normally.
@@ -983,7 +912,7 @@ class TxLogSpec extends SparkSpecBase {
         Set.empty
       },
       "compaction killed between publish and vacuum (superseded files linger)" -> { log =>
-        assert(log.compactPartitions(spark, keepVersions = 0))
+        assert(log.compact(spark).nonEmpty)
         Set.empty
       },
       "replace loser killed before staged cleanup (compact CAS retry)" -> { log =>
@@ -998,7 +927,7 @@ class TxLogSpec extends SparkSpecBase {
         Set(50L) // staged dir 99 is debris; the competing append is live
       },
       "vacuum killed mid-sweep (some superseded files gone, some left)" -> { log =>
-        assert(log.compactPartitions(spark, keepVersions = 0))
+        assert(log.compact(spark).nonEmpty)
         val live = log.snapshot().entries.map(_.path).toSet
         val dataRoot = new File(log.root, "data")
         val superseded = dataRoot.listFiles().filter(d =>
@@ -1047,13 +976,12 @@ class TxLogSpec extends SparkSpecBase {
       Seq((4L, ts("2026-01-07 00:00:00"))).toDF("id", "ts"),
       weekExpr, Seq("ts"))
     assert(plog.snapshot().rowCount.contains(4L))
-    // partition-scoped compaction merges counts by summation (row-
-    // preserving rewrite), and the total is unchanged
-    assert(plog.compactPartitions(spark, vacuumGraceMs = 0L))
+    // compaction is row-preserving: its one entry carries the sum of the
+    // replaced entries' counts, and the total is unchanged
+    assert(plog.compact(spark).nonEmpty)
     val merged = plog.snapshot()
+    assert(merged.entries.map(_.rows) == Vector(4L))
     assert(merged.rowCount.contains(4L))
-    assert(merged.entries.exists(_.rows == 3L),
-      "the compacted week-1 partition must carry the summed count")
     // a LEGACY entry (committed before row counts existed) poisons the
     // total to None — a partial sum must never under-report
     val legacy = new TxLog(tmp("txlog-rows-legacy"))
@@ -1084,8 +1012,8 @@ class TxLogSpec extends SparkSpecBase {
     // first code unit is the surrogate 0xD800 < 0xFFFD) and wrongly
     // prune the entry that contains the matching U+FFFD row.
     val supp = new String(Character.toChars(0x10000))
-    log.writeAppend(Seq(("�", 1), (supp, 2)).toDF("s", "v"),
-      statsCols = Seq("s"))
+    log.writePartitionedAppend(Seq(("�", 1), (supp, 2)).toDF("s", "v"),
+      lit("p"), statsCols = Seq("s"))
     val snap = log.snapshot()
     assert(snap.entries.head.stats("s").max == supp,
       "precondition: Spark's max must be the supplementary-plane string")

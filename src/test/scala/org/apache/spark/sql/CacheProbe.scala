@@ -5,8 +5,9 @@ import org.apache.spark.storage.BroadcastBlockId
 
 /** Test access to the `private[sql]` count of a session's cache entries
   * (one per `Dataset.persist` / cached table), to the broadcast values
-  * the driver's block manager holds and to the `private[spark]` listener
-  * bus; lives in this package purely for access.
+  * the driver's block manager holds, to the `private[spark]` listener
+  * bus and to an RDD's creation site; lives in this package purely for
+  * access.
   */
 object CacheProbe {
   def cachedEntries(s: SparkSession): Int =
@@ -24,6 +25,9 @@ object CacheProbe {
         b.broadcastId
     }.toSet
   }
+
+  /** The stack (long call site) that created `rdd`. */
+  def creationStack(rdd: org.apache.spark.rdd.RDD[_]): String = rdd.creationSite.longForm
 
   /** Blocks until every listener has seen every event posted so far. */
   def drainListeners(s: SparkSession): Unit = s.sparkContext.listenerBus.waitUntilEmpty()
