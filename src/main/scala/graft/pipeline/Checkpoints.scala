@@ -238,7 +238,10 @@ object ResumableDedupJob {
           saltBuckets: Int = 16, waveBuckets: Int = 0): DataFrame = {
     val sigs = signaturesStage(docs, cfg, workDir, buckets, waveBuckets)
     reusedOrWritten("clusters", cfg, workDir, Seq(sigs)) {
-      Dedup.clusters(pairsStage(sigs, cfg, hotCap, saltBuckets))
+      // the clustering checkpoints its edges: the band table under the
+      // pairs has no reader left once it returns
+      val pairs = pairsStage(sigs, cfg, hotCap, saltBuckets)
+      try Dedup.clusters(pairs) finally release(pairs)
     }
   }
 
@@ -246,7 +249,8 @@ object ResumableDedupJob {
     * `$workDir/<stage>/tag=<configTag>` table, after writing `compute`
     * there unless the stage marker matches the current identities. The
     * table is read back under the schema of the frame written, kept in
-    * the marker for the reuse path.
+    * the marker for the reuse path, so the checkpoints that frame reads
+    * are released once its write has ended.
     */
   private def reusedOrWritten(stage: String, cfg: DedupConfig, workDir: String,
                               inputs: Seq[DataFrame])(compute: => DataFrame): DataFrame = {
@@ -268,7 +272,7 @@ object ResumableDedupJob {
       // between leaves a stage that recomputes, never a stale skip
       Files.deleteIfExists(marker.toPath)
       val df = compute
-      df.write.mode(SaveMode.Overwrite).parquet(dir)
+      try df.write.mode(SaveMode.Overwrite).parquet(dir) finally release(df)
       inputId.foreach(in => MarkerFile.write(marker, stamp(in, df.schema.json)))
       df.schema.json
     }

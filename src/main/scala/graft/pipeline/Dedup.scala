@@ -614,27 +614,28 @@ object Dedup {
       .where(col("hamming") <= hammingMax)
   }
 
-  /** Incremental matching: candidate pairs between a NEW batch and the
-    * FULL accumulated corpus — new x all, never all x all (the fork's
-    * periodic match regeneration, `ray_extract_features.py:241-367`, at
-    * per-batch cadence) — against a PERSISTED band store (id, band_key):
-    * the all-side band keys are read back, never recomputed, and only
-    * the new side's signatures `newSigs` are banded here, so per-batch
-    * work is O(new) banding + the keyed join, not O(corpus) re-banding.
-    * Pairs are canonicalized (least/greatest) and verified exactly
-    * against the full shingle table.
+  /** Incremental matching: candidate pairs between the NEW signatures
+    * `newSigs` and ALL signatures `allSigs` — new x all, never all x all
+    * (the fork's periodic match regeneration,
+    * `ray_extract_features.py:241-367`, at per-batch cadence). Both
+    * sides are banded here from their `sig` column, as the fork keeps no
+    * band table either; the band-key join carries no hint, so adaptive
+    * execution broadcasts a micro-batch-sized new side at run time and a
+    * backfill-sized one still takes a shuffle join. Pairs are
+    * canonicalized (least/greatest) and verified exactly against the
+    * shingles of `allSigs`.
     */
-  def incrementalPairsBanded(newSigs: DataFrame, bandStore: DataFrame,
-                             shingled: DataFrame, cfg: DedupConfig): DataFrame = {
+  def incrementalPairsBanded(newSigs: DataFrame, allSigs: DataFrame, cfg: DedupConfig): DataFrame = {
     val newBands = bandTable(validSignatures(newSigs), cfg)
       .select(col("band_key"), col("id").as("id_x"))
-    val allBands = bandStore.select(col("band_key"), col("id").as("id_y"))
+    val allBands = bandTable(validSignatures(allSigs), cfg)
+      .select(col("band_key"), col("id").as("id_y"))
     val cands = newBands.join(allBands, "band_key")
       .where(col("id_x") =!= col("id_y"))
       .select(least(col("id_x"), col("id_y")).as("id_a"),
         greatest(col("id_x"), col("id_y")).as("id_b"))
       .distinct()
-    verifiedPairs(cands, shingled.select(col("id"), col("shingles")), cfg)
+    verifiedPairs(cands, allSigs.select(col("id"), col("shingles")), cfg)
   }
 
   /** F8 signature-validity filter: drop degenerate signatures whose
@@ -643,8 +644,8 @@ object Dedup {
     * exactly when the shingle set is empty (every slot keeps the kernel's
     * init sentinel) — a forged/empty signature would otherwise share
     * every band key with every other degenerate row and join them all.
-    * Applied before banding in pairs, the streaming band store
-    * (incrementalPairsBanded's input) and ResumableDedupJob.
+    * Applied before banding in pairs, incrementalPairsBanded (both
+    * sides) and ResumableDedupJob.
     */
   def validSignatures(sigs: DataFrame): DataFrame =
     sigs.where(!(element_at(col("sig"), 1) === element_at(col("sig"), 2) &&

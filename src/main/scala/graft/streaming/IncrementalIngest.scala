@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.pipeline.{Dedup, DedupConfig, concurrently, withCheckpointed}
+import graft.pipeline.{Dedup, DedupConfig, concurrently}
 import graft.store.{MarkerFile, TxLog}
 
 /** Incremental ingestion — the chenhai1030 fork's Ray micro-batch loop
@@ -18,14 +18,13 @@ import graft.store.{MarkerFile, TxLog}
   *     (1) idempotent signature flush: skip-if-done (reference
   *         `exists()`, `winnow/storage/db_result_storage.py:46-58`) as
   *         one left-anti join of the batch against the signature store
-  *     (2) band-table append for never-banded ids (the same anti-join
-  *         against the band store), run at the same time as (1)
-  *     (3) incremental matching every `matchEvery` batches (the fork
+  *     (2) incremental matching every `matchEvery` batches (the fork
   *         runs ingest/flush/match at 600/1200/3600 s — decoupled
   *         cadences, `ray_extract_features.py:100-112`): NEW ids since
-  *         the last match run × the FULL persisted band store, never
+  *         the last match run × the FULL signature store, banded at
+  *         match time (like the fork, no band table is stored), never
   *         all × all
-  *     (4) store compaction every `compactEvery` batches (small-files
+  *     (3) store compaction every `compactEvery` batches (small-files
   *         control, crash-safe replace commits)
   *
   * Store reads go through the commit log: a transient read failure
@@ -41,15 +40,15 @@ object IncrementalIngest {
 
   def sigLog(workDir: String, cfg: DedupConfig): TxLog =
     new TxLog(s"$workDir/signatures_stream/tag=${cfg.configTag}")
-  def bandLog(workDir: String, cfg: DedupConfig): TxLog =
-    new TxLog(bandsDir(workDir, cfg))
+  /** A table nothing writes (0 commits), read only by perfbench's store counts. */
+  def bandLog(workDir: String, cfg: DedupConfig): TxLog = new TxLog(s"$workDir/no_band_store")
   def pairLog(workDir: String, cfg: DedupConfig): TxLog =
     new TxLog(s"$workDir/pairs_stream/tag=${cfg.configTag}")
 
   /** Start the streaming signature+match job.
     *
     * @param pagesStream streaming DataFrame with (url, text) at least
-    * @param workDir     output root: signatures/bands/pairs tables under it
+    * @param workDir     output root: signature and pair tables under it
     * @param matchEvery  run match regeneration every Nth batch (1 = every
     *                    batch; unmatched tail after drain → [[matchPending]])
     * @param compactEvery compact the stores every Nth batch (0 = never;
@@ -99,10 +98,9 @@ object IncrementalIngest {
     require(matchEvery >= 1, s"matchEvery must be >= 1, got $matchEvery")
     val spark = batch.sparkSession
     val sl = sigLog(workDir, cfg)
-    val bl = bandLog(workDir, cfg)
     // identity hygiene BEFORE anything is written: a crawl revisit can
-    // repeat an id WITHIN one micro-batch — the store anti-joins
-    // compare only against the STORE, so intra-batch duplicates
+    // repeat an id WITHIN one micro-batch — the store anti-join
+    // compares only against the STORE, so intra-batch duplicates
     // would land twice and duplicate every downstream pair.
     // One deterministic winner per id (lowest text hash); null ids
     // have no dedup identity at all and are dropped here, loudly
@@ -112,50 +110,40 @@ object IncrementalIngest {
         org.apache.spark.sql.expressions.Window.partitionBy(col("id"))
           .orderBy(xxhash64(col("text")).asc_nulls_last)))
       .where(col("__ingest_rn") === 1).drop("__ingest_rn")
-    // one job fills the checkpoint and is the only reader of `batch`: a
-    // cache is filled inside its first reader's query, so the two
-    // concurrent flushes below would each run that fill
-    withCheckpointed(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)) { (newSigs, _) =>
-      // (1) idempotent signature flush and (2) incremental BAND store
-      // append, at once. Each is an append deduped against its own
-      // store (see absentFrom), so a crash between or during the two
-      // commits self-heals on retry in any order. The all-side of every
-      // later match run is READ from the band store — never recomputed
-      // from the full signature store.
-      concurrently(
-        () => sl.writeAppend(absentFrom(sl, "id")(newSigs), batchId),
-        () => bl.writeAppend(Dedup.bandTable(absentFrom(bl, "id")(Dedup.validSignatures(newSigs)), cfg),
-          batchId))
+    // (1) idempotent signature flush, the only reader of `batch`: an
+    // append deduped against the store (see absentFrom), so a crash
+    // during the commit self-heals on retry
+    sl.writeAppend(absentFrom(sl, "id")(Dedup.signatures(Dedup.shingleSets(uniqueBatch, cfg), cfg)),
+      batchId)
 
-      // (3) match cadence (fork: 3600 s regeneration vs 600 s ingest)
-      if ((batchId + 1) % matchEvery == 0)
-        matchPending(spark, workDir, cfg)
+    // (2) match cadence (fork: 3600 s regeneration vs 600 s ingest)
+    if ((batchId + 1) % matchEvery == 0)
+      matchPending(spark, workDir, cfg)
 
-      // (4) compaction cadence: match first so the path-based match
-      // state can be fast-forwarded across the rewrite
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-        matchPending(spark, workDir, cfg)
-        val sigRewrite = compactStores(spark, workDir, cfg)
-        // fast-forward the match state across the rewrite — but ONLY
-        // the compacted paths, and only when every compacted SOURCE
-        // path was actually matched: an entry appended by a concurrent
-        // out-of-band writer between matchPending and the compaction
-        // snapshot gets folded into the rewrite UNMATCHED, and marking
-        // a fresh snapshot wholesale would silently exclude its ids
-        // from every future match run. When the guard fails we keep
-        // the old marker; the next matchPending re-matches the
-        // compacted entry and the pair-store anti-join keeps it exact.
-        sigRewrite.foreach { case (src, dst) =>
-          val matched = readMatchedPaths(workDir, cfg)
-          if (src.subsetOf(matched))
-            writeMatchedPaths(workDir, cfg, (matched -- src) ++ dst)
-        }
+    // (3) compaction cadence: match first so the path-based match
+    // state can be fast-forwarded across the rewrite
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+      matchPending(spark, workDir, cfg)
+      val sigRewrite = compactStores(spark, workDir, cfg)
+      // fast-forward the match state across the rewrite — but ONLY
+      // the compacted paths, and only when every compacted SOURCE
+      // path was actually matched: an entry appended by a concurrent
+      // out-of-band writer between matchPending and the compaction
+      // snapshot gets folded into the rewrite UNMATCHED, and marking
+      // a fresh snapshot wholesale would silently exclude its ids
+      // from every future match run. When the guard fails we keep
+      // the old marker; the next matchPending re-matches the
+      // compacted entry and the pair-store anti-join keeps it exact.
+      sigRewrite.foreach { case (src, dst) =>
+        val matched = readMatchedPaths(workDir, cfg)
+        if (src.subsetOf(matched))
+          writeMatchedPaths(workDir, cfg, (matched -- src) ++ dst)
       }
     }
   }
 
   /** Match every signature-store id not yet covered by a match run
-    * against the full persisted band store (new × all), append the
+    * against the full signature store (new × all), append the
     * fresh pairs (deduped vs the pair store — MERGE "when not
     * matched"), and advance the match state. Idempotent and safe to
     * call any time (e.g. after drain when `matchEvery` left a tail);
@@ -172,14 +160,14 @@ object IncrementalIngest {
     if (newEntries.isEmpty) return
     val newSigs = sl.readEntries(spark, newEntries, snap.schemaJson)
     val allSigs = sl.readSnapshot(spark, snap)
-    val newPairs = Dedup.incrementalPairsBanded(newSigs, bands(spark, workDir, cfg), allSigs, cfg)
+    val newPairs = Dedup.incrementalPairsBanded(newSigs, allSigs, cfg)
     pl.writeAppend(absentFrom(pl, "id_a", "id_b")(newPairs))
     writeMatchedPaths(workDir, cfg, snap.entries.map(_.path).toSet)
   }
 
   /** The rows of `df` whose `keys` the table behind `log` does not hold
     * yet (all of `df` while the table has no commit): the one skip-if-done
-    * rule of the signature, band and pair flushes. Its result is always
+    * rule of the signature and pair flushes. Its result is always
     * written with `writeAppend`, never with the TxLog's batch-replace
     * mode: a retried micro-batch legitimately leaves nothing absent, and
     * a replace commit would swap the first attempt's rows for that empty
@@ -216,21 +204,17 @@ object IncrementalIngest {
       .map(p => "\"" + p.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
       .mkString("[", ",", "]"))
 
-  /** The persisted incremental LSH band table (id, band_key). */
-  def bandsDir(workDir: String, cfg: DedupConfig): String =
-    s"$workDir/bands_stream/tag=${cfg.configTag}"
-
-  /** Compact the append-per-batch stores (signatures, bands, pairs):
+  /** Compact the append-per-batch stores (signatures, pairs):
     * each accumulates one commit per micro-batch, which at streaming
     * cadence becomes the classic small-files problem. Content is
     * already deduplicated at write time (store anti-joins), so each
     * store's compaction is a pure [[graft.store.TxLog.compact]] rewrite
     * (one replace commit — a crash at any point leaves either the old or
     * the new snapshot fully readable) followed by a
-    * [[graft.store.TxLog.vacuum]] of the superseded files. The three
+    * [[graft.store.TxLog.vacuum]] of the superseded files. The two
     * stores are rewritten at once, each on its own thread; a failure in
-    * one is rethrown once all three have ended (the others' commits
-    * stand, and a retry skips a compacted store, which holds one entry).
+    * one is rethrown once both have ended (the other's commit stands,
+    * and a retry skips a compacted store, which holds one entry).
     * A concurrent append that wins the commit race aborts the rewrite
     * for that store (inside `start()` compaction runs serially with the
     * writes, so the race only matters for manual out-of-band calls).
@@ -255,14 +239,9 @@ object IncrementalIngest {
       if (rewrite.nonEmpty) log.vacuum(orphanGraceMs = vacuumGraceMs)
       rewrite
     }
-    // the three stores are independent tables: rewrite them at once
-    concurrently(() => compact(sigLog(workDir, cfg)), () => compact(bandLog(workDir, cfg)),
-      () => compact(pairLog(workDir, cfg))).head
+    // the two stores are independent tables: rewrite them at once
+    concurrently(() => compact(sigLog(workDir, cfg)), () => compact(pairLog(workDir, cfg))).head
   }
-
-  def bands(spark: SparkSession, workDir: String, cfg: DedupConfig): DataFrame =
-    bandLog(workDir, cfg).read(spark)
-      .getOrElse(sys.error(s"band store missing under $workDir"))
 
   def signatures(spark: SparkSession, workDir: String, cfg: DedupConfig): DataFrame =
     sigLog(workDir, cfg).read(spark)

@@ -274,9 +274,9 @@ class CacheHygieneSpec extends SparkSpecBase {
     docs(plainText).where(col("id") >= from && col("id") < until)
       .select(col("id").cast("string").as("id"), col("text"))
 
-  /** Every row of the signature, band and pair stores under `workDir`. */
+  /** Every row of the signature and pair stores under `workDir`. */
   private def ingestStores(workDir: String): Seq[Seq[String]] =
-    Seq(IncrementalIngest.signatures _, IncrementalIngest.bands _, IncrementalIngest.pairs _)
+    Seq(IncrementalIngest.signatures _, IncrementalIngest.pairs _)
       .map(read => read(spark, workDir, cfg).collect().map(_.toString).toSeq.sorted)
 
   /** Names of the live threads that `pipeline.concurrently` started. */
@@ -284,19 +284,19 @@ class CacheHygieneSpec extends SparkSpecBase {
     Thread.getAllStackTraces.keySet.asScala.toSeq.map(_.getName)
       .filter(_.startsWith("graft-concurrently-"))
 
-  test("IncrementalIngest.processBatch throws a failed flush once the other has ended, and its retry is exact") {
+  test("IncrementalIngest.processBatch failing after the signature commit leaks nothing, and its retry is exact") {
     val clean = Files.createTempDirectory("graft-ingest-clean").toString
     val workDir = Files.createTempDirectory("graft-ingest-fail").toString
-    // a plain file where the band store's log directory belongs: the
-    // band flush writes its data, then fails to commit it
-    val obstacle = new java.io.File(IncrementalIngest.bandLog(workDir, cfg).root, "_log")
+    // a plain file where the pair store's log directory belongs: the
+    // signature flush commits, then the pair flush writes its data and
+    // fails to commit it
+    val obstacle = new java.io.File(IncrementalIngest.pairLog(workDir, cfg).root, "_log")
     assert(obstacle.getParentFile.mkdirs() && obstacle.createNewFile())
     val before = cachedEntries
     val (out, left) = persistedBy(IncrementalIngest.processBatch(ingestBatch(0, 40), 0L, cfg, workDir))
     val e = out.failed.getOrElse(fail("processBatch did not fail"))
     assert(e.isInstanceOf[java.nio.file.FileSystemException] &&
       e.getMessage.contains(obstacle.getPath), e)
-    assert(concurrentThreads.isEmpty, "processBatch threw while a flush was still running")
     assert(IncrementalIngest.sigLog(workDir, cfg).snapshot().version == 0,
       "the signature flush did not commit")
     assert(cachedEntries == before, "a persisted table leaked on the failure path")
@@ -314,8 +314,7 @@ class CacheHygieneSpec extends SparkSpecBase {
     for (dir <- Seq(clean, workDir); (from, i) <- Seq(0L, 30L).zipWithIndex)
       IncrementalIngest.processBatch(ingestBatch(from, from + 30), i.toLong, cfg, dir)
     IncrementalIngest.compactStores(spark, clean, cfg, vacuumGraceMs = 0L)
-    val logs = Seq(IncrementalIngest.sigLog _, IncrementalIngest.bandLog _, IncrementalIngest.pairLog _)
-      .map(_(workDir, cfg))
+    val logs = Seq(IncrementalIngest.sigLog _, IncrementalIngest.pairLog _).map(_(workDir, cfg))
     assert(logs.forall(_.snapshot().entries.size == 2))
     // one of the pair store's data directories moved away: its rewrite
     // cannot read the store
@@ -328,7 +327,7 @@ class CacheHygieneSpec extends SparkSpecBase {
     val e = out.failed.getOrElse(fail("compactStores did not fail"))
     assert(String.valueOf(e.getMessage).contains(moved.getName), e)
     assert(concurrentThreads.isEmpty, "compactStores threw while a rewrite was still running")
-    assert(logs.map(_.snapshot().entries.size) == Seq(1, 1, 2), "the other rewrites did not commit")
+    assert(logs.map(_.snapshot().entries.size) == Seq(1, 2), "the signature rewrite did not commit")
     assert(cachedEntries == before, "a persisted table leaked on the failure path")
     assert(left.isEmpty, "a persisted RDD leaked on the failure path")
     assert(aside.renameTo(moved))
@@ -338,18 +337,37 @@ class CacheHygieneSpec extends SparkSpecBase {
     assert(ingestStores(workDir) == ingestStores(clean))
   }
 
+  /** The creation stacks of the persisted RDDs `op` leaves whose
+    * creating stack enters the engine (its first `graft.` frame outside
+    * pipeline/package.scala) in one of `files`.
+    */
+  private def leftIn[T](files: String*)(op: => T): (Try[T], Seq[String]) = {
+    val (out, left) = rddsPersistedBy(op)
+    (out, left.toSeq.map(CacheProbe.creationStack).filter(_.linesIterator
+      .find(l => l.startsWith("graft.") && !l.contains("(package.scala"))
+      .exists(l => files.exists(f => l.contains(s"($f")))))
+  }
+
+  test("ResumableDedupJob.run and keepStage release their checkpoints once each stage is written") {
+    val docsPath = Files.createTempDirectory("graft-resumable-docs").resolve("docs").toString
+    docs(plainText).write.parquet(docsPath)
+    val work = Files.createTempDirectory("graft-resumable-hygiene").toString
+    // the band table, the clustering's edges and the keep list's scored rows
+    val (out, left) = leftIn("Dedup.scala", "ConnectedComponents.scala", "Checkpoints.scala") {
+      val d = spark.read.parquet(docsPath)
+      val clusters = ResumableDedupJob.run(d, cfg, work)
+      ResumableDedupJob.keepStage(d, clusters, cfg, work).where(col("kept")).count()
+    }
+    assert(out.get > 0 && out.get < 60, out)
+    assert(left.isEmpty, s"stage checkpoints left persisted:\n${left.mkString("\n\n")}")
+  }
+
   test("CurationJob.run releases its stage checkpoints when it returns and when it throws") {
     val docsPath = Files.createTempDirectory("graft-curation-docs").resolve("docs").toString
     docs(plainText).select(col("id").as("doc_id"), col("text")).write.parquet(docsPath)
-    // the persisted RDDs `op` leaves whose creating stack enters the
-    // engine at CurationJob.scala (the stage checkpoints it fills itself;
-    // the near-dup stages it calls have checkpoints of their own)
-    def leftByRun(op: => String): (Try[String], Seq[String]) = {
-      val (out, left) = rddsPersistedBy(op)
-      (out, left.toSeq.map(CacheProbe.creationStack).filter(_.linesIterator
-        .find(l => l.startsWith("graft.") && !l.contains("(package.scala"))
-        .exists(_.contains("(CurationJob.scala"))))
-    }
+    // the stage checkpoints CurationJob fills itself; the near-dup
+    // stages it calls have checkpoints of their own
+    def leftByRun(op: => String) = leftIn("CurationJob.scala")(op)
     def work() = Files.createTempDirectory("graft-curation-hygiene").toString
     val (ok, leftOk) = leftByRun(CurationJob.run(spark, docsPath, work(), None, 8192))
     assert(ok.get.contains("\"after_quality\":"))

@@ -107,7 +107,7 @@ class CheckpointJobsSpec extends SparkSpecBase {
     assert(seen.get == ((true, true)))
   }
 
-  test("IncrementalIngest.processBatch: a regular batch runs at most 11 jobs, all carrying the caller's properties") {
+  test("IncrementalIngest.processBatch: a regular batch runs at most 8 jobs, all carrying the caller's properties") {
     val workDir = java.nio.file.Files.createTempDirectory("graft-ingest-jobs").toString
     val half = pmod(xxhash64(col("id")), lit(2L))
     IncrementalIngest.processBatch(docs.where(half === 0), 0L, cfg, workDir)
@@ -137,9 +137,9 @@ class CheckpointJobsSpec extends SparkSpecBase {
     import scala.jdk.CollectionConverters._
     val all = jobs.asScala.toSeq
     val sites = all.map(_._3.linesIterator.next()).mkString(" | ")
-    // the signature checkpoint (its shuffle and count), two flushes of
-    // two jobs each, then matching's join and the pair flush
-    assert(all.size <= 11, sites)
+    // the signature flush (the batch's window shuffle, the store side of
+    // its anti-join, the write), then matching's joins and the pair flush
+    assert(all.size <= 8, sites)
     assert(all.forall { case (p, tags, _) => p == "batch" && tags.split(",").contains(tag) }, all)
     // matching reads the new signatures with the store's schema
     assert(!all.exists(_._3.contains("TxLog.readEntries(")), sites)

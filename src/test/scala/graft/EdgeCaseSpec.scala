@@ -81,11 +81,9 @@ class EdgeCaseSpec extends SparkSpecBase {
       Dedup.candidatePairs(Dedup.bandTable(allSigs, cfg)),
       allSigs.select(col("id"), col("shingles")), cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // "new batch" = docs with even ids, matched against a band store
-    // holding every valid signature
+    // "new batch" = docs with even ids, matched against every signature
     val newSigs = allSigs.where(col("id") % 2 === 0)
-    val bandStore = Dedup.bandTable(Dedup.validSignatures(allSigs), cfg)
-    val inc = Dedup.incrementalPairsBanded(newSigs, bandStore, allSigs, cfg)
+    val inc = Dedup.incrementalPairsBanded(newSigs, allSigs, cfg)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = fullPairs.filter { case (a, b) => a % 2 == 0 || b % 2 == 0 }
     assert(inc == want)

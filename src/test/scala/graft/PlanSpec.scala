@@ -85,7 +85,7 @@ class PlanSpec extends SparkSpecBase {
 
   test("incremental new-vs-all band join: AQE broadcasts the micro-batch side at runtime") {
     // at streaming cadence the new side is a micro-batch (KBs) while
-    // the band store is corpus-sized; the join carries NO broadcast
+    // the all side's bands are corpus-sized; the join carries NO broadcast
     // hint (a backfill-sized new set must be allowed to degrade to a
     // shuffled join), so the broadcast must come from AQE's runtime
     // re-planning. Threshold lowered so ONLY the micro-batch side
@@ -95,11 +95,8 @@ class PlanSpec extends SparkSpecBase {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (64 * 1024).toString)
       val sigs = Dedup.signatures(Dedup.shingleSets(docs, cfg), cfg)
         .localCheckpoint(true)
-      val bandStore = Dedup.bandTable(Dedup.validSignatures(sigs), cfg)
-        .select(col("id"), col("band_key")).localCheckpoint(true)
       val newSigs = sigs.orderBy("id").limit(5).localCheckpoint(true)
-      val df = Dedup.incrementalPairsBanded(newSigs, bandStore,
-        sigs.select("id", "shingles"), cfg)
+      val df = Dedup.incrementalPairsBanded(newSigs, sigs, cfg)
       df.collect() // materialize so AQE's final plan is available
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("isFinalPlan=true"), s"AQE did not finalize:\n${plan.take(800)}")

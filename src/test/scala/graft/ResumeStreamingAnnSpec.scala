@@ -516,23 +516,12 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     // idempotent signature flush: one row per doc
     val sigs = IncrementalIngest.signatures(spark, workDir, cfg)
     assert(sigs.select("id").distinct().count() == sigs.count())
-    // incremental band store: the persisted all-side band table equals a
-    // full re-band of the signature store (row-count + set evidence that
-    // matching reads bands from storage instead of recomputing them) and
-    // holds exactly one band set per doc (append-once across batches)
-    val bandStore = IncrementalIngest.bands(spark, workDir, cfg)
-    val rebanded = Dedup.bandTable(Dedup.validSignatures(sigs), cfg)
-    assert(bandStore.count() == rebanded.count())
-    assert(bandStore.select("id", "band_key")
-      .except(rebanded.select("id", "band_key")).count() == 0)
-    assert(bandStore.groupBy("id").count()
-      .where(col("count") =!= cfg.bands).count() == 0)
     // small-files compaction: identical content, one live commit with
     // fewer data dirs afterwards (replace commit + vacuum)
     val sigCommitsBefore =
       IncrementalIngest.sigLog(workDir, cfg).snapshot().entries.size
     assert(sigCommitsBefore >= 2, "expected one commit per micro-batch")
-    val bandRowsBefore = bandStore.count() // materialize before the swap
+    val sigRowsBefore = sigs.count() // materialize before the swap
     // grace 0: this test is quiescent and asserts immediate reclamation
     // (the production default keeps a 10-min orphan grace)
     IncrementalIngest.compactStores(spark, workDir, cfg, vacuumGraceMs = 0L)
@@ -547,7 +536,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
     assert(streamedAfter == batch)
-    assert(IncrementalIngest.bands(spark, workDir, cfg).count() == bandRowsBefore)
+    assert(IncrementalIngest.signatures(spark, workDir, cfg).count() == sigRowsBefore)
   }
 
   test("decoupled cadences: matchEvery=3 + compactEvery=2 converge to the batch pair set") {
@@ -637,7 +626,7 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     assert(sigs.select("id").distinct().count() == sigs.count())
   }
 
-  test("micro-batch RETRY (same batchId re-run) loses no signatures, bands or pairs") {
+  test("micro-batch RETRY (same batchId re-run) loses no signatures or pairs") {
     val spark2 = spark
     import spark2.implicits._
     val (pages, _) = SynthCorpus.generate(spark, seed = 15L, nBase = 80, dupRate = 0.3)
@@ -660,10 +649,6 @@ class ResumeStreamingAnnSpec extends SparkSpecBase {
     val sigs = IncrementalIngest.signatures(spark, workDir, cfg)
     assert(sigs.count() == sigsBefore, "retry changed the signature store")
     assert(sigs.select("id").distinct().count() == sigsBefore)
-    val bands = IncrementalIngest.bands(spark, workDir, cfg)
-    assert(bands.groupBy("id").count()
-      .where(col("count") =!= cfg.bands).count() == 0,
-      "retry duplicated or dropped band rows")
     val pairsAfter = IncrementalIngest.pairs(spark, workDir, cfg)
       .select("id_a", "id_b").collect()
       .map(r => (r.getString(0), r.getString(1))).toSet
